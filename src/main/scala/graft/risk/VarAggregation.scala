@@ -1,10 +1,16 @@
 package graft.risk
 
-import org.apache.spark.ml.linalg.{Vector, Vectors}
-import org.apache.spark.ml.stat.Summarizer
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import java.nio.{ByteBuffer, ByteOrder}
+
+import org.apache.spark.ml.linalg.SQLDataTypes
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType}
 
 /**
  * On-demand VaR aggregation — reference `04_var_aggregation.py`: weight
@@ -12,50 +18,41 @@ import org.apache.spark.sql.functions._
  * by (date [, country | industry]), then extract the interpolated
  * percentile.
  *
- * The vector sum is `ml.stat.Summarizer.sum` (same class the reference
- * uses from Python, `04_var_aggregation.py:33-41`) — a real partial
- * aggregate: map-side combine of dense vectors, one shuffle of ONE vector
- * per group per partition. [[VectorSumAggregator]] is the
- * Summarizer-independent fallback with identical merge semantics.
+ * Weighting, summing and the percentile are one native aggregate,
+ * [[WeightedTrialRisk]]: no per-row weighted vector is built, and VaR and
+ * ES come from a single sort of each group's sum.
  */
 object VarAggregation {
 
-  /** trials ⋈ portfolio (broadcast; 27 rows in the reference) + per-row
-   * weighted vector — `04_var_aggregation.py:13-18`. */
+  /** trials ⋈ portfolio (broadcast; 27 rows in the reference) —
+   * `04_var_aggregation.py:13-18`. [[varByGroup]] applies the weights. */
   def weightedTrials(
       trials: DataFrame,
       portfolio: DataFrame,
-      tickerCol: String = "ticker",
-      returnsCol: String = "returns",
-      weightCol: String = "weight"): DataFrame = {
-    trials
-      .join(broadcast(portfolio), Seq(tickerCol))
-      .withColumn("weighted_returns",
-        functions.weightedVector(col(returnsCol), col(weightCol)))
-  }
+      tickerCol: String = "ticker"): DataFrame =
+    trials.join(broadcast(portfolio), Seq(tickerCol))
 
   /**
-   * VaR (and ES) by group: element-wise vector sum of weighted trial
-   * vectors per group -> interpolated percentile at (100 - confidence).
+   * VaR (and ES) by group: element-wise sum of `weight · returns` per
+   * group -> interpolated percentile at (100 - confidence).
    * `groupCols` = date / date+country / date+industry
-   * (`04_var_aggregation.py:56-123`).
+   * (`04_var_aggregation.py:56-123`). Reads the `returns` and `weight`
+   * columns of [[weightedTrials]]. Fails the query on a null trial vector
+   * or weight, and on vectors of different lengths in one group.
    */
   def varByGroup(
       weighted: DataFrame,
       groupCols: Seq[String],
       confidence: Double = 99,
       withShortfall: Boolean = false): DataFrame = {
-    val summed = weighted
+    val c = confidence.toInt
+    val risk = WeightedTrialRisk.column(col("returns"), col("weight"), confidence)
+    val measures = col("__risk.var").as(s"var_$c") +:
+      (if (withShortfall) Seq(col("__risk.es").as(s"es_$c")) else Nil)
+    weighted
       .groupBy(groupCols.map(col): _*)
-      .agg(Summarizer.sum(col("weighted_returns")).as("simulations"))
-    val withVar = summed.withColumn(s"var_${confidence.toInt}",
-      functions.varAtVec(col("simulations"), lit(confidence)))
-    val out =
-      if (withShortfall)
-        withVar.withColumn(s"es_${confidence.toInt}",
-          functions.shortfallAtVec(col("simulations"), lit(confidence)))
-      else withVar
-    out.drop("simulations")
+      .agg(risk.as("__risk"))
+      .select(groupCols.map(col) ++ measures: _*)
   }
 
   /** Risk contribution crosstab — `04_var_aggregation.py:127-131`: pivot a
@@ -78,31 +75,115 @@ object VarAggregation {
 }
 
 /**
- * Summarizer-independent element-wise vector-sum `Aggregator` — the only
- * "custom Catalyst" piece parity needs (SURVEY §4): a typed aggregate with
- * true partial aggregation (map-side combine) over `ml.linalg.Vector`.
- * Usable as `udaf(VectorSumAggregator)` in SQL or `.agg(vectorSum(...))`.
+ * `struct<var, es>` of the element-wise sum of `weight · returns` over a
+ * group of trial vectors (`returns` an `ml.linalg` Vector column).
+ *
+ * The buffer is one `double[]` per group. `update` reads the VectorUDT's
+ * values array straight from the input row, dense or sparse, so no Vector
+ * object is built per row. Partial buffers are serialized as raw doubles.
+ * `eval` takes VaR and ES from one sort ([[VarMath.riskOf]]); an empty
+ * input (a global aggregate over no rows) yields null.
  */
-object VectorSumAggregator extends Aggregator[Vector, Array[Double], Vector] {
-  override def zero: Array[Double] = Array.emptyDoubleArray
-  override def reduce(buf: Array[Double], v: Vector): Array[Double] =
-    if (buf.isEmpty) v.toArray
-    else {
-      var i = 0
-      while (i < buf.length) { buf(i) += v(i); i += 1 }
-      buf
+case class WeightedTrialRisk(
+    returns: Expression,
+    weight: Expression,
+    confidence: Double,
+    mutableAggBufferOffset: Int = 0,
+    inputAggBufferOffset: Int = 0)
+  extends TypedImperativeAggregate[Array[Double]] {
+
+  override def children: Seq[Expression] = Seq(returns, weight)
+  override def nullable: Boolean = true
+  override def dataType: DataType = WeightedTrialRisk.resultType
+  override def prettyName: String = "weighted_trial_risk"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (returns.dataType == SQLDataTypes.VectorType && weight.dataType == DoubleType)
+      TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires (vector, double) arguments, got " +
+        s"(${returns.dataType.simpleString}, ${weight.dataType.simpleString})")
+
+  /** Empty = no row seen yet; trial vectors are never empty. */
+  override def createAggregationBuffer(): Array[Double] = Array.emptyDoubleArray
+
+  override def update(sum: Array[Double], input: InternalRow): Array[Double] = {
+    // VectorUDT's sql form: struct<type: 0 sparse | 1 dense, size, indices, values>
+    val v = returns.eval(input).asInstanceOf[InternalRow]
+    if (v == null) throw new IllegalArgumentException(s"$prettyName: null trial vector")
+    val w = weight.eval(input)
+    if (w == null) throw new IllegalArgumentException(s"$prettyName: null weight")
+    val wd = w.asInstanceOf[Double]
+    val dense = v.getByte(0) == 1
+    val values = v.getArray(3)
+    val n = if (dense) values.numElements() else v.getInt(1)
+    if (n == 0) throw new IllegalArgumentException(s"$prettyName: empty trial vector")
+    val acc = if (sum.length == 0) new Array[Double](n) else sum
+    checkLength(acc.length, n)
+    var k = 0
+    if (dense) {
+      while (k < n) { acc(k) += wd * values.getDouble(k); k += 1 }
+    } else {
+      val indices = v.getArray(2)
+      val nnz = values.numElements()
+      while (k < nnz) { acc(indices.getInt(k)) += wd * values.getDouble(k); k += 1 }
     }
-  override def merge(a: Array[Double], b: Array[Double]): Array[Double] =
-    if (a.isEmpty) b
-    else if (b.isEmpty) a
+    acc
+  }
+
+  override def merge(sum: Array[Double], other: Array[Double]): Array[Double] =
+    if (other.length == 0) sum
+    else if (sum.length == 0) other
     else {
+      checkLength(sum.length, other.length)
       var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
+      while (i < sum.length) { sum(i) += other(i); i += 1 }
+      sum
     }
-  override def finish(buf: Array[Double]): Vector = Vectors.dense(buf)
-  override def bufferEncoder: Encoder[Array[Double]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
-  override def outputEncoder: Encoder[Vector] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Vector]()
+
+  override def eval(sum: Array[Double]): Any =
+    if (sum.length == 0) null
+    else {
+      val (v, es) = VarMath.riskOf(sum, confidence)
+      InternalRow(v, es)
+    }
+
+  override def serialize(sum: Array[Double]): Array[Byte] = {
+    val bytes = ByteBuffer.allocate(sum.length * 8).order(ByteOrder.LITTLE_ENDIAN)
+    bytes.asDoubleBuffer().put(sum)
+    bytes.array()
+  }
+
+  override def deserialize(bytes: Array[Byte]): Array[Double] = {
+    val sum = new Array[Double](bytes.length / 8)
+    ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN).asDoubleBuffer().get(sum)
+    sum
+  }
+
+  private def checkLength(group: Int, n: Int): Unit =
+    if (group != n) throw new IllegalArgumentException(
+      s"$prettyName: trial vector of length $n in a group of length $group")
+
+  override def withNewMutableAggBufferOffset(offset: Int): WeightedTrialRisk =
+    copy(mutableAggBufferOffset = offset)
+
+  override def withNewInputAggBufferOffset(offset: Int): WeightedTrialRisk =
+    copy(inputAggBufferOffset = offset)
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): WeightedTrialRisk =
+    copy(returns = newChildren(0), weight = newChildren(1))
+}
+
+object WeightedTrialRisk {
+  val resultType: StructType = StructType(Seq(
+    StructField("var", DoubleType, nullable = false),
+    StructField("es", DoubleType, nullable = false)))
+
+  /** The aggregate as a Column; `weight` is cast to double. */
+  def column(returns: Column, weight: Column, confidence: Double): Column =
+    ColumnBridge.column(WeightedTrialRisk(
+      ColumnBridge.expression(returns),
+      ColumnBridge.expression(weight.cast(DoubleType)),
+      confidence).toAggregateExpression())
 }

@@ -51,13 +51,26 @@ object VarMath {
 
   /** Expected shortfall at confidence `c`: mean of simulations <= VaR(c).
    * Matches `get_shortfall` (`utils/var_utils.py:36-39`). */
-  def expectedShortfall(simulations: Array[Double], confidence: Double): Double = {
-    val v = valueAtRisk(simulations, confidence)
+  def expectedShortfall(simulations: Array[Double], confidence: Double): Double =
+    meanAtOrBelow(simulations, valueAtRisk(simulations, confidence))
+
+  /** `(valueAtRisk(xs, c), expectedShortfall(xs, c))`, bit for bit, from
+   * one sort: the shortfall still sums in input order. */
+  def riskOf(simulations: Array[Double], confidence: Double): (Double, Double) = {
+    require(simulations.nonEmpty, "percentile of empty array")
+    val sorted = simulations.clone()
+    java.util.Arrays.sort(sorted)
+    val v = percentileOfSorted(sorted, 100.0 - confidence)
+    (v, meanAtOrBelow(simulations, v))
+  }
+
+  /** Mean of the `xs` at or below `v`, summed in input order. */
+  private def meanAtOrBelow(xs: Array[Double], v: Double): Double = {
     var sum = 0.0
     var cnt = 0
     var i = 0
-    while (i < simulations.length) {
-      val s = simulations(i)
+    while (i < xs.length) {
+      val s = xs(i)
       if (s <= v) { sum += s; cnt += 1 }
       i += 1
     }

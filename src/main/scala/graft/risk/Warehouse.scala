@@ -15,9 +15,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *  - `04_var_aggregation.py:13`, `05_var_compliance.py:23,46`: re-read.
  *
  * Tables are parquet (this container has no Delta), written clustered via
- * [[Sinks.writeClustered]] so readers filtering on the cluster keys prune
- * files from parquet min/max stats — the ZORDER intent. Table names
- * normally come from `application.yaml`'s `database.tables` map
+ * [[Sinks.writeClustered]] — the ZORDER intent: readers filtering on a
+ * cluster key can skip files from parquet min/max stats. Timestamp keys
+ * are the exception: Spark writes timestamps as INT96 by default and
+ * parquet keeps no statistics for INT96 columns, so a filter on a
+ * timestamp `date` key reads every file. Table names normally come
+ * from `application.yaml`'s `database.tables` map
  * ([[Configs.AppConfig.tables]]).
  */
 object Warehouse {
@@ -49,6 +52,12 @@ object Warehouse {
    * Materialize a stage result as a managed parquet table, clustered on
    * `clusterCols` (the ZORDER replacement): range-partition + sort, write
    * to the database location, register the table over the files.
+   *
+   * By default a timestamp cluster key (the trials table's `date`) is
+   * written as INT96, which has no parquet min/max statistics: the files
+   * stay clustered, but readers filtering on it skip none of them. A
+   * per-write `outputTimestampType` option does not change that; only the
+   * session setting `spark.sql.parquet.outputTimestampType` does.
    */
   def saveTable(spark: SparkSession, df: DataFrame, table: String,
       clusterCols: Seq[String], numFiles: Int = 20): Unit = {

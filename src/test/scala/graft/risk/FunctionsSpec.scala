@@ -91,16 +91,24 @@ class FunctionsSpec extends SparkSpec {
     assert(v.toArray.toSeq === Seq(10.0, 20.0, 30.0))
   }
 
-  test("VectorSumAggregator == Summarizer.sum") {
-    val df = Seq(
-      ("a", Vectors.dense(1.0, 2.0)), ("a", Vectors.dense(3.0, 4.0)),
-      ("b", Vectors.dense(5.0, 6.0))).toDF("k", "v")
-    val vectorSum = udaf(VectorSumAggregator)
-    val mine = df.groupBy($"k").agg(vectorSum($"v").as("s"))
-      .collect().map(r => r.getString(0) -> r.getAs[org.apache.spark.ml.linalg.Vector](1).toArray.toSeq).toMap
-    val ref = df.groupBy($"k").agg(org.apache.spark.ml.stat.Summarizer.sum($"v").as("s"))
-      .collect().map(r => r.getString(0) -> r.getAs[org.apache.spark.ml.linalg.Vector](1).toArray.toSeq).toMap
-    assert(mine === ref)
-    assert(mine("a") === Seq(4.0, 6.0))
+  test("WeightedTrialRisk == riskOf over Summarizer.sum") {
+    val rnd = new scala.util.Random(7)
+    val df = (0 until 12).map { i =>
+      (s"g${i % 3}", Vectors.dense(Array.fill(50)(rnd.nextGaussian())), 0.5 + rnd.nextDouble())
+    }.toDF("k", "v", "w").repartition(3)
+    val cs = Seq(0.0, 50.0, 99.0, 100.0) // max, median, tail, min of the sum
+    val risks = cs.map(c => WeightedTrialRisk.column($"v", $"w", c))
+    val mine = df.groupBy($"k").agg(risks.head, risks.tail: _*)
+      .collect().map(r => r.getString(0) ->
+        cs.indices.map(i => (r.getStruct(i + 1).getDouble(0), r.getStruct(i + 1).getDouble(1)))).toMap
+    val sums = df.groupBy($"k")
+      .agg(org.apache.spark.ml.stat.Summarizer.sum(F.weightedVector($"v", $"w")).as("s"))
+      .collect().map(r => r.getString(0) -> r.getAs[org.apache.spark.ml.linalg.Vector](1).toArray).toMap
+    assert(mine.keySet === Set("g0", "g1", "g2"))
+    def close(a: Double, b: Double) = math.abs(a - b) <= 1e-12 * math.max(1.0, math.abs(b))
+    for ((k, got) <- mine; (c, (v, es)) <- cs.zip(got)) {
+      val (rv, res) = VarMath.riskOf(sums(k), c)
+      assert(close(v, rv) && close(es, res), s"group $k at $c: ($v, $es) vs ($rv, $res)")
+    }
   }
 }

@@ -32,6 +32,24 @@ class VarMathSpec extends AnyFunSuite {
     assert(VarMath.expectedShortfall(zeroTo99, 95) <= VarMath.valueAtRisk(zeroTo99, 95))
   }
 
+  test("riskOf == (valueAtRisk, expectedShortfall) bit for bit: random, ties, n = 1") {
+    val rnd = new scala.util.Random(17)
+    val inputs = Seq(
+      Array.fill(32000)(rnd.nextGaussian()),
+      Array.fill(1001)(rnd.nextGaussian() * 1e-3 + 5.0),
+      Array.fill(5000)(rnd.nextInt(7).toDouble - 3.0), // heavy ties
+      zeroTo99,
+      Array(-2.5))
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    for (xs <- inputs; c <- Seq(0.0, 50.0, 89.0, 95.0, 99.0, 99.9, 100.0)) {
+      val before = xs.clone()
+      val (v, es) = VarMath.riskOf(xs, c)
+      assert(bits(v) === bits(VarMath.valueAtRisk(xs, c)), s"VaR n=${xs.length} c=$c")
+      assert(bits(es) === bits(VarMath.expectedShortfall(xs, c)), s"ES n=${xs.length} c=$c")
+      assert(xs.sameElements(before), "riskOf must not reorder its input")
+    }
+  }
+
   test("basel zones: code semantics <=3 green, <10 yellow, else red (var_udf.py:22-30)") {
     assert(VarMath.baselZone(0) === 0)
     assert(VarMath.baselZone(3) === 0)
