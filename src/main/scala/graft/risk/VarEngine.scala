@@ -64,25 +64,18 @@ object VarEngine {
         withShortfall = false),
       "date", sliceCol, s"var_${confidence.toInt}", sliceValues)
 
-  /** Basel traffic-light backtest, forward-filled to a daily calendar —
-   * the full `05_var_compliance.py` chain including the final pandas
-   * `reindex(pad)` step (`05:131-132`). */
+  /**
+   * Basel traffic-light backtest, forward-filled to a daily calendar — the
+   * full `05_var_compliance.py` chain including its final step, where the
+   * reference pulls the series into pandas (`toPandas`) and runs a daily
+   * `reindex(pad)` (`05:123-132`). Here that step is one sequential pass
+   * in a single task, [[Compliance.dailyBacktest]]: the series holds one
+   * row per calendar day, so its size is bounded by the calendar (a few
+   * thousand rows for decades), not by the trials or tickers behind it.
+   * Columns: `date` (a date), `return`, `var_99`, `breaches`, `basel`.
+   */
   def complianceReport(stocks: DataFrame, portfolio: DataFrame,
-      varSeries: DataFrame, windowDays: Int = 250): DataFrame = {
-    val backtest = Compliance.baselBacktest(
-      Compliance.portfolioReturns(stocks, portfolio), varSeries,
-      windowDays = windowDays)
-    // The backtest series is one row per trading day — bounded by the
-    // calendar (tens of KB for decades), NOT by data volume — while its
-    // plan embeds the full MC chain. reindexFfill scans its input several
-    // times (reduce, calendar bounds, fill, carry); checkpointing the tiny
-    // series stops those scans re-running the expensive upstream. Lazy:
-    // this method builds a plan (see object contract above) — the
-    // checkpoint materializes on the caller's first action, not here.
-    Calendar.reindexFfill(
-      backtest.localCheckpoint(eager = false),
-      Nil, "date",
-      Seq("return", "right_var_99", "breaches", "basel"))
-      .withColumnRenamed("right_var_99", "var_99")
-  }
+      varSeries: DataFrame, windowDays: Int = 250): DataFrame =
+    Compliance.dailyBacktest(Compliance.portfolioReturns(stocks, portfolio),
+      varSeries, windowDays = windowDays)
 }

@@ -77,14 +77,117 @@ object VarMath {
     sum / cnt // cnt >= 1 because VaR itself interpolates within the sample
   }
 
-  /** Number of observations at or below the VaR threshold. */
-  def countBreaches(xs: Iterable[Double], threshold: Double): Int =
-    xs.count(_ <= threshold)
-
   /** Basel traffic-light zone from a breach count — code semantics of
    * `count_breaches` (`utils/var_udf.py:22-30`): green=0, yellow=1, red=2. */
   def baselZone(breaches: Int): Int =
     if (breaches <= 3) 0 else if (breaches < 10) 1 else 2
+
+  /** Spark SQL's order on doubles: NaN is the largest value and equal to
+   * itself, and −0.0 equals 0.0. */
+  val sqlDoubleOrdering: Ordering[java.lang.Double] = (a, b) => {
+    val x = a.doubleValue; val y = b.doubleValue
+    if (x.isNaN) { if (y.isNaN) 0 else 1 }
+    else if (y.isNaN) -1
+    else if (x < y) -1 else if (x > y) 1 else 0
+  }
+
+  /** One row of [[baselBacktest]]: the positions of a daily return and of
+   * the VaR row it was matched to in the input arrays, the trailing breach
+   * count and its [[baselZone]]. */
+  final case class BacktestRow(ret: Int, varAt: Int, breaches: Int, zone: Int)
+
+  /**
+   * Basel backtest of a daily return series against a VaR series, in one
+   * sequential pass (`05_var_compliance.py:84-125`). Timestamps are epoch
+   * micros; a null return or VaR is `null`.
+   *
+   *  - As-of: each return takes the VaR row with the greatest timestamp at
+   *    or before its own. Rows sharing a VaR timestamp count as the last of
+   *    them in input order.
+   *  - A return with no such row, or whose matched VaR is null, is dropped.
+   *  - `breaches` counts the kept rows whose floor-second lies in
+   *    `[s − windowDays·86400, s]` (`s` the row's own floor-second, equal
+   *    seconds included on both sides) and whose non-null return is at or
+   *    below the row's VaR in [[sqlDoubleOrdering]].
+   *
+   * Rows come out in timestamp order. Both series are sorted once and
+   * walked with two pointers, so the cost is O(n log n + rows × window).
+   */
+  def baselBacktest(
+      retMicros: Array[Long],
+      returns: Array[java.lang.Double],
+      varMicros: Array[Long],
+      vars: Array[java.lang.Double],
+      windowDays: Int): Array[BacktestRow] = {
+    require(retMicros.length == returns.length && varMicros.length == vars.length,
+      "timestamps and values must have the same length")
+    require(windowDays >= 0, s"windowDays must be >= 0, got $windowDays")
+    def byTime(ts: Array[Long]) = ts.indices.sortBy(ts(_)).toArray // stable
+    val ro = byTime(retMicros)
+    val vo = byTime(varMicros)
+
+    val keptRet = new Array[Int](ro.length)
+    val keptVar = new Array[Int](ro.length)
+    var n = 0
+    var j = -1   // last position in vo at or before the current return
+    for (i <- ro) {
+      while (j + 1 < vo.length && varMicros(vo(j + 1)) <= retMicros(i)) j += 1
+      if (j >= 0 && vars(vo(j)) != null) {
+        keptRet(n) = i; keptVar(n) = vo(j); n += 1
+      }
+    }
+
+    val secs = Array.tabulate(n)(k => Math.floorDiv(retMicros(keptRet(k)), 1000000L))
+    val span = windowDays.toLong * 86400L
+    val out = new Array[BacktestRow](n)
+    var lo = 0
+    var hi = 0
+    var k = 0
+    while (k < n) {
+      while (secs(lo) < secs(k) - span) lo += 1
+      while (hi < n && secs(hi) <= secs(k)) hi += 1
+      val v = vars(keptVar(k))
+      var breaches = 0
+      var m = lo
+      while (m < hi) {
+        val x = returns(keptRet(m))
+        if (x != null && sqlDoubleOrdering.lteq(x, v)) breaches += 1
+        m += 1
+      }
+      out(k) = BacktestRow(keptRet(k), keptVar(k), breaches, baselZone(breaches))
+      k += 1
+    }
+    out
+  }
+
+  /**
+   * Pandas `reindex(method='pad')` of one column onto a daily calendar
+   * (`utils/var_utils.py:7-9`): `values(i)` belongs to epoch day `days(i)`.
+   * The result holds one value per day from `days.min` to `days.max`: the
+   * greatest non-null value of that day under `ord`, or, on a day with
+   * none, the previous day's result (null before the first value). Apply it
+   * once per column, so each column carries forward on its own.
+   */
+  def padDaily[T >: Null <: AnyRef: scala.reflect.ClassTag](
+      days: Array[Int], values: Array[T], ord: Ordering[T]): Array[T] = {
+    require(days.length == values.length, "days and values must have the same length")
+    if (days.isEmpty) return Array.empty[T]
+    val first = days.min
+    val out = new Array[T](days.max - first + 1)
+    var i = 0
+    while (i < days.length) {
+      val x = values(i)
+      val d = days(i) - first
+      if (x != null && (out(d) == null || ord.gt(x, out(d)))) out(d) = x
+      i += 1
+    }
+    var d = 1
+    while (d < out.length) {
+      if (out(d) == null) out(d) = out(d - 1)
+      d += 1
+    }
+    out
+  }
 
   /**
    * Non-linear feature expansion (`utils/var_utils.py:47-55`): each factor x

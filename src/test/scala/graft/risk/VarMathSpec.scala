@@ -58,6 +58,65 @@ class VarMathSpec extends AnyFunSuite {
     assert(VarMath.baselZone(10) === 2)
   }
 
+  private def boxed(xs: Double*): Array[java.lang.Double] = xs.map(Double.box).toArray
+
+  test("baselBacktest: breaches climb along a series, zones turn at 3/4 and 9/10") {
+    val day = 86400L * 1000000L
+    val n = 12
+    val rows = VarMath.baselBacktest(
+      Array.tabulate(n)(i => (n - i) * day), boxed(Seq.fill(n)(-1.0): _*),
+      Array(0L), boxed(0.0), windowDays = 250)
+    assert(rows.map(_.breaches).toSeq === (1 to n))
+    assert(rows.map(_.zone).toSeq === Seq(0, 0, 0, 1, 1, 1, 1, 1, 1, 2, 2, 2))
+    assert(rows.map(_.ret).toSeq === (n - 1 to 0 by -1), "rows come out in time order")
+    // a 5-day window holds at most the row and the 5 before it
+    assert(VarMath.baselBacktest(Array.tabulate(n)(i => i * day), boxed(Seq.fill(n)(-1.0): _*),
+      Array(0L), boxed(0.0), windowDays = 5).map(_.breaches).toSeq ===
+      Seq(1, 2, 3, 4, 5, 6, 6, 6, 6, 6, 6, 6))
+  }
+
+  test("baselBacktest: empty inputs, a single row, duplicate and null VaR rows") {
+    val none = Array.empty[java.lang.Double]
+    assert(VarMath.baselBacktest(Array.empty, none, Array.empty, none, 250).isEmpty)
+    assert(VarMath.baselBacktest(Array(5L), boxed(-1.0), Array.empty, none, 250).isEmpty)
+    assert(VarMath.baselBacktest(Array.empty, none, Array(5L), boxed(0.0), 250).isEmpty)
+    assert(VarMath.baselBacktest(Array(5L), boxed(-1.0), Array(5L), boxed(0.0), 250).toSeq ===
+      Seq(VarMath.BacktestRow(0, 0, 1, 0)))
+    // before the first VaR row: dropped
+    assert(VarMath.baselBacktest(Array(4L), boxed(-1.0), Array(5L), boxed(0.0), 250).isEmpty)
+    // duplicate timestamps count as the last of them in input order
+    val dup = VarMath.baselBacktest(Array(9L), boxed(-1.0),
+      Array(5L, 7L, 5L, 5L, 1L), Array[java.lang.Double](null, -3.0, 0.0, -2.0, 1.0), 250)
+    assert(dup.toSeq === Seq(VarMath.BacktestRow(0, 1, 0, 0)))
+    val dupAt5 = VarMath.baselBacktest(Array(6L), boxed(-1.0),
+      Array(5L, 7L, 5L, 5L, 1L), Array[java.lang.Double](null, -3.0, 0.0, -2.0, 1.0), 250)
+    assert(dupAt5.toSeq === Seq(VarMath.BacktestRow(0, 3, 0, 0)))
+    assert(VarMath.baselBacktest(Array(6L), boxed(-1.0),
+      Array(5L, 5L), Array[java.lang.Double](-2.0, null), 250).isEmpty)
+    // the latest VaR row is null: dropped, no fallback to an earlier one
+    assert(VarMath.baselBacktest(Array(9L), boxed(-1.0),
+      Array(1L, 5L), Array[java.lang.Double](0.0, null), 250).isEmpty)
+    // a null return is kept but never counted; NaN is above every number
+    val odd = VarMath.baselBacktest(Array(1L, 2L, 3L),
+      Array[java.lang.Double](null, Double.NaN, -0.0), Array(0L), boxed(0.0), 250)
+    assert(odd.map(_.breaches).toSeq === Seq(1, 1, 1))
+  }
+
+  test("padDaily: per-day max, each column carried forward on its own") {
+    val days = Array(5, 0, 0, 2, 3)
+    val a = VarMath.padDaily(days, boxed(2.0, 1.0, 3.0, Double.NaN, 0.0).updated(4, null),
+      VarMath.sqlDoubleOrdering)
+    val b = VarMath.padDaily(days, Array[java.lang.Double](null, null, -0.0, null, 7.0),
+      VarMath.sqlDoubleOrdering)
+    assert(a.toSeq.map(_.toString) === Seq("3.0", "3.0", "NaN", "NaN", "NaN", "2.0"))
+    assert(b.toSeq === Seq(-0.0, -0.0, -0.0, 7.0, 7.0, 7.0).map(Double.box))
+    val leadingNull = VarMath.padDaily(Array(1, 3), Array[java.lang.Double](null, 4.0),
+      VarMath.sqlDoubleOrdering)
+    assert(leadingNull.toSeq === Seq(null, null, Double.box(4.0)))
+    assert(VarMath.padDaily(Array.empty[Int], Array.empty[java.lang.Double],
+      VarMath.sqlDoubleOrdering).isEmpty)
+  }
+
   test("non_linear_features([1,4]) == [1,1,1,1,4,16,64,2] (tests_utils.py:28-30)") {
     assert(VarMath.nonLinearFeatures(Array(1.0, 4.0)).toSeq ===
       Seq(1.0, 1.0, 1.0, 1.0, 4.0, 16.0, 64.0, 2.0))
