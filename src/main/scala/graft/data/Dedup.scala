@@ -240,7 +240,7 @@ object Dedup {
    * through the signature stage — 8 bytes on the band shuffle, so
    * downstream length-band pruning costs nothing extra; see
    * [[editNearDups]]). */
-  private[graft] def minhashNearDupsWithLen(
+  private def minhashNearDupsWithLen(
       docs: DataFrame,
       idCol: String,
       textCol: String,
@@ -318,7 +318,7 @@ object Dedup {
    * Hyyrö 2003 — 64 DP cells per word op, O(⌈len/64⌉·len) vs the
    * classic banded DP's O(len·maxDist); identical `levenshtein(a, b,
    * max)` semantics, random-parity spec-pinned). The kernel choice is
-   * the honest lever here: the Probe105b measurement showed every LSH
+   * the honest lever here: the measurement in SCALING.md showed every LSH
    * candidate on the bench corpus PASSES the verify (median lev 300 at
    * max 500), so no sound pre-filter — length band, q-gram count bound
    * (Ukkonen 1992), positional pigeonhole — can prune a single pair;
@@ -1536,7 +1536,7 @@ object Dedup {
    * duplicated, so all positions a true duplicate's rank chain touches
    * have group size ≥ 2 at every round and are never pruned. On
    * natural corpora the seed round alone removes most positions
-   * (measured survivor fractions: `graft.Probe63c` + SCALING.md).
+   * (measured survivor fractions: SCALING.md).
    *
    * Nothing is collected to the driver at any size (the injective ids
    * need no rank, so no partition-count pass); all state is ≤ the
@@ -1552,8 +1552,7 @@ object Dedup {
       idCol: String,
       textCol: String,
       k: Int,
-      minCount: Long = 2L,
-      roundStats: Option[(Int, Long, Long) => Unit] = None): DataFrame = {
+      minCount: Long = 2L): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     if (minCount <= 1L) {
       // count >= 1 holds for EVERY position carrying a full k-gram, so
@@ -1571,7 +1570,7 @@ object Dedup {
           (length(col("t")) - lit(k - 1)).cast("long").as("n_grams"))
     }
     if (k <= 32) return duplicateSpansDirect(docs, idCol, textCol, k,
-      minCount, roundStats)
+      minCount)
     // seed at 32 literal chars: every doubling round costs two
     // full-table shuffles, while a wider seed only widens the seed
     // round's key (32 B vs the 20 B pair key — the same order), so
@@ -1610,14 +1609,6 @@ object Dedup {
         .localCheckpoint()
       df.join(groups, keys)
     }
-    def emitStats(round: Int, rel: DataFrame): Unit =
-      roundStats.foreach { cb =>
-        val r = rel.agg(
-          coalesce(sum(when(col("__n") >= 2, 1L).otherwise(0L)), lit(0L)),
-          coalesce(sum(when(col("__n") === 1, 1L).otherwise(0L)), lit(0L)))
-          .head
-        cb(round, r.getLong(0), r.getLong(1))
-      }
     // HASH PREFILTER before the seed's literal relabel: the 60-bit
     // rolling-hash gram stream (native kernel, 8-byte keys, no string
     // allocation) counts 32-windows, and positions whose hash bucket is
@@ -1626,7 +1617,7 @@ object Dedup {
     // value doubles as its frozen label for free: two hash-frozen
     // positions sharing a label would share a hash, contradicting
     // singleton-ness. Only the surviving candidates (measured 8.3% at
-    // k=70/sf0.1, graft.Probe63c) pay the 32-char-string relabel
+    // k=70/sf0.1, SCALING.md) pay the 32-char-string relabel
     // shuffles.
     // NOTE on exchange sharing: [[duplicateSpans]]/[[duplicateSpansDirect]]
     // share one h-keyed exchange between their two stream consumers; here
@@ -1674,13 +1665,6 @@ object Dedup {
       col("__n"))
     val seeded = relabel(candidates, Seq("sub")).select(slim: _*)
       .localCheckpoint()
-    roundStats.foreach { cb =>
-      val total = norm
-        .agg(coalesce(sum(length(col("t"))), lit(0L))).head.getLong(0)
-      val cand = seeded.count()
-      cb(0, cand, total - cand) // hash-prefilter stage
-    }
-    emitStats(1, seeded) // literal seed relabel stage
     var live = seeded.filter(col("__n") >= 2)
       .select(col("doc_id"), col("len"), col("pos"), col("__rv").as("r"))
     // pruned positions stay visible to later rounds' shifted-rank
@@ -1707,7 +1691,6 @@ object Dedup {
           coalesce(col("__r2v"), lit(0L)).as("__r2v"))
       val rel = relabel(paired, Seq("r", "__r2q", "__r2v"))
         .select(slim: _*).localCheckpoint()
-      emitStats(round + 1, rel) // stages 0/1 are the prefilter + seed
       live = rel.filter(col("__n") >= 2)
         .select(col("doc_id"), col("len"), col("pos"), col("__rv").as("r"))
       frozen ::= rel.filter(col("__n") === 1)
@@ -1768,8 +1751,7 @@ object Dedup {
       idCol: String,
       textCol: String,
       k: Int,
-      minCount: Long,
-      roundStats: Option[(Int, Long, Long) => Unit]): DataFrame = {
+      minCount: Long): DataFrame = {
     val norm = docs
       .select(col(idCol).as("doc_id"),
         TextFunctions.normalizeText(col(textCol)).as("t"))
@@ -1810,13 +1792,6 @@ object Dedup {
       .select(col("doc_id"), col("pos"),
         col("t").substr(col("pos"), lit(k)).as("sub"))
       .localCheckpoint() // the re-count and the flag probe both read it
-    roundStats.foreach { cb =>
-      val total = norm
-        .agg(coalesce(sum(length(col("t")) - lit(k - 1)), lit(0L))).head
-        .getLong(0)
-      val cand = withSub.count()
-      cb(0, cand, total - cand)
-    }
     val dupSubs = withSub.groupBy(col("sub")).agg(count(lit(1)).as("__n"))
       .filter(col("__n") >= minCount).select(col("sub"))
     val flagged = withSub.join(dupSubs, Seq("sub"), "left_semi")
@@ -1845,7 +1820,7 @@ object Dedup {
    *
    * A hash PRE-AGGREGATION (group by `xxhash64(sub)` first, resolve
    * literal winners after) was designed, built, and MEASURED OUT
-   * (`graft.Probe196`, sf0.1): (a) top-M bucket selection with an
+   * (SCALING.md, sf0.1): (a) top-M bucket selection with an
    * exactness certificate never certifies on passage-duplication
    * corpora, because every k-window of a duplicated passage ties at
    * the passage count — the top of the bucket-count distribution is a

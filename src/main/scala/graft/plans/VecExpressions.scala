@@ -160,7 +160,7 @@ object SortedJaccard {
  * Why: the banded DP costs O(n·max) cell ops per pair; the bit-vector
  * core advances 64 DP cells per word op — O(⌈m/64⌉·n). At the q105
  * shape (~2k-char docs, max = 500) that is ~16× fewer operations for
- * identical output. The Probe105b measurement showed EVERY LSH
+ * identical output. The SCALING.md measurement showed EVERY LSH
  * candidate on that corpus passes the verify (median lev 300), so no
  * sound pre-filter can prune anything — making the exact kernel
  * cheaper is the only honest lever. The degenerate regime where the

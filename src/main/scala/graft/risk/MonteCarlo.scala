@@ -143,11 +143,6 @@ object MonteCarlo {
     sample(mean.toArray, chol.map(_.toArray).toArray, seed).toSeq
   }
 
-  /** Trial-id table 0..runs-1 — `create_seed_df`
-   * (`utils/var_utils.py:30-33`). */
-  def seeds(spark: org.apache.spark.sql.SparkSession, runs: Int): DataFrame =
-    spark.range(runs).toDF("trial_id")
-
   /**
    * Simulate `runs` market states per volatility row.
    * Input: (dateCol, vol_avg, vol_cov); output: (dateCol, features, trial_id)

@@ -121,29 +121,6 @@ object Training {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
   }
 
-  /** [[trainModels]] via [[OlsAggregator]] (partial aggregation; the scale
-   * path). `rawDim` = dimensionality of `featuresCol` BEFORE non-linear
-   * expansion. */
-  def trainModelsAgg(
-      df: DataFrame,
-      rawDim: Int,
-      tickerCol: String = "ticker",
-      featuresCol: String = "features",
-      labelCol: String = "return"): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(
-        col(tickerCol).cast("string").as("ticker"),
-        col(featuresCol).cast("array<double>").as("features"),
-        col(labelCol).cast("double").as("label"))
-      .na.drop()
-      .as[TrainRow]
-      .map(r => TrainRow(r.ticker, VarMath.nonLinearFeatures(r.features), r.label))
-      .groupByKey(_.ticker)
-      .agg(new OlsAggregator(4 * rawDim).toColumn.name("weights"))
-      .toDF("ticker", "weights")
-  }
-
   /**
    * Score: y_hat = w0 + w[1:] . nonLinearFeatures(features). Pure native
    * plan: broadcast-join the (tiny) weights table, then codegen'd

@@ -155,29 +155,18 @@ object VarPipeline {
   /** VaR time-series for the whole portfolio (reference
    * `04_var_aggregation.py:56-66`). */
   def portfolioVar(spark: SparkSession, cfg: Config = Config(),
-      pf: Option[DataFrame] = None): DataFrame = {
-    val p = pf.getOrElse(portfolio(spark, cfg))
-    val weighted = VarAggregation.weightedTrials(
-      trialsFor(spark, cfg, pf), p)
-    VarAggregation.varByGroup(weighted, Seq("date"), cfg.confidence,
-        withShortfall = true)
-      .orderBy(col("date"))
-  }
+      pf: Option[DataFrame] = None): DataFrame =
+    VarEngine.varTimeSeries(trialsFor(spark, cfg, pf),
+      pf.getOrElse(portfolio(spark, cfg)), cfg.confidence)
 
   /** VaR and expected shortfall sliced by a portfolio dimension (country /
    * industry) — `04_var_aggregation.py:86-123`, ES per slice matching
    * [[portfolioVar]]. */
   def varBySlice(spark: SparkSession, sliceCol: String, cfg: Config = Config(),
-      pf: Option[DataFrame] = None, withShortfall: Boolean = true): DataFrame = {
-    val weighted = VarAggregation.weightedTrials(
-      trialsFor(spark, cfg, pf), pf.getOrElse(portfolio(spark, cfg)))
-    VarAggregation.varByGroup(weighted, Seq("date", sliceCol), cfg.confidence,
-        withShortfall)
-      .orderBy(col("date"), col(sliceCol))
-  }
+      pf: Option[DataFrame] = None, withShortfall: Boolean = true): DataFrame =
+    VarEngine.riskExposure(trialsFor(spark, cfg, pf),
+      pf.getOrElse(portfolio(spark, cfg)), sliceCol, cfg.confidence, withShortfall)
 
-  /** Basel backtest over the synthetic history (reference
-   * `05_var_compliance.py`). */
   /**
    * The reference's persisted-table notebook hand-off: materialize
    * `market_volatility` (01 writes it) and `monte_carlo_trials` (03
@@ -194,6 +183,8 @@ object VarPipeline {
       tables("mc_trials"), Seq("date", "ticker"), numFiles = 8)
   }
 
+  /** Basel backtest over the synthetic history (reference
+   * `05_var_compliance.py`). */
   def compliance(spark: SparkSession, cfg: Config = Config(),
       pf: Option[DataFrame] = None): DataFrame = {
     val market = Sources.syntheticMarketData(spark, cfg.tickers, cfg.start, cfg.days,

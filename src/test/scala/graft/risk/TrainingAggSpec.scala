@@ -35,22 +35,4 @@ class TrainingAggSpec extends SparkSpec {
     }
   }
 
-  test("trainModelsAgg matches trainModels on the pipeline fixture") {
-    val cfg = VarPipeline.Config(tickers = Seq("T1", "T2"), days = 80, runs = 10)
-    val market = Sources.syntheticMarketData(spark, cfg.tickers, cfg.start, cfg.days, globalSeed = 1L)
-    val ind = Sources.syntheticIndicators(spark, cfg.indicators, cfg.start, cfg.days, 2L)
-    val indRets = Returns.indicatorLogReturns(ind, "date", cfg.indicators)
-    val stockRets = Returns.dailyLogReturns(market).select(col("ticker"), col("date"), col("return"))
-    val joined = AsOfJoin.asofJoinBroadcast(stockRets,
-        indRets.select(col("date"), col("features")), "date")
-      .filter(col("right_features").isNotNull)
-    val a = Training.trainModels(joined, "ticker", "right_features", "return")
-      .as[(String, Array[Double])].collect().toMap
-    val b = Training.trainModelsAgg(joined, cfg.indicators.size, "ticker", "right_features", "return")
-      .as[(String, Array[Double])].collect().toMap
-    assert(a.keySet == b.keySet && a.nonEmpty)
-    a.foreach { case (t, w) =>
-      w.zip(b(t)).foreach { case (x, y) => assert(math.abs(x - y) < 1e-6, s"$t: $x vs $y") }
-    }
-  }
 }
