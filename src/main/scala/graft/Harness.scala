@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -72,13 +72,19 @@ object Harness {
   private def profile(spark: SparkSession, sfDir: String, names: Seq[String]): Unit = {
     @volatile var jobs = 0
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long, Long, Long, Int)]()
+    val sqlExec = new java.util.concurrent.ConcurrentHashMap[Int, String]()
     val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs += 1
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs += 1
+        val exec = Option(js.properties).flatMap(p =>
+          Option(p.getProperty("spark.sql.execution.id"))).getOrElse("-")
+        js.stageIds.foreach(sqlExec.put(_, exec))
+      }
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo
         val m = si.taskMetrics
         val dur = (for { s <- si.submissionTime; e <- si.completionTime } yield e - s).getOrElse(0L)
-        stages.add((si.stageId, si.name.takeWhile(_ != '\n').take(60), dur,
+        stages.add((si.stageId, stageLabel(sqlExec.getOrDefault(si.stageId, "-"), si), dur,
           m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
           si.numTasks))
       }
@@ -108,6 +114,13 @@ object Harness {
         println(f"    stage $id%4d ${dur / 1e3}%6.2fs tasks=$nt%4d shufR=${r / 1e6}%8.1fMB shufW=${w / 1e6}%8.1fMB  $name")
     }
   }
+
+  /** `sql=<execution id> <operator scopes>` of a stage. Under AQE every
+    * stage's call-site name is the same closure, so the SQL execution and
+    * the operators a stage runs are what tell two stages apart (an input
+    * computed twice shows as two stages with the same operators). */
+  private def stageLabel(sqlExec: String, si: StageInfo): String =
+    s"sql=$sqlExec " + si.rddInfos.flatMap(_.scope).map(_.name).distinct.mkString(", ")
 
   private def plan(spark: SparkSession, sfDir: String, names: Seq[String]): Unit =
     for (q <- names) {

@@ -35,6 +35,12 @@ object MonteCarlo {
    * and unboxes two 32k Seqs per group; this aggregator writes each return
    * straight into a primitive double array — no per-row objects, no sort
    * (the index IS the order), fixed-size buffers merged positionally.
+   *
+   * A bitset records the ids each buffer holds, so bad ids fail the query
+   * instead of corrupting the vector: a trial id seen twice in a group
+   * (within a partition or across two) and a gap in a group's ids `0..max`
+   * both throw `IllegalArgumentException`. A return of `0.0` is a value
+   * like any other.
    */
   class TrialVectorAggregator
       extends org.apache.spark.sql.expressions.Aggregator[
@@ -42,31 +48,60 @@ object MonteCarlo {
         org.apache.spark.ml.linalg.Vector] {
     import TrialVectorAggregator.{Buf, In}
 
-    override def zero: Buf = Buf(0, Array.emptyDoubleArray)
+    override def zero: Buf = Buf(0, Array.emptyDoubleArray, Array.emptyLongArray)
 
     override def reduce(buf: Buf, r: In): Buf = {
+      if (r.trial_id < 0 || r.trial_id >= Int.MaxValue)
+        throw new IllegalArgumentException(s"trial id ${r.trial_id} out of range")
       val i = r.trial_id.toInt
-      val arr =
-        if (buf.arr.length > i) buf.arr
+      val b =
+        if (buf.arr.length > i) buf
         else { // amortized power-of-two growth (trial ids arrive in order)
-          val b = new Array[Double](Integer.highestOneBit(math.max(i + 1, 16)) << 1)
-          System.arraycopy(buf.arr, 0, b, 0, buf.arr.length)
-          b
+          val n = Integer.highestOneBit(math.max(i + 1, 16)) << 1
+          Buf(buf.len, java.util.Arrays.copyOf(buf.arr, n),
+            java.util.Arrays.copyOf(buf.seen, (n + 63) >>> 6))
         }
-      arr(i) = r.ret
-      Buf(math.max(buf.len, i + 1), arr)
+      if ((b.seen(i >>> 6) & (1L << i)) != 0) duplicate(i)
+      b.seen(i >>> 6) |= 1L << i
+      b.arr(i) = r.ret
+      Buf(math.max(b.len, i + 1), b.arr, b.seen)
     }
 
     override def merge(a: Buf, b: Buf): Buf =
-      if (a.len >= b.len) { // disjoint trial ids: non-zero wins
-        var i = 0
-        while (i < b.len) { if (b.arr(i) != 0.0) a.arr(i) = b.arr(i); i += 1 }
+      if (a.len >= b.len) { // a's arrays cover every id b holds
+        val words = (b.len + 63) >>> 6
+        var w = 0
+        while (w < words) {
+          val both = a.seen(w) & b.seen(w)
+          if (both != 0) duplicate(w * 64 + java.lang.Long.numberOfTrailingZeros(both))
+          var bits = b.seen(w)
+          a.seen(w) |= bits
+          while (bits != 0) {
+            val i = w * 64 + java.lang.Long.numberOfTrailingZeros(bits)
+            a.arr(i) = b.arr(i)
+            bits &= bits - 1
+          }
+          w += 1
+        }
         a
       } else merge(b, a)
 
-    override def finish(buf: Buf): org.apache.spark.ml.linalg.Vector =
+    override def finish(buf: Buf): org.apache.spark.ml.linalg.Vector = {
+      var w = 0
+      while (w * 64 < buf.len) {
+        val want = if (buf.len - w * 64 >= 64) -1L else (1L << (buf.len - w * 64)) - 1
+        val missing = ~buf.seen(w) & want
+        if (missing != 0) throw new IllegalArgumentException(
+          s"trial id ${w * 64 + java.lang.Long.numberOfTrailingZeros(missing)} missing " +
+            s"from a group with ids up to ${buf.len - 1}")
+        w += 1
+      }
       org.apache.spark.ml.linalg.Vectors.dense(
         java.util.Arrays.copyOf(buf.arr, buf.len))
+    }
+
+    private def duplicate(i: Int): Nothing =
+      throw new IllegalArgumentException(s"trial id $i appears twice in one group")
 
     override def bufferEncoder: org.apache.spark.sql.Encoder[Buf] =
       org.apache.spark.sql.Encoders.product[Buf]
@@ -76,7 +111,8 @@ object MonteCarlo {
 
   object TrialVectorAggregator {
     case class In(trial_id: Long, ret: Double)
-    case class Buf(len: Int, arr: Array[Double])
+    /** `arr(0 until len)` holds the returns; bit `i` of `seen` marks id `i`. */
+    case class Buf(len: Int, arr: Array[Double], seen: Array[Long])
 
     /** Untyped-agg column: `asColumn(trialCol, returnCol)`. */
     def asColumn(trial: org.apache.spark.sql.Column,

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, StructField, StructType
  *
  * Weighting, summing and the percentile are one native aggregate,
  * [[WeightedTrialRisk]]: no per-row weighted vector is built, and VaR and
- * ES come from a single sort of each group's sum.
+ * ES come from one selection of two order statistics of each group's sum.
  */
 object VarAggregation {
 
@@ -81,8 +81,9 @@ object VarAggregation {
  * The buffer is one `double[]` per group. `update` reads the VectorUDT's
  * values array straight from the input row, dense or sparse, so no Vector
  * object is built per row. Partial buffers are serialized as raw doubles.
- * `eval` takes VaR and ES from one sort ([[VarMath.riskOf]]); an empty
- * input (a global aggregate over no rows) yields null.
+ * `eval` takes VaR and ES from one selection ([[VarMath.riskOf]]: the two
+ * order statistics around the VaR rank, no sort); an empty input (a global
+ * aggregate over no rows) yields null.
  */
 case class WeightedTrialRisk(
     returns: Expression,

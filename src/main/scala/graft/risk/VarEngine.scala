@@ -24,7 +24,7 @@ object VarEngine {
     VarAggregation.varByGroup(
       VarAggregation.weightedTrials(trials, portfolio),
       Seq("date"), confidence, withShortfall = true)
-      .orderBy(col("date"))
+      .transform(orderedInOnePartition("date"))
 
   /** Point-in-time portfolio VaR — `04_var_aggregation.py:25-66` (uses the
    * earliest run date when `date` is None, like the notebook's min-date
@@ -47,10 +47,8 @@ object VarEngine {
   def riskExposure(trials: DataFrame, portfolio: DataFrame,
       sliceCol: String, confidence: Double = 99,
       withShortfall: Boolean = true): DataFrame =
-    VarAggregation.varByGroup(
-      VarAggregation.weightedTrials(trials, portfolio),
-      Seq("date", sliceCol), confidence, withShortfall)
-      .orderBy(col("date"), col(sliceCol))
+    bySlice(trials, portfolio, sliceCol, confidence, withShortfall)
+      .transform(orderedInOnePartition("date", sliceCol))
 
   /** Row-normalized risk-contribution crosstab per date —
    * `04_var_aggregation.py:127-131`. */
@@ -59,10 +57,29 @@ object VarEngine {
       confidence: Double = 99): DataFrame =
     VarAggregation.riskContribution(
       // the crosstab pivots VaR only — don't compute a per-slice
-      // shortfall quantile just to drop it
-      riskExposure(trials, portfolio, sliceCol, confidence,
-        withShortfall = false),
+      // shortfall quantile just to drop it. The pivot re-groups the
+      // slices, so they go to one partition unordered, and the pivot's
+      // grouping and the final sort by date need no further exchange.
+      bySlice(trials, portfolio, sliceCol, confidence, withShortfall = false)
+        .repartition(1),
       "date", sliceCol, s"var_${confidence.toInt}", sliceValues)
+      .sortWithinPartitions(col("date"))
+
+  private def bySlice(trials: DataFrame, portfolio: DataFrame,
+      sliceCol: String, confidence: Double, withShortfall: Boolean): DataFrame =
+    VarAggregation.varByGroup(
+      VarAggregation.weightedTrials(trials, portfolio),
+      Seq("date", sliceCol), confidence, withShortfall)
+
+  /**
+   * Orders a small aggregated result by `cols` in a single partition. A
+   * global `orderBy` plans a sampled range exchange instead, whose
+   * sampling job runs the whole input (here: the final VaR aggregate) a
+   * second time just to pick range bounds; one partition is exact for a
+   * result of a few hundred rows and computes its input once.
+   */
+  private[risk] def orderedInOnePartition(cols: String*)(df: DataFrame): DataFrame =
+    df.repartition(1).sortWithinPartitions(cols.map(col): _*)
 
   /**
    * Basel traffic-light backtest, forward-filled to a daily calendar — the

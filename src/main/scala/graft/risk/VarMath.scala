@@ -25,23 +25,26 @@ object VarMath {
    * Linear-interpolated percentile, numpy `np.percentile(xs, p)` semantics
    * (interpolation='linear'), identical to SQL `quantile_cont(xs, p/100)`.
    * `p` in [0, 100]. Does not mutate the input.
+   *
+   * Only the two order statistics around the rank are needed, so they are
+   * found by selection ([[orderStatistics]]) in O(n) expected time instead
+   * of a sort; the result is bit-identical to interpolating a sorted copy.
    */
-  def percentile(xs: Array[Double], p: Double): Double = {
-    require(xs.nonEmpty, "percentile of empty array")
-    val sorted = xs.clone()
-    java.util.Arrays.sort(sorted)
-    percentileOfSorted(sorted, p)
-  }
+  def percentile(xs: Array[Double], p: Double): Double =
+    percentile(xs, p, selectRounds(xs.length))
 
-  /** Same as [[percentile]] but assumes `sorted` is already ascending. */
-  def percentileOfSorted(sorted: Array[Double], p: Double): Double = {
-    val n = sorted.length
-    if (n == 1) return sorted(0)
+  /** [[percentile]] with an explicit partition-round budget for the
+   * selection (tests drive the sort fallback through it). */
+  private[risk] def percentile(xs: Array[Double], p: Double, maxRounds: Int): Double = {
+    require(xs.nonEmpty, "percentile of empty array")
+    val n = xs.length
+    if (n == 1) return xs(0)
     val rank = (n - 1) * (p / 100.0)
     val lo = math.floor(rank).toInt
-    val hi = math.min(lo + 1, n - 1)
+    require(lo >= 0 && lo < n, s"percentile $p out of range")
     val frac = rank - lo
-    sorted(lo) + (sorted(hi) - sorted(lo)) * frac
+    val (x, y) = orderStatistics(xs, lo, maxRounds)
+    x + (y - x) * frac
   }
 
   /** VaR at confidence `c` (e.g. 99) = percentile at (100 - c). Matches
@@ -55,13 +58,62 @@ object VarMath {
     meanAtOrBelow(simulations, valueAtRisk(simulations, confidence))
 
   /** `(valueAtRisk(xs, c), expectedShortfall(xs, c))`, bit for bit, from
-   * one sort: the shortfall still sums in input order. */
+   * one selection: the shortfall still sums in input order. */
   def riskOf(simulations: Array[Double], confidence: Double): (Double, Double) = {
-    require(simulations.nonEmpty, "percentile of empty array")
-    val sorted = simulations.clone()
-    java.util.Arrays.sort(sorted)
-    val v = percentileOfSorted(sorted, 100.0 - confidence)
+    val v = valueAtRisk(simulations, confidence)
     (v, meanAtOrBelow(simulations, v))
+  }
+
+  /** The default round budget of [[orderStatistics]]: 2·⌈log₂ n⌉. */
+  private def selectRounds(n: Int): Int = 2 * (32 - Integer.numberOfLeadingZeros(n - 1))
+
+  /**
+   * Order statistics `lo` and `min(lo + 1, n − 1)` of `xs` in the order of
+   * `Arrays.sort(double[])` (`Double.compare`: −0.0 < 0.0, NaN last), so
+   * they equal `sorted(lo)` and `sorted(lo + 1)` bit for bit.
+   *
+   * Quickselect on a clone with median-of-three pivots and a Hoare
+   * partition (ties split evenly, so heavy ties stay linear). After
+   * `maxRounds` partition rounds the range still holding `lo` is sorted
+   * instead, which bounds adversarial input at O(n log n). The upper
+   * statistic is then the minimum of everything placed above `lo`.
+   */
+  private[risk] def orderStatistics(xs: Array[Double], lo: Int,
+      maxRounds: Int): (Double, Double) = {
+    import java.lang.Double.compare
+    val a = xs.clone()
+    def swap(i: Int, j: Int): Unit = { val t = a(i); a(i) = a(j); a(j) = t }
+    var left = 0
+    var right = a.length - 1
+    var rounds = 0
+    while (left < right) {
+      if (rounds == maxRounds) {
+        java.util.Arrays.sort(a, left, right + 1)
+        left = right
+      } else {
+        rounds += 1
+        val mid = (left + right) >>> 1
+        if (compare(a(mid), a(left)) < 0) swap(mid, left)
+        if (compare(a(right), a(left)) < 0) swap(right, left)
+        if (compare(a(right), a(mid)) < 0) swap(right, mid)
+        val pivot = a(mid)
+        var i = left
+        var j = right
+        while (i <= j) {
+          while (compare(a(i), pivot) < 0) i += 1
+          while (compare(pivot, a(j)) < 0) j -= 1
+          if (i <= j) { swap(i, j); i += 1; j -= 1 }
+        }
+        // a[left..j] <= pivot <= a[i..right]; anything between equals it
+        if (lo <= j) right = j
+        else if (lo >= i) left = i
+        else left = right
+      }
+    }
+    var hi = if (lo + 1 < a.length) a(lo + 1) else a(lo)
+    var k = lo + 2
+    while (k < a.length) { if (compare(a(k), hi) < 0) hi = a(k); k += 1 }
+    (a(lo), hi)
   }
 
   /** Mean of the `xs` at or below `v`, summed in input order. */

@@ -191,6 +191,7 @@ object VarPipeline {
       globalSeed = cfg.seed)
     val rets = Compliance.portfolioReturns(market, pf.getOrElse(portfolio(spark, cfg)))
     val varSeries = portfolioVar(spark, cfg, pf).select(col("date"), col("var_99"))
-    Compliance.baselBacktest(rets, varSeries).orderBy(col("date"))
+    Compliance.baselBacktest(rets, varSeries)
+      .transform(VarEngine.orderedInOnePartition("date"))
   }
 }

@@ -16,11 +16,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *
  * Tables are parquet (this container has no Delta), written clustered via
  * [[Sinks.writeClustered]] — the ZORDER intent: readers filtering on a
- * cluster key can skip files from parquet min/max stats. Timestamp keys
- * are the exception: Spark writes timestamps as INT96 by default and
- * parquet keeps no statistics for INT96 columns, so a filter on a
- * timestamp `date` key reads every file. Table names normally come
- * from `application.yaml`'s `database.tables` map
+ * cluster key can skip files from parquet min/max stats. That includes
+ * timestamp keys such as the trials table's `date`: [[saveTable]] writes
+ * timestamps as INT64 micros, which carry statistics, where Spark's
+ * default INT96 carries none. Table names normally come from
+ * `application.yaml`'s `database.tables` map
  * ([[Configs.AppConfig.tables]]).
  */
 object Warehouse {
@@ -53,18 +53,27 @@ object Warehouse {
    * `clusterCols` (the ZORDER replacement): range-partition + sort, write
    * to the database location, register the table over the files.
    *
-   * By default a timestamp cluster key (the trials table's `date`) is
-   * written as INT96, which has no parquet min/max statistics: the files
-   * stay clustered, but readers filtering on it skip none of them. A
-   * per-write `outputTimestampType` option does not change that; only the
-   * session setting `spark.sql.parquet.outputTimestampType` does.
+   * Timestamps are written as parquet INT64 `TIMESTAMP_MICROS`, not
+   * Spark's default INT96, so a timestamp cluster key (the trials table's
+   * `date`) keeps min/max statistics and a filter on it skips the files
+   * outside its range. Only the session setting
+   * `spark.sql.parquet.outputTimestampType` selects the type (a per-write
+   * option does not), so it is set for this write alone and restored
+   * afterwards, also when the write fails.
    */
   def saveTable(spark: SparkSession, df: DataFrame, table: String,
       clusterCols: Seq[String], numFiles: Int = 20): Unit = {
     import org.apache.spark.sql.functions.col
     val sorted = df.repartitionByRange(numFiles, clusterCols.map(col): _*)
       .sortWithinPartitions(clusterCols.map(col): _*)
-    sorted.write.mode("overwrite").format("parquet").saveAsTable(table)
+    val key = "spark.sql.parquet.outputTimestampType"
+    val previous = spark.conf.getAll.get(key) // set explicitly, not defaulted
+    spark.conf.set(key, "TIMESTAMP_MICROS")
+    try sorted.write.mode("overwrite").format("parquet").saveAsTable(table)
+    finally previous match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   /** Re-read a persisted stage table (the next notebook's first line). */

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs (one per suite, lazy). */
@@ -13,4 +13,10 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
     .getOrCreate()
+
+  /** Every message down the cause chain of `df`'s failure to collect. */
+  def failure(df: DataFrame): String = {
+    val e = intercept[Exception](df.collect())
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.toString).mkString("\n")
+  }
 }

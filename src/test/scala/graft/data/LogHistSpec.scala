@@ -82,8 +82,9 @@ class LogHistSpec extends SparkSpec {
     def hist(xs: Seq[(String, Long)]) =
       Sketches.logHistogram(xs.toDF("g", "v"), Seq("g"), $"v", subBits)
         .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val merged = (hist(h1).keySet ++ hist(h2).keySet).map(k =>
-      k -> (hist(h1).getOrElse(k, 0L) + hist(h2).getOrElse(k, 0L))).toMap
+    val (m1, m2) = (hist(h1), hist(h2))
+    val merged = (m1.keySet ++ m2.keySet).map(k =>
+      k -> (m1.getOrElse(k, 0L) + m2.getOrElse(k, 0L))).toMap
     assert(merged == one)
   }
 

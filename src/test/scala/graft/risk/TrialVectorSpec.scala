@@ -30,6 +30,42 @@ class TrialVectorSpec extends SparkSpec {
     }
   }
 
+  /** `(date, ticker, trial_id, return)` rows in `partitions` slices, in order. */
+  private def trialRows(rows: Seq[(Long, Double)], partitions: Int) =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+        rows.map { case (id, r) => (1, "A", id, r) }, partitions))
+      .toDF("date", "ticker", "trial_id", "return")
+
+  test("TrialVectorAggregator: a trial id twice in one partition fails the query") {
+    val rows = (0L until 10L).map(i => (i, i + 0.5)) :+ (3L -> 9.0)
+    assert(failure(MonteCarlo.collectTrialVectors(trialRows(rows, 1)))
+      .contains("trial id 3 appears twice"))
+  }
+
+  test("TrialVectorAggregator: a trial id in two partitions fails the query") {
+    // slices 0..99 and 90..189: each partition is duplicate-free on its own
+    val rows = ((0L until 100L) ++ (90L until 190L)).map(i => (i, i + 0.5))
+    assert(failure(MonteCarlo.collectTrialVectors(trialRows(rows, 2)))
+      .contains("trial id 90 appears twice"))
+  }
+
+  test("TrialVectorAggregator: a gap in the trial ids fails the query") {
+    val rows = (0L until 70L).filter(_ != 66L).map(i => (i, i + 0.5))
+    for (partitions <- Seq(1, 3))
+      assert(failure(MonteCarlo.collectTrialVectors(trialRows(rows, partitions)))
+        .contains("trial id 66 missing"), s"$partitions partition(s)")
+  }
+
+  test("TrialVectorAggregator: a return of 0.0 is kept, not taken for a missing id") {
+    val rets = Array.tabulate(130)(i => if (i % 3 == 0) 0.0 else i - 60.5)
+    for (partitions <- Seq(1, 4)) {
+      val got = MonteCarlo.collectTrialVectors(
+          trialRows(rets.indices.map(i => (i.toLong, rets(i))).reverse, partitions))
+        .select(col("returns")).head().getAs[org.apache.spark.ml.linalg.Vector](0)
+      assert(got.toArray.sameElements(rets), s"$partitions partition(s)")
+    }
+  }
+
   test("fused predict_nonlinear == composable predictLinear, bit-exact") {
     val rnd = new scala.util.Random(5)
     val rows = (1 to 300).map { i =>

@@ -4,6 +4,11 @@ import scala.util.Random
 
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -11,7 +16,7 @@ import graft.SparkSpec
 
 /** `VarAggregation.weightedTrials` + `varByGroup`: the weighted vector-sum
  * aggregate against a plain `VarMath` recompute, closed forms and bad input. */
-class VarAggregationSpec extends SparkSpec {
+class VarAggregationSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private lazy val portfolio = Seq(
@@ -27,12 +32,6 @@ class VarAggregationSpec extends SparkSpec {
   private def risk(trials: DataFrame, groupCols: Seq[String], confidence: Double = 99): Seq[Row] =
     VarAggregation.varByGroup(VarAggregation.weightedTrials(trials, portfolio),
       groupCols, confidence, withShortfall = true).orderBy(groupCols.map(col): _*).collect().toSeq
-
-  /** Every message down the cause chain of the query's failure. */
-  private def failure(df: DataFrame): String = {
-    val e = intercept[Exception](df.collect())
-    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.toString).mkString("\n")
-  }
 
   test("groups straddling partitions match a plain VarMath recompute") {
     val rnd = new Random(11)
@@ -105,6 +104,33 @@ class VarAggregationSpec extends SparkSpec {
       val agg = VarAggregation.varByGroup(
         VarAggregation.weightedTrials(trials(rows, partitions), portfolio), Seq("date"))
       assert(failure(agg).contains("trial vector of length"), s"$partitions partition(s)")
+    }
+  }
+
+  test("VarEngine slices: no range exchange, one final aggregate, rows in key order") {
+    val rnd = new Random(7)
+    val rows = for (d <- 0 until 12; t <- Seq("A", "B", "C"))
+      yield (d, t, Vectors.dense(Array.fill(50)(rnd.nextGaussian())))
+    val df = trials(rnd.shuffle(rows), 4)
+    val slices = Seq(
+      "varTimeSeries" -> VarEngine.varTimeSeries(df, portfolio),
+      "riskExposure" -> VarEngine.riskExposure(df, portfolio, "industry"),
+      "riskContribution" -> VarEngine.riskContribution(df, portfolio, "industry", Seq("bank", "tech")))
+    for ((name, q) <- slices) {
+      val got = q.collect().toSeq
+      val plan = q.queryExecution.executedPlan
+      val ranges = collect(plan) {
+        case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }
+      assert(ranges.isEmpty, s"$name plans a range exchange:\n$plan")
+      val finals = collect(plan) {
+        case a: BaseAggregateExec if a.aggregateExpressions.exists(e =>
+          e.mode == Final && e.aggregateFunction.isInstanceOf[WeightedTrialRisk]) => a
+      }
+      assert(finals.size === 1, s"$name:\n$plan")
+      val keys = got.map(r => (r.getInt(0), if (name == "riskExposure") r.getString(1) else ""))
+      assert(keys.length === (if (name == "riskExposure") 24 else 12), name)
+      assert(keys === keys.sorted, s"$name rows out of order")
     }
   }
 

@@ -50,6 +50,54 @@ class VarMathSpec extends AnyFunSuite {
     }
   }
 
+  test("selection equals the sort path bit for bit, with and without the sort fallback") {
+    val rnd = new scala.util.Random(29)
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    // the path the selection replaced: interpolate a sorted copy
+    def sorted(xs: Array[Double], p: Double): Double = {
+      val s = xs.clone()
+      java.util.Arrays.sort(s)
+      val rank = (s.length - 1) * (p / 100.0)
+      val lo = math.floor(rank).toInt
+      val hi = math.min(lo + 1, s.length - 1)
+      s(lo) + (s(hi) - s(lo)) * (rank - lo)
+    }
+    def below(xs: Array[Double], v: Double) = {
+      val in = xs.filter(_ <= v)
+      in.foldLeft(0.0)(_ + _) / in.length
+    }
+    val n = 1000
+    val up = Array.tabulate(n)(_.toDouble)
+    val inputs = Seq(
+      Array.fill(32000)(rnd.nextGaussian()),
+      Array.fill(777)(rnd.nextDouble() - 0.5),
+      Array.fill(n)(1.25),                                     // all equal
+      up, up.reverse,                                          // sorted, reverse-sorted
+      Array.tabulate(n)(i => math.min(i, n - 1 - i).toDouble), // organ pipe
+      Array.fill(5000)(rnd.nextInt(3).toDouble),               // ties at every rank
+      // 99 and 99.9 land on ranks 9 and 0 of 1001; ties straddle them
+      rnd.shuffle(Seq.fill(8)(-3.0) ++ Seq.fill(4)(-2.0) ++ Seq.fill(989)(1.0)).toArray,
+      rnd.shuffle(Seq.fill(300)(-0.0) ++ Seq.fill(300)(0.0) ++ Seq(-1e-300, 1e-300)).toArray,
+      Array(0.0, -0.0), Array(-0.0, 0.0, -0.0),
+      Array(3.0, Double.NaN, Double.NegativeInfinity, -1.0, Double.PositiveInfinity),
+      Array(2.0), Array(2.0, -2.0), Array(5.0, -1.0, 3.0)) ++
+      (1 to 40).map(k => Array.fill(k)(rnd.nextInt(4) - 1.5))
+    for (xs <- inputs; c <- Seq(0.0, 50.0, 95.0, 99.0, 99.9, 100.0)) {
+      val p = 100.0 - c
+      val want = sorted(xs, p)
+      val before = xs.clone()
+      val (v, es) = VarMath.riskOf(xs, c)
+      assert(bits(v) === bits(want), s"VaR n=${xs.length} c=$c")
+      assert(bits(VarMath.percentile(xs, p)) === bits(want), s"percentile n=${xs.length} c=$c")
+      assert(bits(es) === bits(below(xs, want)), s"ES n=${xs.length} c=$c")
+      // a spent round budget sorts the rest of the range: from the start, or mid-way
+      for (rounds <- 0 to 3)
+        assert(bits(VarMath.percentile(xs, p, rounds)) === bits(want),
+          s"percentile n=${xs.length} c=$c after $rounds rounds")
+      assert(xs.map(bits).sameElements(before.map(bits)), "the input must not be reordered")
+    }
+  }
+
   test("basel zones: code semantics <=3 green, <10 yellow, else red (var_udf.py:22-30)") {
     assert(VarMath.baselZone(0) === 0)
     assert(VarMath.baselZone(3) === 0)

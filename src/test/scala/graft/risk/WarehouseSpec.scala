@@ -101,6 +101,85 @@ class WarehouseSpec extends SparkSpec {
     } finally Warehouse.teardown(spark, "graft_prune_spec")
   }
 
+  /** Input bytes the tasks of `action`'s jobs read, from Spark's task metrics. */
+  private def bytesRead(action: => Unit): Long = {
+    val bytes = new java.util.concurrent.atomic.AtomicLong
+    val started, ended = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) bytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        ended.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      action
+      // the listener bus is asynchronous: a job's task ends arrive before its end
+      val deadline = System.nanoTime() + 30000000000L
+      while ((started.get == 0 || ended.get < started.get) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    bytes.get
+  }
+
+  test("saveTable: timestamp keys keep statistics, so a point read skips the other files") {
+    val loc = java.nio.file.Files.createTempDirectory("graft_wh7").toString
+    Warehouse.createAndUse(spark, "graft_ts_spec", loc)
+    try {
+      import spark.implicits._
+      val rnd = new scala.util.Random(3)
+      val dates = (0 until 8).map(d =>
+        java.sql.Timestamp.valueOf(f"2024-03-${d + 4}%02d 16:00:00.123456"))
+      val rows = for (d <- dates; t <- 0 until 32)
+        yield (d, s"T$t", Array.fill(2048)(rnd.nextGaussian()))
+      Warehouse.saveTable(spark, rows.toDF("date", "ticker", "returns"), "ts_t",
+        Seq("date", "ticker"), numFiles = 8)
+      val back = Warehouse.table(spark, "ts_t")
+      assert(back.inputFiles.length == 8)
+      // timestamps round-trip exactly, micros included
+      assert(back.select($"date").distinct().as[java.sql.Timestamp].collect().sorted.toSeq
+        === dates)
+      // parquet's vectored reads run off the task thread, where Spark's
+      // input metrics do not see them; plain reads are counted in full
+      val vectored = "parquet.hadoop.vectored.io.enabled"
+      spark.conf.set(vectored, "false")
+      try {
+        def scan(df: org.apache.spark.sql.DataFrame) =
+          bytesRead(df.write.format("noop").mode("overwrite").save())
+        val full = scan(back)
+        val point = scan(back.filter($"date" === dates(3)))
+        // one date per file: the point read pays for one file's data and
+        // every file's footer; a second file's data would cross full / 4
+        assert(point < full / 4, s"point read $point bytes of a full scan's $full")
+      } finally spark.conf.unset(vectored)
+    } finally Warehouse.teardown(spark, "graft_ts_spec")
+  }
+
+  test("saveTable leaves the session's timestamp type as it found it, also on failure") {
+    val loc = java.nio.file.Files.createTempDirectory("graft_wh8").toString
+    Warehouse.createAndUse(spark, "graft_conf_spec", loc)
+    val key = "spark.sql.parquet.outputTimestampType"
+    def setting = spark.conf.getAll.get(key)
+    val good = spark.range(10).select(col("id").as("k"))
+    val bad = spark.range(10).select(col("id").as("k"),
+      when(col("id") > 2, raise_error(lit("boom"))).otherwise(col("id")).as("v"))
+    try {
+      for (before <- Seq(None, Some("INT96"))) {
+        before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+        Warehouse.saveTable(spark, good, "conf_t", Seq("k"), numFiles = 2)
+        assert(setting === before, "after a write")
+        assert(intercept[Exception](Warehouse.saveTable(spark, bad, "conf_bad", Seq("k")))
+          .toString.contains("boom"))
+        assert(setting === before, "after a failed write")
+      }
+    } finally {
+      spark.conf.unset(key)
+      Warehouse.teardown(spark, "graft_conf_spec")
+    }
+  }
+
   test("incremental market ingest: upsert new days, VaR recomputes over the table") {
     // the reference's hinted incremental mode (application.yaml) spelled
     // with upsertTable: land a correction + new days into the stored
