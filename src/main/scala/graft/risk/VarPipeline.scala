@@ -15,7 +15,7 @@ import org.apache.spark.storage.StorageLevel
  *   synthetic GBM prices (S1/V5) → W1 log returns (P6) → indicator
  *   returns (P7) → 90d rolling vol stats (W2/A8/A9) → per-ticker OLS on
  *   non-linear features (A2/P13) → weekly as-of vol (J5) → seeded MC
- *   simulation (V4/V6, shuffle-free fan-out) → model scoring (P14,
+ *   simulation (V4/V6, per-date generator fan-out) → model scoring (P14,
  *   native) → trial vectors (A3) → weighted vector sum (P10/A7) →
  *   interpolated VaR/ES (V1/V2) by date and slice.
  */
@@ -94,14 +94,8 @@ object VarPipeline {
       .filter(col("right_vol_cov").isNotNull)
       .select(col("date"), col("right_vol_avg").as("vol_avg"),
         col("right_vol_cov").as("vol_cov"))
-    val mcMarket = MonteCarlo.simulateMarket(atRun, cfg.runs,
-      numPartitions = spark.sparkContext.defaultParallelism)
-    val weights = trainedWeights(spark, cfg)
-    val fanned = mcMarket.crossJoin(
-      broadcast(pf.getOrElse(portfolio(spark, cfg)).select(col("ticker"))))
-    val scored = Training.score(fanned, weights, "ticker", "features", "return")
-      .select(col("date"), col("ticker"), col("trial_id"), col("return"))
-    MonteCarlo.collectTrialVectors(scored)
+    MonteCarlo.trialVectors(atRun, trainedWeights(spark, cfg),
+      pf.getOrElse(portfolio(spark, cfg)), cfg.runs, spark.sparkContext.defaultParallelism)
   }
 
   // One cached trials table per (session, cfg) — the in-memory twin of the

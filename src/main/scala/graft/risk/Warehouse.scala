@@ -14,12 +14,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    `OPTIMIZE ... ZORDER BY (date, ticker)`;
  *  - `04_var_aggregation.py:13`, `05_var_compliance.py:23,46`: re-read.
  *
- * Tables are parquet (this container has no Delta), written clustered via
- * [[Sinks.writeClustered]] — the ZORDER intent: readers filtering on a
- * cluster key can skip files from parquet min/max stats. That includes
- * timestamp keys such as the trials table's `date`: [[saveTable]] writes
- * timestamps as INT64 micros, which carry statistics, where Spark's
- * default INT96 carries none. Table names normally come from
+ * Tables are parquet (there is no Delta here), written by [[saveTable]]
+ * range-clustered on their cluster keys — the ZORDER intent: readers
+ * filtering on a cluster key can skip files from parquet min/max stats.
+ * That includes timestamp keys such as the trials table's `date`:
+ * [[saveTable]] writes timestamps as INT64 micros, which carry statistics,
+ * where Spark's default INT96 carries none. Pages are written
+ * uncompressed: the trials table is random doubles, which snappy does not
+ * shrink, so compression only adds a decompression to every read. Table
+ * names normally come from
  * `application.yaml`'s `database.tables` map
  * ([[Configs.AppConfig.tables]]).
  */
@@ -59,7 +62,7 @@ object Warehouse {
    * outside its range. Only the session setting
    * `spark.sql.parquet.outputTimestampType` selects the type (a per-write
    * option does not), so it is set for this write alone and restored
-   * afterwards, also when the write fails.
+   * afterwards, also when the write fails. Pages are written uncompressed.
    */
   def saveTable(spark: SparkSession, df: DataFrame, table: String,
       clusterCols: Seq[String], numFiles: Int = 20): Unit = {
@@ -69,7 +72,8 @@ object Warehouse {
     val key = "spark.sql.parquet.outputTimestampType"
     val previous = spark.conf.getAll.get(key) // set explicitly, not defaulted
     spark.conf.set(key, "TIMESTAMP_MICROS")
-    try sorted.write.mode("overwrite").format("parquet").saveAsTable(table)
+    try sorted.write.mode("overwrite").format("parquet")
+      .option("compression", "none").saveAsTable(table)
     finally previous match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)

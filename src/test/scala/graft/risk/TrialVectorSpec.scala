@@ -66,6 +66,51 @@ class TrialVectorSpec extends SparkSpec {
     }
   }
 
+  /** `(date, ticker, trial_id, return)` rows, one partition per slice. */
+  private def slicedRows(slices: Seq[Seq[(Long, Double)]]) =
+    spark.createDataFrame(spark.sparkContext.parallelize(slices, slices.length)
+        .flatMap(_.map { case (id, r) => (1, "A", id, r) }))
+      .toDF("date", "ticker", "trial_id", "return")
+
+  test("TrialVectorAggregator: partials split off a word boundary merge into one vector") {
+    val rets = Array.tabulate(200)(i => math.sin(i) * 0.01)
+    def slice(ids: Range) = ids.map(i => (i.toLong, rets(i)))
+    // ids 0..70 and 71..199: partial buffers of 71 and 200 slots, either way round
+    for (slices <- Seq(Seq(slice(0 to 70), slice(71 until 200)),
+        Seq(slice(71 until 200), slice(0 to 70)));
+        runs <- Seq(-1, 200)) {
+      val got = slicedRows(slices).groupBy(col("date"), col("ticker"))
+        .agg(TrialVectorAggregator.asColumn(col("trial_id"), col("return"), runs).as("v"))
+        .select(col("v")).collect().map(_.getAs[org.apache.spark.ml.linalg.Vector](0))
+      assert(got.length == 1 && got(0).toArray.sameElements(rets),
+        s"first slice from ${slices.head.head._1}, runs=$runs")
+    }
+  }
+
+  test("TrialVectorAggregator: with runs known, missing trailing ids and ids past the end fail") {
+    def gather(rows: Seq[(Long, Double)], partitions: Int) =
+      trialRows(rows, partitions).groupBy(col("date"), col("ticker"))
+        .agg(TrialVectorAggregator.asColumn(col("trial_id"), col("return"), 70).as("v"))
+    for (partitions <- Seq(1, 3)) {
+      val short = (0L until 60L).map(i => (i, i + 0.5))
+      assert(failure(gather(short, partitions)).contains("trial id 60 missing from a group of 70"),
+        s"$partitions partition(s)")
+      val long = (0L to 70L).map(i => (i, i + 0.5))
+      assert(failure(gather(long, partitions)).contains("trial id 70 out of range for 70 trials"),
+        s"$partitions partition(s)")
+    }
+  }
+
+  test("TrialVectorAggregator: a null trial id or return fails the query") {
+    val df = Seq[(Int, String, java.lang.Long, java.lang.Double)](
+        (1, "A", 0L, 1.0), (1, "A", null, 2.0), (1, "B", 0L, null))
+      .toDF("date", "ticker", "trial_id", "return")
+    assert(failure(MonteCarlo.collectTrialVectors(df.filter(col("ticker") === "A")))
+      .contains("trial_vector: null trial id"))
+    assert(failure(MonteCarlo.collectTrialVectors(df.filter(col("ticker") === "B")))
+      .contains("trial_vector: null return"))
+  }
+
   test("fused predict_nonlinear == composable predictLinear, bit-exact") {
     val rnd = new scala.util.Random(5)
     val rows = (1 to 300).map { i =>

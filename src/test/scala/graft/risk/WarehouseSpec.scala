@@ -157,6 +157,35 @@ class WarehouseSpec extends SparkSpec {
     } finally Warehouse.teardown(spark, "graft_ts_spec")
   }
 
+  test("saveTable writes uncompressed pages, and values round-trip exactly") {
+    val loc = java.nio.file.Files.createTempDirectory("graft_wh9").toString
+    Warehouse.createAndUse(spark, "graft_codec_spec", loc)
+    try {
+      import spark.implicits._
+      import scala.jdk.CollectionConverters._
+      val rnd = new scala.util.Random(9)
+      val rows = for (d <- 0 until 6; t <- 0 until 4)
+        yield (d, s"T$t", Array.fill(512)(rnd.nextGaussian()))
+      Warehouse.saveTable(spark, rows.toDF("date", "ticker", "returns"), "codec_t",
+        Seq("date", "ticker"), numFiles = 3)
+      val back = Warehouse.table(spark, "codec_t")
+      val conf = spark.sparkContext.hadoopConfiguration
+      val codecs = back.inputFiles.toSeq.flatMap { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f), conf))
+        try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec))
+        finally reader.close()
+      }
+      assert(codecs.nonEmpty)
+      assert(codecs.forall(_.name == "UNCOMPRESSED"), codecs.distinct.mkString(", "))
+      val got = back.as[(Int, String, Array[Double])].collect()
+        .map(r => (r._1, r._2) -> r._3.toSeq.map(java.lang.Double.doubleToRawLongBits)).toMap
+      assert(got === rows.map(r =>
+        (r._1, r._2) -> r._3.toSeq.map(java.lang.Double.doubleToRawLongBits)).toMap)
+    } finally Warehouse.teardown(spark, "graft_codec_spec")
+  }
+
   test("saveTable leaves the session's timestamp type as it found it, also on failure") {
     val loc = java.nio.file.Files.createTempDirectory("graft_wh8").toString
     Warehouse.createAndUse(spark, "graft_conf_spec", loc)
