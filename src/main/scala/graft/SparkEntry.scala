@@ -1157,7 +1157,8 @@ object SparkEntry {
           "<a href='/p'>Privacy</a></footer>"))
       // exploded spelling (codegen per block row) — the faster batch
       // shape; extractContentInline is the spec-pinned value-equal
-      // streaming twin (HOF interpretation costs ~1.5x here)
+      // stateless spelling that also runs on a stream (HtmlSpec; HOF
+      // interpretation costs ~1.5x here)
       Html.extractContent(
           docs.select(col("doc_id"), html.as("html")), "doc_id", "html")
         .select(col("doc_id"), length(col("text")).cast("long").as("n_chars"),

@@ -292,22 +292,6 @@ object Corpus {
       .distinct()
     val dense = Sketches.bloomDense(
       Sketches.bloomSketch(benchFp, col("__fp"), mBits, kHashes), mBits)
-    decontaminateExactGuarded(corpus, idCol, textCol, benchFp, dense,
-      mBits, kHashes)
-  }
-
-  /** [[decontaminateExact]] against a PRE-BUILT benchmark — `benchFp`
-   * (one `__fp` long column) and its dense bloom word row — the form the
-   * streaming hot-reload twin probes
-   * ([[saveBenchmarkVersioned]] publishes both). */
-  def decontaminateExactGuarded(
-      corpus: DataFrame,
-      idCol: String,
-      textCol: String,
-      benchFp: DataFrame,
-      dense: DataFrame,
-      mBits: Int,
-      kHashes: Int): DataFrame = {
     val base = corpus
       .withColumn("__fp", TextFunctions.fingerprint(col(textCol)))
       .crossJoin(broadcast(dense.select(col("words"))))
@@ -380,34 +364,6 @@ object Corpus {
         expr(s"((c_pair - $discount) * 1000000 div c_1) * n_total div c_2")
           .as("score_ppm"))
       .filter(col("score_ppm") >= minScorePpm)
-  }
-
-  /**
-   * Publish a decontamination BENCHMARK as an immutable version behind
-   * `dir/latest` ([[Versioned.publish]]): the distinct fingerprint table
-   * (`fp/`) plus its dense bloom word row (`bloom/`, stamped with
-   * `m_bits`/`k_hashes` so readers self-configure — parameter drift
-   * between publisher and prober is impossible). The bloom is built from
-   * the WRITTEN fingerprints (read back), so the two artifacts of a
-   * version are consistent by construction. The streaming twin
-   * (`StreamingMarket.deconWithBenchmarkRefresh`) polls `latest` and
-   * hot-reloads.
-   */
-  def saveBenchmarkVersioned(benchmark: DataFrame, benchTextCol: String,
-      dir: String, mBits: Int = 65536, kHashes: Int = 4): Long = {
-    val spark = benchmark.sparkSession
-    Versioned.publish(spark, dir) { path =>
-      benchmark
-        .select(TextFunctions.fingerprint(col(benchTextCol)).as("__fp"))
-        .distinct()
-        .write.parquet(s"$path/fp")
-      val fp = spark.read.parquet(s"$path/fp")
-      Sketches.bloomDense(
-          Sketches.bloomSketch(fp, col("__fp"), mBits, kHashes), mBits)
-        .withColumn("m_bits", lit(mBits))
-        .withColumn("k_hashes", lit(kHashes))
-        .write.parquet(s"$path/bloom")
-    }
   }
 
   /**
@@ -645,8 +601,7 @@ object Corpus {
       tokenCounts(after, textCol), topK)
 
   /** Per-token occurrence counts `(tok, cnt)` of a corpus — the
-   * persistable baseline of the drift monitor (save with
-   * [[saveTokenCountsVersioned]] for the streaming twin's hot-reload). */
+   * persistable baseline of the drift monitor ([[tokenDriftFromCounts]]). */
   def tokenCounts(df: DataFrame, textCol: String): DataFrame = df
     .select(explode(TextFunctions.tokens(col(textCol))).as("tok"))
     .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
@@ -967,12 +922,4 @@ object Corpus {
       .agg(sum(col("cnt")).cast("long").as("cnt"))
       .filter(col("cnt") =!= 0L)
   }
-
-  /** Publish a corpus' token counts as an immutable `dir/v<N>` behind
-   * the `latest` pointer ([[Versioned.publish]]) — the baseline-refresh
-   * cadence of the streaming drift monitor. Returns the version. */
-  def saveTokenCountsVersioned(docs: DataFrame, textCol: String,
-      dir: String): Long =
-    Versioned.publish(docs.sparkSession, dir)(p =>
-      tokenCounts(docs, textCol).write.mode("overwrite").parquet(p))
 }

@@ -973,9 +973,9 @@ object Dedup {
    * the untouched store plus a stale `.compacting` (harmless — retried
    * compactions delete it) or the store under `<path>.precompact`
    * (recover by renaming it back). Pipelines wanting crash-safe
-   * compaction should publish through [[saveSignatureStoreVersioned]] +
-   * [[Versioned.pruneVersions]] instead — each version is immutable and
-   * the pointer flip is the only mutation.
+   * compaction should publish each store as an immutable version through
+   * [[Versioned.publish]] + [[Versioned.pruneVersions]] instead — the
+   * pointer flip is then the only mutation.
    */
   def compactSignatureStore(spark: org.apache.spark.sql.SparkSession,
       path: String, numFiles: Int = 0): Long = {
@@ -997,23 +997,6 @@ object Dedup {
           "compactSignatureStore requires the single ingest writer")
     hfs.delete(old, true)
     rows
-  }
-
-  /** Publish the store as a new immutable `dir/v<N>` behind the `latest`
-   * pointer ([[Versioned.publish]]) — the rebuild cadence of an ingest
-   * pipeline without yanking parquet out from under in-flight admits.
-   * Returns the version number. */
-  def saveSignatureStoreVersioned(sigs: DataFrame, dir: String): Long =
-    Versioned.publish(sigs.sparkSession, dir)(saveSignatureStore(sigs, _))
-
-  /** Load the currently-published store version: `(version, store)`. */
-  def loadSignatureStoreVersioned(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Long, DataFrame) = {
-    val v = Versioned.latestVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"no signature store published under $dir " +
-          "(write one with Dedup.saveSignatureStoreVersioned)"))
-    (v, loadSignatureStore(spark, s"$dir/v$v"))
   }
 
   /**
@@ -1148,7 +1131,7 @@ object Dedup {
   /** Verify a signature table can serve the Hamming tier at `bits`.
    * The `simh` column must exist — a store persisted before the Hamming
    * tier existed lacks it, and without this check the failure is an
-   * unresolved-column AnalysisException deep in a streaming batch. When
+   * unresolved-column AnalysisException deep in the probe plan. When
    * the table carries width metadata ([[signatures]]' `simh_bits`), a
    * non-skipped width must EQUAL `bits`: chunk keys computed at
    * mismatched widths can never agree, so the probe would run without
@@ -1445,37 +1428,6 @@ object Dedup {
       .filter(col("cnt") >= minCount)
       .select(col("h"))
     mergeSpans(grams, dupHashes, k)
-  }
-
-  /** Per-corpus k-gram hash COUNTS `(h, cnt)` of NORMALIZED
-   * `(doc_id, t)` rows — the additive sufficient statistic behind
-   * [[duplicateSpans]]' flagged-hash set: counts of two corpus slices
-   * sum to the counts of their union, which is what lets a streaming
-   * ingest append per-batch deltas and aggregate merge-on-read
-   * ([[graft.streaming.StreamingMarket.duplicateSpansIngest]]). One
-   * map-combinable aggregation over the slice's gram stream. */
-  private[graft] def kgramCountsFromNorm(norm: DataFrame, k: Int): DataFrame =
-    norm
-      .select(explode(kgramHashes(col("t"), k)).as("h"))
-      .groupBy(col("h")).agg(count(lit(1)).as("cnt"))
-
-  /** [[duplicateSpans]] split at its sufficient statistic: given the
-   * NORMALIZED corpus `(doc_id, t)` and (possibly chunked, un-merged)
-   * k-gram hash count deltas `(h, cnt)`, re-sum the counts, flag
-   * hashes at `minCount`, and merge flagged positions into maximal
-   * spans — bit-equal to `duplicateSpans` over the corpus the counts
-   * were derived from (the re-sum makes arbitrary delta splits
-   * invisible). */
-  private[graft] def spansFromCounts(norm: DataFrame, counts: DataFrame,
-      k: Int, minCount: Long): DataFrame = {
-    val flagged = counts.groupBy(col("h"))
-      .agg(sum(col("cnt")).as("__c"))
-      .filter(col("__c") >= minCount)
-      .select(col("h"))
-    val grams = norm
-      .select(col("doc_id"), posexplode(kgramHashes(col("t"), k)))
-      .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("h"))
-    mergeSpans(grams, flagged, k)
   }
 
   /**

@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
  * spelled so each is a handful of KEYED shuffles with per-key windows:
  * nothing global, nothing quadratic, all integer-exact arithmetic on
  * epoch seconds / day numbers so any engine reproduces the outputs
- * bit-for-bit. The streaming face of sessionization is
- * `StreamingMarket.streamingSessions` (`session_window`); this is the
- * batch twin with exact gap semantics over a complete log.
+ * bit-for-bit. Spark's `session_window` is the streaming spelling of
+ * sessionization; this is the batch form, with exact gap semantics over
+ * a complete log.
  */
 object Events {
 

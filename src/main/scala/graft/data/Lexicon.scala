@@ -110,24 +110,6 @@ object Lexicon {
     }(org.apache.spark.sql.Encoders.row(schema))
   }
 
-  /** Publish a term list as an immutable `dir/v<N>` behind the `latest`
-   * pointer ([[Versioned.publish]]) — the hand-off to the streaming
-   * scan twin (`StreamingMarket.scanWithLexiconRefresh`). Returns the
-   * version. */
-  def saveLexiconVersioned(spark: org.apache.spark.sql.SparkSession,
-      terms: Seq[String], dir: String): Long =
-    Versioned.publish(spark, dir) { p =>
-      import spark.implicits._
-      terms.toDF("term").coalesce(1).write.parquet(p)
-    }
-
-  /** Load a published term list. The collect is bounded by contract:
-   * a lexicon is a term list, not data. Sorted for a deterministic
-   * automaton regardless of file order. */
-  def loadLexicon(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[String] =
-    spark.read.parquet(path).collect().map(_.getString(0)).toSeq.sorted
-
   /** Exploded per-term counts: `(idCol, term, n)` — one row per
    * (document, matched term); zero-hit documents emit nothing.
    * The blocklist-filter composition is a `left_anti` on this. */

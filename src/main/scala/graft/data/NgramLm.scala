@@ -1,6 +1,6 @@
 package graft.data
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -53,7 +53,7 @@ object NgramLm {
    * any engine can read the layout back. Counts are integer-exact, so
    * a [[loadModel]]ed model scores bit-identically to the fresh fit.
    * NOTE: `mode("overwrite")` rewrites IN PLACE; to republish over a
-   * model some live reader (e.g. the streaming scorer) already loaded,
+   * model some live reader (e.g. a long-running scorer) already loaded,
    * use [[saveModelVersioned]]. */
   def saveModel(model: NgramModel, dir: String): Unit = {
     val spark = model.uni.sparkSession
@@ -90,13 +90,11 @@ object NgramLm {
 
   /** One row per token position: `(doc id, n, i, w1, w2, w3)` with
    * 0-based `i`, `w2`/`w1` null when the context does not exist, plus
-   * the three join keys. Extra columns (e.g. an event-time column for
-   * the streaming twin) pass through. */
-  private def positions(docs: DataFrame, idCol: String, textCol: String,
-      passThrough: Seq[Column] = Nil): DataFrame =
+   * the three join keys. */
+  private def positions(docs: DataFrame, idCol: String,
+      textCol: String): DataFrame =
     docs
-      .select(col(idCol) +: TextFunctions.tokens(lower(col(textCol))).as("__t")
-        +: passThrough: _*)
+      .select(col(idCol), TextFunctions.tokens(lower(col(textCol))).as("__t"))
       .select(col("*"), size(col("__t")).as("n"),
         posexplode(col("__t")))
       .withColumnRenamed("col", "w3").withColumnRenamed("pos", "i")
@@ -141,16 +139,14 @@ object NgramLm {
 
   /**
    * Per-position micro-unit log-score components —
-   * `(idCol, n, __m, passThrough…)` — the shared kernel of batch
-   * [[scoreDocs]] and `StreamingMarket.streamingLmScore` (keeping it in
-   * ONE place pins the backoff spelling for both twins). Five keyed
+   * `(idCol, n, __m)` — the kernel of [[scoreDocs]]. Five keyed
    * joins of the position stream against the count tables (trigram,
    * bigram twice — gram and context, unigram twice); no broadcast
    * anywhere.
    */
   def scoreComponents(model: NgramModel, docs: DataFrame, idCol: String,
-      textCol: String, passThrough: Seq[Column] = Nil): DataFrame = {
-    val pos = positions(docs, idCol, textCol, passThrough)
+      textCol: String): DataFrame = {
+    val pos = positions(docs, idCol, textCol)
     val joined = pos
       .join(model.tri.select(col("key").as("tri_key"), col("c3")), Seq("tri_key"), "left")
       .join(model.bi.select(col("key").as("bi_key"), col("c2")), Seq("bi_key"), "left")
@@ -170,9 +166,8 @@ object NgramLm {
         when(col("c2").isNotNull, biScore)
           .otherwise(lit(0.4) * uniScore))
       .otherwise(uniScore)
-    joined.select(col(idCol) +: col("n") +:
-      round(log(s) * lit(1e6), 0).cast("long").as("__m") +:
-      passThrough: _*)
+    joined.select(col(idCol), col("n"),
+      round(log(s) * lit(1e6), 0).cast("long").as("__m"))
   }
 
   /**

@@ -289,8 +289,8 @@ object Pq {
    *
    * NOTE: `mode("overwrite")` rewrites IN PLACE — re-saving over a
    * directory some live reader already loaded deletes the row files
-   * under it. For publish-while-serving (the streaming hot-reload
-   * shape) use [[saveIndexVersioned]], which writes each rebuild to a
+   * under it. For publish-while-serving (a reader that polls for
+   * rebuilds) use [[saveIndexVersioned]], which writes each rebuild to a
    * fresh immutable subdirectory and flips a pointer last. */
   def saveIndex(index: Index, dir: String): Unit = {
     val spark = index.rows.sparkSession
@@ -398,12 +398,9 @@ object Pq {
       Await.result(residualF, Duration.Inf))
   }
 
-  /** Query-side probe prep shared by batch [[searchIndex]] and
-   * `StreamingMarket.streamingAnnSearch` — one row per (query, probed
-   * cell) carrying the ADC LUT and the residual centroid term; extra
-   * columns of `queries` (e.g. an event-time column) pass through.
-   * Keeping this in ONE place pins the probe spelling (cell tie-breaks,
-   * residual term) for both twins. */
+  /** Query-side probe prep of [[searchIndex]] — one row per (query,
+   * probed cell) carrying the ADC LUT and the residual centroid term;
+   * extra columns of `queries` pass through. */
   def probeQueries(
       index: Index,
       queries: DataFrame,

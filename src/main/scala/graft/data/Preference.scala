@@ -76,9 +76,9 @@ object Preference {
     bradleyTerryFromCounts(winCounts(comparisons, winnerCol, loserCol), iters)
 
   /** [[bradleyTerry]] starting from a (winner, loser, n) win-count table
-   * — the refit entry point for stores maintained incrementally (the
-   * streaming ingest merges counts; counts are sufficient statistics for
-   * the MM update, so refit-from-store == fit-from-all-judgments). */
+   * — the refit entry point for stores maintained incrementally (an
+   * ingest that merges per-batch counts; counts are sufficient statistics
+   * for the MM update, so refit-from-store == fit-from-all-judgments). */
   def bradleyTerryFromCounts(winCountTable: DataFrame,
       iters: Int = 3): DataFrame = {
     require(iters >= 0, s"iters must be >= 0, got $iters")

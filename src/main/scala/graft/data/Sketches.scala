@@ -154,23 +154,6 @@ object Sketches {
     round(hllEstimate(hllStateOf(registers, p),
       size(filter(registers, r => r > 0)).cast("long"), 1 << p), 2)
 
-  /** Driver-side twin of the estimate chain for a register array held
-   * in memory (the streaming monitor's bounded state) — same raw /
-   * linear-counting switch, same 2dp rounding, value-identical to
-   * [[hllEstimateFromRegisters]] on the same registers. */
-  def estimateFromRegisters(regs: Array[Int], p: Int): Double = {
-    val m = 1 << p
-    val sc = stateScale(p)
-    require(regs.length == m, s"expected $m registers, got ${regs.length}")
-    val state = regs.map(r => 1L << (sc - r)).sum
-    val raw = rawConstant(p) / state.toDouble
-    val empty = regs.count(_ == 0)
-    val est =
-      if (raw <= 2.5 * m && empty > 0) m * math.log(m.toDouble / empty)
-      else raw
-    math.rint(est * 100) / 100
-  }
-
   /** Corrected HLL estimate from the integer state: raw harmonic-mean
    * estimate, switched to linear counting (m·ln(m/V)) in the small range
    * per Flajolet et al. §4. */
@@ -417,20 +400,12 @@ object Sketches {
         (bucket - m * sub).cast("long"), m.cast("int")))
   }
 
-  /** Scalar spelling of [[logBucketFloor]] for driver-side sketch state
-   * (the streaming monitor's quantile walk over its bounded bucket map). */
-  def logBucketFloorScalar(bucket: Long, subBits: Int): Long = {
-    val sub = 1L << subBits
-    if (bucket < 2 * sub) bucket
-    else { val m = bucket / sub - 1; (bucket - m * sub) << m }
-  }
-
   /**
    * Per-group log-histogram: one map-combinable aggregation to a
    * BOUNDED (`|groups| · ~1.9k` at subBits=5) bucket table. The state is
    * plain `(bucket, count)` rows, so histograms merge by summing counts
-   * — the property the streaming twin and multi-snapshot monitors lean
-   * on — and the whole sketch is oracle-reproducible in any SQL engine.
+   * — the property multi-snapshot monitors lean on — and the whole
+   * sketch is oracle-reproducible in any SQL engine.
    */
   def logHistogram(df: DataFrame, groupCols: Seq[String], value: Column,
       subBits: Int = 5): DataFrame =

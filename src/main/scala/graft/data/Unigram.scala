@@ -444,12 +444,4 @@ object Unigram {
   def loadModel(spark: SparkSession, path: String): Model =
     spark.read.parquet(path).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-
-  /** Publish the model as an immutable `dir/v<N>` behind the `latest`
-   * pointer ([[Versioned.publish]]) — the retrain-cadence hand-off to
-   * the streaming encode twin
-   * (`StreamingMarket.encodeWithModelRefresh`). Returns the version. */
-  def saveModelVersioned(spark: SparkSession, model: Model,
-      dir: String): Long =
-    Versioned.publish(spark, dir)(p => saveModel(spark, model, p))
 }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
  * `dir/latest` pointer LAST, so a reader that loaded version N keeps a
  * consistent snapshot while N+1 lands. This is the one shared spelling
  * behind [[Pq.saveIndexVersioned]], [[NgramLm.saveModelVersioned]] and
- * [[Bm25.saveModelVersioned]] — and the streaming hot-reload twins poll
- * [[latestVersion]] between batches.
+ * [[Bm25.saveModelVersioned]]; a long-running reader polls
+ * [[latestVersion]] to pick up a new version.
  *
  * Concurrency contract: ONE publisher at a time. The version body is
  * written under a hidden staging name and committed by an atomic

@@ -277,21 +277,4 @@ object Wordpiece {
     spark.read.parquet(path).orderBy(col("rank"))
       .select(col("piece")).collect().map(_.getString(0)).toSeq
   }
-
-  /** Publish the vocab as an immutable `dir/v<N>` behind the `latest`
-   * pointer ([[Versioned.publish]]) — the retrain/republish cadence the
-   * streaming encoder hot-reloads from. Returns the version. */
-  def saveVocabVersioned(spark: org.apache.spark.sql.SparkSession,
-      vocab: Seq[String], dir: String): Long =
-    Versioned.publish(spark, dir)(saveVocab(spark, vocab, _))
-
-  /** Load the currently-published vocab version: `(version, vocab)`. */
-  def loadVocabVersioned(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Long, Seq[String]) = {
-    val v = Versioned.latestVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"no wordpiece vocab published under $dir " +
-          "(write one with Wordpiece.saveVocabVersioned)"))
-    (v, loadVocab(spark, s"$dir/v$v"))
-  }
 }

@@ -19,7 +19,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
  *    streaming analogue of the W1 two-row window) — explicit keyed state
  *    holding the previous close.
  *
- * Both compose with the batch column functions unchanged: a stream is
+ * Around them: a parquet file source of ticks, the portfolio (stream-
+ * static) and indicator (stream-stream) enrichment joins, and windowed
+ * VaR. All compose with the batch column functions unchanged: a stream is
  * just a DataFrame whose plan runs forever.
  */
 object StreamingMarket {
@@ -55,7 +57,10 @@ object StreamingMarket {
    * Running log returns per ticker with explicit keyed state: each batch's
    * rows are processed in event-time order against the stored previous
    * close; the first tick of a series returns 0.0 (the batch W1 `first`
-   * semantics — ln(close/close), not null).
+   * semantics — ln(close/close), not null). A tick older than the stored
+   * close arrived late (a file source gives no order across files): it is
+   * dropped, with no output row and the state unchanged, as a watermark
+   * would drop it, so a late tick never moves the state backwards.
    */
   def runningLogReturns(ticks: Dataset[PriceTick])(
       implicit spark: SparkSession): Dataset[ReturnTick] = {
@@ -68,13 +73,13 @@ object StreamingMarket {
           // micro-batch iterators carry no order guarantee — impose event time
           val ordered = rows.toSeq.sortBy(_.ts.getTime)
           var prev = state.getOption
-          val out = ordered.map { t =>
-            val base = prev match {
-              case Some(p) if p.ts <= t.ts.getTime => p.close
-              case _ => t.close
+          val out = ordered.flatMap { t =>
+            if (prev.exists(_.ts > t.ts.getTime)) None
+            else {
+              val base = prev.fold(t.close)(_.close)
+              prev = Some(PrevClose(t.ts.getTime, t.close))
+              Some(ReturnTick(ticker, t.ts, t.close, math.log(t.close / base)))
             }
-            prev = Some(PrevClose(t.ts.getTime, t.close))
-            ReturnTick(ticker, t.ts, t.close, math.log(t.close / base))
           }
           prev.foreach(state.update)
           out.iterator
@@ -90,1676 +95,6 @@ object StreamingMarket {
       .parquet(dir)
       .as[PriceTick]
   }
-
-  /**
-   * Streaming dedup — the incremental face of the batch fingerprint
-   * dedup (q21): drop any document whose normalized-text fingerprint
-   * ([[graft.data.TextFunctions.fingerprint]]) was already admitted
-   * within the watermark horizon. `dropDuplicatesWithinWatermark` keys
-   * state on the 60-bit fingerprint only (not the text) and evicts it
-   * as the watermark passes — bounded state, which is the honest
-   * contract for an endless corpus: exact FOREVER-dedup of a stream
-   * needs unbounded state; at 100 TB/day the horizon IS the semantics.
-   */
-  def streamingDedup(
-      docs: DataFrame,
-      textCol: String = "text",
-      tsCol: String = "ts",
-      watermark: String = "1 day"): DataFrame =
-    docs
-      .withColumn("fp", graft.data.TextFunctions.fingerprint(col(textCol)))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("fp")
-
-  /**
-   * Streaming admit against a PERIODICALLY REPUBLISHED signature store —
-   * the streaming twin of [[graft.data.Dedup.incrementalDedup]], wearing
-   * the same hot-reload harness as [[annSearchWithIndexRefresh]] /
-   * [[lmScoreWithModelRefresh]]: an offline ingest job republishes the
-   * accepted-corpus signature store with
-   * [[graft.data.Dedup.saveSignatureStoreVersioned]] on its own cadence
-   * (e.g. appending each admitted batch's signatures), and the stream
-   * picks the new version up WITHOUT a restart.
-   *
-   * `foreachBatch`: each micro-batch reads the tiny `latest` pointer,
-   * reloads only on a version change (driver state is a version number —
-   * the store's parquet stays on disk and is probed via the band join,
-   * never collected), then runs the exact batch admit; `sink` receives
-   * the micro-batch's surviving docs. Versioned immutability is what
-   * makes the swap safe: an in-flight micro-batch keeps its consistent
-   * snapshot while the publisher stages the next one. Each micro-batch
-   * is one ingest batch — the within-batch clustering stage applies per
-   * micro-batch.
-   *
-   * Cross-batch semantics are bounded by the REPUBLISH CADENCE: a
-   * near-dup of a doc admitted in an earlier micro-batch is only caught
-   * once that doc's signatures reach a published store version. Close
-   * the loop in `sink`: append `Dedup.signatures(survivors)` and
-   * republish with [[graft.data.Dedup.saveSignatureStoreVersioned]]
-   * (every batch for exactness, or on a timer to trade storage churn
-   * for a bounded dup window). Composing [[streamingDedup]] upstream
-   * narrows the gap for EXACT duplicates only — fingerprint equality,
-   * not shingle Jaccard.
-   *
-   * `maxHamming`/`simhashBits` pass through to
-   * [[graft.data.Dedup.incrementalDedup]]'s optional SimHash Hamming
-   * tier (the published store must carry `simh` at the same width —
-   * [[graft.data.Dedup.signatures]]' `simhashBits`).
-   *
-   * With `pruneKeep = Some(k)` the poller also garbage-collects
-   * superseded store versions on every reload
-   * ([[graft.data.Versioned.pruneVersions]], retaining the published
-   * version plus `k` below it) — a long-running stream against an
-   * hourly publisher must not accrete versions forever. Pruning runs
-   * AFTER the switch, so this poller never deletes a version it still
-   * reads; size `k` for any OTHER readers' lag.
-   *
-   * Returns the configured writer — call `.start()` (and set a trigger /
-   * checkpoint as needed).
-   */
-  def dedupWithStoreRefresh(
-      docs: DataFrame,
-      storeDir: String,
-      idCol: String,
-      textCol: String,
-      shingleN: Int = 3,
-      k: Int = 16,
-      bands: Int = 4,
-      threshold: Double = 0.5,
-      broadcastBatch: Boolean = true,
-      pruneKeep: Option[Int] = None,
-      maxHamming: Int = -1,
-      simhashBits: Int = 28)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.data.Dedup
-    // closure state on the driver: the currently-loaded store version
-    var loaded: Option[(Long, DataFrame)] = None
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      graft.data.Versioned.latestVersion(spark, storeDir).foreach { v =>
-        if (!loaded.exists(_._1 == v)) {
-          loaded = Some((v, Dedup.loadSignatureStore(spark, s"$storeDir/v$v")))
-          // GC superseded versions AFTER switching off them — foreachBatch
-          // bodies are sequential, so nothing here still reads them; a
-          // long-running stream against an hourly publisher must not
-          // accrete versions forever (keep covers OTHER readers' lag).
-          // Anchored on v, NOT the live pointer: a publish landing
-          // between our load and this prune must not delete v.
-          pruneKeep.foreach(keep =>
-            graft.data.Versioned.pruneVersions(spark, storeDir, keep, Some(v)))
-        }
-      }
-      val store = loaded.getOrElse(throw new IllegalStateException(
-        s"no signature store published under $storeDir — " +
-          "publish one with Dedup.saveSignatureStoreVersioned"))._2
-      sink(Dedup.incrementalDedup(batch, idCol, textCol, store,
-        shingleN, k, bands, threshold, broadcastBatch, maxHamming,
-        simhashBits), batchId)
-    }
-  }
-
-  /**
-   * Streaming SCD-2 maintenance — the CDC sink: each micro-batch of
-   * change rows applies incrementally to a VERSIONED dimension history
-   * (`Relational.scd2Apply`: closed past untouched, live keys + the
-   * batch re-derive the open tail) and publishes a new immutable
-   * version behind `historyDir/latest`. Batch 0 against an empty dir
-   * boots the history with the batch builder. Readers always see a
-   * complete consistent snapshot (the rename-committed publish);
-   * `pruneKeep` GCs superseded versions after each publish. The CDC
-   * append-only contract of `scd2Apply` applies per key across batches.
-   *
-   * `sink` receives the just-published history (read back from its
-   * version, so what downstream sees is what durably exists) + batch id.
-   */
-  def scd2WithHistory(
-      changes: DataFrame,
-      historyDir: String,
-      keyCols: Seq[String],
-      orderCol: String,
-      attrCols: Seq[String],
-      pruneKeep: Option[Int] = None)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.data.{Relational, Versioned}
-    changes.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      val core = (keyCols :+ orderCol) ++ attrCols
-      val updated = Versioned.latestVersion(spark, historyDir) match {
-        case Some(v) =>
-          Relational.scd2Apply(spark.read.parquet(s"$historyDir/v$v/history"),
-            batch, keyCols, orderCol, attrCols)
-        case None =>
-          Relational.scd2(batch.select(core.map(col): _*),
-            keyCols, orderCol, attrCols)
-      }
-      val nv = Versioned.publish(spark, historyDir)(path =>
-        updated.write.parquet(s"$path/history"))
-      pruneKeep.foreach(keep =>
-        Versioned.pruneVersions(spark, historyDir, keep, Some(nv)))
-      sink(spark.read.parquet(s"$historyDir/v$nv/history"), batchId)
-    }
-  }
-
-  /**
-   * DELTA-layout streaming SCD-2 — the write-amplification fix for
-   * [[scd2WithHistory]], which republishes the FULL history every
-   * micro-batch (fine for small dimensions; at a 100 TB dimension the
-   * closed past would be rewritten forever). Here the history lives as
-   * two stores:
-   *
-   *  - `closed/`: APPEND-ONLY — each batch appends only the versions it
-   *    closed (the superseded current row + intra-batch intermediate
-   *    versions, both already derived by the incremental builder);
-   *    closed rows are immutable by SCD-2 semantics, so append is the
-   *    right verb. Same small-files/compaction posture as the dedup
-   *    signature store (`Dedup.compactSignatureStore`'s pattern applies).
-   *  - `current/`: VERSIONED rewrite of the live slice only — one row
-   *    per live key, small relative to history by construction, and the
-   *    only thing the next batch needs to read: per-batch work is
-   *    O(|batch| + |live keys|) with the closed past never scanned.
-   *
-   * [[loadScd2History]] reassembles the full table. Crash contract:
-   * append lands before the current-pointer publish, so a reprocessed
-   * batch can append its closed delta twice — the loader dedupes on the
-   * natural key `(key…, valid_from)`, making recovery idempotent
-   * (at-least-once append + dedup-on-read, the standard CDC posture).
-   */
-  def scd2WithHistoryDelta(
-      changes: DataFrame,
-      historyDir: String,
-      keyCols: Seq[String],
-      orderCol: String,
-      attrCols: Seq[String],
-      pruneKeep: Option[Int] = None)(
-      sink: (Long, Long, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.data.{Relational, Versioned}
-    changes.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      val core = (keyCols :+ orderCol) ++ attrCols
-      val curDir = s"$historyDir/current"
-      val relog = Versioned.latestVersion(spark, curDir) match {
-        case Some(v) =>
-          spark.read.parquet(s"$curDir/v$v/data").select(core.map(col): _*)
-            .unionByName(batch.select(core.map(col): _*))
-        case None => batch.select(core.map(col): _*)
-      }
-      val updated = Relational.scd2(relog, keyCols, orderCol, attrCols)
-        .localCheckpoint() // two consumers below; derive once
-      val closedDelta = updated.filter(!col("is_current"))
-      val nClosed = closedDelta.count()
-      if (nClosed > 0)
-        closedDelta.write.mode("append").parquet(s"$historyDir/closed")
-      val newCurrent = updated.filter(col("is_current"))
-      val v = Versioned.publish(spark, curDir)(path =>
-        newCurrent.write.parquet(s"$path/data"))
-      pruneKeep.foreach(keep =>
-        Versioned.pruneVersions(spark, curDir, keep, Some(v)))
-      sink(batchId, nClosed, v)
-    }
-  }
-
-  /** Reassemble the full SCD-2 table from a [[scd2WithHistoryDelta]]
-   * layout: append-only closed versions (deduped on the natural key —
-   * the at-least-once recovery guard) ∪ the latest current slice. */
-  def loadScd2History(spark: SparkSession, historyDir: String,
-      keyCols: Seq[String]): DataFrame = {
-    import graft.data.Versioned
-    val curDir = s"$historyDir/current"
-    val v = Versioned.latestVersion(spark, curDir).getOrElse(
-      throw new IllegalStateException(s"no history published under $historyDir"))
-    val current = spark.read.parquet(s"$curDir/v$v/data")
-    val closedPath = new org.apache.hadoop.fs.Path(s"$historyDir/closed")
-    val fs = closedPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(closedPath)) current
-    else current.unionByName(
-      spark.read.parquet(s"$historyDir/closed")
-        .dropDuplicates(keyCols :+ "valid_from"))
-  }
-
-  case class ActivityEvent(key: Long, ts: Long)
-  case class RetentionState(firstDay: Long, seen0: Long, seen1: Long)
-  case class RetentionHit(cohort_day: Long, age_days: Long)
-
-  /**
-   * Streaming RETENTION tracker — the live face of
-   * [[graft.data.Events.retentionCohorts]] with BOUNDED per-key state:
-   * the key's first-activity day plus a 128-bit bitmap of ages already
-   * counted (three longs, forever — the horizon bound is what makes
-   * per-key state safe at any stream length; batch retention matrices
-   * are horizon-bounded in practice too). Emits one `(cohort_day,
-   * age_days)` increment the FIRST time each (key, age) is seen — sum
-   * downstream per cell and you have the batch matrix over the stream's
-   * prefix (spec-pinned parity, in-order streams).
-   *
-   * Contracts: the first SEEN day defines the cohort (a late
-   * cross-batch event from before it would imply a negative age and is
-   * dropped — the CDC append expectation, as in [[streamingFunnel]]);
-   * ages ≥ 128 days are outside the horizon and not tracked.
-   */
-  def streamingRetention(events: Dataset[ActivityEvent])(
-      implicit spark: SparkSession): Dataset[RetentionHit] = {
-    import spark.implicits._
-    events.groupByKey(_.key).flatMapGroupsWithState(
-      OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-      (_: Long, it: Iterator[ActivityEvent], state: GroupState[RetentionState]) =>
-        var st = state.getOption.getOrElse(RetentionState(Long.MaxValue, 0L, 0L))
-        val out = scala.collection.mutable.ArrayBuffer.empty[RetentionHit]
-        it.toArray.map(e => Math.floorDiv(e.ts, 86400L)).sorted.foreach { day =>
-          if (st.firstDay == Long.MaxValue) st = st.copy(firstDay = day)
-          val age = day - st.firstDay
-          if (age >= 0 && age < 128) {
-            val (word, bit) =
-              if (age < 64) (st.seen0, age) else (st.seen1, age - 64)
-            if ((word & (1L << bit)) == 0L) {
-              out += RetentionHit(st.firstDay, age)
-              st =
-                if (age < 64) st.copy(seen0 = st.seen0 | (1L << bit))
-                else st.copy(seen1 = st.seen1 | (1L << bit))
-            }
-          }
-        }
-        state.update(st)
-        out.iterator
-    }
-  }
-
-  case class FunnelEvent(key: Long, step: String, ts: Long)
-  case class FunnelState(stage: Int, stageTimes: List[Long])
-  case class FunnelProgress(key: Long, stage: Int, t_first: Long, t_last: Long)
-
-  /**
-   * Streaming ORDERED FUNNEL — the live face of
-   * [[graft.data.Events.funnel]]: per-key state is the stage reached
-   * plus one timestamp per completed stage (≤ `steps.size` longs,
-   * bounded regardless of stream length). Each micro-batch's events are
-   * sorted by time inside the handler (a batch may deliver unordered)
-   * and folded greedily: an event advances the funnel iff it matches
-   * the NEXT step strictly after the previous stage's time — the same
-   * greedy minimal chain the batch operator computes, so after ANY
-   * stream prefix the per-key progress equals `Events.funnel` over the
-   * same rows (spec-pinned). Cross-batch LATE data is unsupported — the
-   * CDC append contract, same as `Relational.scd2Apply`.
-   *
-   * Emits one [[FunnelProgress]] row per active key per batch
-   * (`t_first`/`t_last` = step-1 / latest-stage times, −1 before any
-   * progress); aggregate downstream for the conversion panel.
-   */
-  def streamingFunnel(events: Dataset[FunnelEvent], steps: Seq[String])(
-      implicit spark: SparkSession): Dataset[FunnelProgress] = {
-    import spark.implicits._
-    require(steps.nonEmpty, "a funnel needs at least one step")
-    events.groupByKey(_.key).mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
-      (key: Long, it: Iterator[FunnelEvent], state: GroupState[FunnelState]) =>
-        var st = state.getOption.getOrElse(FunnelState(0, Nil))
-        it.toArray.sortBy(e => (e.ts, e.step)).foreach { e =>
-          if (st.stage < steps.size && e.step == steps(st.stage) &&
-              (st.stage == 0 || e.ts > st.stageTimes.head))
-            st = FunnelState(st.stage + 1, e.ts :: st.stageTimes)
-        }
-        state.update(st)
-        FunnelProgress(key, st.stage,
-          if (st.stageTimes.isEmpty) -1L else st.stageTimes.last,
-          if (st.stageTimes.isEmpty) -1L else st.stageTimes.head)
-    }
-  }
-
-  /**
-   * Streaming HEAVY-HITTER monitor — the live "which keys dominate the
-   * stream" panel with BOUNDED state at every level: each micro-batch
-   * reduces to its own `counters`-entry Misra-Gries summary via the
-   * distributed aggregator (partial summaries merge inside the batch
-   * job; ONE small row reaches the driver), and the driver folds batch
-   * summaries into a running summary with the mergeable-summaries merge
-   * — MG's guarantee composes over the merge tree, so after ANY stream
-   * prefix every key with true frequency > N/(counters+1) is present.
-   * Driver state: one `counters`-entry map + a long, forever.
-   *
-   * `sink` receives the candidate (key, residual) list (residuals
-   * UNDERESTIMATE true counts by ≤ N/(counters+1)), the total row count,
-   * and the batch id. Residuals are order-dependent (inherent to MG);
-   * for exact published numbers run the batch [[graft.data.Sketches.heavyHitters]]
-   * recount over the archived stream — same summary, exact second pass.
-   */
-  def heavyHitterMonitor(
-      events: DataFrame,
-      key: org.apache.spark.sql.Column,
-      counters: Int)(
-      sink: (Seq[(String, Long)], Long, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val merger = new graft.data.Sketches.MisraGries(counters)
-    var state = merger.zero
-    var total = 0L
-    events.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val mg = udaf(new graft.data.Sketches.MisraGries(counters))
-      val row = batch.select(key.cast("string").as("k"))
-        .agg(mg(col("k")).as("m"), count(lit(1)).as("n")).head()
-      val batchSummary = row.getMap[String, Long](0).toMap
-      total += row.getLong(1)
-      state = merger.merge(state, batchSummary)
-      sink(state.toSeq.sortBy { case (k, v) => (-v, k) }, total, batchId)
-    }
-  }
-
-  /**
-   * Streaming parquet sink with AUTO-COMPACTION — the small-files fix
-   * at the ingest boundary. A day of micro-batches leaves thousands of
-   * kilobyte part-files whose per-file open/footer cost dominates later
-   * scans; this sink APPENDS each batch to `store/live/` and, whenever
-   * the live part-file count exceeds `maxLiveFiles`, compacts the live
-   * set into the next immutable `store/v<N>/` chunk
-   * ([[graft.risk.Sinks.compactSmallFiles]], ~`targetBytes` files)
-   * through [[graft.data.Versioned.publish]] — the chunk lands under a
-   * staging name and the pointer flips LAST, so a concurrent reader
-   * never sees a half-written chunk. EXACTLY the consumed live files
-   * are then deleted (the compaction plan lists them by name; files a
-   * racing append lands after the listing survive untouched). Old
-   * chunks are never rewritten — per-compaction work is O(live set),
-   * not O(store), the same write-amplification discipline as the
-   * delta-layout SCD-2 sink. Reassemble with [[loadCompactedStore]].
-   */
-  /** Live-file names recorded as consumed by ANY published chunk's
-   * `_consumed` manifest (the `_` prefix keeps parquet readers away).
-   * The manifest is written INSIDE the staged chunk, so it becomes
-   * visible atomically with the pointer flip — the recovery anchor for
-   * the publish→delete crash window. Bounded: one small file per
-   * chunk. */
-  private def readManifest(hfs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Set[String] = {
-    val in = hfs.open(p)
-    val txt =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    txt.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSet
-  }
-
-  /** `cache` (chunk-manifest path → names) skips re-READING manifests
-   * already seen: chunks are immutable once published, so a per-writer
-   * cache only ever grows — the per-batch cost stays one directory
-   * listing instead of one read per chunk per micro-batch. Pass null
-   * for the uncached one-shot paths (loader, out-of-band heal). */
-  private def consumedLiveNames(
-      hfs: org.apache.hadoop.fs.FileSystem,
-      storeDir: String,
-      cache: scala.collection.mutable.Map[String, Set[String]] = null)
-      : Set[String] =
-    Option(hfs.globStatus(
-        new org.apache.hadoop.fs.Path(s"$storeDir/v*/_consumed")))
-      .getOrElse(Array.empty).iterator.flatMap { st =>
-        if (cache == null) readManifest(hfs, st.getPath)
-        else cache.getOrElseUpdate(st.getPath.toString,
-          readManifest(hfs, st.getPath))
-      }.toSet
-
-  private val liveNameBatchId = """^b(\d+)-\d+\.parquet$""".r
-
-  /** Batch ids whose rows already live in a published chunk, derived
-   * from the consumed manifests' `b<id>-<i>.parquet` names. Compaction
-   * consumes the FULL live listing and a batch's files are all renamed
-   * in before the compaction check, so a batch id appearing in any
-   * manifest means EVERY row of that batch is in a chunk — the
-   * batch-level idempotence anchor for post-compaction replays. */
-  private def consumedBatchIds(
-      hfs: org.apache.hadoop.fs.FileSystem,
-      storeDir: String,
-      cache: scala.collection.mutable.Map[String, Set[String]] = null)
-      : Set[Long] =
-    consumedLiveNames(hfs, storeDir, cache).collect {
-      case liveNameBatchId(id) => id.toLong
-    }
-
-  /** Recovery sweep for the publish→delete crash window: delete any live
-   * file a published chunk's manifest records as consumed (its rows
-   * already live in the chunk) — matched by NAME and, for replayed
-   * batches that split into MORE part files than the attempt the chunk
-   * consumed (different parallelism/AQE split on replay), by BATCH ID:
-   * any `b<id>-*` live file whose batch id a manifest covers is a
-   * duplicate of chunk rows regardless of its part index. Runs at the
-   * top of every [[appendWithAutoCompact]] batch; callable directly
-   * after an out-of-band crash. */
-  def healConsumedLeftovers(spark: SparkSession, storeDir: String): Unit =
-    healConsumedLeftovers(spark, storeDir, null)
-
-  private def healConsumedLeftovers(spark: SparkSession, storeDir: String,
-      cache: scala.collection.mutable.Map[String, Set[String]]): Unit = {
-    val hfs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(storeDir), spark.sparkContext.hadoopConfiguration)
-    val livePath = new org.apache.hadoop.fs.Path(s"$storeDir/live")
-    val ghost = consumedLiveNames(hfs, storeDir, cache)
-    val ghostBatches = ghost.collect { case liveNameBatchId(id) => id.toLong }
-    if (ghost.nonEmpty && hfs.exists(livePath))
-      hfs.listStatus(livePath).foreach { s =>
-        val name = s.getPath.getName
-        val dup = ghost(name) || (name match {
-          case liveNameBatchId(id) => ghostBatches(id.toLong)
-          case _ => false
-        })
-        if (s.isFile && dup) hfs.delete(s.getPath, false)
-      }
-  }
-
-  /** `lineageId` (pass the stream's checkpointLocation, or any id
-   * stable across restarts of the SAME checkpointed stream) turns the
-   * one-lineage-per-store contract from documentation into an ENFORCED
-   * guard: the first writer persists it under `storeDir/_lineage`, and
-   * any later writer presenting a different id fails fast instead of
-   * silently having its early batches skipped by the batch-id
-   * idempotence keys. Empty (the default) keeps the legacy tolerant
-   * behavior — skipped batches are then at least WARN-logged. */
-  def appendWithAutoCompact(
-      rows: DataFrame,
-      storeDir: String,
-      maxLiveFiles: Int,
-      targetBytes: Long,
-      lineageId: String = "")(
-      onCompact: (Long, Int, Long) => Unit = (_, _, _) => ()): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(maxLiveFiles > 0, s"maxLiveFiles must be positive, got $maxLiveFiles")
-    // per-writer manifest cache: chunks are immutable, so each manifest
-    // is read ONCE per writer lifetime instead of once per micro-batch
-    val manifestCache =
-      scala.collection.mutable.HashMap.empty[String, Set[String]]
-    rows.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      appendBatch(batch, batchId, storeDir, maxLiveFiles, targetBytes,
-        lineageId, manifestCache, onCompact)
-    }
-  }
-
-  /** The per-micro-batch body of [[appendWithAutoCompact]], reusable by
-   * ingests that append a derived per-batch table (delta cells) rather
-   * than the raw stream rows ([[topSubstringsIngest]]): idempotent
-   * batch-scoped append into `storeDir/live`, self-healing of the
-   * publish→delete crash window, batch-id replay skip, and threshold
-   * compaction into immutable `v<N>` chunks. */
-  private def appendBatch(
-      batch: DataFrame,
-      batchId: Long,
-      storeDir: String,
-      maxLiveFiles: Int,
-      targetBytes: Long,
-      lineageId: String,
-      manifestCache: scala.collection.mutable.HashMap[String, Set[String]],
-      onCompact: (Long, Int, Long) => Unit): Unit = {
-      val spark = batch.sparkSession
-      val liveDir = s"$storeDir/live"
-      val hfs = org.apache.hadoop.fs.FileSystem.get(
-        new java.net.URI(liveDir), spark.sparkContext.hadoopConfiguration)
-      val livePath = new org.apache.hadoop.fs.Path(liveDir)
-      if (lineageId.nonEmpty) {
-        // fail fast on a second lineage writing the same store: batch
-        // ids only mean "already consumed" within ONE checkpointed
-        // stream, so a different checkpoint must not reuse the store
-        val marker = new org.apache.hadoop.fs.Path(s"$storeDir/_lineage")
-        val existing =
-          if (hfs.exists(marker)) readManifest(hfs, marker).headOption
-          else None
-        def refuse(other: String): Nothing =
-          throw new IllegalStateException(
-            s"store $storeDir belongs to stream lineage '$other'; " +
-              s"refusing writes from lineage '$lineageId' — use a new " +
-              "store, or pass the original checkpoint's lineage id")
-        existing match {
-          case Some(other) if other != lineageId => refuse(other)
-          case Some(_) => ()
-          case None =>
-            try {
-              val out = hfs.create(marker, false) // no overwrite: first writer wins
-              try out.write(lineageId.getBytes("UTF-8")) finally out.close()
-            } catch {
-              case _: java.io.IOException =>
-                // lost the create race to a concurrent first writer:
-                // re-read the winner and apply the same comparison,
-                // so the loser gets the clear refusal, not a raw
-                // FileAlreadyExistsException
-                val winner = readManifest(hfs, marker).headOption
-                if (!winner.contains(lineageId))
-                  refuse(winner.getOrElse("<unreadable>"))
-            }
-        }
-      }
-      // self-heal the publish→delete crash window FIRST: a live file
-      // already recorded in a chunk manifest holds rows the chunk also
-      // holds — delete the leftover before it can be re-compacted or
-      // double-counted
-      healConsumedLeftovers(spark, storeDir, manifestCache)
-      // batch-level idempotence for the replay-AFTER-compaction window:
-      // if this batch id already appears in a published chunk's
-      // manifest, every one of its rows lives in that chunk (compaction
-      // consumes the full live set) — re-appending would double-count
-      // even with name-keyed replacement, because a replay may split
-      // into MORE part files than the attempt the chunk consumed. Skip
-      // the whole batch.
-      if (consumedBatchIds(hfs, storeDir, manifestCache)(batchId)) {
-        // observable, not silent: on one lineage this is a benign
-        // replay; seeing it from a FRESH checkpoint means the
-        // one-lineage contract was violated (pass lineageId to enforce)
-        org.apache.logging.log4j.LogManager
-          .getLogger("graft.streaming.StreamingMarket")
-          .warn(s"appendWithAutoCompact: skipping batch $batchId for " +
-            s"$storeDir — its rows already live in a published chunk")
-      } else {
-        // IDEMPOTENT append: stage the batch, clear any prior live files of
-        // THIS batch id (an at-least-once replay re-delivers the batch),
-        // then rename the parts in under batch-scoped names — replaying a
-        // batch replaces its own files instead of appending a second copy.
-        // batchId is the idempotence key, so one store belongs to ONE
-        // checkpointed stream lineage (the standard foreachBatch contract).
-        val staging = new org.apache.hadoop.fs.Path(
-          s"$storeDir/_stage_b$batchId")
-        batch.write.mode("overwrite").parquet(staging.toString)
-        hfs.mkdirs(livePath)
-        hfs.listStatus(livePath).foreach { s =>
-          if (s.isFile && s.getPath.getName.startsWith(s"b$batchId-"))
-            hfs.delete(s.getPath, false)
-        }
-        hfs.listStatus(staging)
-          .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          .zipWithIndex.foreach { case (s, i) =>
-            hfs.rename(s.getPath,
-              new org.apache.hadoop.fs.Path(livePath,
-                s"b$batchId-$i.parquet"))
-          }
-        hfs.delete(staging, true)
-        val nLive = hfs.listStatus(livePath)
-          .count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        if (nLive > maxLiveFiles) {
-          var consumed: Array[String] = Array.empty
-          val v = graft.data.Versioned.publish(spark, storeDir) { staged =>
-            val plan = graft.risk.Sinks.compactSmallFiles(
-              spark, liveDir, staged, targetBytes)
-            consumed = plan.select(col("path")).collect().map(_.getString(0))
-            // consumed manifest rides the chunk: visible atomically with
-            // the pointer flip, so recovery always knows what to delete
-            val out = hfs.create(
-              new org.apache.hadoop.fs.Path(staged, "_consumed"))
-            try out.write(consumed.mkString("\n").getBytes("UTF-8"))
-            finally out.close()
-          }
-          consumed.foreach(name => hfs.delete(
-            new org.apache.hadoop.fs.Path(livePath, name), false))
-          onCompact(batchId, consumed.length, v)
-        }
-      }
-  }
-
-  /** Reader for [[appendWithAutoCompact]]'s layout: every immutable
-   * compacted chunk `v<N>/` plus the live remainder, one union scan.
-   * Chunks are append-only history, so no pointer coordination is
-   * needed beyond directory listing. Live files recorded in a chunk's
-   * `_consumed` manifest are EXCLUDED — they only still exist if the
-   * writer died between the chunk publish and its deletes, and their
-   * rows already live in the chunk (reading both would double-count). */
-  def loadCompactedStore(spark: SparkSession, storeDir: String): DataFrame = {
-    val hfs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(storeDir), spark.sparkContext.hadoopConfiguration)
-    val chunks = Option(hfs.globStatus(
-        new org.apache.hadoop.fs.Path(s"$storeDir/v*")))
-      .getOrElse(Array.empty)
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.matches("v\\d+"))
-      .map(_.getPath.toString)
-    val ghost = consumedLiveNames(hfs, storeDir)
-    val live = new org.apache.hadoop.fs.Path(s"$storeDir/live")
-    val liveFiles =
-      if (hfs.exists(live))
-        hfs.listStatus(live).filter(f => f.isFile &&
-            f.getPath.getName.endsWith(".parquet") &&
-            !ghost(f.getPath.getName))
-          .map(_.getPath.toString).toSeq
-      else Seq.empty
-    val all = chunks.toSeq ++ liveFiles
-    require(all.nonEmpty, s"no compacted chunks or live files under $storeDir")
-    spark.read.parquet(all: _*)
-  }
-
-  /**
-   * Streaming QUANTILE monitor — the streaming twin of
-   * [[graft.data.Sketches.logHistogram]]. Each micro-batch aggregates to
-   * its own bounded bucket table (one map-combined Spark aggregation, ≤
-   * ~1.9k rows at subBits=5 REGARDLESS of batch size), which merges into
-   * the running histogram by summing counts — the mergeable-sketch
-   * property the batch kernel was designed around — and the requested
-   * quantile ranks are re-answered per batch with the identical integer
-   * rank rule (`first bucket with cum·1e6 ≥ p·n`, answer = bucket
-   * floor). Driver state is the bucket map: bounded forever, so p50/p99
-   * latency/size monitors run on unbounded streams at fixed memory.
-   * Emits `(p_ppm → quantile)` pairs, rows seen, and batch id.
-   *
-   * NULL contract: NULL values are skipped (filtered before the
-   * histogram, like SQL aggregates skip NULLs) — they contribute to
-   * neither the buckets nor the row total, and never kill the query.
-   */
-  def streamingQuantileMonitor(
-      values: DataFrame,
-      value: org.apache.spark.sql.Column,
-      psPpm: Seq[Long],
-      subBits: Int = 5)(
-      sink: (Seq[(Long, Long)], Long, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(psPpm.nonEmpty && psPpm.forall(p => p > 0 && p <= 1000000L),
-      s"quantile ranks must be in (0, 1e6] ppm, got $psPpm")
-    val state = scala.collection.mutable.HashMap.empty[Long, Long]
-    var total = 0L
-    values.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val rows = graft.data.Sketches.logHistogram(
-        batch.select(value.as("__v")).filter(col("__v").isNotNull),
-        Seq.empty, col("__v"), subBits)
-        .collect()
-      rows.foreach { r =>
-        val b = r.getLong(0); val n = r.getLong(1)
-        state.update(b, state.getOrElse(b, 0L) + n)
-        total += n
-      }
-      val sorted = state.toSeq.sortBy(_._1)
-      val qs = psPpm.map { p =>
-        var cum = 0L
-        var ans = -1L
-        val it = sorted.iterator
-        while (ans < 0 && it.hasNext) {
-          val (b, n) = it.next(); cum += n
-          if (cum * 1000000L >= p * total)
-            ans = graft.data.Sketches.logBucketFloorScalar(b, subBits)
-        }
-        p -> ans
-      }
-      sink(qs, total, batchId)
-    }
-  }
-
-  /**
-   * Streaming DISTRIBUTION-SHIFT monitor — the continuous twin of
-   * [[graft.data.Corpus.totalVariationByGroup]], the per-micro-batch
-   * gate a continuous-ingest pipeline wants on source profiles: each
-   * batch aggregates to its own bounded (group, bucket) COUNT-CELL
-   * table (one map-combined Spark aggregation; |groups|·|buckets| cells
-   * regardless of batch size), which merges into the running cell state
-   * by summing — TV is a pure function of those sufficient statistics,
-   * so the re-answered panel after any stream prefix is BIT-EQUAL to
-   * the batch kernel over the same rows (same ppm floor division, same
-   * ½Σ|p−q|; spec-pinned across arbitrary batch splits). Driver state
-   * is the cell map, bounded by contract (sources × histogram bins).
-   * NULL group/bucket rows are skipped, like the batch kernel's filter.
-   * Emits the full pairwise `(a, b, tv_ppm)` panel (a < b), rows seen,
-   * and batch id.
-   */
-  def streamingShiftMonitor(
-      rows: DataFrame,
-      group: org.apache.spark.sql.Column,
-      bucket: org.apache.spark.sql.Column)(
-      sink: (Seq[(String, String, Long)], Long, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val state = scala.collection.mutable.HashMap.empty[(String, String), Long]
-    var total = 0L
-    rows.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val cells = batch
-        .select(group.cast("string").as("g"), bucket.cast("string").as("b"))
-        .filter(col("g").isNotNull && col("b").isNotNull)
-        .groupBy(col("g"), col("b")).agg(count(lit(1)).as("n"))
-        .collect()
-      cells.foreach { r =>
-        val k = (r.getString(0), r.getString(1))
-        state.update(k, state.getOrElse(k, 0L) + r.getLong(2))
-        total += r.getLong(2)
-      }
-      // exact-integer TV over the cell grid, the batch kernel's
-      // arithmetic verbatim: per-group ppm shares floored first, then
-      // ½ Σ_b |p_b − q_b| (longs are non-negative, so / is div).
-      // Group pairs order by UTF-8 BYTES — Spark's string `<` — not
-      // Scala's UTF-16 code units (they disagree beyond the BMP)
-      val utf8Order = Ordering.comparatorToOrdering(
-        java.util.Comparator.comparing((s: String) =>
-          org.apache.spark.unsafe.types.UTF8String.fromString(s)))
-      val groups = state.keysIterator.map(_._1).toSeq.distinct.sorted(utf8Order)
-      val buckets = state.keysIterator.map(_._2).toSeq.distinct.sorted(utf8Order)
-      val ppm = groups.map { g =>
-        val tot = buckets.iterator.map(b => state.getOrElse((g, b), 0L)).sum
-        g -> buckets.map(b => state.getOrElse((g, b), 0L) * 1000000L / tot)
-      }.toMap
-      val panel = for {
-        i <- groups.indices; j <- groups.indices if i < j
-      } yield (groups(i), groups(j),
-        buckets.indices.iterator
-          .map(k => math.abs(ppm(groups(i))(k) - ppm(groups(j))(k))).sum / 2)
-      sink(panel, total, batchId)
-    }
-  }
-
-  /**
-   * Streaming CALIBRATION-DRIFT monitor — the continuous twin of
-   * [[graft.data.Probe.calibrationError]]: scored rows bin by the SAME
-   * clamped fixed-width rule as [[graft.data.Probe.calibration2]]
-   * (`least(greatest(floor((pred−lo)/width), 0), nBins−1)`, micro-unit
-   * floors per row), each micro-batch aggregates to its own ≤ nBins
-   * `(bin, n, Σpred_micro, Σlabel_micro)` cell table, and cells merge
-   * into the running state by summing — count-cell sufficient
-   * statistics, so the 1-row ECE panel re-answered per batch
-   * (`n_bins, n_rows, ece_ppm = Σ|Σp−Σl| div Σn,
-   * max_bin_gap_ppm = max |Σp−Σl| div n`) is bit-equal to the batch
-   * kernel over any stream prefix (spec-pinned across arbitrary batch
-   * splits). Driver state is nBins cells forever. Rows with a NULL
-   * pred or label are skipped.
-   */
-  def streamingCalibrationMonitor(
-      rows: DataFrame,
-      pred: org.apache.spark.sql.Column,
-      label: org.apache.spark.sql.Column,
-      nBins: Int = 10, lo: Double = 0.0, hi: Double = 10.0)(
-      sink: (Long, Long, Long, Long, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(nBins > 0, s"nBins must be > 0, got $nBins")
-    require(hi > lo, s"need hi > lo, got [$lo, $hi)")
-    val width = (hi - lo) / nBins
-    val state = scala.collection.mutable.HashMap.empty[Long, (Long, Long, Long)]
-    rows.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val p = pred.cast("double")
-      val l = label.cast("double")
-      val bin = least(greatest(floor((p - lit(lo)) / lit(width)), lit(0L)),
-        lit(nBins - 1L))
-      val cells = batch
-        .filter(p.isNotNull && l.isNotNull)
-        .select(bin.as("bin"), floor(p * lit(1e6)).as("p6"),
-          floor(l * lit(1e6)).as("l6"))
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n"), sum(col("p6")).as("sp"),
-          sum(col("l6")).as("sl"))
-        .collect()
-      cells.foreach { r =>
-        val (b, n, sp, sl) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
-        val (n0, sp0, sl0) = state.getOrElse(b, (0L, 0L, 0L))
-        state.update(b, (n0 + n, sp0 + sp, sl0 + sl))
-      }
-      val nRows = state.valuesIterator.map(_._1).sum
-      val gaps = state.valuesIterator.map { case (_, sp, sl) => math.abs(sp - sl) }
-      val ece = if (nRows > 0) gaps.sum / nRows else 0L
-      val maxGap = if (state.nonEmpty)
-        state.valuesIterator.map { case (n, sp, sl) => math.abs(sp - sl) / n }.max
-      else 0L
-      sink(state.size.toLong, nRows, ece, maxGap, batchId)
-    }
-  }
-
-  /**
-   * Streaming DECONTAMINATION with a versioned benchmark hot-reload —
-   * the streaming face of [[graft.data.Corpus.decontaminateExact]]: each
-   * micro-batch is bloom-guard-screened map-side (the 8 KB dense word
-   * row re-broadcasts per batch) and only bloom hits enter the exact
-   * fingerprint verify, while the eval team republishes the benchmark
-   * ([[graft.data.Corpus.saveBenchmarkVersioned]]) on its own cadence —
-   * picked up between micro-batches with NO restart, same
-   * version-pointer poll as [[dedupWithStoreRefresh]].
-   *
-   * The bloom's `m_bits`/`k_hashes` are read from the published
-   * artifact's metadata columns (one 1-row driver read per RELOAD, not
-   * per batch), so the prober always matches the publisher's geometry.
-   * `pruneKeep` GCs superseded versions after a switch, anchored on the
-   * loaded version ([[graft.data.Versioned.pruneVersions]]).
-   */
-  def deconWithBenchmarkRefresh(
-      docs: DataFrame,
-      benchDir: String,
-      idCol: String,
-      textCol: String,
-      pruneKeep: Option[Int] = None)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // driver closure state: (version, fp table, dense bloom, m, k)
-    var loaded: Option[(Long, DataFrame, DataFrame, Int, Int)] = None
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      graft.data.Versioned.latestVersion(spark, benchDir).foreach { v =>
-        if (!loaded.exists(_._1 == v)) {
-          val fp = spark.read.parquet(s"$benchDir/v$v/fp")
-          val bloom = spark.read.parquet(s"$benchDir/v$v/bloom")
-          val meta = bloom.select(col("m_bits"), col("k_hashes")).head()
-          loaded = Some((v, fp, bloom, meta.getInt(0), meta.getInt(1)))
-          pruneKeep.foreach(keep =>
-            graft.data.Versioned.pruneVersions(spark, benchDir, keep, Some(v)))
-        }
-      }
-      val (_, fp, bloom, m, k) = loaded.getOrElse(
-        throw new IllegalStateException(
-          s"no benchmark published under $benchDir — publish one with " +
-            "Corpus.saveBenchmarkVersioned"))
-      sink(graft.data.Corpus.decontaminateExactGuarded(batch, idCol,
-        textCol, fp, bloom, m, k), batchId)
-    }
-  }
-
-  /**
-   * Streaming twin of [[graft.data.Corpus.prepare]]: the stateless stages
-   * (C4 filter/clean, PII redaction, language/quality tagging, split
-   * labels) run unchanged on a stream — they are narrow projections —
-   * and exact dedup becomes watermark-bounded
-   * `dropDuplicatesWithinWatermark` on the redacted-text fingerprint
-   * (first arrival wins within the watermark horizon, the streaming
-   * substitute for batch's min-id-per-fingerprint). State is bounded by
-   * the watermark; at 100 TB/day the fingerprint store holds one day of
-   * 8-byte keys.
-   */
-  def streamingCorpusPrepare(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id", tsCol: String = "ts",
-      watermark: String = "1 day",
-      splits: Seq[(String, Double)] =
-        Seq("train" -> 0.8, "valid" -> 0.1, "test" -> 0.1)): DataFrame = {
-    import graft.data.{Sampling, TextFunctions => TF}
-    docs
-      .filter(TF.c4Keep(col(textCol)))
-      .withColumn("__t", TF.redactPii(TF.c4CleanText(col(textCol))))
-      .select(col(idCol).as("id"), col(tsCol), col("__t").as("text"),
-        TF.langId(col("__t")).as("lang"),
-        TF.qualityScore(col("__t")).as("quality"),
-        TF.wordCount(col("__t")).as("n_words"),
-        TF.fingerprint(col("__t")).as("__fp"),
-        Sampling.hashSplit(col(idCol), splits).as("split"))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("__fp")
-      // batch-twin schema (id, ts, text, lang, quality, n_words, split):
-      // the fingerprint is dedup state, not output
-      .drop("__fp")
-  }
-
-  /** One (negated score, neighbor) candidate — ascending order on
-   * `(ns, neighbor_id)` is exactly the batch rank ordering
-   * (score DESC, neighbor ASC). */
-  case class ScoredNeighbor(ns: Double, neighbor_id: Long)
-
-  /**
-   * Bounded top-k aggregation buffer: the state per group is the k best
-   * `(ns, neighbor_id)` pairs and NOTHING else — inserting into a full
-   * buffer evicts the worst entry, and exact duplicates (at-least-once
-   * redelivery of a deterministic score) dedup on insert, preserving
-   * `collect_set` merge semantics at O(k) instead of O(candidates)
-   * state. k is expected serving-sized (≤ a few hundred); each insert is
-   * O(k), which the candidate-side arithmetic dwarfs.
-   */
-  class TopKByScore(k: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[
-        ScoredNeighbor, Seq[ScoredNeighbor], Seq[ScoredNeighbor]] {
-    private val ord: Ordering[ScoredNeighbor] =
-      Ordering.by((s: ScoredNeighbor) => (s.ns, s.neighbor_id))
-    override def zero: Seq[ScoredNeighbor] = Nil
-    override def reduce(b: Seq[ScoredNeighbor], a: ScoredNeighbor): Seq[ScoredNeighbor] =
-      if (b.contains(a)) b else ((a +: b).sorted(ord)).take(k)
-    override def merge(x: Seq[ScoredNeighbor], y: Seq[ScoredNeighbor]): Seq[ScoredNeighbor] =
-      (x ++ y).distinct.sorted(ord).take(k)
-    override def finish(b: Seq[ScoredNeighbor]): Seq[ScoredNeighbor] = b.sorted(ord)
-    override def bufferEncoder: org.apache.spark.sql.Encoder[Seq[ScoredNeighbor]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[ScoredNeighbor]]()
-    override def outputEncoder: org.apache.spark.sql.Encoder[Seq[ScoredNeighbor]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[ScoredNeighbor]]()
-  }
-
-  /**
-   * Streaming ANN: score a stream of (event-timed) query vectors against
-   * a static (built or loaded) PQ index. The probe is a stream-static
-   * equi join on the cell int — the query-side prep is
-   * [[graft.data.Pq.probeQueries]], the SAME code the batch
-   * `searchIndex` runs, so tie-breaks and residual terms cannot drift.
-   * The static side is deliberately NOT broadcast: Catalyst sizes it
-   * (small index → auto-broadcast; huge index → shuffled join). Pass an
-   * index whose `rows` are cached or loaded from parquet — an un-cached
-   * freshly-built index re-encodes the corpus every micro-batch.
-   *
-   * Top-k is a watermarked event-time windowed aggregation keyed by
-   * (query, window) whose buffer is the BOUNDED [[TopKByScore]]
-   * aggregator: per-key state is O(k) — never the full probed-cell
-   * candidate list — on top of the watermark eviction, so a large index
-   * cell cannot balloon the state store. Append mode emits each query's
-   * answer exactly once when the watermark closes its window, and
-   * at-least-once redelivery of the same query dedups inside the
-   * aggregator instead of duplicating neighbors. Neighbor ids are
-   * surfaced as BIGINT (the aggregation buffer is typed).
-   */
-  def streamingAnnSearch(
-      queries: DataFrame,
-      index: graft.data.Pq.Index,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      nProbe: Int,
-      tsCol: String = "ts",
-      watermark: String = "10 minutes",
-      windowLen: String = "1 minute"): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import graft.data.Pq
-    // the typed top-k buffer casts neighbor ids to long — a corpus with
-    // non-numeric ids (which batch searchIndex supports) would yield
-    // silent null neighbor_ids here; fail fast instead
-    val idType = index.rows.schema("c_id").dataType
-    require(idType.isInstanceOf[org.apache.spark.sql.types.NumericType],
-      s"streamingAnnSearch needs a numeric index id column for its typed " +
-        s"top-k buffer (got ${idType.simpleString}); use batch searchIndex " +
-        "for string-id corpora, or add a numeric surrogate id")
-    val topk = udaf(new TopKByScore(k),
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[ScoredNeighbor]())
-    val q = Pq.probeQueries(index,
-      queries.select(col(idCol), col(vecCol), col(tsCol)), idCol, vecCol, nProbe)
-    q.join(index.rows, Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .select(col("q_id").as("query_id"), col(tsCol),
-        col("c_id").as("neighbor_id"), Pq.indexScore(index).as("score"))
-      .withWatermark(tsCol, watermark)
-      .groupBy(col("query_id"), window(col(tsCol), windowLen))
-      // negated-score ascending = (score DESC, neighbor ASC) — the exact
-      // tie-break batch searchIndex's rank window uses
-      .agg(topk((-col("score")), col("neighbor_id").cast("long")).as("top"))
-      .select(col("query_id"), col("window.start").as("window_start"),
-        posexplode(col("top")))
-      .select(col("query_id"), col("window_start"), (col("pos") + 1).as("rank"),
-        col("col.neighbor_id").as("neighbor_id"),
-        (-col("col.ns")).as("score"))
-  }
-
-  /**
-   * Streaming PERPLEXITY scoring: score an event-timed document stream
-   * against a STATIC pre-fitted n-gram model
-   * ([[graft.data.NgramLm.fit]] offline, typically on a sample — the
-   * CCNet serving shape). The per-position backoff joins are
-   * stream-static equi joins (count tables re-resolved per micro-batch,
-   * sized by Catalyst); the per-document rollup is a watermarked
-   * event-time windowed aggregation, so each document's mean log-score
-   * emits exactly once when the watermark closes its window and state
-   * is evicted — the same contract as [[streamingVar]]. Scores are
-   * micro-unit exact, so they equal the batch
-   * [[graft.data.NgramLm.scoreDocs]] bit-for-bit (spec-pinned).
-   */
-  def streamingLmScore(
-      docs: DataFrame,
-      model: graft.data.NgramLm.NgramModel,
-      idCol: String,
-      textCol: String,
-      tsCol: String = "ts",
-      watermark: String = "1 hour",
-      windowLen: String = "1 hour"): DataFrame = {
-    import graft.data.NgramLm
-    NgramLm.scoreComponents(model, docs, idCol, textCol, Seq(col(tsCol)))
-      .withWatermark(tsCol, watermark)
-      .groupBy(col(idCol), col("n"), window(col(tsCol), windowLen))
-      .agg((sum(col("__m")).cast("double") / lit(1e6) / col("n").cast("double"))
-        .as("logscore"))
-      .select(col(idCol), col("n").as("n_tokens"),
-        col("window.start").as("window_start"), col("logscore"))
-  }
-
-  /**
-   * Streaming perplexity scoring against a PERIODICALLY REFIT model —
-   * the hot-reload twin of [[streamingLmScore]] (which binds one static
-   * model for the stream's lifetime), mirroring
-   * [[annSearchWithIndexRefresh]]: an offline job republishes the count
-   * tables with [[graft.data.NgramLm.saveModelVersioned]] on its own
-   * cadence (quality filters drift as the corpus mix changes), and the
-   * document stream picks the new version up WITHOUT a restart. Each
-   * micro-batch reads the tiny `latest` pointer, reloads only on a
-   * version change, and scores with the exact batch
-   * [[graft.data.NgramLm.scoreDocs]] kernel — the immutable `v<N>`
-   * layout keeps a mid-publish batch on a consistent snapshot. Driver
-   * state is the version number; the count tables stay distributed
-   * (joined per batch, never collected). `sink` receives each batch's
-   * `(idCol, n_tokens, logscore)` frame.
-   *
-   * `pruneKeep` garbage-collects superseded model versions on reload,
-   * as in [[dedupWithStoreRefresh]].
-   *
-   * Returns the configured writer — call `.start()` (and set a trigger /
-   * checkpoint as needed).
-   */
-  def lmScoreWithModelRefresh(
-      docs: DataFrame,
-      modelDir: String,
-      idCol: String,
-      textCol: String,
-      pruneKeep: Option[Int] = None)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.data.NgramLm
-    // closure state on the driver: the currently-loaded model + version
-    var loaded: Option[(Long, NgramLm.NgramModel)] = None
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      graft.data.Versioned.latestVersion(spark, modelDir).foreach { v =>
-        if (!loaded.exists(_._1 == v)) {
-          loaded = Some((v, NgramLm.loadModel(spark, s"$modelDir/v$v")))
-          // GC superseded versions after switching off them, anchored on
-          // the loaded version (see dedupWithStoreRefresh)
-          pruneKeep.foreach(keep =>
-            graft.data.Versioned.pruneVersions(spark, modelDir, keep, Some(v)))
-        }
-      }
-      val model = loaded.getOrElse(throw new IllegalStateException(
-        s"no model published under $modelDir — write one with NgramLm.saveModelVersioned"))._2
-      sink(NgramLm.scoreDocs(model, batch, idCol, textCol), batchId)
-    }
-  }
-
-  /**
-   * Streaming corpus ENCODE under a periodically-retrained tokenizer —
-   * the hot-reload twin for the unigram-LM model, same recipe as
-   * [[lmScoreWithModelRefresh]]: an offline job retrains on corpus
-   * drift cadence and republishes with
-   * [[graft.data.Unigram.saveModelVersioned]]; each micro-batch reads
-   * the tiny `latest` pointer, reloads the (vocab-scale) model only on
-   * a version change, and encodes with the exact batch
-   * [[graft.data.Unigram.encode]] kernel — a tokenizer swap lands
-   * between batches, never inside one. Driver state is the version
-   * number + the KB-scale piece table. `pruneKeep` GCs superseded
-   * versions on reload, anchored on the loaded version. `sink` receives
-   * each batch's `(idCol, pieces)` frame.
-   *
-   * Returns the configured writer — call `.start()` (and set a trigger /
-   * checkpoint as needed).
-   */
-  def encodeWithModelRefresh(
-      docs: DataFrame,
-      modelDir: String,
-      idCol: String,
-      textCol: String,
-      maxPieceLen: Int = 4,
-      pruneKeep: Option[Int] = None)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.data.Unigram
-    var loaded: Option[(Long, Unigram.Model)] = None
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      graft.data.Versioned.latestVersion(spark, modelDir).foreach { v =>
-        if (!loaded.exists(_._1 == v)) {
-          loaded = Some((v, Unigram.loadModel(spark, s"$modelDir/v$v")))
-          pruneKeep.foreach(keep =>
-            graft.data.Versioned.pruneVersions(spark, modelDir, keep, Some(v)))
-        }
-      }
-      val model = loaded.getOrElse(throw new IllegalStateException(
-        s"no tokenizer model published under $modelDir — write one with " +
-          "Unigram.saveModelVersioned"))._2
-      sink(Unigram.encode(batch, idCol, textCol, model, maxPieceLen), batchId)
-    }
-  }
-
-  /**
-   * Streaming corpus encode under a periodically-retrained WORDPIECE
-   * vocabulary — the hot-reload twin for the third tokenizer family,
-   * same recipe as [[encodeWithModelRefresh]] (unigram) and the BPE
-   * ladder: an offline job retrains and republishes with
-   * [[graft.data.Wordpiece.saveVocabVersioned]]; each micro-batch reads
-   * the tiny `latest` pointer, reloads the (vocab-scale) piece list only
-   * on a version change, and encodes with the exact batch
-   * [[graft.data.Wordpiece.encode]] kernel — a vocab swap lands between
-   * batches, never inside one. `sink` receives each batch's encoded
-   * frame plus the vocab version it was encoded under.
-   */
-  def wordpieceEncodeWithVocabRefresh(
-      docs: DataFrame,
-      vocabDir: String,
-      idCol: String,
-      textCol: String,
-      pruneKeep: Option[Int] = None)(
-      sink: (DataFrame, Long, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.data.Wordpiece
-    var loaded: Option[(Long, Seq[String])] = None
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      graft.data.Versioned.latestVersion(spark, vocabDir).foreach { v =>
-        if (!loaded.exists(_._1 == v)) {
-          loaded = Some((v, Wordpiece.loadVocab(spark, s"$vocabDir/v$v")))
-          pruneKeep.foreach(keep =>
-            graft.data.Versioned.pruneVersions(spark, vocabDir, keep, Some(v)))
-        }
-      }
-      val (v, vocab) = loaded.getOrElse(throw new IllegalStateException(
-        s"no wordpiece vocab published under $vocabDir — write one with " +
-          "Wordpiece.saveVocabVersioned"))
-      sink(Wordpiece.encode(batch, idCol, textCol, vocab), batchId, v)
-    }
-  }
-
-  /**
-   * Streaming lexicon scan under a hot-reloadable BLOCKLIST/taxonomy —
-   * the Aho-Corasick twin of the vocab/model refresh family: a curation
-   * job republishes the term list with
-   * [[graft.data.Lexicon.saveLexiconVersioned]]; each micro-batch reads
-   * the tiny `latest` pointer and rebuilds the automaton ONLY on a
-   * version change (build cost is |lexicon|, nothing to do with the
-   * stream), then scans with the exact batch
-   * [[graft.data.Lexicon.scanCounts]] kernel — a lexicon swap lands
-   * between batches, never inside one. `sink` receives each batch's
-   * hit panel plus the lexicon version it was scanned under.
-   */
-  def scanWithLexiconRefresh(
-      docs: DataFrame,
-      lexDir: String,
-      idCol: String,
-      textCol: String,
-      pruneKeep: Option[Int] = None)(
-      sink: (DataFrame, Long, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.data.Lexicon
-    var loaded: Option[(Long, Seq[String])] = None
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      graft.data.Versioned.latestVersion(spark, lexDir).foreach { v =>
-        if (!loaded.exists(_._1 == v)) {
-          loaded = Some((v, Lexicon.loadLexicon(spark, s"$lexDir/v$v")))
-          pruneKeep.foreach(keep =>
-            graft.data.Versioned.pruneVersions(spark, lexDir, keep, Some(v)))
-        }
-      }
-      val (v, terms) = loaded.getOrElse(throw new IllegalStateException(
-        s"no lexicon published under $lexDir — write one with " +
-          "Lexicon.saveLexiconVersioned"))
-      sink(Lexicon.scanCounts(batch, idCol, textCol, terms), batchId, v)
-    }
-  }
-
-  /**
-   * Streaming link-graph maintenance — the continuous-crawl edge store:
-   * each micro-batch of fetched pages extracts weighted host→host edges
-   * ([[graft.data.Html.linkGraph]] — map-only regexp + ONE keyed
-   * shuffle, per batch) and MERGES them into a versioned edge store
-   * (`storeDir/v<N>` behind the rename-committed `latest` pointer):
-   * union with the prior version, re-sum per (src_host, dst_host).
-   * The merge operates on EDGE tables (hosts² bounded, ≪ pages — the
-   * same "the store is the graph, not the corpus" size argument as the
-   * batch operator), so each publish rewrites host-pair counts, never
-   * page data, and a rank job ([[graft.data.Graph.pageRank]] /
-   * `personalizedPageRank`) can run against any published version while
-   * ingest continues. Readers always see a complete snapshot; batch 0
-   * against an empty dir boots the store. `sink` receives the
-   * just-published edge table (read back from its version — what
-   * downstream sees is what durably exists), the batch id, and the
-   * published version.
-   */
-  /** Replay-idempotent publish for the merge-into-versioned-store
-   * ingests: after a crash between a successful publish and the
-   * checkpoint commit, foreachBatch re-delivers the SAME batch id —
-   * re-merging it would double-count every additive cell. Each
-   * published version carries a `_batch` marker (written inside the
-   * staged dir, so it appears atomically with the pointer flip); when
-   * the latest version already records the incoming id, the merge is
-   * skipped and that version is simply re-served. Exactly-once store
-   * state per batch id, on top of the engine's at-least-once. */
-  private def publishOnce(spark: SparkSession, storeDir: String,
-      batchId: Long, pruneKeep: Option[Int])(
-      merged: => DataFrame): Long = {
-    import graft.data.Versioned
-    val hfs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(storeDir), spark.sparkContext.hadoopConfiguration)
-    val replayOf = Versioned.latestVersion(spark, storeDir).filter { v =>
-      val m = new org.apache.hadoop.fs.Path(s"$storeDir/v$v/_batch")
-      hfs.exists(m) && readManifest(hfs, m).headOption
-        .contains(batchId.toString)
-    }
-    replayOf.getOrElse {
-      val v = Versioned.publish(spark, storeDir) { p =>
-        merged.write.parquet(p)
-        val out = hfs.create(new org.apache.hadoop.fs.Path(s"$p/_batch"))
-        try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-      }
-      pruneKeep.foreach(keep =>
-        Versioned.pruneVersions(spark, storeDir, keep, Some(v)))
-      v
-    }
-  }
-
-  def linkGraphIngest(
-      pages: DataFrame,
-      storeDir: String,
-      idCol: String,
-      htmlCol: String,
-      hostCol: String,
-      pruneKeep: Option[Int] = None)(
-      sink: (DataFrame, Long, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.data.{Html, Versioned}
-    pages.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      val batchEdges = Html.linkGraph(batch, idCol, htmlCol, hostCol)
-      // publishOnce: GC runs after the publish, anchored on v; a
-      // replayed batch id re-serves its already-published version
-      // instead of re-summing the weights
-      val v = publishOnce(spark, storeDir, batchId, pruneKeep) {
-        Versioned.latestVersion(spark, storeDir) match {
-          case None => batchEdges
-          case Some(v0) =>
-            spark.read.parquet(s"$storeDir/v$v0")
-              .select(col("src_host"), col("dst_host"), col("w"))
-              .unionByName(batchEdges)
-              .groupBy(col("src_host"), col("dst_host"))
-              .agg(sum(col("w")).as("w"))
-        }
-      }
-      sink(spark.read.parquet(s"$storeDir/v$v"), batchId, v)
-    }
-  }
-
-  /**
-   * Streaming PREFERENCE ingest — the continuous form of
-   * [[graft.data.Preference.bradleyTerry]]: each micro-batch's
-   * (winner, loser) judgments aggregate to directed win counts (one
-   * map-combined shuffle over the batch) and merge into a versioned
-   * win-count store (union + re-sum). Win counts are SUFFICIENT
-   * STATISTICS for the Bradley-Terry MM update, so the per-batch refit
-   * from the published store is IDENTICAL to a batch fit over every
-   * judgment ever streamed (spec-pinned) — the judgment stream itself
-   * is never retained. The store is ≤ |items|² rows forever; each
-   * publish rewrites pair counts, never judgments. `sink` receives the
-   * refit ratings, the batch id, and the published store version.
-   */
-  def preferenceIngest(
-      comparisons: DataFrame,
-      storeDir: String,
-      winnerCol: String,
-      loserCol: String,
-      refitIters: Int = 3,
-      pruneKeep: Option[Int] = None)(
-      sink: (DataFrame, Long, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.data.{Preference, Versioned}
-    comparisons.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      val batchWins = Preference.winCounts(batch, winnerCol, loserCol)
-      // a replayed batch id re-serves its already-published version
-      // instead of re-summing the win counts (publishOnce)
-      val v = publishOnce(spark, storeDir, batchId, pruneKeep) {
-        Versioned.latestVersion(spark, storeDir) match {
-          case None => batchWins
-          case Some(v0) =>
-            spark.read.parquet(s"$storeDir/v$v0")
-              .select(col("winner"), col("loser"), col("n"))
-              .unionByName(batchWins)
-              .groupBy(col("winner"), col("loser"))
-              .agg(sum(col("n")).as("n"))
-        }
-      }
-      val ratings = Preference.bradleyTerryFromCounts(
-        spark.read.parquet(s"$storeDir/v$v"), refitIters)
-      sink(ratings, batchId, v)
-    }
-  }
-
-  /**
-   * Streaming MOST-DUPLICATED-PASSAGES ingest — the EXACT continuous
-   * form of [[graft.data.Dedup.topDuplicateSubstrings]] (the
-   * bounded-state APPROXIMATE twin is the [[heavyHitterMonitor]]
-   * composition over the substring explode, spec-pinned): each
-   * micro-batch's documents explode to `(sub, doc_id, n)` COUNT CELLS
-   * (one map-combined aggregation over the batch) which merge into a
-   * versioned cell store by re-summing — the cells are SUFFICIENT
-   * STATISTICS for the leaderboard, so the per-batch refit from the
-   * published store is IDENTICAL to the batch operator over every
-   * document ever streamed, across ARBITRARY batch splits
-   * (spec-pinned). The document stream itself is never retained.
-   *
-   * Contracts: each document arrives WHOLE in one row (cells of one
-   * doc never straddle batches — the same append expectation as
-   * [[preferenceIngest]]'s judgments).
-   *
-   * SCALE SHAPE — per-batch WRITE work is O(batch), not O(store): the
-   * cell store is position-scale (a multiple of corpus bytes), so the
-   * earlier union-and-republish refit did quadratic-in-stream-length
-   * total work and rewrote a corpus-sized artifact every micro-batch.
-   * Cells are ADDITIVE sufficient statistics, so each batch instead
-   * APPENDS its delta cells to `storeDir/cells` (the
-   * [[appendWithAutoCompact]] layout: batch-scoped live files,
-   * threshold-compacted into immutable chunks) and the leaderboard
-   * aggregates MERGE-ON-READ across chunks + live — bit-exact to the
-   * batch operator over every document ever streamed, across arbitrary
-   * batch splits (spec-pinned; `sum` over delta cells re-merges any
-   * (sub, doc) pair that appears in several chunks). Only the
-   * topN-row BOARD is published per batch (`storeDir/board/v<N>`,
-   * [[publishOnce]]-keyed by batch id, so a replayed batch re-serves
-   * its board instead of re-aggregating). `sink` receives the board
-   * read back from its published version, the batch id, and the board
-   * version; `pruneKeep` GCs old board versions.
-   */
-  def topSubstringsIngest(
-      docs: DataFrame,
-      storeDir: String,
-      idCol: String,
-      textCol: String,
-      k: Int,
-      topN: Int,
-      minCount: Long = 2L,
-      pruneKeep: Option[Int] = None,
-      maxLiveFiles: Int = 64,
-      targetBytes: Long = 64L << 20,
-      lineageId: String = "")(
-      sink: (DataFrame, Long, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(k >= 1 && topN >= 1, s"k=$k topN=$topN must be >= 1")
-    require(maxLiveFiles > 0, s"maxLiveFiles must be positive, got $maxLiveFiles")
-    import graft.data.TextFunctions
-    val cellsDir = s"$storeDir/cells"
-    val boardDir = s"$storeDir/board"
-    val manifestCache =
-      scala.collection.mutable.HashMap.empty[String, Set[String]]
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      val batchCells = batch
-        .select(col(idCol).as("doc_id"),
-          TextFunctions.normalizeText(col(textCol)).as("t"))
-        .filter(length(col("t")) >= k)
-        .select(col("doc_id"),
-          explode(sequence(lit(1), length(col("t")) - lit(k - 1))).as("p"),
-          col("t"))
-        .select(col("doc_id"), col("t").substr(col("p"), lit(k)).as("sub"))
-        .groupBy(col("sub"), col("doc_id")).agg(count(lit(1)).as("n"))
-      // O(batch) append: batch-scoped file names make a replay replace
-      // its own delta instead of double-counting; compaction bounds the
-      // live file count without ever rewriting published chunks
-      appendBatch(batchCells, batchId, cellsDir, maxLiveFiles,
-        targetBytes, lineageId, manifestCache, (_, _, _) => ())
-      // a replayed batch id re-serves its already-published board
-      // instead of re-aggregating the store (publishOnce)
-      val v = publishOnce(spark, boardDir, batchId, pruneKeep) {
-        loadCompactedStore(spark, cellsDir)
-          .groupBy(col("sub"))
-          .agg(sum(col("n")).as("n_occurrences"),
-            countDistinct(col("doc_id")).as("n_docs"))
-          .filter(col("n_occurrences") >= minCount)
-          .orderBy(col("n_occurrences").desc, col("sub"))
-          .limit(topN)
-      }
-      sink(spark.read.parquet(s"$boardDir/v$v")
-          .orderBy(col("n_occurrences").desc, col("sub")),
-        batchId, v)
-    }
-  }
-
-  /**
-   * Streaming DUPLICATE-SPAN monitor — the EXACT continuous form of
-   * [[graft.data.Dedup.duplicateSpans]]: per-batch k-gram hash COUNT
-   * deltas `(h, cnt)` are additive sufficient statistics for the
-   * flagged-hash set (counts of two corpus slices sum to the counts of
-   * their union), so each micro-batch APPENDS its delta counts and its
-   * normalized `(doc_id, t)` rows into two auto-compacting stores
-   * ([[appendWithAutoCompact]]'s layout — O(batch) write per batch,
-   * batch-scoped file names keep replays idempotent), and the flagged
-   * spans are recomputed merge-on-read: re-sum the count chunks, flag
-   * at `minCount`, join the full text store's gram stream, merge
-   * positions — bit-equal to the batch operator over every document
-   * ever streamed, across arbitrary batch splits (spec-pinned).
-   *
-   * Contracts: each document arrives WHOLE in one row, exactly once
-   * (the same append expectation as [[topSubstringsIngest]] — a
-   * re-sent doc_id would double its grams, exactly as it would if fed
-   * twice to the batch operator). Disk posture matches the batch
-   * operator's: the text store is the 1× compact corpus, the count
-   * store is ≤ one row per distinct gram hash; exploded positions are
-   * never materialized. `sink` receives the span table
-   * `(doc_id, span_start, span_end, n_grams)` over the union so far,
-   * plus the batch id.
-   */
-  def duplicateSpansIngest(
-      docs: DataFrame,
-      storeDir: String,
-      idCol: String,
-      textCol: String,
-      k: Int,
-      minCount: Long = 2L,
-      maxLiveFiles: Int = 64,
-      targetBytes: Long = 64L << 20,
-      lineageId: String = "")(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(k >= 1 && minCount >= 1, s"k=$k minCount=$minCount must be >= 1")
-    require(maxLiveFiles > 0, s"maxLiveFiles must be positive, got $maxLiveFiles")
-    import graft.data.{Dedup, TextFunctions}
-    val docsDir = s"$storeDir/docs"
-    val countsDir = s"$storeDir/counts"
-    val docsCache =
-      scala.collection.mutable.HashMap.empty[String, Set[String]]
-    val countsCache =
-      scala.collection.mutable.HashMap.empty[String, Set[String]]
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      // normalize ONCE per doc (the batch operator's first step) — the
-      // text store holds the normalized form so the span join and the
-      // count deltas read identical bytes
-      val norm = batch.select(col(idCol).as("doc_id"),
-        TextFunctions.normalizeText(col(textCol)).as("t"))
-      appendBatch(norm, batchId, docsDir, maxLiveFiles, targetBytes,
-        lineageId, docsCache, (_, _, _) => ())
-      appendBatch(Dedup.kgramCountsFromNorm(norm, k), batchId, countsDir,
-        maxLiveFiles, targetBytes, lineageId, countsCache, (_, _, _) => ())
-      sink(Dedup.spansFromCounts(
-          loadCompactedStore(spark, docsDir),
-          loadCompactedStore(spark, countsDir), k, minCount),
-        batchId)
-    }
-  }
-
-  /** Input row of the streaming weighted sampler. */
-  case class SampleRow(group: String, id: Long, w: Double)
-
-  /**
-   * Streaming exact-size WEIGHTED sampling per group — the continuous
-   * form of [[graft.data.Sampling.weightedSampleByGroup]] (A-ES,
-   * Efraimidis & Spirakis): each group's state is its current top-`k`
-   * `(rank, id)` pairs — BOUNDED at k entries per group no matter how
-   * many rows stream past — and because the A-ES rank is a pure
-   * content-addressed function (`ln((hash60(id·salt)+1)/2^60) / w`, the
-   * EXACT batch spelling replicated in the JVM), the maintained sample
-   * after any prefix of the stream is IDENTICAL to the batch sampler
-   * over the same rows (spec-pinned). Top-k-of-union = top-k-of-tops
-   * makes the merge associative; re-delivered rows dedupe by id
-   * (same id ⇒ same rank). Emits each group's CURRENT sample per batch
-   * (Update mode).
-   */
-  def streamingWeightedSample(
-      rows: Dataset[SampleRow], k: Int, salt: String = "wsample"): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    val spark = rows.sparkSession
-    import spark.implicits._
-    def rank(id: Long, w: Double): Double = {
-      val md5 = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$id$salt".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val hex = md5.take(8).map(b => f"$b%02x").mkString.take(15)
-      val h = java.lang.Long.parseLong(hex, 16)
-      math.log((h + 1.0) / 1152921504606846977.0) / w
-    }
-    rows.groupByKey(_.group)
-      .flatMapGroupsWithState[List[(Double, Long)], (String, Long)](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        (g: String, it: Iterator[SampleRow],
-         state: GroupState[List[(Double, Long)]]) =>
-          val merged = (state.getOption.getOrElse(Nil) ++
-              it.filter(_.w > 0).map(r => (rank(r.id, r.w), r.id)))
-            .distinctBy(_._2)
-            .sortBy { case (s, id) => (-s, id) }
-            .take(k)
-          state.update(merged)
-          merged.iterator.map { case (_, id) => (g, id) }
-      }
-      .toDF("group", "id")
-  }
-
-  /**
-   * Streaming RUNNING-DISTINCT monitor with BOUNDED driver state — the
-   * live "unique users/URLs so far" counter: each micro-batch computes
-   * its mergeable HLL register sketch ([[graft.data.Sketches.hllSketch]],
-   * one aggregation, m ints collected), element-wise-maxes it into the
-   * driver-held registers, and emits `(batch_distinct, running_distinct)`
-   * estimates. State is exactly `m = 2^p` ints REGARDLESS of stream
-   * cardinality — the property an exact `dropDuplicates` state store
-   * cannot have — and because register union is the sketch algebra, the
-   * running registers after N batches are BIT-IDENTICAL to a batch
-   * sketch over all N batches' rows (spec-pinned). `sink` receives
-   * `(batchId, batchDistinct, runningDistinct)`.
-   */
-  def streamingDistinct(
-      docs: DataFrame,
-      value: org.apache.spark.sql.Column,
-      p: Int = 8)(
-      sink: (Long, Double, Double) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.data.Sketches
-    val running = new Array[Int](1 << p)
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val regs = Sketches.hllSketch(batch, Seq.empty, value, p)
-        .collect() // 0 or 1 row of m ints — bounded by construction
-        .headOption.map(_.getSeq[Int](0).toArray)
-        .getOrElse(new Array[Int](1 << p))
-      var i = 0
-      while (i < running.length) {
-        if (regs(i) > running(i)) running(i) = regs(i)
-        i += 1
-      }
-      sink(batchId, Sketches.estimateFromRegisters(regs, p),
-        Sketches.estimateFromRegisters(running, p))
-    }
-  }
-
-  /**
-   * Streaming DATA-CONTRACT gate — [[graft.data.Contract.check]] run per
-   * micro-batch: each batch produces the one-pass rule report (exact
-   * counts, integer-ppm rates, min-id evidence), `sink` receives it,
-   * and any rule whose `violation_ppm` exceeds its entry in
-   * `failPpm` STOPS the query with the offending report in the
-   * exception — the ingest-gate semantics ("quarantine the feed, don't
-   * keep pouring bad rows into the lake"). Rules absent from `failPpm`
-   * only report. The check itself is the batch kernel, so thresholds
-   * and report shapes never drift between offline audits and the live
-   * gate.
-   */
-  def contractMonitor(
-      docs: DataFrame,
-      idCol: String,
-      rules: Seq[(String, org.apache.spark.sql.Column)],
-      failPpm: Map[String, Long] = Map.empty)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(failPpm.keySet.subsetOf(rules.map(_._1).toSet),
-      s"failPpm names unknown rules: ${failPpm.keySet -- rules.map(_._1)}")
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val report = graft.data.Contract.check(batch, col(idCol), rules)
-      // the report is rules.size rows — bounded collect by construction
-      val rows = report.collect()
-      sink(batch.sparkSession.createDataFrame(
-        java.util.Arrays.asList(rows: _*), report.schema), batchId)
-      rows.foreach { r =>
-        val rule = r.getString(0)
-        failPpm.get(rule).foreach { cap =>
-          val ppm = r.getLong(3)
-          if (ppm > cap) throw new IllegalStateException(
-            s"contract rule '$rule' at $ppm ppm exceeds $cap ppm in batch " +
-              s"$batchId (first bad id: ${r.get(4)})")
-        }
-      }
-    }
-  }
-
-  /**
-   * Streaming token-DRIFT monitor against a PERIODICALLY REPUBLISHED
-   * baseline — the continuous form of [[graft.data.Corpus.tokenDrift]],
-   * and the alarm wire of an ingest pipeline: each micro-batch's token
-   * distribution is compared (exact integer ppm) to the latest published
-   * corpus baseline, emitting the top-`topK` drifted tokens per batch —
-   * a crawl source changing register or a filter regression pages the
-   * operator batches (not days) after it starts.
-   *
-   * Same `foreachBatch` hot-reload recipe as [[lmScoreWithModelRefresh]]:
-   * an offline job republishes the baseline counts with
-   * [[graft.data.Corpus.saveTokenCountsVersioned]] on its own cadence;
-   * each micro-batch reads the tiny `latest` pointer and reloads only on
-   * a version change (immutable `v<N>` keeps a mid-publish batch
-   * consistent). The baseline count table stays distributed — joined per
-   * batch, never collected; driver state is the version number.
-   * `pruneKeep` GCs superseded baselines on reload, anchored on the
-   * loaded version. `sink` receives each batch's drift leaderboard
-   * (`tok, n_before, n_after, ppm_before, ppm_after, delta_ppm`).
-   *
-   * Returns the configured writer — call `.start()` (and set a trigger /
-   * checkpoint as needed).
-   */
-  def driftWithBaselineRefresh(
-      docs: DataFrame,
-      baselineDir: String,
-      textCol: String,
-      topK: Int = 50,
-      pruneKeep: Option[Int] = None)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.data.{Corpus, Versioned}
-    // closure state on the driver: the loaded baseline version + frame
-    var loaded: Option[(Long, DataFrame)] = None
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      Versioned.latestVersion(spark, baselineDir).foreach { v =>
-        if (!loaded.exists(_._1 == v)) {
-          loaded = Some((v, spark.read.parquet(s"$baselineDir/v$v")))
-          pruneKeep.foreach(keep =>
-            Versioned.pruneVersions(spark, baselineDir, keep, Some(v)))
-        }
-      }
-      val base = loaded.getOrElse(throw new IllegalStateException(
-        s"no token-count baseline published under $baselineDir — " +
-          "write one with Corpus.saveTokenCountsVersioned"))._2
-      sink(Corpus.tokenDriftFromCounts(base,
-        Corpus.tokenCounts(batch, textCol), topK), batchId)
-    }
-  }
-
-  /**
-   * Streaming ANN against a PERIODICALLY REBUILT index — the production
-   * serving shape [[streamingAnnSearch]] (static index, windowed merge)
-   * deliberately does not cover: an offline job publishes rebuilds with
-   * [[graft.data.Pq.saveIndexVersioned]] on its own cadence, and the
-   * query stream must pick the new version up WITHOUT a restart.
-   *
-   * Implemented as `foreachBatch` — the standard Structured Streaming
-   * recipe for a slowly-changing static side: each micro-batch reads the
-   * tiny `latest` pointer and reloads only when the published version
-   * changed; the batch's queries then run the exact batch
-   * [[graft.data.Pq.searchIndex]] against the current index, and `sink`
-   * receives the per-batch answer frame. The VERSIONED layout is what
-   * makes the swap safe: every version is immutable on disk, so a
-   * micro-batch keeps a consistent snapshot even while the publisher
-   * writes the next one (an in-place `saveIndex` overwrite would delete
-   * row files under a running query). A missing/in-flux pointer keeps
-   * the current version. Trade vs [[streamingAnnSearch]]: answers are
-   * per-micro-batch (no event-time window merge / watermark dedup),
-   * which is what a serving path wants. Driver state is one codebook
-   * (KBs); index rows stay on disk, cell-pruned at the scan like any
-   * loaded index.
-   *
-   * `pruneKeep` garbage-collects superseded index versions on reload,
-   * as in [[dedupWithStoreRefresh]].
-   *
-   * Returns the configured writer — call `.start()` (and set a trigger /
-   * checkpoint as needed).
-   */
-  def annSearchWithIndexRefresh(
-      queries: DataFrame,
-      indexDir: String,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      nProbe: Int,
-      pruneKeep: Option[Int] = None)(
-      sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.data.Pq
-    // closure state on the driver: the currently-loaded index + its version
-    var loaded: Option[(Long, Pq.Index)] = None
-    queries.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val spark = batch.sparkSession
-      Pq.latestVersion(spark, indexDir).foreach { v =>
-        if (!loaded.exists(_._1 == v)) {
-          loaded = Some((v, Pq.loadIndex(spark, s"$indexDir/v$v")))
-          // GC superseded versions after switching off them, anchored on
-          // the loaded version (see dedupWithStoreRefresh)
-          pruneKeep.foreach(keep =>
-            graft.data.Versioned.pruneVersions(spark, indexDir, keep, Some(v)))
-        }
-      }
-      val idx = loaded.getOrElse(throw new IllegalStateException(
-        s"no index published under $indexDir — write one with Pq.saveIndexVersioned"))._2
-      sink(Pq.searchIndex(idx, batch, idCol, vecCol, k, nProbe), batchId)
-    }
-  }
-
-  /**
-   * Streaming SESSIONIZATION: event-time session windows (gap-based) per
-   * user — the streaming twin of the batch lag+running-sum sessionize
-   * (q40). `session_window` merges events closer than `gap` into one
-   * growing window; the session emits exactly once, when the watermark
-   * passes its close (last event + gap). State per key is one open
-   * session, bounded by the watermark.
-   */
-  def streamingSessions(
-      events: DataFrame,
-      idCol: String = "user_id",
-      tsCol: String = "ts",
-      gap: String = "30 minutes",
-      watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(col(idCol), session_window(col(tsCol), gap))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col(idCol), col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"), col("n_events"))
 
   /**
    * Stream-STATIC join: attach the (small, slowly-changing) portfolio

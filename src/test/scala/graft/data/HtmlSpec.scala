@@ -1,6 +1,7 @@
 package graft.data
 
 import graft.SparkSpec
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /**
@@ -172,5 +173,40 @@ class HtmlSpec extends SparkSpec {
     assert(grouped == inline)
     assert(grouped(0) == ((1L, "", 0L, 0L)))
     assert(grouped(1) == ((2L, "", 0L, 0L)))
+  }
+
+  test("streaming HTML extraction: the inline extractor is batch-equal on a stream") {
+    implicit val sqlCtx = spark.sqlContext
+    val pages = Seq(
+      (1L, "<nav><a href='/'>Home</a> <a href='/a'>About</a></nav>" +
+        "<p>a long enough paragraph about streaming extraction with " +
+        "plenty of words</p><footer><a href='/t'>Terms</a></footer>"),
+      (2L, "<h1>short</h1><p>another sufficiently long block of ordinary " +
+        "prose for the gate</p>"))
+    val results = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long)]
+    val input = MemoryStream[(Long, String)]
+    val q = Html.extractContentInline(
+        input.toDF().toDF("doc_id", "html"), "doc_id", "html")
+      .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        results ++= b.collect().map(r => (r.getLong(0), r.getString(1),
+          r.getLong(2), r.getLong(3)))
+        ()
+      }.start()
+    input.addData(pages: _*)
+    q.processAllAvailable()
+    q.stop()
+    val batch = Html.extractContentInline(pages.toDF("doc_id", "html"),
+        "doc_id", "html")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+        r.getLong(3))).toSeq
+    assert(results.sortBy(_._1).toSeq === batch.sortBy(_._1))
+    // and the inline spelling equals the exploded+grouped batch one
+    val grouped = Html.extractContent(pages.toDF("doc_id", "html"),
+        "doc_id", "html")
+      .select(col("doc_id"), col("text"), col("n_blocks_kept"),
+        col("n_blocks_dropped"))
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+        r.getLong(3))).toSeq
+    assert(batch.sortBy(_._1) === grouped.sortBy(_._1))
   }
 }

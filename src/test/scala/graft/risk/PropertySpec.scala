@@ -113,4 +113,20 @@ class PropertySpec extends SparkSpec {
         }
     }
   }
+
+  test("chunked rolling stats == unpartitioned rolling stats") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val days = (1 to 60).map(d => (java.sql.Timestamp.valueOf(f"2024-${1 + (d - 1) / 28}%02d-${1 + (d - 1) % 28}%02d 00:00:00"),
+      Array((d * 7 % 13).toDouble, (d * 3 % 5).toDouble)))
+    val df = days.toDF("date", "features")
+    val full = Volatility.rollingStats(df, windowDays = 10)
+      .select(col("date"), col("vol_avg"), col("vol_cov"))
+    val chunked = Volatility.rollingStatsChunked(df, windowDays = 10, chunkDays = 14)
+      .select(col("date"), col("vol_avg"), col("vol_cov"))
+    val a = full.orderBy("date").collect().map(_.toString)
+    val b = chunked.orderBy("date").collect().map(_.toString)
+    assert(a.length == b.length && a.length > 40)
+    assert(a.sameElements(b))
+  }
 }

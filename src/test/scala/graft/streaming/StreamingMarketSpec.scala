@@ -39,6 +39,30 @@ class StreamingMarketSpec extends SparkSpec {
     q.stop()
   }
 
+  test("runningLogReturns: a late tick is dropped and never moves the state backwards") {
+    implicit val s = spark
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[PriceTick]
+    val q = runningLogReturns(input.toDS())
+      .writeStream.format("memory").queryName("laterets")
+      .outputMode(OutputMode.Append()).start()
+
+    input.addData(PriceTick("A", ts(1), 100.0), PriceTick("A", ts(3), 121.0))
+    q.processAllAvailable()
+    input.addData(PriceTick("A", ts(2), 110.0)) // older than the stored day-3 close
+    q.processAllAvailable()
+    input.addData(PriceTick("A", ts(4), 133.1)) // must be priced against day 3
+    q.processAllAvailable()
+
+    val out = spark.table("laterets").as[ReturnTick].collect()
+      .map(r => (r.ts.toString.take(10), r.ret)).sortBy(_._1).toSeq
+    assert(out.map(_._1) == Seq("2024-01-01", "2024-01-03", "2024-01-04"))
+    assert(out(0)._2 == 0.0)
+    assert(math.abs(out(1)._2 - math.log(121.0 / 100.0)) < 1e-12)
+    assert(math.abs(out(2)._2 - math.log(133.1 / 121.0)) < 1e-12)
+    q.stop()
+  }
+
   test("windowedIndicatorStats: event-time windows with watermark") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[PriceTick]
@@ -61,28 +85,6 @@ class StreamingMarketSpec extends SparkSpec {
     q.stop()
   }
 
-  test("streamingDedup: fingerprint duplicates dropped across batches, state keyed on fp") {
-    implicit val sqlCtx = spark.sqlContext
-    case class Doc(doc_id: Long, ts: Timestamp, text: String)
-    val input = MemoryStream[(Long, Timestamp, String)]
-    val q = streamingDedup(
-        input.toDF().toDF("doc_id", "ts", "text"), watermark = "1 day")
-      .writeStream.format("memory").queryName("dedup")
-      .outputMode(OutputMode.Append()).start()
-
-    input.addData((1L, ts(1), "the quick brown fox"),
-      (2L, ts(1, 2), "THE  quick brown FOX"),  // dup modulo case/ws
-      (3L, ts(1, 4), "something else entirely"))
-    q.processAllAvailable()
-    input.addData((4L, ts(1, 6), "the quick brown fox")) // cross-batch dup
-    q.processAllAvailable()
-
-    val kept = spark.table("dedup").select("doc_id")
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(kept == Seq(1L, 3L))
-    q.stop()
-  }
-
   test("streamingVar: closed event-time windows emit the batch quantile") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Timestamp, Double)]
@@ -102,64 +104,6 @@ class StreamingMarketSpec extends SparkSpec {
     assert(rows.exists { case (n, v) =>
       n == 5 && math.abs(v - graft.risk.VarMath.valueAtRisk(rets.toArray, 95)) < 1e-12
     })
-    q.stop()
-  }
-
-  test("streamingCorpusPrepare: clean+redact+tag on stream, cross-batch dedup") {
-    implicit val sqlCtx = spark.sqlContext
-    val body = ("the quick brown fox jumps over the lazy dog and " * 7).trim
-    val input = MemoryStream[(Long, Timestamp, String)]
-    val q = streamingCorpusPrepare(
-        input.toDF().toDF("doc_id", "ts", "text"))
-      .writeStream.format("memory").queryName("scorpus")
-      .outputMode(OutputMode.Append()).start()
-
-    input.addData(
-      (1L, ts(1), s"$body and then some more words arrive here.\nWrite to a@ex.com for info today."),
-      (2L, ts(1), "Too short to keep.\nreally"))
-    q.processAllAvailable()
-    // batch 2: doc 3 duplicates doc 1 AFTER redaction (different email)
-    input.addData(
-      (3L, ts(2), s"$body and then some more words arrive here.\nWrite to b@ex.com for info today."),
-      (4L, ts(2), s"$body plus a different closing sentence right here today."))
-    q.processAllAvailable()
-
-    val rows = spark.table("scorpus").select("id", "text", "lang", "split").collect()
-    assert(rows.map(_.getLong(0)).sorted.toSeq == Seq(1L, 4L)) // 2 junk, 3 dup
-    val doc1 = rows.find(_.getLong(0) == 1L).get
-    assert(doc1.getString(1).contains("<EMAIL>") && !doc1.getString(1).contains("@ex.com"))
-    assert(rows.forall(_.getString(2) == "en"))
-    assert(rows.forall(r => Set("train", "valid", "test")(r.getString(3))))
-    q.stop()
-  }
-
-  test("streamingCorpusPrepare == batch Corpus.prepare on a dup-free corpus") {
-    // when no fingerprints collide, the dedup winner rule (batch min-id
-    // vs stream first-arrival) cannot differ -> outputs must be identical
-    implicit val sqlCtx = spark.sqlContext
-    val body = ("the quick brown fox jumps over the lazy dog and " * 7).trim
-    // batch-2 event times must be AT or past batch-1's watermark, or the
-    // stream drops them as late (days 1-10 first batch, 11-20 second)
-    val docs = (0 until 40).map(i =>
-      (i.toLong, ts(1 + (if (i < 25) i % 10 else 10 + i % 10)),
-        s"$body unique closing number $i appears right here today."))
-    val input = MemoryStream[(Long, Timestamp, String)]
-    val q = streamingCorpusPrepare(input.toDF().toDF("doc_id", "ts", "text"))
-      .writeStream.format("memory").queryName("sprep_parity")
-      .outputMode(OutputMode.Append()).start()
-    input.addData(docs.take(25): _*)
-    q.processAllAvailable()
-    input.addData(docs.drop(25): _*)
-    q.processAllAvailable()
-
-    import org.apache.spark.sql.functions._
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select("id", "text", "lang", "quality", "n_words", "split")
-        .collect().map(_.toString).sorted.toSeq
-    val streamed = canon(spark.table("sprep_parity"))
-    val batch = canon(graft.data.Corpus.prepare(
-      docs.toDF("doc_id", "ts", "text").drop("ts")))
-    assert(streamed == batch && batch.size == 40)
     q.stop()
   }
 
@@ -246,541 +190,6 @@ class StreamingMarketSpec extends SparkSpec {
     q.stop()
   }
 
-  test("streamingAnnSearch: query stream against a static PQ index == batch search") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.data.{Pq, Similarity}
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val idx = Pq.buildIndex(emb, "vec_id", "v", Similarity.planes(8, 64),
-      Pq.seedCodebook(8, 16, 8))
-    // static index rows must be a plain (batch) DataFrame — materialize
-    val rows = idx.rows.cache()
-    val staticIdx = idx.copy(rows = rows)
-
-    val input = MemoryStream[(Long, Seq[Double], Timestamp)]
-    val q = streamingAnnSearch(input.toDF().toDF("vec_id", "v", "ts"), staticIdx,
-        "vec_id", "v", k = 3, nProbe = 2,
-        watermark = "1 hour", windowLen = "1 hour")
-      .writeStream.format("memory").queryName("annstream")
-      .outputMode(OutputMode.Append()).start()
-
-    val queryVecs = emb.filter(col("vec_id") < 5)
-      .as[(Long, Seq[Double])].collect().toSeq
-      .map { case (id, v) => (id, v, ts(1, 6)) }
-    input.addData(queryVecs.take(2): _*)
-    q.processAllAvailable()
-    // second batch: fresh queries PLUS an at-least-once redelivery of
-    // query 0 in the same window — must merge, not duplicate neighbors
-    input.addData(queryVecs.drop(2) :+ queryVecs.head: _*)
-    q.processAllAvailable()
-    // advance the watermark far enough to close and emit the window
-    input.addData((999L, queryVecs.head._2, ts(5)))
-    q.processAllAvailable()
-
-    def canon(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("score"), 9))
-      .collect().map(_.toString).sorted.toSeq
-    val streamed = canon(spark.table("annstream").filter(col("query_id") < 5))
-    val batch = canon(Pq.searchIndex(staticIdx, emb.filter(col("vec_id") < 5),
-      "vec_id", "v", k = 3, nProbe = 2))
-    assert(streamed == batch && streamed.nonEmpty)
-    rows.unpersist()
-    q.stop()
-  }
-
-  test("annSearchWithIndexRefresh: a mid-stream index rebuild is picked up next batch") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.data.{Pq, Similarity}
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val cb = Pq.seedCodebook(8, 16, 8)
-    val coarse = Similarity.planes(8, 64)
-    // v1 index over the low-id half, v2 over the (disjoint) high-id half:
-    // the same query MUST answer with different neighbors after the swap
-    val half1 = emb.filter(col("vec_id") < 250)
-    val half2 = emb.filter(col("vec_id") >= 250)
-    val dir = java.nio.file.Files.createTempDirectory("ann_refresh").toString
-    assert(Pq.saveIndexVersioned(
-      Pq.buildIndex(half1, "vec_id", "v", coarse, cb), dir) === 1L)
-
-    val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    val input = MemoryStream[(Long, Seq[Double])]
-    val q = annSearchWithIndexRefresh(input.toDF().toDF("vec_id", "v"), dir,
-        "vec_id", "v", k = 3, nProbe = 8) { (out, batchId) =>
-      results ++= out.select(col("query_id").cast("long"),
-          col("neighbor_id").cast("long"))
-        .collect().map(r => (batchId, r.getLong(0), r.getLong(1)))
-    }.start()
-
-    val queryVec = emb.filter(col("vec_id") === 0L)
-      .select(col("v")).as[Seq[Double]].head()
-    input.addData((9000L, queryVec))
-    q.processAllAvailable()
-    // offline rebuild publishes a new immutable version while the stream
-    // is running; v1 stays intact on disk for in-flight readers
-    assert(Pq.saveIndexVersioned(
-      Pq.buildIndex(half2, "vec_id", "v", coarse, cb), dir) === 2L)
-    input.addData((9001L, queryVec))
-    q.processAllAvailable()
-    q.stop()
-
-    val batch1 = results.filter(_._2 == 9000L).map(_._3).toSet
-    val batch2 = results.filter(_._2 == 9001L).map(_._3).toSet
-    assert(batch1.nonEmpty && batch1.forall(_ < 250L), batch1.toString)
-    assert(batch2.nonEmpty && batch2.forall(_ >= 250L), batch2.toString)
-    // and each batch matches the batch-mode search against that version
-    val (v, idx2) = Pq.loadIndexVersioned(spark, dir)
-    assert(v === 2L)
-    val want2 = Pq.searchIndex(idx2,
-        Seq((9001L, queryVec)).toDF("vec_id", "v"), "vec_id", "v",
-        k = 3, nProbe = 8)
-      .select(col("neighbor_id").cast("long")).as[Long].collect().toSet
-    assert(batch2 === want2)
-    // the superseded version is still a loadable consistent snapshot
-    assert(Pq.loadIndex(spark, s"$dir/v1").rows.count() === 250L)
-  }
-
-  test("streamingLmScore: watermarked doc stream scores == batch scoreDocs") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.data.NgramLm
-    val corpus = Seq((1L, "a b c"), (2L, "a b d")).toDF("doc_id", "text")
-    val model = NgramLm.fit(corpus, "doc_id", "text")
-    // materialized count tables: a static side should not refit per batch
-    val m = model.copy(uni = model.uni.cache(), bi = model.bi.cache(),
-      tri = model.tri.cache())
-
-    val input = MemoryStream[(Long, String, Timestamp)]
-    val q = streamingLmScore(input.toDF().toDF("doc_id", "text", "ts"), m,
-        "doc_id", "text", watermark = "1 hour", windowLen = "1 hour")
-      .writeStream.format("memory").queryName("lmscores")
-      .outputMode(OutputMode.Append()).start()
-
-    input.addData((10L, "a b c", ts(1, 6)), (11L, "c a d", ts(1, 6)))
-    q.processAllAvailable()
-    input.addData((12L, "z", ts(1, 6)))
-    q.processAllAvailable()
-    input.addData((999L, "a", ts(5))) // advance watermark, close the window
-    q.processAllAvailable()
-    q.stop()
-
-    val streamed = spark.table("lmscores").filter(col("doc_id") < 100)
-      .select(col("doc_id"), col("n_tokens"), col("logscore"))
-      .collect().map(_.toString).sorted.toSeq
-    val batch = NgramLm.scoreDocs(m,
-        Seq((10L, "a b c"), (11L, "c a d"), (12L, "z")).toDF("doc_id", "text"),
-        "doc_id", "text")
-      .select(col("doc_id"), col("n_tokens"), col("logscore"))
-      .collect().map(_.toString).sorted.toSeq
-    assert(streamed === batch && streamed.size === 3)
-  }
-
-  test("lmScoreWithModelRefresh: a mid-stream refit is picked up next batch") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.data.NgramLm
-    // v1 model knows "a b c"; the refit adds "x y z" — the same doc MUST
-    // score differently (no longer OOV-floor) after the swap
-    val dir = java.nio.file.Files.createTempDirectory("lm_refresh").toString
-    val fitV1 = NgramLm.fit(Seq((1L, "a b c"), (2L, "a b d"))
-      .toDF("doc_id", "text"), "doc_id", "text")
-    assert(NgramLm.saveModelVersioned(fitV1, dir) === 1L)
-
-    val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    val input = MemoryStream[(Long, String)]
-    val q = lmScoreWithModelRefresh(input.toDF().toDF("doc_id", "text"), dir,
-        "doc_id", "text") { (out, batchId) =>
-      results ++= out.select(col("doc_id"), col("logscore"))
-        .collect().map(r => (batchId, r.getLong(0), r.getDouble(1)))
-    }.start()
-
-    input.addData((9000L, "x y z"))
-    q.processAllAvailable()
-    // offline refit publishes a new immutable version while the stream
-    // runs; v1 stays intact on disk for in-flight readers
-    val fitV2 = NgramLm.fit(Seq((1L, "a b c"), (2L, "a b d"), (3L, "x y z"))
-      .toDF("doc_id", "text"), "doc_id", "text")
-    assert(NgramLm.saveModelVersioned(fitV2, dir) === 2L)
-    input.addData((9001L, "x y z"))
-    q.processAllAvailable()
-    q.stop()
-
-    val s1 = results.collectFirst { case (_, 9000L, s) => s }.get
-    val s2 = results.collectFirst { case (_, 9001L, s) => s }.get
-    // each batch scores bit-equal to batch scoreDocs under that version
-    def batchScore(m: NgramLm.NgramModel): Double =
-      NgramLm.scoreDocs(m, Seq((1L, "x y z")).toDF("doc_id", "text"),
-          "doc_id", "text")
-        .select(col("logscore")).as[Double].head()
-    assert(s1 === batchScore(NgramLm.loadModel(spark, s"$dir/v1")))
-    assert(s2 === batchScore(NgramLm.loadModel(spark, s"$dir/v2")))
-    // the refit actually changed the answer: "x y z" is in-vocabulary now
-    assert(s2 > s1, s"expected refit to raise the score: $s1 -> $s2")
-  }
-
-  test("streamingWeightedSample: maintained sample equals the batch A-ES sampler") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    import graft.data.Sampling
-    val b1 = (1L to 60L).map(i => SampleRow(s"g${i % 2}", i, (i % 9) + 1.0))
-    val b2 = (61L to 140L).map(i => SampleRow(s"g${i % 2}", i, (i % 9) + 1.0))
-    val input = MemoryStream[SampleRow]
-    val perBatch = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Map[String, Set[Long]])]
-    val q = streamingWeightedSample(input.toDS(), k = 7)
-      .writeStream.outputMode("update")
-      .foreachBatch { (out: org.apache.spark.sql.DataFrame, bid: Long) =>
-        perBatch += ((bid, out.collect()
-          .map(r => (r.getString(0), r.getLong(1)))
-          .groupBy(_._1).map { case (g, xs) => g -> xs.map(_._2).toSet }))
-        ()
-      }.start()
-    input.addData(b1: _*); q.processAllAvailable()
-    input.addData(b2: _*); q.processAllAvailable()
-    q.stop()
-
-    def batchSample(rows: Seq[SampleRow]): Map[String, Set[Long]] =
-      Sampling.weightedSampleByGroup(
-          rows.toDF("group", "id", "w"), Seq("group"), col("id"), col("w"),
-          k = 7)
-        .select(col("group"), col("id")).as[(String, Long)]
-        .collect().groupBy(_._1).map { case (g, xs) => g -> xs.map(_._2).toSet }
-    // after batch 1 the stream sample == batch sampler on b1; after
-    // batch 2 == batch sampler on b1 ++ b2 (any prefix, same answer)
-    assert(perBatch(0)._2 === batchSample(b1))
-    assert(perBatch(1)._2 === batchSample(b1 ++ b2))
-    // bounded state: exactly k per group
-    assert(perBatch(1)._2.values.forall(_.size == 7))
-  }
-
-  test("streamingDistinct: running estimate equals the batch sketch over all rows") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    import graft.data.Sketches
-    val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Double, Double)]
-    val input = MemoryStream[String]
-    val q = streamingDistinct(input.toDF().toDF("v"), col("v")) {
-      (bid, batchEst, runEst) => results += ((bid, batchEst, runEst))
-    }.start()
-    val b1 = (0 until 400).map(i => s"u$i")
-    val b2 = (200 until 700).map(i => s"u$i") // overlaps b1 by 200
-    input.addData(b1: _*); q.processAllAvailable()
-    input.addData(b2: _*); q.processAllAvailable()
-    q.stop()
-    // the running estimate after batch 2 equals the batch-mode estimate
-    // over the union of all rows — register union IS the sketch algebra
-    val batchAll = Sketches.hllDistinct(
-        (b1 ++ b2).toDF("v"), Seq.empty, col("v"))
-      .select(col("approx_distinct")).as[Double].head()
-    assert(results.size === 2)
-    assert(results.last._3 === batchAll)
-    // overlap is absorbed: running estimate grows sub-additively
-    assert(results.last._3 < results.head._2 + results.last._2)
-  }
-
-  test("contractMonitor: per-batch reports match the batch kernel; breach stops the query") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    val rules = Seq("qty_positive" -> (col("qty") > 0))
-    val reports = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    val input = MemoryStream[(Long, Int)]
-    val q = contractMonitor(input.toDF().toDF("id", "qty"), "id", rules,
-        failPpm = Map("qty_positive" -> 400000L)) { (rep, bid) =>
-      reports ++= rep.select(col("n_rows"), col("n_violations"))
-        .collect().map(r => (bid, r.getLong(0), r.getLong(1)))
-    }.start()
-    input.addData((1L, 5), (2L, -1), (3L, 7)) // 1/3 bad = 333333 ppm: passes
-    q.processAllAvailable()
-    assert(reports.map(r => (r._2, r._3)).toList === List((3L, 1L)))
-    input.addData((4L, -2), (5L, -3), (6L, 9)) // 2/3 bad = 666666 ppm: breach
-    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q.processAllAvailable()
-    }
-    assert(err.getMessage.contains("qty_positive") ||
-      Option(err.getCause).exists(_.getMessage.contains("qty_positive")))
-    // the breaching batch still reported before failing
-    assert(reports.size === 2 && reports.last._3 === 2L)
-  }
-
-  test("encodeWithModelRefresh: a tokenizer retrain is picked up next batch") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    import graft.data.Unigram
-    // v1 trains on a corpus with no 'o'/'w' chars -> "row" needs <unk>;
-    // the retrain corpus makes "row" a whole piece
-    val dir = java.nio.file.Files.createTempDirectory("tok_refresh").toString
-    val v1 = Unigram.train(Seq((1L, "spark spark table"))
-      .toDF("doc_id", "text"), "text", vocabSize = 12, maxPieceLen = 4)
-    assert(Unigram.saveModelVersioned(spark, v1, dir) === 1L)
-
-    val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[String])]
-    val input = MemoryStream[(Long, String)]
-    val q = encodeWithModelRefresh(input.toDF().toDF("doc_id", "text"), dir,
-        "doc_id", "text") { (out, _) =>
-      results ++= out.select(col("doc_id"), col("pieces"))
-        .collect().map(r => (r.getLong(0), r.getSeq[String](1)))
-    }.start()
-
-    input.addData((9000L, "spark row"))
-    q.processAllAvailable()
-    val v2 = Unigram.train(Seq((1L, "row row row spark"))
-      .toDF("doc_id", "text"), "text", vocabSize = 12, maxPieceLen = 4)
-    assert(Unigram.saveModelVersioned(spark, v2, dir) === 2L)
-    input.addData((9001L, "spark row"))
-    q.processAllAvailable()
-    q.stop()
-
-    val p1 = results.collectFirst { case (9000L, p) => p }.get
-    val p2 = results.collectFirst { case (9001L, p) => p }.get
-    // each batch encodes bit-equal to the batch kernel under that version
-    def batchEnc(m: Unigram.Model): Seq[String] =
-      Unigram.encode(Seq((1L, "spark row")).toDF("doc_id", "text"),
-          "doc_id", "text", m)
-        .select(col("pieces")).as[Seq[String]].head()
-    assert(p1 === batchEnc(Unigram.loadModel(spark, s"$dir/v1")))
-    assert(p2 === batchEnc(Unigram.loadModel(spark, s"$dir/v2")))
-    // the swap is visible: v1 must <unk> the unseen chars, v2 knows "row"
-    assert(p1.contains(Unigram.UnkPiece))
-    assert(p2.contains("row") && !p2.contains(Unigram.UnkPiece))
-  }
-
-  test("wordpieceEncodeWithVocabRefresh: a vocab republish lands next batch") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    import graft.data.Wordpiece
-    // v1 trains without 'w' -> "row" is UNK; the retrain corpus covers it
-    val dir = java.nio.file.Files.createTempDirectory("wp_refresh").toString
-    val v1 = Wordpiece.train(Seq((1L, "spark spark table rot rot"))
-      .toDF("doc_id", "text"), "text", vocabSize = 20)
-    assert(Wordpiece.saveVocabVersioned(spark, v1, dir) === 1L)
-
-    val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, String)]
-    val input = MemoryStream[(Long, String)]
-    val q = wordpieceEncodeWithVocabRefresh(
-        input.toDF().toDF("doc_id", "text"), dir, "doc_id", "text") {
-      (out, _, ver) =>
-        results ++= out.select(col("id"), col("piece"))
-          .collect().map(r => (r.getLong(0), ver, r.getString(1)))
-    }.start()
-
-    input.addData((9000L, "row"))
-    q.processAllAvailable()
-    val v2 = Wordpiece.train(Seq((1L, "row row row spark"))
-      .toDF("doc_id", "text"), "text", vocabSize = 20)
-    assert(Wordpiece.saveVocabVersioned(spark, v2, dir) === 2L)
-    input.addData((9001L, "row"))
-    q.processAllAvailable()
-    q.stop()
-
-    val p1 = results.filter(_._1 == 9000L)
-    val p2 = results.filter(_._1 == 9001L)
-    assert(p1.forall(_._2 == 1L) && p2.forall(_._2 == 2L))
-    // v1 has no 'w' piece -> UNK; v2 rebuilds "row" from its pieces
-    assert(p1.map(_._3) === Seq(Wordpiece.Unk))
-    assert(p2.map(_._3).mkString.replace("##", "") === "row")
-    // each batch encodes bit-equal to the batch kernel under that vocab
-    def batchEnc(v: Seq[String]): Seq[String] =
-      Wordpiece.encode(Seq((1L, "row")).toDF("doc_id", "text"),
-          "doc_id", "text", v)
-        .orderBy(col("piece_idx")).select(col("piece")).as[String]
-        .collect().toSeq
-    assert(p1.map(_._3).toSeq === batchEnc(Wordpiece.loadVocab(spark, s"$dir/v1")))
-    assert(p2.map(_._3).toSeq === batchEnc(Wordpiece.loadVocab(spark, s"$dir/v2")))
-  }
-
-  test("streaming HTML extraction: the inline extractor is batch-equal on a stream") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    import graft.data.Html
-    val pages = Seq(
-      (1L, "<nav><a href='/'>Home</a> <a href='/a'>About</a></nav>" +
-        "<p>a long enough paragraph about streaming extraction with " +
-        "plenty of words</p><footer><a href='/t'>Terms</a></footer>"),
-      (2L, "<h1>short</h1><p>another sufficiently long block of ordinary " +
-        "prose for the gate</p>"))
-    val results = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long)]
-    val input = MemoryStream[(Long, String)]
-    val q = Html.extractContentInline(
-        input.toDF().toDF("doc_id", "html"), "doc_id", "html")
-      .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        results ++= b.collect().map(r => (r.getLong(0), r.getString(1),
-          r.getLong(2), r.getLong(3)))
-        ()
-      }.start()
-    input.addData(pages: _*)
-    q.processAllAvailable()
-    q.stop()
-    val batch = Html.extractContentInline(pages.toDF("doc_id", "html"),
-        "doc_id", "html")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getLong(3))).toSeq
-    assert(results.sortBy(_._1).toSeq === batch.sortBy(_._1))
-    // and the inline spelling equals the exploded+grouped batch one
-    val grouped = Html.extractContent(pages.toDF("doc_id", "html"),
-        "doc_id", "html")
-      .select(col("doc_id"), col("text"), col("n_blocks_kept"),
-        col("n_blocks_dropped"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getLong(3))).toSeq
-    assert(batch.sortBy(_._1) === grouped.sortBy(_._1))
-  }
-
-  test("linkGraphIngest: the edge store after each batch equals the batch operator on all pages so far") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    import graft.data.Html
-    val dir = java.nio.file.Files.createTempDirectory("lg_store").toString
-    val b1 = Seq(
-      (1L, "a.org", "<p><a href='https://b.org/x'>B</a> <a href='/s'>me</a></p>"),
-      (2L, "b.org", "<p><a href='https://a.org/'>A</a></p>"))
-    val b2 = Seq(
-      (3L, "a.org", "<p><a href='https://b.org/y'>B2</a></p>"),
-      (4L, "c.org", "<p><a href='//b.org/z'>B3</a> <a href='mailto:x@y'>m</a></p>"))
-    val published = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Seq[(String, String, Long)])]
-    val input = MemoryStream[(Long, String, String)]
-    val q = linkGraphIngest(
-        input.toDF().toDF("doc_id", "host", "html"),
-        dir, "doc_id", "html", "host") { (edges, batchId, v) =>
-      published += ((batchId, v,
-        edges.orderBy(col("src_host"), col("dst_host"))
-          .as[(String, String, Long)].collect().toSeq))
-    }.start()
-    input.addData(b1: _*)
-    q.processAllAvailable()
-    input.addData(b2: _*)
-    q.processAllAvailable()
-    q.stop()
-
-    def batchGraph(pages: Seq[(Long, String, String)]) =
-      Html.linkGraph(pages.toDF("doc_id", "host", "html"),
-          "doc_id", "html", "host")
-        .orderBy(col("src_host"), col("dst_host"))
-        .as[(String, String, Long)].collect().toSeq
-    // store versions advance; each snapshot is bit-equal to the batch
-    // operator over the union of all pages ingested so far
-    assert(published.map(p => (p._1, p._2)) === Seq((0L, 1L), (1L, 2L)))
-    assert(published(0)._3 === batchGraph(b1))
-    assert(published(1)._3 === batchGraph(b1 ++ b2))
-    // and a rank job runs against the published store as-is
-    val ranks = graft.data.Graph.pageRank(
-      spark.read.parquet(s"$dir/v2")
-        .filter(col("src_host") =!= col("dst_host")),
-      "src_host", "dst_host", iters = 2, weightCol = Some("w"))
-    assert(ranks.count() === 3L)
-  }
-
-  test("scanWithLexiconRefresh: automaton swaps on version change, batch-exact") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    import graft.data.Lexicon
-    val dir = java.nio.file.Files.createTempDirectory("lex_store").toString
-    val lex1 = Seq("an", "the")
-    val lex2 = Seq("an", "the", "ana")
-    assert(Lexicon.saveLexiconVersioned(spark, lex1, dir) == 1L)
-    val got = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Seq[(Long, Long, Long)])]
-    val input = MemoryStream[(Long, String)]
-    val q = scanWithLexiconRefresh(
-        input.toDF().toDF("id", "text"), dir, "id", "text") {
-      (panel, batchId, v) =>
-        got += ((batchId, v, panel.orderBy(col("id"))
-          .as[(Long, Long, Long)].collect().toSeq))
-    }.start()
-    val b1 = Seq((1L, "the banana man"), (2L, "no hits here"))
-    input.addData(b1: _*)
-    q.processAllAvailable()
-    assert(Lexicon.saveLexiconVersioned(spark, lex2, dir) == 2L)
-    val b2 = Seq((3L, "banana banana"))
-    input.addData(b2: _*)
-    q.processAllAvailable()
-    q.stop()
-    def batchScan(rows: Seq[(Long, String)], lex: Seq[String]) =
-      Lexicon.scanCounts(rows.toDF("id", "text"), "id", "text", lex)
-        .orderBy(col("id")).as[(Long, Long, Long)].collect().toSeq
-    // batch 1 under v1, batch 2 under the republished v2 — each
-    // bit-equal to the batch kernel under that lexicon
-    assert(got.map(g => (g._1, g._2)) === Seq((0L, 1L), (1L, 2L)))
-    assert(got(0)._3 === batchScan(b1, lex1.sorted))
-    assert(got(1)._3 === batchScan(b2, lex2.sorted))
-    // v2 genuinely sees the new term: "an" and "ana" each hit twice per
-    // "banana" (overlaps included) -> 8 hits over 2 distinct terms
-    assert(got(1)._3 === Seq((3L, 8L, 2L)))
-  }
-
-  test("preferenceIngest: refit from the store equals a batch fit on all judgments") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    import graft.data.Preference
-    val dir = java.nio.file.Files.createTempDirectory("pref_store").toString
-    val b1 = Seq(("a", "b"), ("a", "b"), ("b", "c"), ("a", "c"))
-    val b2 = Seq(("b", "a"), ("b", "c"), ("c", "a"), ("a", "b"))
-    val published = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Seq[(String, Long, Long, Long)])]
-    val input = MemoryStream[(String, String)]
-    val q = preferenceIngest(
-        input.toDF().toDF("w", "l"), dir, "w", "l", refitIters = 2) {
-      (ratings, batchId, v) =>
-        published += ((batchId, v,
-          ratings.orderBy(col("item"))
-            .as[(String, Long, Long, Long)].collect().toSeq))
-    }.start()
-    input.addData(b1: _*)
-    q.processAllAvailable()
-    input.addData(b2: _*)
-    q.processAllAvailable()
-    q.stop()
-
-    def batchFit(comp: Seq[(String, String)]) =
-      Preference.bradleyTerry(comp.toDF("w", "l"), "w", "l", iters = 2)
-        .orderBy(col("item"))
-        .as[(String, Long, Long, Long)].collect().toSeq
-    // win counts are sufficient statistics: each refit is bit-equal to
-    // the batch fit over every judgment streamed so far
-    assert(published.map(p => (p._1, p._2)) === Seq((0L, 1L), (1L, 2L)))
-    assert(published(0)._3 === batchFit(b1))
-    assert(published(1)._3 === batchFit(b1 ++ b2))
-    // the store itself is the pair-count table, not the stream
-    assert(spark.read.parquet(s"$dir/v2").count() <= 6L)
-  }
-
-  test("streamingSessions: gap-based event-time sessions emit once on watermark close") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    val input = MemoryStream[(String, Timestamp)]
-    val q = streamingSessions(input.toDF().toDF("user_id", "ts"),
-        gap = "30 minutes", watermark = "1 hour")
-      .writeStream.format("memory").queryName("sessions")
-      .outputMode(OutputMode.Append()).start()
-
-    // u1: two events 10 min apart (one session), then 2h later (new session);
-    // u2: single event. Cross-batch growth: the second u1 event arrives in
-    // batch 2 and must merge into the open session.
-    input.addData(("u1", ts(1, 10)), ("u2", ts(1, 10)))
-    q.processAllAvailable()
-    input.addData(("u1", Timestamp.valueOf("2024-01-01 10:10:00")))
-    q.processAllAvailable()
-    input.addData(("u1", ts(1, 12)))
-    q.processAllAvailable()
-    input.addData(("u1", ts(2, 12))) // advance watermark, flush everything old
-    q.processAllAvailable()
-
-    val out = spark.table("sessions")
-      .select(col("user_id"), col("session_start").cast("string"),
-        col("session_end").cast("string"), col("n_events"))
-      .collect().map(_.toString).sorted.toSeq
-    assert(out == Seq(
-      // u1 session 1: 10:00 + 10:10 merged, closes at 10:40
-      "[u1,2024-01-01 10:00:00,2024-01-01 10:40:00,2]",
-      // u1 session 2: the 12:00 event alone
-      "[u1,2024-01-01 12:00:00,2024-01-01 12:30:00,1]",
-      "[u2,2024-01-01 10:00:00,2024-01-01 10:30:00,1]"))
-    q.stop()
-  }
-
   test("enrichWithPortfolio: stream-static broadcast join per micro-batch") {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.functions._
@@ -800,962 +209,5 @@ class StreamingMarketSpec extends SparkSpec {
     // C has no dimension row -> dropped (inner); A and B enriched
     assert(out == Seq("[A,industrial,0.6,100.0]", "[B,tech,0.4,50.0]"))
     q.stop()
-  }
-
-  test("dedupWithStoreRefresh: a republished signature store applies next batch") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.data.Dedup
-    val tA = "the quick brown fox jumps over the lazy dog today"
-    val tB = "pack my box with five dozen fresh liquor jugs now"
-    val tC = "rivers carve deep winding canyons through ancient layered stone walls"
-    def store(docs: Seq[(Long, String)]) =
-      Dedup.signatures(docs.toDF("doc_id", "text"), "doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("sig_refresh").toString
-    assert(Dedup.saveSignatureStoreVersioned(store(Seq(1L -> tA)), dir) === 1L)
-
-    val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val input = MemoryStream[(Long, String)]
-    val q = dedupWithStoreRefresh(input.toDF().toDF("doc_id", "text"), dir,
-        "doc_id", "text") { (out, batchId) =>
-      results ++= out.select(col("doc_id")).collect()
-        .map(r => (batchId, r.getLong(0)))
-    }.start()
-
-    // batch 1 against v1 (knows only tA): the tB copy is admitted
-    input.addData((11L, tA), (12L, tB))
-    q.processAllAvailable()
-    // offline ingest republishes with tB now accepted; v1 stays on disk
-    assert(Dedup.saveSignatureStoreVersioned(
-      store(Seq(1L -> tA, 2L -> tB)), dir) === 2L)
-    // batch 2 against v2: tA and tB both rejected, tC admitted
-    input.addData((21L, tA), (22L, tB), (23L, tC))
-    q.processAllAvailable()
-    q.stop()
-
-    val batch1 = results.collect { case (b, id) if b == 0L => id }.toSet
-    val batch2 = results.collect { case (b, id) if b == 1L => id }.toSet
-    assert(batch1 === Set(12L), results.toString)
-    assert(batch2 === Set(23L), results.toString)
-    // the superseded store version is still a loadable snapshot
-    assert(Dedup.loadSignatureStore(spark, s"$dir/v1").count() === 1L)
-    val (v, _) = Dedup.loadSignatureStoreVersioned(spark, dir)
-    assert(v === 2L)
-  }
-
-  test("driftWithBaselineRefresh: batch drift == batch kernel; republish applies next batch") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.data.{Corpus, Versioned}
-    val dir = java.nio.file.Files.createTempDirectory("drift_base").toString
-    // baseline v1: 'alpha'-heavy corpus
-    assert(Corpus.saveTokenCountsVersioned(
-      Seq((1L, "alpha alpha alpha beta")).toDF("id", "text"), "text", dir) === 1L)
-
-    val results = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-    val input = MemoryStream[String]
-    val q = driftWithBaselineRefresh(input.toDF().toDF("text"), dir,
-        "text", topK = 10, pruneKeep = Some(0)) { (out, batchId) =>
-      results ++= out.select(col("tok"), col("delta_ppm")).collect()
-        .map(r => (batchId, r.getString(0), r.getLong(1)))
-    }.start()
-
-    // batch 1 vs v1: all-beta stream -> alpha collapses, beta surges
-    input.addData("beta beta beta beta")
-    q.processAllAvailable()
-    // the per-batch result equals the batch kernel on the same frames
-    val expect1 = Corpus.tokenDriftFromCounts(
-        spark.read.parquet(s"$dir/v1"),
-        Corpus.tokenCounts(Seq("beta beta beta beta").toDF("text"), "text"), 10)
-      .select(col("tok"), col("delta_ppm")).collect()
-      .map(r => (r.getString(0), r.getLong(1))).toSet
-    assert(results.collect { case (0L, t, d) => (t, d) }.toSet === expect1)
-    assert(results.collect { case (0L, "alpha", d) => d }.head === -750000L)
-    assert(results.collect { case (0L, "beta", d) => d }.head === 750000L)
-
-    // offline republish: beta-heavy baseline; picked up next batch
-    assert(Corpus.saveTokenCountsVersioned(
-      Seq((1L, "beta beta beta gamma")).toDF("id", "text"), "text", dir) === 2L)
-    input.addData("beta beta beta gamma")
-    q.processAllAvailable()
-    q.stop()
-    // batch 2 vs v2: identical distribution -> zero drift everywhere
-    val b2 = results.collect { case (1L, t, d) => (t, d) }.toMap
-    assert(b2.values.toSet === Set(0L), b2.toString)
-    // pruneKeep = 0: v1 GC'd after the v2 swap, v2 is the loadable latest
-    val onDisk = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v")).toSet
-    assert(onDisk === Set("v2"), onDisk.toString)
-    assert(Versioned.latestVersion(spark, dir) === Some(2L))
-  }
-
-  test("dedupWithStoreRefresh pruneKeep: superseded versions GC'd, stream keeps answering") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.data.{Dedup, Versioned}
-    val tA = "the quick brown fox jumps over the lazy dog today"
-    val tB = "pack my box with five dozen fresh liquor jugs now"
-    val tC = "rivers carve deep winding canyons through ancient layered stone walls"
-    val tD = "bright satellites drift silently across cold clear autumn skies tonight"
-    def store(docs: Seq[(Long, String)]) =
-      Dedup.signatures(docs.toDF("doc_id", "text"), "doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("sig_prune").toString
-    assert(Dedup.saveSignatureStoreVersioned(store(Seq(1L -> tA)), dir) === 1L)
-
-    val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    val input = MemoryStream[(Long, String)]
-    // maxHamming exercises the tier passthrough: a token-order rewrite
-    // of a STORED doc must be blocked even though its shingle Jaccard
-    // is ~0 (word order destroyed, token set identical)
-    val tAshuffled = "today dog lazy the over jumps fox brown quick the"
-    val q = dedupWithStoreRefresh(input.toDF().toDF("doc_id", "text"), dir,
-        "doc_id", "text", pruneKeep = Some(0), maxHamming = 3) { (out, batchId) =>
-      results ++= out.select(col("doc_id")).collect()
-        .map(r => (batchId, r.getLong(0)))
-    }.start()
-
-    input.addData((11L, tA), (12L, tB), (13L, tAshuffled))
-    q.processAllAvailable()
-    // the publisher advances TWO versions between batches: the poller
-    // must skip straight to v3 and GC both superseded versions
-    assert(Dedup.saveSignatureStoreVersioned(
-      store(Seq(1L -> tA, 2L -> tB)), dir) === 2L)
-    assert(Dedup.saveSignatureStoreVersioned(
-      store(Seq(1L -> tA, 2L -> tB, 3L -> tC)), dir) === 3L)
-    input.addData((21L, tB), (22L, tC), (23L, tD))
-    q.processAllAvailable()
-    q.stop()
-
-    val batch1 = results.collect { case (b, id) if b == 0L => id }.toSet
-    val batch2 = results.collect { case (b, id) if b == 1L => id }.toSet
-    assert(batch1 === Set(12L), results.toString)
-    assert(batch2 === Set(23L), results.toString)
-    // keep = 0: only the published version survives on disk
-    val onDisk = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v")).toSet
-    assert(onDisk === Set("v3"), onDisk.toString)
-    assert(Versioned.latestVersion(spark, dir) === Some(3L))
-    // and the store the stream ended on is the loadable latest
-    val (v, s) = Dedup.loadSignatureStoreVersioned(spark, dir)
-    assert(v === 3L && s.count() === 3L)
-  }
-
-  test("chunked rolling stats == unpartitioned rolling stats") {
-    import org.apache.spark.sql.functions._
-    val days = (1 to 60).map(d => (Timestamp.valueOf(f"2024-${1 + (d - 1) / 28}%02d-${1 + (d - 1) % 28}%02d 00:00:00"),
-      Array((d * 7 % 13).toDouble, (d * 3 % 5).toDouble)))
-    val df = days.toDF("date", "features")
-    val full = graft.risk.Volatility.rollingStats(df, windowDays = 10)
-      .select(col("date"), col("vol_avg"), col("vol_cov"))
-    val chunked = graft.risk.Volatility.rollingStatsChunked(df, windowDays = 10, chunkDays = 14)
-      .select(col("date"), col("vol_avg"), col("vol_cov"))
-    val a = full.orderBy("date").collect().map(_.toString)
-    val b = chunked.orderBy("date").collect().map(_.toString)
-    assert(a.length == b.length && a.length > 40)
-    assert(a.sameElements(b))
-  }
-
-  test("deconWithBenchmarkRefresh: bloom-guarded exact flags; republish applies next batch") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.data.{Corpus, Versioned}
-    val dir = java.nio.file.Files.createTempDirectory("bench_bloom").toString
-    // benchmark v1 holds question A (small bloom to prove geometry rides
-    // the artifact metadata, not the prober's defaults)
-    assert(Corpus.saveBenchmarkVersioned(
-      Seq("held out question alpha").toDF("text"), "text", dir,
-      mBits = 2048, kHashes = 3) === 1L)
-
-    val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Boolean)]
-    val input = MemoryStream[(Long, String)]
-    val q = deconWithBenchmarkRefresh(input.toDF().toDF("doc_id", "text"),
-        dir, "doc_id", "text", pruneKeep = Some(0)) { (out, batchId) =>
-      results ++= out.select(col("doc_id"), col("contaminated")).collect()
-        .map(r => (batchId, r.getLong(0), r.getBoolean(1)))
-    }.start()
-
-    // batch 0: A contaminated (case/ws-insensitive), B clean
-    input.addData((1L, "HELD  OUT question ALPHA"), (2L, "held out question beta"))
-    q.processAllAvailable()
-    assert(results.collect { case (0L, id, c) => (id, c) }.toSet ===
-      Set((1L, true), (2L, false)))
-
-    // offline republish with question B added; picked up next batch
-    assert(Corpus.saveBenchmarkVersioned(
-      Seq("held out question alpha", "held out question beta").toDF("text"),
-      "text", dir, mBits = 2048, kHashes = 3) === 2L)
-    input.addData((3L, "held out question beta"), (4L, "still clean text"))
-    q.processAllAvailable()
-    q.stop()
-    assert(results.collect { case (1L, id, c) => (id, c) }.toSet ===
-      Set((3L, true), (4L, false)))
-    // pruneKeep = 0: v1 GC'd after the swap
-    val onDisk = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v")).toSet
-    assert(onDisk === Set("v2"), onDisk.toString)
-    assert(Versioned.latestVersion(spark, dir) === Some(2L))
-  }
-
-  test("heavyHitterMonitor: bounded state, hot keys surface, totals exact") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    val snaps = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[(String, Long)], Long)]
-    val input = MemoryStream[String]
-    val q = heavyHitterMonitor(input.toDF().toDF("k"), col("k"),
-        counters = 6) { (cands, total, batchId) =>
-      snaps += ((batchId, cands, total))
-    }.start()
-
-    val b1 = Seq.fill(40)("hot") ++ (1 to 20).map(i => s"cold$i")
-    input.addData(b1: _*)
-    q.processAllAvailable()
-    val b2 = Seq.fill(30)("hot") ++ Seq.fill(25)("warm") ++
-      (21 to 35).map(i => s"cold$i")
-    input.addData(b2: _*)
-    q.processAllAvailable()
-    q.stop()
-
-    // totals are exact rows-seen counts
-    assert(snaps.map(x => (x._1, x._3)).toList === List((0L, 60L), (1L, 130L)))
-    // bounded state: never more than `counters` candidates
-    assert(snaps.forall(_._2.size <= 6))
-    // MG guarantee over the whole prefix: any key with freq > N/(c+1)
-    // is present — hot (70 > 130/7) after batch 2; warm (25 > 18.6) too
-    val after2 = snaps.last._2.map(_._1).toSet
-    assert(after2.contains("hot") && after2.contains("warm"), after2.toString)
-    // residuals underestimate true counts by <= N/(c+1)
-    val res = snaps.last._2.toMap
-    assert(res("hot") <= 70L && res("hot") >= 70L - 130L / 7)
-  }
-
-  test("heavyHitterMonitor over a substring stream: streaming q196 composition") {
-    // the streaming twin of topDuplicateSubstrings needs NO new
-    // operator: explode each micro-batch's docs into k-char substrings
-    // of the normalized text and the MG monitor surfaces the dominant
-    // passages at bounded state — pin that the planted boilerplate
-    // passage is present after any prefix
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.data.TextFunctions
-    val kk = 16
-    val snaps = scala.collection.mutable.ArrayBuffer.empty[(Seq[(String, Long)], Long)]
-    val input = MemoryStream[String]
-    val subs = input.toDF().toDF("text")
-      .select(TextFunctions.normalizeText(col("text")).as("t"))
-      .filter(length(col("t")) >= kk)
-      .select(col("t"),
-        explode(sequence(lit(1), length(col("t")) - lit(kk - 1))).as("p"))
-      .select(col("t").substr(col("p"), lit(kk)).as("sub"))
-    val q = heavyHitterMonitor(subs, col("sub"), counters = 60) {
-      (cands, total, _) => snaps += ((cands, total))
-    }.start()
-    val boiler = "all rights reserved worldwide"
-    input.addData((0 until 12).map(i => s"doc body $i $boiler tail $i"): _*)
-    q.processAllAvailable()
-    input.addData((12 until 20).map(i => s"other text $i $boiler end $i"): _*)
-    q.processAllAvailable()
-    q.stop()
-    // every 16-gram inside the planted passage repeats 12x then 20x —
-    // far above N/(counters+1); MG must hold at least one of them at
-    // every snapshot
-    snaps.foreach { case (cands, _) =>
-      assert(cands.exists { case (s, _) => boiler.contains(s) },
-        cands.map(_._1).mkString("|"))
-    }
-    assert(snaps.forall(_._1.size <= 60))
-  }
-
-  test("topSubstringsIngest: streamed board == batch operator on the " +
-      "union, across arbitrary batch splits") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.data.Dedup
-    val kk = 12
-    val boiler = "all rights reserved worldwide notice"
-    val docsAll = (0 until 18).map { i =>
-      val body = if (i % 3 == 0) s"unique body nr $i with no repeats"
-        else s"doc $i carries $boiler plus tail $i"
-      (i.toLong, body)
-    }
-    def batchBoard(upTo: Int): Seq[(String, Long, Long)] =
-      Dedup.topDuplicateSubstrings(
-          docsAll.take(upTo).toDF("doc_id", "text"), "doc_id", "text",
-          k = kk, topN = 5)
-        .as[(String, Long, Long)].collect().toSeq
-    // two different splits of the same stream must land on the same
-    // boards at matching prefixes
-    for (splits <- Seq(Seq(6, 12, 18), Seq(1, 9, 18))) {
-      val dir = java.nio.file.Files
-        .createTempDirectory("subs_ingest").toString + "/cells"
-      val boards = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, Seq[(String, Long, Long)])]
-      val input = MemoryStream[(Long, String)]
-      val q = topSubstringsIngest(input.toDF().toDF("doc_id", "text"),
-        dir, "doc_id", "text", k = kk, topN = 5) { (board, _, v) =>
-        boards += ((v, board.as[(String, Long, Long)].collect().toSeq))
-      }.start()
-      var prev = 0
-      splits.foreach { upTo =>
-        input.addData(docsAll.slice(prev, upTo): _*)
-        q.processAllAvailable()
-        prev = upTo
-      }
-      q.stop()
-      assert(boards.size == splits.size)
-      boards.map(_._2).zip(splits.map(batchBoard)).foreach {
-        case (streamed, batch) => assert(streamed === batch)
-      }
-    }
-  }
-
-  test("duplicateSpansIngest: streamed spans == batch operator on the " +
-      "union, across arbitrary batch splits; replay never double-counts") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.data.Dedup
-    val kk = 10
-    val shared = "the quick brown fox jumped"
-    val docsAll = (0 until 18).map { i =>
-      val body =
-        if (i % 3 == 0) s"unique body number $i with no repeats at all"
-        else s"doc $i carries $shared plus tail $i"
-      (i.toLong, body)
-    }
-    def spanSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Long)] =
-      df.select(col("doc_id").cast("long"), col("span_start").cast("long"),
-          col("span_end").cast("long"), col("n_grams").cast("long"))
-        .as[(Long, Long, Long, Long)].collect().toSet
-    def batchSpans(upTo: Int): Set[(Long, Long, Long, Long)] =
-      spanSet(Dedup.duplicateSpans(
-        docsAll.take(upTo).toDF("doc_id", "text"), "doc_id", "text", kk))
-    for (splits <- Seq(Seq(6, 12, 18), Seq(1, 9, 18))) {
-      val dir = java.nio.file.Files
-        .createTempDirectory("spans_ingest").toString + "/store"
-      val seen = scala.collection.mutable.ArrayBuffer
-        .empty[Set[(Long, Long, Long, Long)]]
-      val input = MemoryStream[(Long, String)]
-      val q = duplicateSpansIngest(input.toDF().toDF("doc_id", "text"),
-        dir, "doc_id", "text", k = kk) { (spans, _) =>
-        seen += spanSet(spans)
-      }.start()
-      var prev = 0
-      splits.foreach { upTo =>
-        input.addData(docsAll.slice(prev, upTo): _*)
-        q.processAllAvailable()
-        prev = upTo
-      }
-      q.stop()
-      assert(seen.size == splits.size)
-      seen.zip(splits.map(batchSpans)).foreach { case (streamed, batch) =>
-        assert(streamed === batch)
-      }
-    }
-    // replay: a fresh query on the same store re-delivers batch 0 (same
-    // id, same rows) — batch-scoped file names must REPLACE the old
-    // delta, not append a second copy (a double-counted gram would flag
-    // the unique docs' grams at minCount=2)
-    val dir = java.nio.file.Files
-      .createTempDirectory("spans_replay").toString + "/store"
-    var last: Set[(Long, Long, Long, Long)] = Set.empty
-    def runOnce(): Unit = {
-      val in = MemoryStream[(Long, String)]
-      val q = duplicateSpansIngest(in.toDF().toDF("doc_id", "text"),
-        dir, "doc_id", "text", k = kk) { (spans, _) => last = spanSet(spans) }
-        .start()
-      in.addData(docsAll.take(6): _*); q.processAllAvailable(); q.stop()
-    }
-    runOnce()
-    val first = last
-    runOnce() // replay of batch id 0
-    assert(last === first)
-    assert(last === batchSpans(6))
-  }
-
-  test("topSubstringsIngest: per-batch written bytes scale with the " +
-      "batch, not the store (append + merge-on-read, no store rewrite)") {
-    implicit val sqlCtx = spark.sqlContext
-    // six equal-shape batches, compaction disabled: the old O(store)
-    // refit republished the FULL cell store every micro-batch, so its
-    // per-batch byte delta grew ~linearly with stream length; the
-    // append layout writes one batch-sized delta plus a topN-row board
-    val dir = java.nio.file.Files
-      .createTempDirectory("subs_incr").toString + "/store"
-    def du(p: String): Long = {
-      val root = new java.io.File(p)
-      if (!root.exists) 0L
-      else {
-        def walk(f: java.io.File): Long =
-          if (f.isFile) f.length
-          else Option(f.listFiles).getOrElse(Array.empty).map(walk).sum
-        walk(root)
-      }
-    }
-    val input = MemoryStream[(Long, String)]
-    val q = topSubstringsIngest(input.toDF().toDF("doc_id", "text"),
-      dir, "doc_id", "text", k = 12, topN = 5,
-      maxLiveFiles = 10000) { (_, _, _) => () }.start()
-    val sizes = scala.collection.mutable.ArrayBuffer(du(dir))
-    (0 until 6).foreach { b =>
-      input.addData((0 until 10).map(i =>
-        (b * 100L + i, f"doc ${b * 100 + i}%04d carries all rights " +
-          "reserved worldwide notice body")): _*)
-      q.processAllAvailable()
-      sizes += du(dir)
-    }
-    q.stop()
-    val deltas = sizes.toSeq.sliding(2).map(w => w(1) - w(0)).toSeq
-    assert(deltas.forall(_ > 0), deltas.mkString(","))
-    // flat, not growing: the last batch writes no more than 1.5x the
-    // first (identical batch shapes; the old refit wrote ~6x here)
-    assert(deltas.last <= (deltas.head * 3) / 2,
-      s"per-batch bytes grew with the store: ${deltas.mkString(",")}")
-    assert(deltas.max.toDouble / deltas.min <= 2.0,
-      s"per-batch bytes not flat: ${deltas.mkString(",")}")
-  }
-
-  test("versioned ingests: a replayed batch id never double-counts the store") {
-    // after a crash between publish and checkpoint commit, foreachBatch
-    // re-delivers the LAST batch under the same id — simulate with a
-    // fresh query on the same store re-sending batch 0's rows (same id,
-    // same data); the _batch marker must re-serve the published version
-    // instead of re-summing
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    // preference ingest: win counts would double
-    val prefDir = java.nio.file.Files
-      .createTempDirectory("pref_replay").toString + "/wins"
-    val judgments = Seq(("a", "b"), ("a", "b"), ("b", "c"))
-    var lastV = -1L
-    def runPref(): Unit = {
-      val in = MemoryStream[(String, String)]
-      val q = preferenceIngest(in.toDF().toDF("w", "l"), prefDir, "w", "l") {
-        (_, _, v) => lastV = v
-      }.start()
-      in.addData(judgments: _*); q.processAllAvailable(); q.stop()
-    }
-    runPref()
-    val v1 = lastV
-    val counts1 = spark.read.parquet(s"$prefDir/v$v1")
-      .as[(String, String, Long)].collect().sorted.toSeq
-    runPref() // replay: same batch id 0, same rows
-    assert(lastV == v1, s"replay must re-serve v$v1, published v$lastV")
-    val counts2 = spark.read.parquet(s"$prefDir/v$lastV")
-      .as[(String, String, Long)].collect().sorted.toSeq
-    assert(counts2 == counts1, s"$counts2 vs $counts1")
-    // substring-leaderboard ingest: occurrence counts would double
-    val subsDir = java.nio.file.Files
-      .createTempDirectory("subs_replay").toString + "/cells"
-    val docsRows = (0 until 6).map(i =>
-      (i.toLong, s"doc $i carries all rights reserved worldwide here"))
-    var board1: Seq[(String, Long, Long)] = Seq.empty
-    var vSub = -1L
-    def runSubs(): Unit = {
-      val in = MemoryStream[(Long, String)]
-      val q = topSubstringsIngest(in.toDF().toDF("doc_id", "text"),
-        subsDir, "doc_id", "text", k = 12, topN = 3) { (b, _, v) =>
-        board1 = b.as[(String, Long, Long)].collect().toSeq; vSub = v
-      }.start()
-      in.addData(docsRows: _*); q.processAllAvailable(); q.stop()
-    }
-    runSubs()
-    val (firstBoard, firstV) = (board1, vSub)
-    runSubs() // replay
-    assert(vSub == firstV, s"replay must re-serve v$firstV, got v$vSub")
-    assert(board1 == firstBoard)
-    assert(firstBoard.nonEmpty && firstBoard.head._2 == 6L,
-      s"planted passage must count 6, not 12: $firstBoard")
-  }
-
-  test("appendWithAutoCompact: content-exact store, live file count stays bounded") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("autocompact").toString + "/store"
-    val compactions = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Long)]
-    val input = MemoryStream[(Long, String)]
-    // 4 shuffle partitions -> up to 4 part-files per batch; threshold 6
-    // forces a compaction on roughly every other batch
-    val q = appendWithAutoCompact(
-      input.toDF().toDF("id", "payload").repartition(4),
-      dir, maxLiveFiles = 6, targetBytes = 1L << 20) {
-      (b, n, v) => compactions += ((b, n, v))
-    }.start()
-    val batches = (0 until 5).map(b =>
-      (0 until 40).map(i => (b * 1000L + i, s"row_${b}_$i")))
-    batches.foreach { rows => input.addData(rows: _*); q.processAllAvailable() }
-    q.stop()
-
-    // at least one compaction fired and produced immutable chunks
-    assert(compactions.nonEmpty)
-    val chunkDirs = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
-    assert(chunkDirs.nonEmpty)
-    // every input row present exactly once across chunks + live
-    val got = loadCompactedStore(spark, dir)
-      .select(col("id"), col("payload")).as[(Long, String)].collect().sorted.toSeq
-    assert(got == batches.flatten.sorted)
-    // the live set never accumulates past threshold + one batch of files
-    val liveFiles = new java.io.File(s"$dir/live").listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(liveFiles <= 6 + 4, s"live files: $liveFiles")
-    // chunks are few target-sized files, not the consumed small ones
-    compactions.foreach { case (_, consumed, v) =>
-      val nChunkFiles = new java.io.File(s"$dir/v$v").listFiles()
-        .count(_.getName.endsWith(".parquet"))
-      assert(nChunkFiles < consumed, s"v$v: $nChunkFiles vs $consumed consumed")
-    }
-  }
-
-  test("appendWithAutoCompact: lineage guard refuses a second checkpoint " +
-      "lineage while the original replays cleanly") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files
-      .createTempDirectory("autocompact_lg").toString + "/store"
-    val rows = (0 until 12).map(i => (i.toLong, s"row_$i"))
-    val in1 = MemoryStream[(Long, String)]
-    val q1 = appendWithAutoCompact(in1.toDF().toDF("id", "payload"),
-      dir, maxLiveFiles = 100, targetBytes = 1L << 20,
-      lineageId = "ckpt-A")().start()
-    in1.addData(rows: _*); q1.processAllAvailable(); q1.stop()
-    // a DIFFERENT lineage on the same store must fail fast, not have
-    // its batches silently skipped or silently replace files
-    val in2 = MemoryStream[(Long, String)]
-    val q2 = appendWithAutoCompact(in2.toDF().toDF("id", "payload"),
-      dir, maxLiveFiles = 100, targetBytes = 1L << 20,
-      lineageId = "ckpt-B")().start()
-    in2.addData((100L, "intruder"))
-    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      q2.processAllAvailable()
-    }
-    q2.stop()
-    def causes(t: Throwable): Seq[Throwable] =
-      if (t == null) Seq.empty else t +: causes(t.getCause)
-    assert(causes(ex).exists(c => c.isInstanceOf[IllegalStateException] &&
-      c.getMessage.contains("ckpt-A")), ex.getMessage)
-    // store content untouched by the refused writer
-    val got = loadCompactedStore(spark, dir)
-      .select(col("id"), col("payload")).as[(Long, String)]
-      .collect().sorted.toSeq
-    assert(got == rows.sorted)
-    // the ORIGINAL lineage replays cleanly (at-least-once redelivery of
-    // batch 0 with the same rows replaces its own files, no dupes)
-    val in3 = MemoryStream[(Long, String)]
-    val q3 = appendWithAutoCompact(in3.toDF().toDF("id", "payload"),
-      dir, maxLiveFiles = 100, targetBytes = 1L << 20,
-      lineageId = "ckpt-A")().start()
-    in3.addData(rows: _*); q3.processAllAvailable(); q3.stop()
-    val got2 = loadCompactedStore(spark, dir)
-      .select(col("id"), col("payload")).as[(Long, String)]
-      .collect().sorted.toSeq
-    assert(got2 == rows.sorted)
-  }
-
-  test("appendWithAutoCompact: a crash between publish and delete never double-counts") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("autocompact_cw").toString + "/store"
-    val input = MemoryStream[(Long, String)]
-    val q = appendWithAutoCompact(
-      input.toDF().toDF("id", "payload").repartition(4),
-      dir, maxLiveFiles = 4, targetBytes = 1L << 20)().start()
-    val rows = (0 until 3).flatMap(b =>
-      (0 until 30).map(i => (b * 1000L + i, s"row_${b}_$i")))
-    rows.grouped(30).foreach { g => input.addData(g.toSeq: _*); q.processAllAvailable() }
-    q.stop()
-    // simulate the crash window: resurrect one consumed live file (its
-    // rows already live in a published chunk) under its manifest name
-    val manifest = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
-      .map(d => new java.io.File(d, "_consumed")).find(_.exists()).get
-    val ghostName = scala.io.Source.fromFile(manifest).getLines()
-      .find(_.nonEmpty).get
-    val chunkParquet = new java.io.File(manifest.getParentFile.getPath)
-      .listFiles().find(_.getName.endsWith(".parquet")).get
-    val ghost = new java.io.File(s"$dir/live", ghostName)
-    java.nio.file.Files.copy(chunkParquet.toPath, ghost.toPath)
-    assert(ghost.exists())
-    // the loader must EXCLUDE the ghost — content stays exactly the input
-    val got = loadCompactedStore(spark, dir)
-      .select(col("id"), col("payload")).as[(Long, String)]
-      .collect().sorted.toSeq
-    assert(got == rows.sorted)
-    // and the recovery sweep (run at the top of every batch) deletes it
-    healConsumedLeftovers(spark, dir)
-    assert(!ghost.exists(), "leftover consumed file must be deleted")
-    val got2 = loadCompactedStore(spark, dir)
-      .select(col("id"), col("payload")).as[(Long, String)]
-      .collect().sorted.toSeq
-    assert(got2 == rows.sorted)
-  }
-
-  test("appendWithAutoCompact: a replayed batch replaces its files, never re-appends") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("autocompact_rp").toString + "/store"
-    // plant a poison live file under batch 0's name — exactly what an
-    // at-least-once redelivery of batch 0 would find on disk
-    val poisonSrc =
-      java.nio.file.Files.createTempDirectory("poison").toString + "/p"
-    Seq((666L, "stale")).toDF("id", "payload")
-      .coalesce(1).write.parquet(poisonSrc)
-    new java.io.File(s"$dir/live").mkdirs()
-    val poisonFile = new java.io.File(poisonSrc).listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    java.nio.file.Files.copy(poisonFile.toPath,
-      new java.io.File(s"$dir/live", "b0-0.parquet").toPath)
-    val input = MemoryStream[(Long, String)]
-    val q = appendWithAutoCompact(
-      input.toDF().toDF("id", "payload").repartition(2),
-      dir, maxLiveFiles = 100, targetBytes = 1L << 20)().start()
-    input.addData((1L, "fresh_a"), (2L, "fresh_b"))
-    q.processAllAvailable(); q.stop()
-    val got = loadCompactedStore(spark, dir)
-      .select(col("id"), col("payload")).as[(Long, String)]
-      .collect().sorted.toSeq
-    // batch 0's redelivery cleared the stale copy and wrote exactly once
-    assert(got == Seq((1L, "fresh_a"), (2L, "fresh_b")))
-  }
-
-  test("appendWithAutoCompact: replay after compaction never double-counts, " +
-      "even when the replay splits into MORE part files") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("autocompact_rc").toString + "/store"
-    val input = MemoryStream[(Long, String)]
-    // maxLiveFiles=2 with repartition(4): batch 0 compacts immediately
-    val q = appendWithAutoCompact(
-      input.toDF().toDF("id", "payload").repartition(4),
-      dir, maxLiveFiles = 2, targetBytes = 1L << 20)().start()
-    val rows = (0 until 40).map(i => (i.toLong, s"row_$i"))
-    input.addData(rows: _*)
-    q.processAllAvailable(); q.stop()
-    // batch 0 was consumed into a chunk; its manifest names b0-* files
-    val manifest = new java.io.File(dir).listFiles()
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+"))
-      .map(d => new java.io.File(d, "_consumed")).find(_.exists()).get
-    val consumedNames = scala.io.Source.fromFile(manifest).getLines()
-      .filter(_.nonEmpty).toSeq
-    assert(consumedNames.forall(_.startsWith("b0-")))
-    // simulate a post-compaction replay that wrote MORE part files than
-    // the consumed attempt: plant b0-<max+1> beyond the manifest's names
-    val chunkParquet = manifest.getParentFile.listFiles()
-      .find(_.getName.endsWith(".parquet")).get
-    val extra = new java.io.File(s"$dir/live", s"b0-${consumedNames.size}.parquet")
-    java.nio.file.Files.copy(chunkParquet.toPath, extra.toPath)
-    // the heal sweep matches by BATCH ID, not just by name
-    healConsumedLeftovers(spark, dir)
-    assert(!extra.exists(), "extra-part replay leftover must be deleted")
-    val got = loadCompactedStore(spark, dir)
-      .select(col("id"), col("payload")).as[(Long, String)]
-      .collect().sorted.toSeq
-    assert(got == rows.sorted)
-    // and a full batch-0 redelivery (fresh lineage, same store) is
-    // SKIPPED outright — its rows already live in the chunk
-    val input2 = MemoryStream[(Long, String)]
-    val q2 = appendWithAutoCompact(
-      input2.toDF().toDF("id", "payload").repartition(4),
-      dir, maxLiveFiles = 100, targetBytes = 1L << 20)().start()
-    input2.addData(rows: _*)  // lands as batch 0 of the new lineage
-    q2.processAllAvailable(); q2.stop()
-    val liveAfter = new java.io.File(s"$dir/live").listFiles()
-      .count(_.getName.startsWith("b0-"))
-    assert(liveAfter == 0, s"consumed batch 0 must not re-append ($liveAfter files)")
-    val got2 = loadCompactedStore(spark, dir)
-      .select(col("id"), col("payload")).as[(Long, String)]
-      .collect().sorted.toSeq
-    assert(got2 == rows.sorted)
-  }
-
-  test("streamingQuantileMonitor: NULL values are skipped, never kill the query") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    val snaps = scala.collection.mutable.ArrayBuffer.empty[(Seq[(Long, Long)], Long)]
-    val input = MemoryStream[Long]
-    // negative sentinel -> NULL via when(): a mixed batch of 5 real
-    // values and 3 NULLs must count 5 and answer from the real values
-    val vals = input.toDF().toDF("raw")
-      .select(when(col("raw") >= 0L, col("raw")).as("v"))
-    val q = streamingQuantileMonitor(vals, col("v"), Seq(500000L)) {
-      (qs, total, _) => snaps += ((qs, total))
-    }.start()
-    input.addData(10L, 20L, 30L, 40L, 50L, -1L, -1L, -1L)
-    q.processAllAvailable(); q.stop()
-    assert(snaps.map(_._2).toList == List(5L))
-    assert(snaps.head._1.head._2 >= 16L && snaps.head._1.head._2 <= 30L)
-  }
-
-  test("streamingQuantileMonitor: batch-equal quantiles over any prefix, bounded state") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.data.Sketches
-    val snaps = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[(Long, Long)], Long)]
-    val input = MemoryStream[Long]
-    val ps = Seq(500000L, 900000L, 990000L)
-    val q = streamingQuantileMonitor(input.toDF().toDF("v"), col("v"), ps) {
-      (qs, total, batchId) => snaps += ((batchId, qs, total))
-    }.start()
-
-    val b1 = (1 to 3000).map(i => (i.toLong * 7919L) % 500000L + 1L)
-    val b2 = (1 to 2000).map(i => (i.toLong * 104729L) % 2000000L + 1L)
-    input.addData(b1: _*)
-    q.processAllAvailable()
-    input.addData(b2: _*)
-    q.processAllAvailable()
-    q.stop()
-
-    assert(snaps.map(x => (x._1, x._3)).toList === List((0L, 3000L), (1L, 5000L)))
-    // after each batch, quantiles == the BATCH kernel over the prefix
-    import spark.implicits._
-    def batchQs(data: Seq[Long]): Map[Long, Long] =
-      Sketches.logHistogramQuantiles(
-        Sketches.logHistogram(data.toDF("v"), Seq.empty, $"v", 5),
-        Seq.empty, ps, 5)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(snaps(0)._2.toMap === batchQs(b1))
-    assert(snaps(1)._2.toMap === batchQs(b1 ++ b2))
-    // and within relative error of the exact prefix order statistics
-    val sorted = (b1 ++ b2).sorted
-    snaps(1)._2.foreach { case (ppm, qv) =>
-      val exact = sorted((((ppm * sorted.length + 999999L) / 1000000L) - 1L).toInt)
-      assert(qv <= exact && (exact - qv).toDouble / exact <= 1.0 / 32 + 1e-12,
-        s"$ppm: $qv vs $exact")
-    }
-  }
-
-  test("streamingShiftMonitor: TV panel batch-equal over any prefix, bounded cells") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.data.Corpus
-    import spark.implicits._
-    val snaps = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Seq[(String, String, Long)], Long)]
-    val input = MemoryStream[(String, Long)]
-    val q = streamingShiftMonitor(
-      input.toDF().toDF("src", "bkt"), col("src"), col("bkt")) {
-      (panel, total, batchId) => snaps += ((batchId, panel, total))
-    }.start()
-    // three groups with different bucket profiles, split into UNEVEN
-    // batches so per-batch cells never coincide with the totals
-    def mk(g: String, seed: Long, n: Int) =
-      (0 until n).map(i => (g, (i * seed + seed) % 5))
-    val all = mk("a", 7L, 101) ++ mk("b", 13L, 57) ++ mk("c", 3L, 88)
-    val batches = Seq(all.take(40), all.slice(40, 151), all.drop(151))
-    batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
-    q.stop()
-    def batchPanel(rows: Seq[(String, Long)]): Set[(String, String, Long)] =
-      Corpus.totalVariationByGroup(
-          rows.toDF("src", "bkt").select(col("src"),
-            col("bkt").cast("string").as("bkt")), "src", "bkt")
-        .as[(String, String, Long)].collect().toSet
-    assert(snaps.map(_._3).toList ==
-      batches.scanLeft(0)(_ + _.size).drop(1).map(_.toLong).toList)
-    snaps.zipWithIndex.foreach { case ((_, panel, _), i) =>
-      val prefix = batches.take(i + 1).flatten
-      assert(panel.toSet === batchPanel(prefix), s"after batch $i")
-    }
-    // NULL rows are skipped like the batch kernel's filter
-    val input2 = MemoryStream[(String, java.lang.Long)]
-    var last: Long = -1L
-    val q2 = streamingShiftMonitor(
-      input2.toDF().toDF("src", "bkt"), col("src"), col("bkt")) {
-      (_, total, _) => last = total
-    }.start()
-    input2.addData(("a", 1L), ("a", null), ("b", 2L))
-    q2.processAllAvailable(); q2.stop()
-    assert(last == 2L)
-    // pair (a, b) ordering follows Spark's UTF-8 byte `<`, not Scala's
-    // UTF-16 order: U+FFFD sorts BELOW U+1F600 in UTF-8 bytes (EF < F0)
-    // but above its surrogates in UTF-16 — the batch kernel decides
-    val gA = "�"
-    val gB = new String(Character.toChars(0x1F600))
-    val input3 = MemoryStream[(String, Long)]
-    var panel3: Seq[(String, String, Long)] = Seq.empty
-    val q3 = streamingShiftMonitor(
-      input3.toDF().toDF("src", "bkt"), col("src"), col("bkt")) {
-      (panel, _, _) => panel3 = panel
-    }.start()
-    input3.addData((gA, 1L), (gA, 1L), (gB, 1L), (gB, 2L))
-    q3.processAllAvailable(); q3.stop()
-    val want3 = batchPanel(Seq((gA, 1L), (gA, 1L), (gB, 1L), (gB, 2L)))
-    assert(panel3.toSet === want3)
-  }
-
-  test("streamingCalibrationMonitor: ECE panel batch-equal over any prefix") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.data.Probe
-    import spark.implicits._
-    val snaps = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, Long, Long, Long, Long)]
-    val input = MemoryStream[(Double, Double)]
-    val q = streamingCalibrationMonitor(
-      input.toDF().toDF("pred", "label"), col("pred"), col("label")) {
-      (nb, nr, ece, mg, bid) => snaps += ((nb, nr, ece, mg, bid))
-    }.start()
-    // scores across the [0,10) bin range incl. out-of-range clamps;
-    // labels drift from the score so the gap is non-trivial
-    val all = (0 until 230).map { i =>
-      val p = (i % 23) * 0.5 - 0.7        // clamps at both ends
-      val l = p + math.sin(i * 1.3) * 2.0
-      (p, l)
-    }
-    val batches = Seq(all.take(31), all.slice(31, 170), all.drop(170))
-    batches.foreach { b => input.addData(b: _*); q.processAllAvailable() }
-    q.stop()
-    // batch kernel over each prefix: same clamped binning + micro floors
-    def batchPanel(rows: Seq[(Double, Double)]): (Long, Long, Long, Long) = {
-      val bin = least(greatest(floor(col("pred") / lit(1.0)), lit(0L)),
-        lit(9L))
-      val bins = rows.toDF("pred", "label")
-        .select(bin.as("bin"), floor(col("pred") * lit(1e6)).as("p6"),
-          floor(col("label") * lit(1e6)).as("l6"))
-        .groupBy(col("bin"))
-        .agg(count(lit(1)).as("n"), sum(col("p6")).as("sum_pred_micro"),
-          sum(col("l6")).as("sum_label_micro"))
-      Probe.calibrationError(bins)
-        .as[(Long, Long, Long, Long)].head()
-    }
-    snaps.zipWithIndex.foreach { case ((nb, nr, ece, mg, _), i) =>
-      val want = batchPanel(batches.take(i + 1).flatten)
-      assert((nb, nr, ece, mg) === want, s"after batch $i")
-    }
-  }
-
-  test("streamingFunnel: prefix-equal to the batch funnel, bounded state") {
-    implicit val s2 = spark
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.data.Events
-    val steps = Seq("signup", "click", "buy")
-    val b1 = Seq(FunnelEvent(1L, "signup", 10L), FunnelEvent(1L, "click", 20L),
-      FunnelEvent(2L, "click", 5L), FunnelEvent(2L, "signup", 10L),
-      FunnelEvent(3L, "buy", 7L))
-    val b2 = Seq(FunnelEvent(1L, "buy", 30L), FunnelEvent(2L, "click", 12L),
-      FunnelEvent(2L, "buy", 9L)) // buy BEFORE its click: must not advance
-    val input = MemoryStream[FunnelEvent]
-    val q = streamingFunnel(input.toDS(), steps)
-      .writeStream.format("memory").queryName("funnel_prog")
-      .outputMode(OutputMode.Update()).start()
-    def progress(): Map[Long, Int] =
-      spark.sql("SELECT key, stage FROM funnel_prog")
-        .collect().groupBy(_.getLong(0))
-        .map { case (k, rows) => k -> rows.map(_.getInt(1)).max }
-    def batchFunnel(evs: Seq[FunnelEvent]): Map[Long, Int] = {
-      val df = evs.map(e => (e.key, e.step, e.ts)).toDF("key", "et", "ts")
-      Events.funnel(df, Seq("key"), "ts", Seq(
-          "signup" -> (col("et") === "signup"),
-          "click" -> (col("et") === "click"),
-          "buy" -> (col("et") === "buy")))
-        .collect().map(r => r.getLong(0) ->
-          Seq(1, 2, 3).takeWhile(i => !r.isNullAt(r.fieldIndex(s"t_$i"))).size)
-        .toMap
-    }
-    input.addData(b1: _*)
-    q.processAllAvailable()
-    val p1 = progress()
-    // key 3 never signed up: batch funnel has no row, streaming reports 0
-    assert(p1 === batchFunnel(b1) + (3L -> 0))
-    input.addData(b2: _*)
-    q.processAllAvailable()
-    q.stop()
-    val p2 = progress()
-    assert(p2 === batchFunnel(b1 ++ b2) + (3L -> 0))
-    assert(p2(1L) === 3 && p2(2L) === 2) // key 2's early buy rejected
-  }
-
-  test("scd2WithHistory: incremental CDC versions equal the batch rebuild") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.data.{Relational, Versioned}
-    val dir = java.nio.file.Files.createTempDirectory("scd2_hist").toString
-    val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[(Long, Long, Option[Long], String, Boolean)])]
-    val input = MemoryStream[(Long, Long, String)]
-    val q = scd2WithHistory(input.toDF().toDF("k", "ts", "s"), dir,
-        Seq("k"), "ts", Seq("s"), pruneKeep = Some(0)) { (hist, batchId) =>
-      got += ((batchId, hist
-        .select(col("k"), col("valid_from"), col("valid_to"), col("s"),
-          col("is_current"))
-        .as[(Long, Long, Option[Long], String, Boolean)].collect().toSet))
-    }.start()
-
-    val b1 = Seq((1L, 10L, "a"), (1L, 20L, "b"), (2L, 15L, "x"))
-    val b2 = Seq((1L, 30L, "b"), (1L, 40L, "c"), (3L, 50L, "q"))
-    def rebuild(rows: Seq[(Long, Long, String)]) =
-      Relational.scd2(rows.toDF("k", "ts", "s"), Seq("k"), "ts", Seq("s"))
-        .select(col("k"), col("valid_from"), col("valid_to"), col("s"),
-          col("is_current"))
-        .as[(Long, Long, Option[Long], String, Boolean)].collect().toSet
-    input.addData(b1: _*); q.processAllAvailable()
-    input.addData(b2: _*); q.processAllAvailable()
-    q.stop()
-    assert(got.toMap === Map(0L -> rebuild(b1), 1L -> rebuild(b1 ++ b2)))
-    // pruneKeep 0: only the latest version remains, loadable
-    val onDisk = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.startsWith("v")).toSet
-    assert(onDisk === Set("v2"), onDisk.toString)
-    assert(Versioned.latestVersion(spark, dir) === Some(2L))
-  }
-
-  test("streamingRetention: increments sum to the batch matrix; dedup + bounds") {
-    implicit val s2 = spark
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.data.Events
-    val day = 86400L
-    val b1 = Seq(ActivityEvent(1L, 0L), ActivityEvent(1L, day + 5L),
-      ActivityEvent(2L, 100L), ActivityEvent(1L, 10L)) // same day twice
-    val b2 = Seq(ActivityEvent(1L, 3L * day), ActivityEvent(2L, 3L * day + 1L),
-      ActivityEvent(3L, day), ActivityEvent(1L, day + 9L)) // (1, age 1) again
-    val input = MemoryStream[ActivityEvent]
-    val q = streamingRetention(input.toDS())
-      .writeStream.format("memory").queryName("ret_hits")
-      .outputMode(OutputMode.Append()).start()
-    input.addData(b1: _*); q.processAllAvailable()
-    input.addData(b2: _*); q.processAllAvailable()
-    q.stop()
-    val got = spark.sql(
-        "SELECT cohort_day, age_days, count(*) FROM ret_hits GROUP BY 1, 2")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val want = Events.retentionCohorts(
-        (b1 ++ b2).map(e => (e.key, e.ts)).toDF("user", "ts"),
-        Seq("user"), "ts")
-      .select(col("cohort_day"), col("age_days"), col("n_active"))
-      .as[(Long, Long, Long)].collect().toSet
-    assert(got === want)
-  }
-
-  test("scd2WithHistoryDelta: closed appends + small current == full rebuild") {
-    implicit val sqlCtx = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    import graft.data.Relational
-    val dir = java.nio.file.Files.createTempDirectory("scd2_delta").toString
-    val stats = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    val input = MemoryStream[(Long, Long, String)]
-    val q = scd2WithHistoryDelta(input.toDF().toDF("k", "ts", "s"), dir,
-        Seq("k"), "ts", Seq("s"), pruneKeep = Some(0)) {
-      (batchId, nClosed, v) => stats += ((batchId, nClosed, v))
-    }.start()
-    val b1 = Seq((1L, 10L, "a"), (1L, 20L, "b"), (2L, 15L, "x"))
-    val b2 = Seq((1L, 30L, "c"), (2L, 25L, "x"), (3L, 50L, "q")) // (2,25,x) no-op
-    input.addData(b1: _*); q.processAllAvailable()
-    input.addData(b2: _*); q.processAllAvailable()
-    q.stop()
-    // batch 0 closed one version ((1,10,a)); batch 1 closed one ((1,20,b))
-    assert(stats.toList === List((0L, 1L, 1L), (1L, 1L, 2L)))
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("k"), col("valid_from"), col("valid_to"), col("s"),
-        col("is_current"))
-      .as[(Long, Long, Option[Long], String, Boolean)].collect().toSet
-    val got = rows(loadScd2History(spark, dir, Seq("k")))
-    val want = rows(Relational.scd2((b1 ++ b2).toDF("k", "ts", "s"),
-      Seq("k"), "ts", Seq("s")))
-    assert(got === want)
-    // the current slice holds exactly the live keys (3 rows), not history
-    val curV = graft.data.Versioned.latestVersion(spark, s"$dir/current").get
-    assert(spark.read.parquet(s"$dir/current/v$curV/data").count() === 3L)
-    // loader dedup guard: a replayed closed append must not duplicate
-    spark.read.parquet(s"$dir/closed").limit(1)
-      .write.mode("append").parquet(s"$dir/closed")
-    assert(rows(loadScd2History(spark, dir, Seq("k"))) === want)
   }
 }

@@ -20,7 +20,12 @@ side's median [q1, q3] (statistics.quantiles, n=4, inclusive), the ratio of
 the medians (change / parent) and in how many pairs the change was better
 (ties count for neither). It also says whether each pair's result
 fingerprints matched. Raw results go to DIR/pairs.jsonl. Exits 1 if any run
-failed, was `correct: false` or had failed ops.
+failed, was `correct: false` or had failed ops. A run whose JVM log
+(<side>/.bench_work/logs/<workload>-seed<N>-trace0.log) says the JVM refused
+the build's class-data archive counts as failed: the JVM then loads every
+class from the jar, which inflates setup_s. That happens when a .bench_build
+was copied from another directory, since the archive records the jar's
+absolute path.
 """
 import argparse
 import json
@@ -32,6 +37,7 @@ import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 KEEP = {".bench_build", ".bench_work"}
+ARCHIVE_REFUSED = "Unable to use shared archive"
 
 
 def git(*args, **kw):
@@ -50,15 +56,21 @@ def export(tree, dest):
 
 
 def run(side_dir, workload, seed, seconds):
-    """One benchmark run: (result JSON or None, fingerprint, stderr tail)."""
+    """One benchmark run: (result JSON or None, fingerprint, why it failed).
+    The reason is "" for a run that completed with a usable class-data archive;
+    the result's own `correct`/`failed` fields are the caller's to check."""
     p = subprocess.run([sys.executable, "riskbench/run.py", "--workload", workload,
                         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
                        cwd=side_dir, capture_output=True, text=True)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
-        return None, None, p.stderr[-3000:]
+        return None, None, p.stderr[-3000:] or f"run.py exited {p.returncode}"
     fp = next((ln[len("fingerprint "):] for ln in lines if ln.startswith("fingerprint ")), None)
-    return json.loads(lines[-1]), fp, ""
+    log = os.path.join(side_dir, ".bench_work", "logs", f"{workload}-seed{seed}-trace0.log")
+    with open(log, errors="replace") as fh:
+        refused = ARCHIVE_REFUSED in fh.read()
+    why = f"the JVM refused the class-data archive ({ARCHIVE_REFUSED!r} in {log})" if refused else ""
+    return json.loads(lines[-1]), fp, why
 
 
 def quartiles(vs):
@@ -94,8 +106,8 @@ def main():
     ok = True
     for side in trees:  # builds the jar and the fixture; not counted
         res, _, err = run(dirs[side], workloads[0], 0, 1)
-        if res is None:
-            sys.exit(f"riskbench_pairs: {side} warm-up failed\n{err}")
+        if err:
+            sys.exit(f"riskbench_pairs: {side} warm-up ({workloads[0]} seed 0) failed: {err}")
         print(f"# {side} warm-up done", flush=True)
 
     values = {(w, side): {m["name"]: [] for m in spec["end_to_end"]}
@@ -112,10 +124,11 @@ def main():
                     res, fp, err = run(dirs[side], w, seed, spec["run_seconds"])
                     log.write(json.dumps({"workload": w, "seed": seed, "side": side,
                                           "tree": trees[side], "fingerprint": fp,
-                                          "result": res}) + "\n")
+                                          "result": res, "failure": err}) + "\n")
                     log.flush()
-                    if res is None or not res["correct"] or res["failed"]:
-                        print(f"{w} seed {seed} {side}: run failed or incorrect: {res}\n{err}")
+                    if err or not res["correct"] or res["failed"]:
+                        print(f"{w} seed {seed} {side}: run failed or incorrect: "
+                              f"{err or res}", flush=True)
                         ok = False
                         continue
                     got[side], fps[side] = res["metrics"], fp
