@@ -369,7 +369,7 @@ object Relational {
   /**
    * SCD TYPE-2 history build: collapse a change log `(key, order,
    * attrs…)` into versioned rows with `[valid_from, valid_to)` intervals
-   * — the dimension-table twin of `Warehouse.mergeUpsert` (which keeps
+   * — the dimension-table twin of `Warehouse.upsertTable` (which keeps
    * only the latest version, SCD-1). Consecutive log rows whose tracked
    * attributes are unchanged are dropped (no-op updates don't open a new
    * version); each surviving row is valid from its own `orderCol` until

@@ -14,19 +14,31 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    `OPTIMIZE ... ZORDER BY (date, ticker)`;
  *  - `04_var_aggregation.py:13`, `05_var_compliance.py:23,46`: re-read.
  *
- * Tables are parquet (there is no Delta here), written by [[saveTable]]
- * range-clustered on their cluster keys — the ZORDER intent: readers
- * filtering on a cluster key can skip files from parquet min/max stats.
- * That includes timestamp keys such as the trials table's `date`:
- * [[saveTable]] writes timestamps as INT64 micros, which carry statistics,
- * where Spark's default INT96 carries none. Pages are written
- * uncompressed: the trials table is random doubles, which snappy does not
- * shrink, so compression only adds a decompression to every read. Table
- * names normally come from
- * `application.yaml`'s `database.tables` map
- * ([[Configs.AppConfig.tables]]).
+ * Tables are parquet (there is no Delta here), written by [[saveTable]],
+ * the one writer, in a layout Spark itself can use — the ZORDER intent:
+ *
+ *  - **Bucketed on the leading cluster key.** Rows are hashed on
+ *    `clusterCols.head` into `numFiles` buckets, one file per non-empty
+ *    bucket, sorted on all of `clusterCols` within it. A read reports the
+ *    scan as hash-partitioned on that key, so a group-by or join whose keys
+ *    include it (every VaR slice groups on `date` first) plans no exchange:
+ *    the exchange is paid once, at write, not once per query.
+ *  - **Point filters open one file.** An equality or `IN` filter on the
+ *    leading key prunes the scan to the buckets its values hash to; the
+ *    other files are not opened, footers included. A range filter on it
+ *    skips no file, since every bucket spans the key's whole range (no
+ *    reader of these tables filters on a range).
+ *  - **INT64 timestamps.** Timestamps are written as INT64 micros, which
+ *    carry min/max statistics, where Spark's default INT96 carries none.
+ *  - **Uncompressed pages.** Snappy does not shrink the trials' random
+ *    doubles, so it would only add a decompression to every read.
+ *
+ * Table names normally come from `application.yaml`'s `database.tables`
+ * map ([[Configs.AppConfig.tables]]).
  */
 object Warehouse {
+
+  private val DefaultBuckets = 20 // saveTable's, when the caller names none
 
   /** `CREATE DATABASE IF NOT EXISTS name LOCATION path` + `USE name`. */
   def createAndUse(spark: SparkSession, name: String, path: String): Unit = {
@@ -52,28 +64,24 @@ object Warehouse {
   }
 
   /**
-   * Materialize a stage result as a managed parquet table, clustered on
-   * `clusterCols` (the ZORDER replacement): range-partition + sort, write
-   * to the database location, register the table over the files.
-   *
-   * Timestamps are written as parquet INT64 `TIMESTAMP_MICROS`, not
-   * Spark's default INT96, so a timestamp cluster key (the trials table's
-   * `date`) keeps min/max statistics and a filter on it skips the files
-   * outside its range. Only the session setting
-   * `spark.sql.parquet.outputTimestampType` selects the type (a per-write
-   * option does not), so it is set for this write alone and restored
-   * afterwards, also when the write fails. Pages are written uncompressed.
+   * Materialize a stage result as a managed parquet table in the layout
+   * above: `numFiles` buckets on `clusterCols.head`, sorted on
+   * `clusterCols`. The exchange on the leading key puts each bucket in one
+   * write task, so each non-empty bucket is one file. Only the session
+   * setting `spark.sql.parquet.outputTimestampType` selects the timestamp
+   * type (a per-write option does not), so it is set for this write alone
+   * and restored afterwards, also when the write fails.
    */
   def saveTable(spark: SparkSession, df: DataFrame, table: String,
-      clusterCols: Seq[String], numFiles: Int = 20): Unit = {
+      clusterCols: Seq[String], numFiles: Int = DefaultBuckets): Unit = {
     import org.apache.spark.sql.functions.col
-    val sorted = df.repartitionByRange(numFiles, clusterCols.map(col): _*)
-      .sortWithinPartitions(clusterCols.map(col): _*)
+    val bucketed = df.repartition(numFiles, col(clusterCols.head))
     val key = "spark.sql.parquet.outputTimestampType"
     val previous = spark.conf.getAll.get(key) // set explicitly, not defaulted
     spark.conf.set(key, "TIMESTAMP_MICROS")
-    try sorted.write.mode("overwrite").format("parquet")
-      .option("compression", "none").saveAsTable(table)
+    try bucketed.write.mode("overwrite").format("parquet").option("compression", "none")
+      .bucketBy(numFiles, clusterCols.head).sortBy(clusterCols.head, clusterCols.tail: _*)
+      .saveAsTable(table)
     finally previous match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
@@ -84,28 +92,12 @@ object Warehouse {
   def table(spark: SparkSession, name: String): DataFrame = spark.table(name)
 
   /**
-   * Bucketed managed table: co-locates rows by `hash(bucketCols) % n` at
-   * WRITE time, so later equi-joins and aggregations on the bucket keys
-   * run exchange-free — the shuffle is paid once at ingest instead of
-   * per query. This is the parquet/catalog equivalent of Delta's
-   * clustered layout for the reference's re-read-heavy workflow: two
-   * tables bucketed the same way join with zero Exchange in the plan
-   * (see WarehouseSpec's plan assertion). Sorting within buckets also
-   * lets sort-merge join skip its sort.
-   */
-  def saveBucketedTable(spark: SparkSession, df: DataFrame, table: String,
-      bucketCols: Seq[String], numBuckets: Int = 16): Unit = {
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(table)
-  }
-
-  /**
    * MERGE INTO replacement for parquet tables: upsert `updates` into
    * `table` by `keys`, latest `versionCol` wins (updates shadow existing
-   * rows at equal version). Copy-on-write like Delta without a log:
-   * union + latest-per-key + table rewrite — one shuffle on the keys.
+   * rows at equal version). Copy-on-write like Delta without a log: the
+   * latest row per key of table ∪ updates is rewritten as the whole table,
+   * in the bucket count and cluster columns it had (`keys` and the default
+   * count for a table [[saveTable]] did not write).
    *
    * The new contents derive from the files being replaced, so the merge
    * is STAGED: written to a `<table>__upsert_staging` table first, then
@@ -120,9 +112,9 @@ object Warehouse {
    * survives is nondeterministic — dedupe upstream if that can occur.
    */
   def upsertTable(spark: SparkSession, table: String, updates: DataFrame,
-      keys: Seq[String], versionCol: String,
-      clusterCols: Seq[String] = Nil): Unit = {
+      keys: Seq[String], versionCol: String): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
+    val (cluster, buckets) = layoutOf(spark, table).getOrElse((keys, DefaultBuckets))
     val current = spark.table(table).withColumn("__src", lit(0))
     val merged = graft.data.Relational.topKPerGroup(
         current.unionByName(updates.withColumn("__src", lit(1))),
@@ -130,13 +122,20 @@ object Warehouse {
         rankCol = "__rank")
       .drop("__rank", "__src")
     val staging = table + "__upsert_staging"
-    val cluster = if (clusterCols.nonEmpty) clusterCols else keys
-    saveTable(spark, merged, staging, cluster)
-    saveTable(spark, spark.table(staging), table, cluster)
+    saveTable(spark, merged, staging, cluster, buckets)
+    saveTable(spark, spark.table(staging), table, cluster, buckets)
     // quote each identifier part separately: backticking the whole name
     // would turn a qualified db.tbl staging name into a literal lookup
     // that silently no-ops and leaks the staging table
     spark.sql(s"DROP TABLE IF EXISTS ${quoteParts(staging)}")
+  }
+
+  /** The cluster columns and bucket count of a bucketed `table`, as
+   * [[saveTable]] takes them: the bucket column first. */
+  private def layoutOf(spark: SparkSession, table: String): Option[(Seq[String], Int)] = {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    state.catalog.getTableMetadata(state.sqlParser.parseTableIdentifier(table)).bucketSpec
+      .map(b => ((b.bucketColumnNames ++ b.sortColumnNames).distinct, b.numBuckets))
   }
 
   /** `db.tbl` → `` `db`.`tbl` `` (each part quoted separately). */

@@ -5,14 +5,18 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for specs (one per suite, lazy). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .appName(getClass.getSimpleName)
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .getOrCreate()
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   /** Every message down the cause chain of `df`'s failure to collect. */
   def failure(df: DataFrame): String = {

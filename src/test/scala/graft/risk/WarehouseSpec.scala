@@ -1,5 +1,11 @@
 package graft.risk
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -7,7 +13,7 @@ import graft.SparkSpec
 /** DDL surface (S7) + persisted warehouse hand-off (S3/S4): the
  * reference's configure_notebook.py:17-27 database lifecycle and the
  * 03 → 04/05 stored-table workflow. */
-class WarehouseSpec extends SparkSpec {
+class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val cfg = VarPipeline.Config(
     runs = 60, days = 100, tickers = Seq("TICK01", "TICK02", "TICK03"),
@@ -57,8 +63,8 @@ class WarehouseSpec extends SparkSpec {
       import spark.implicits._
       val trials = (1 to 5000).map(i => (s"T${i % 40}", i.toDouble)).toDF("ticker", "v")
       val pf = (0 until 40).map(i => (s"T$i", 1.0 / 40)).toDF("ticker", "weight")
-      Warehouse.saveBucketedTable(spark, trials, "b_trials", Seq("ticker"), 8)
-      Warehouse.saveBucketedTable(spark, pf, "b_portfolio", Seq("ticker"), 8)
+      Warehouse.saveTable(spark, trials, "b_trials", Seq("ticker"), 8)
+      Warehouse.saveTable(spark, pf, "b_portfolio", Seq("ticker"), 8)
 
       // disable auto-broadcast so the join must rely on bucketing alone
       val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -96,10 +102,21 @@ class WarehouseSpec extends SparkSpec {
       val hitFiles = back.filter(col("date") === 5)
         .select(input_file_name()).distinct().count()
       assert(allFiles == 8, s"expected 8 files, got $allFiles")
-      // range clustering: a point lookup on the leading key touches 1 file
+      // bucketing: a point lookup on the leading key touches 1 file
       assert(hitFiles == 1, s"expected 1 file hit, got $hitFiles")
     } finally Warehouse.teardown(spark, "graft_prune_spec")
   }
+
+  /** The bucket spec the catalog holds for `table`. */
+  private def bucketSpec(table: String) = {
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    state.catalog.getTableMetadata(state.sqlParser.parseTableIdentifier(table)).bucketSpec.get
+  }
+
+  /** How many files of `table` hold each value of `key`. */
+  private def filesPerKey(table: String, key: String): Seq[Long] =
+    Warehouse.table(spark, table).select(col(key), input_file_name()).distinct()
+      .groupBy(col(key)).count().collect().map(_.getLong(1)).toSeq
 
   /** Input bytes the tasks of `action`'s jobs read, from Spark's task metrics. */
   private def bytesRead(action: => Unit): Long = {
@@ -137,7 +154,8 @@ class WarehouseSpec extends SparkSpec {
       Warehouse.saveTable(spark, rows.toDF("date", "ticker", "returns"), "ts_t",
         Seq("date", "ticker"), numFiles = 8)
       val back = Warehouse.table(spark, "ts_t")
-      assert(back.inputFiles.length == 8)
+      assert(bucketSpec("ts_t").numBuckets == 8)
+      assert(filesPerKey("ts_t", "date").forall(_ == 1))
       // timestamps round-trip exactly, micros included
       assert(back.select($"date").distinct().as[java.sql.Timestamp].collect().sorted.toSeq
         === dates)
@@ -288,5 +306,111 @@ class WarehouseSpec extends SparkSpec {
       // whole-name backticks would leave the staging table behind
       assert(!spark.catalog.tableExists("graft_qual_spec.q_t__upsert_staging"))
     } finally Warehouse.teardown(spark, "graft_qual_spec")
+  }
+
+  test("upsertTable keeps the target's layout: 8 buckets in, 8 out, each date in one file") {
+    val loc = java.nio.file.Files.createTempDirectory("graft_wh10").toString
+    Warehouse.createAndUse(spark, "graft_upsert_layout_spec", loc)
+    try {
+      import spark.implicits._
+      val rows = for (d <- 0 until 24; t <- 0 until 4) yield (d, s"T$t", d * 10.0 + t)
+      Warehouse.saveTable(spark, rows.toDF("date", "ticker", "v"), "layout_u",
+        Seq("date", "ticker"), numFiles = 8)
+      Warehouse.upsertTable(spark, "layout_u",
+        Seq((3, "T1", -1.0), (30, "T0", 300.0)).toDF("date", "ticker", "v"),
+        Seq("date", "ticker"), "date")
+      val spec = bucketSpec("layout_u")
+      assert((spec.numBuckets, spec.bucketColumnNames, spec.sortColumnNames) ===
+        (8, Seq("date"), Seq("date", "ticker")))
+      val back = Warehouse.table(spark, "layout_u")
+      assert(back.inputFiles.length <= 8)
+      assert(filesPerKey("layout_u", "date").forall(_ == 1))
+      assert(back.count() == rows.size + 1)
+      assert(back.filter($"date" === 3 && $"ticker" === "T1").select($"v").as[Double]
+        .collect().toSeq === Seq(-1.0))
+    } finally Warehouse.teardown(spark, "graft_upsert_layout_spec")
+  }
+
+  test("saveTable'd trials: VarEngine plans no hash exchange, and answers bit for bit in ticker order") {
+    val loc = java.nio.file.Files.createTempDirectory("graft_wh11").toString
+    Warehouse.createAndUse(spark, "graft_layout_spec", loc)
+    try {
+      import spark.implicits._
+      import org.apache.spark.ml.linalg.Vectors
+      val rnd = new scala.util.Random(10)
+      val n = 400
+      val dates = (0 until 16).map(d =>
+        java.sql.Timestamp.valueOf(f"2024-01-${d + 1}%02d 00:00:00"))
+      val tickers = (0 until 6).map(t => s"T$t")
+      val slices = Seq("MINING", "BANKING", "ENERGY")
+      val industry = tickers.zipWithIndex.map { case (t, i) => t -> slices(i % 3) }.toMap
+      val weight = tickers.zipWithIndex.map { case (t, i) => t -> (i + 1) / 21.0 }.toMap
+      val pf = tickers.map(t => (t, industry(t), weight(t))).toDF("ticker", "industry", "weight")
+      val rows = for (d <- dates; t <- tickers)
+        yield (d, t, Vectors.dense(Array.fill(n)(rnd.nextGaussian())))
+      val mem = spark.createDataFrame(spark.sparkContext.parallelize(rnd.shuffle(rows), 3))
+        .toDF("date", "ticker", "returns")
+      Warehouse.saveTable(spark, mem, "layout_t", Seq("date", "ticker"), numFiles = 8)
+      val stored = Warehouse.table(spark, "layout_t")
+
+      // (var, es) of a date's weighted sum over the tickers `in`, summed in ticker order
+      def risk(d: java.sql.Timestamp, in: String => Boolean = _ => true): (Double, Double) = {
+        val sum = new Array[Double](n)
+        for ((_, t, v) <- rows.filter(r => r._1 == d && in(r._2)).sortBy(_._2); k <- 0 until n)
+          sum(k) += weight(t) * v(k)
+        VarMath.riskOf(sum, 99)
+      }
+      val at = dates(5)
+      val want: Map[String, Map[Seq[Any], Seq[Double]]] = Map(
+        "pointInTimeVar" -> Map(Seq(at) -> Seq(risk(at)._1)),
+        "varTimeSeries" -> dates.map { d =>
+          val (v, es) = risk(d)
+          Seq(d) -> Seq(v, es)
+        }.toMap,
+        "riskExposure" -> (for (d <- dates; s <- slices) yield {
+          val (v, es) = risk(d, industry(_) == s)
+          Seq(d, s) -> Seq(v, es)
+        }).toMap,
+        "riskContribution" -> dates.map { d =>
+          val vars = slices.map(s => risk(d, industry(_) == s)._1)
+          Seq(d) -> vars.map(_ / vars.reduce(_ + _))
+        }.toMap)
+      def queries(trials: DataFrame): Seq[(String, DataFrame)] = Seq(
+        "pointInTimeVar" -> VarEngine.pointInTimeVar(trials, pf, Some(at)),
+        "varTimeSeries" -> VarEngine.varTimeSeries(trials, pf),
+        "riskExposure" -> VarEngine.riskExposure(trials, pf, "industry"),
+        "riskContribution" -> VarEngine.riskContribution(trials, pf, "industry", slices))
+      /** Each row's non-double columns -> its double columns. */
+      def answers(q: DataFrame): Map[Seq[Any], Seq[Double]] = q.collect().map { r =>
+        val (vs, ks) = r.toSeq.partition(_.isInstanceOf[Double])
+        ks -> vs.map(_.asInstanceOf[Double])
+      }.toMap
+      def bits(m: Map[Seq[Any], Seq[Double]]) =
+        m.map { case (k, vs) => k -> vs.map(java.lang.Double.doubleToRawLongBits) }
+
+      for (((name, q), (_, fromMem)) <- queries(stored).zip(queries(mem))) {
+        val got = answers(q)
+        // each group is summed in one partition, in the file's (date, ticker) order
+        assert(bits(got) === bits(want(name)), name)
+        val plan = q.queryExecution.executedPlan
+        val hashed = collect(plan) {
+          case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+        }
+        assert(hashed.isEmpty, s"$name plans a hash exchange:\n$plan")
+        // the in-memory trials merge partial sums in another order
+        val mine = answers(fromMem)
+        assert(mine.keySet === got.keySet, name)
+        for ((k, vs) <- got; (a, b) <- vs.zip(mine(k)))
+          assert(math.abs(a - b) <= 1e-12 * math.abs(b), s"$name $k: $a vs $b")
+        if (name == "pointInTimeVar") {
+          val scan = collect(plan) { case s: FileSourceScanExec => s }.head
+          assert(scan.metadata.get("SelectedBucketsCount") === Some("1 out of 8"), s"$plan")
+          // Spark's numFiles metric counts the listing; the read opens one file
+          val opened = scan.inputRDDs().head.partitions
+            .map(_.asInstanceOf[FilePartition].files.length).sum
+          assert(opened === 1)
+        }
+      }
+    } finally Warehouse.teardown(spark, "graft_layout_spec")
   }
 }

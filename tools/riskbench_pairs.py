@@ -19,8 +19,12 @@ For each workload and end-to-end metric of BENCHMARK.json it prints each
 side's median [q1, q3] (statistics.quantiles, n=4, inclusive), the ratio of
 the medians (change / parent) and in how many pairs the change was better
 (ties count for neither). It also says whether each pair's result
-fingerprints matched. Raw results go to DIR/pairs.jsonl. Exits 1 if any run
-failed, was `correct: false` or had failed ops. A run whose JVM log
+fingerprints matched. Then, per op kind (point, series, ... for var-serve),
+it prints each side's median [q1, q3] op latency in ms over the timed ops
+of the counted runs, read from each run's artifact
+(<side>/.bench_work/results/<workload>-seed<N>-trace0.json, `ops`), so a
+change shows which kinds moved. Raw results go to DIR/pairs.jsonl. Exits 1
+if any run failed, was `correct: false` or had failed ops. A run whose JVM log
 (<side>/.bench_work/logs/<workload>-seed<N>-trace0.log) says the JVM refused
 the build's class-data archive counts as failed: the JVM then loads every
 class from the jar, which inflates setup_s. That happens when a .bench_build
@@ -56,21 +60,25 @@ def export(tree, dest):
 
 
 def run(side_dir, workload, seed, seconds):
-    """One benchmark run: (result JSON or None, fingerprint, why it failed).
-    The reason is "" for a run that completed with a usable class-data archive;
-    the result's own `correct`/`failed` fields are the caller's to check."""
+    """One benchmark run: (result JSON or None, fingerprint, why it failed, op
+    latencies as (kind, ms) pairs). The reason is "" for a run that completed
+    with a usable class-data archive; the result's own `correct`/`failed`
+    fields are the caller's to check."""
     p = subprocess.run([sys.executable, "riskbench/run.py", "--workload", workload,
                         "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
                        cwd=side_dir, capture_output=True, text=True)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 or not lines:
-        return None, None, p.stderr[-3000:] or f"run.py exited {p.returncode}"
+        return None, None, p.stderr[-3000:] or f"run.py exited {p.returncode}", []
     fp = next((ln[len("fingerprint "):] for ln in lines if ln.startswith("fingerprint ")), None)
     log = os.path.join(side_dir, ".bench_work", "logs", f"{workload}-seed{seed}-trace0.log")
     with open(log, errors="replace") as fh:
         refused = ARCHIVE_REFUSED in fh.read()
     why = f"the JVM refused the class-data archive ({ARCHIVE_REFUSED!r} in {log})" if refused else ""
-    return json.loads(lines[-1]), fp, why
+    artifact = os.path.join(side_dir, ".bench_work", "results", f"{workload}-seed{seed}-trace0.json")
+    with open(artifact) as fh:
+        ops = [(op["kind"], op["ms"]) for op in json.load(fh)["ops"]]
+    return json.loads(lines[-1]), fp, why, ops
 
 
 def quartiles(vs):
@@ -105,7 +113,7 @@ def main():
 
     ok = True
     for side in trees:  # builds the jar and the fixture; not counted
-        res, _, err = run(dirs[side], workloads[0], 0, 1)
+        res, _, err, _ = run(dirs[side], workloads[0], 0, 1)
         if err:
             sys.exit(f"riskbench_pairs: {side} warm-up ({workloads[0]} seed 0) failed: {err}")
         print(f"# {side} warm-up done", flush=True)
@@ -114,14 +122,15 @@ def main():
               for w in workloads for side in trees}
     wins = {(w, m["name"]): 0 for w in workloads for m in spec["end_to_end"]}
     same_fp = {w: 0 for w in workloads}
+    op_ms = {(w, side): {} for w in workloads for side in trees}  # kind -> [ms]
     with open(os.path.join(work, "pairs.jsonl"), "a") as log:
         for i in range(a.pairs):
             seed = a.first_seed + i
             order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
             for w in workloads:
-                got, fps = {}, {}
+                got, fps, ops = {}, {}, {}
                 for side in order:
-                    res, fp, err = run(dirs[side], w, seed, spec["run_seconds"])
+                    res, fp, err, ops[side] = run(dirs[side], w, seed, spec["run_seconds"])
                     log.write(json.dumps({"workload": w, "seed": seed, "side": side,
                                           "tree": trees[side], "fingerprint": fp,
                                           "result": res, "failure": err}) + "\n")
@@ -135,6 +144,9 @@ def main():
                 if len(got) < 2:
                     continue
                 same_fp[w] += fps["parent"] == fps["change"]
+                for side in trees:
+                    for kind, ms in ops[side]:
+                        op_ms[(w, side)].setdefault(kind, []).append(ms)
                 for m in spec["end_to_end"]:
                     n = m["name"]
                     p, c = got["parent"][n]["value"], got["change"][n]["value"]
@@ -164,6 +176,18 @@ def main():
             ratio = f"{cm / pm:.3f}" if pm else "-"
             print(f"  {n:<18}{cells[0]:>34}{cells[1]:>34}{ratio:>8}"
                   f"{wins[(w, n)]:>4}/{n_pairs}")
+        kinds = sorted(set(op_ms[(w, "parent")]) | set(op_ms[(w, "change")]))
+        if kinds:
+            print(f"  {'op kind: ms':<24}{'parent median [q1, q3]':>34}{'change median [q1, q3]':>34}"
+                  f"{'ratio':>8}{'ops':>10}")
+        for kind in kinds:
+            lat = [op_ms[(w, side)].get(kind, []) for side in trees]
+            if not all(lat):
+                continue
+            cells = ["{1:.4g} [{0:.4g}, {2:.4g}]".format(*quartiles(v)) for v in lat]
+            ratio = statistics.median(lat[1]) / statistics.median(lat[0])
+            print(f"  {kind:<24}{cells[0]:>34}{cells[1]:>34}{ratio:>8.3f}"
+                  f"{len(lat[0]):>5}/{len(lat[1])}")
     sys.exit(0 if ok else 1)
 
 
