@@ -39,10 +39,6 @@ object Dedup {
       graft.plans.KgramHashStream(
         org.apache.spark.sql.graft.ColumnBridge.expression(t), k, 15))
 
-  /** a_i, b_i for minhash function i — small odd multipliers keep
-   * `a*h28+b` well under 2^63 (h < 2^28, a < 2^7 for k ≤ 64). */
-  def hashParams(i: Int): (Long, Long) = (2L * i + 1, 7919L * i + 13)
-
   /** Word n-gram shingles of a token array (empty when fewer than n
    * tokens — NB Spark's `sequence(0, negative)` would count *down*). */
   def wordShingles(toks: Column, n: Int): Column =
@@ -81,15 +77,6 @@ object Dedup {
    * upstream). */
   def minhashSignature(hashes: Column, k: Int): Column =
     call_function("vec_minhash", hashes, lit(k))
-
-  /** Composable (extension-free) twin of [[minhashSignature]] — k
-   * interpreted array walks instead of graft.plans.MinHashSig's one-pass
-   * loop; identical output, kept as the portability reference. */
-  def minhashSignatureComposable(hashes: Column, k: Int): Column =
-    array((0 until k).map { i =>
-      val (a, b) = hashParams(i)
-      array_min(transform(hashes, h => (h * a + b) % P))
-    }: _*)
 
   /** 64-bit MinHash signature (`sig[f] = min over h of xxhash64(h, f)`) —
    * the SCALE companion of [[shingleHashes64]]: the 28-bit universal
@@ -136,17 +123,6 @@ object Dedup {
    * iff more than half the token hashes have bit j set. */
   def simhash(text: Column, bits: Int = 28): Column =
     call_function("vec_simhash", array_distinct(tokens(text)), lit(bits))
-
-  /** Extension-free composable twin of [[simhash]] — bits × interpreted
-   * array scans; identical output, kept as the portability reference. */
-  def simhashComposable(text: Column, bits: Int = 28): Column = {
-    val hashes = transform(array_distinct(tokens(text)), t => hash28(t))
-    val n = size(hashes)
-    (0 until bits).map { j =>
-      val ones = size(filter(hashes, h => shiftright(h, j) % 2 === 1))
-      when(ones * 2 > n, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
 
   /** Full-width 64-bit SimHash over the distinct tokens of a text column —
    * the SCALE spelling: per-token hash is Spark's builtin `xxhash64`

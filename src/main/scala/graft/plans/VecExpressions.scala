@@ -360,7 +360,7 @@ object EditDistanceBand {
  * The composable spelling (k separate `array_min(transform(...))`) walks
  * the array k times through interpreted lambdas with boxed longs; this is
  * one tight unboxed n×k loop. Integer math — bit-identical to the
- * composable version and any SQL oracle.
+ * composable spelling and to the SQL oracle's (`SparkEntry.sigSql`).
  */
 case class MinHashSig(child: Expression, k: Int)
     extends UnaryExpression {
@@ -757,7 +757,8 @@ object ShingleHashes64 {
  * long. Per token: 28-bit MD5-prefix hash; per bit: majority vote across
  * tokens. Replaces `bits × size(filter(...))` interpreted array scans with
  * one pass. Bit-identical to the composable spelling (same hashes, same
- * strict-majority rule `2·ones > n`).
+ * strict-majority rule `2·ones > n`), which the SQL oracle's
+ * `SparkEntry.simhashSql` spells out.
  */
 case class SimHash(child: Expression, bits: Int)
     extends UnaryExpression {

@@ -156,14 +156,4 @@ object Training {
           functions.nonLinearFeatures(col(featuresCol).cast("array<double>"))))
       .drop("weights")
   }
-
-  /** Model quality: mean over tickers of the per-ticker sum of squared
-   * errors — reference `02_var_model.py:224-234`. */
-  def wsseReport(scored: DataFrame, tickerCol: String = "ticker",
-      predictedCol: String = "predicted", actualCol: String = "return"): DataFrame = {
-    scored
-      .withColumn("wsse", functions.wsse(col(predictedCol), col(actualCol)))
-      .groupBy(col(tickerCol))
-      .agg(sum(col("wsse")).as("wsse"))
-  }
 }

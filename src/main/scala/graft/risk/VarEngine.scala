@@ -42,12 +42,10 @@ object VarEngine {
 
   /** VaR and expected shortfall sliced by any portfolio dimension
    * (country, industry, …) — `04_var_aggregation.py:86-123`, with ES per
-   * slice matching [[varTimeSeries]] (`withShortfall = false` restores the
-   * VaR-only shape). */
+   * slice matching [[varTimeSeries]]. */
   def riskExposure(trials: DataFrame, portfolio: DataFrame,
-      sliceCol: String, confidence: Double = 99,
-      withShortfall: Boolean = true): DataFrame =
-    bySlice(trials, portfolio, sliceCol, confidence, withShortfall)
+      sliceCol: String, confidence: Double = 99): DataFrame =
+    bySlice(trials, portfolio, sliceCol, confidence, withShortfall = true)
       .transform(orderedInOnePartition("date", sliceCol))
 
   /** Row-normalized risk-contribution crosstab per date —

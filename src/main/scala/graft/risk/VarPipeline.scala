@@ -104,8 +104,8 @@ object VarPipeline {
   // path memoizes; a caller-supplied `pf` gets a fresh plan. Entries die
   // with their session: keyed by applicationId AND evicted by a listener
   // on application end, so a long-lived JVM hosting many sessions does not
-  // accumulate dead plan references. clearSharedTrials evicts eagerly when
-  // sweeping many configs inside ONE session.
+  // accumulate dead plan references. Within one session, each distinct
+  // `Config` keeps its cached table until the session ends.
   private val trialsCache = new ConcurrentHashMap[(String, Config), DataFrame]()
   private val evictionHooked = ConcurrentHashMap.newKeySet[String]()
 
@@ -132,16 +132,6 @@ object VarPipeline {
       _ => monteCarloTrials(spark, cfg).persist(StorageLevel.MEMORY_AND_DISK))
   }
 
-  /** Unpersist and forget this session's cached trials tables. Call when
-   * sweeping many configs in one long-lived session — each distinct
-   * `Config` otherwise pins its cached table until the session ends. */
-  def clearSharedTrials(spark: SparkSession): Unit = {
-    val appId = spark.sparkContext.applicationId
-    trialsCache.forEach { (k, df) =>
-      if (k._1 == appId) { df.unpersist(); trialsCache.remove(k) }
-    }
-  }
-
   private def trialsFor(spark: SparkSession, cfg: Config,
       pf: Option[DataFrame]): DataFrame =
     if (pf.isEmpty) sharedTrials(spark, cfg) else monteCarloTrials(spark, cfg, pf)
@@ -157,9 +147,9 @@ object VarPipeline {
    * industry) — `04_var_aggregation.py:86-123`, ES per slice matching
    * [[portfolioVar]]. */
   def varBySlice(spark: SparkSession, sliceCol: String, cfg: Config = Config(),
-      pf: Option[DataFrame] = None, withShortfall: Boolean = true): DataFrame =
+      pf: Option[DataFrame] = None): DataFrame =
     VarEngine.riskExposure(trialsFor(spark, cfg, pf),
-      pf.getOrElse(portfolio(spark, cfg)), sliceCol, cfg.confidence, withShortfall)
+      pf.getOrElse(portfolio(spark, cfg)), sliceCol, cfg.confidence)
 
   /**
    * The reference's persisted-table notebook hand-off: materialize

@@ -4,18 +4,23 @@ import org.apache.spark.sql.functions._
 
 /**
  * Contract tests for the staged-parquet hand-off (q126 and the
- * staged-encode oracles): the stage root must be unique per user + JVM
- * so concurrent runs never collide, and the read-back must refuse an
+ * staged-encode oracles): the stage root is keyed by user but not by
+ * JVM, so two runs of one tree dump the same oracle SQL, and each stage
+ * is keyed by the sf dir's basename; the read-back must refuse an
  * absent or half-written stage instead of silently feeding a partial
  * table to the query (and through the shared path, the DuckDB oracle).
+ * Given up with the JVM key: two JVMs of one user that run the same
+ * staged query at the same scale at the same time share a path. No
+ * procedure in the repo does that (Verify runs at sf0.01, Bench at
+ * sf0.1, and sbt runs are never concurrent).
  */
 class StageSpec extends SparkSpec {
   import spark.implicits._
 
-  test("stageRoot is keyed by user and JVM pid; stageDir by sf basename") {
+  test("stageRoot is keyed by user, not by JVM pid; stageDir by sf basename") {
     val root = SparkEntry.stageRoot
     assert(root.contains(sys.props.getOrElse("user.name", "nouser")))
-    assert(root.contains(s"pid${ProcessHandle.current().pid()}"))
+    assert(!root.contains("pid"))
     val a = SparkEntry.stageDir("q126_pieces", "/root/testdata/sf0.01")
     val b = SparkEntry.stageDir("q126_pieces", "/root/testdata/sf0.1")
     assert(a != b && a.startsWith(root) && a.endsWith("q126_pieces_sf0.01"))
