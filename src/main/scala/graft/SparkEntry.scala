@@ -14,7 +14,7 @@ import graft.data.{Dedup, Multimodal, Pq, Similarity, TextFunctions => T}
  * builds its Spark result and, where ANSI-expressible, the DuckDB SQL that
  * checks it, written in the same entry (seeded Monte-Carlo stays
  * rows-only; SURVEY §7.5).
- * `queries` and `oracleSql` are views over that one list, so an oracle
+ * `queries` and `oracleSql(dir)` are views over that one list, so an oracle
  * cannot drift from its query or outlive it.
  *
  * The registry and its views are `lazy val`s on purpose: the oracle
@@ -117,8 +117,13 @@ object SparkEntry {
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.build).toMap
 
-  lazy val oracleSql: Map[String, String] =
-    registry.flatMap(q => q.oracle.map(q.name -> _)).toMap
+  /** Each oracle as run over the parquet of `dir`: a staged-encode
+   * oracle reads the stage its query wrote at that scale ([[StageScale]]
+   * becomes `dir`'s basename). */
+  def oracleSql(dir: String): Map[String, String] = {
+    val sf = new java.io.File(dir).getName
+    registry.flatMap(q => q.oracle.map(q.name -> _.replace(StageScale, sf))).toMap
+  }
 
   private[graft] lazy val registry: Seq[Query] = unique(Seq(
     // ---------------------------------------------------- relational core
@@ -757,8 +762,9 @@ object SparkEntry {
       // documents themselves are never re-read.
       val docs = t(s, dir, "documents")
       // built inline for the oracle; a real pipeline probes a persisted
-      // parquet store (loadSignatureStore) — columnar scans per consumer
-      // beat materializing the corpus-scale table here (measured)
+      // parquet store (`signatures` written once, read back) — columnar
+      // scans per consumer beat materializing the corpus-scale table here
+      // (measured)
       val store = Dedup.signatures(docs.filter(col("doc_id") % 7 =!= 3),
         "doc_id", "text", simhashBits = 0) // Jaccard-only admit: skip the simhash walk
       Dedup.incrementalDedup(docs.filter(col("doc_id") % 7 === 3),
@@ -1756,7 +1762,7 @@ object SparkEntry {
     // are doc_id*100 + chunk_id + 1 (>= 1); query ids are negative so
     // the two key spaces cannot collide
     Query("q83_rag_pipeline", (s, dir) => {
-      import graft.data.{Bm25, Corpus, Pq}
+      import graft.data.{Bm25, Corpus, Pq, Versioned}
       val docs = t(s, dir, "documents")
       val chunks = Corpus.chunkDocuments(docs, "doc_id", "text",
           chunkTokens = 32, overlap = 8)
@@ -1772,7 +1778,9 @@ object SparkEntry {
         .select((-(col("doc_id") + 1)).as("id"), col("chunk_text").as("text"))
       val qEmb = qChunks.withColumn("__hs", Similarity.tokenHashes(col("text")))
         .select(col("id"), Similarity.hashEmbed(col("__hs"), 64).as("v"))
-      val idxDir = java.nio.file.Files.createTempDirectory("rag_idx").toString
+      // one index dir per scale; each run publishes a new version and
+      // prunes the ones below what it loaded, so the dir holds one
+      val idxDir = stageDir("q83_rag_idx", dir)
       // OVERLAP the independent offline and online halves (guide §2.6):
       // the BM25 lexical chain doesn't read the index, so it
       // materializes on a background thread while the index build +
@@ -1786,7 +1794,8 @@ object SparkEntry {
       }(scala.concurrent.ExecutionContext.global)
       Pq.saveIndexVersioned(
         Pq.buildIndex(emb, "id", "v", Similarity.planes(8, 64), pqCb), idxDir)
-      val (_, idx) = Pq.loadIndexVersioned(s, idxDir)
+      val (loaded, idx) = Pq.loadIndexVersioned(s, idxDir)
+      Versioned.pruneVersions(s, idxDir, keep = 0, asOf = Some(loaded))
       val sem = Pq.searchIndex(idx, qEmb, "id", "v", k = 20, nProbe = 2)
       val lex = scala.concurrent.Await.result(lexF,
         scala.concurrent.duration.Duration.Inf)
@@ -2103,7 +2112,7 @@ object SparkEntry {
       // BpeSpec/UnigramSpec/WordpieceSpec hand cases and the q87/q112
       // trained-ladder goldens
       s"""SELECT tok, count(*) AS cnt
-         |FROM read_parquet('${stageDir("q87b_tokens", "sf0.01")}/*.parquet')
+         |FROM read_parquet('${stageDir("q87b_tokens", StageScale)}/*.parquet')
          |GROUP BY tok ORDER BY cnt DESC, tok LIMIT 30""".stripMargin)),
     // the tokenize-to-IDS surface a training pipeline feeds the model:
     // alphabet-first GPT-2-style vocabulary over the trained merges,
@@ -2130,7 +2139,7 @@ object SparkEntry {
         .orderBy(col("tok_id"))
     }, Some(
       s"""SELECT tok_id, count(*) AS cnt
-         |FROM read_parquet('${stageDir("q87c_ids", "sf0.01")}/*.parquet')
+         |FROM read_parquet('${stageDir("q87c_ids", StageScale)}/*.parquet')
          |GROUP BY tok_id ORDER BY tok_id""".stripMargin)),
     // WordPiece (BERT) tokenizer: likelihood-ratio merges over
     // position-aware symbols, greedy longest-match encode. The trainer
@@ -2150,7 +2159,7 @@ object SparkEntry {
         .orderBy(col("piece"))
     }, Some(
       s"""WITH p AS (SELECT piece
-         |  FROM read_parquet('${stageDir("q161_pieces", "sf0.01")}/*.parquet')),
+         |  FROM read_parquet('${stageDir("q161_pieces", StageScale)}/*.parquet')),
          |t AS (SELECT count(*) AS tt FROM p)
          |SELECT piece, count(*) AS n,
          |  CAST(count(*) * 1000000 // tt AS BIGINT) AS share_ppm
@@ -3470,7 +3479,7 @@ object SparkEntry {
     }, Some(
       s"""WITH g AS (SELECT source, count(*) AS n_ids,
          |  CAST(sum(CASE WHEN id = -1 THEN 1 ELSE 0 END) AS BIGINT) AS n_unk
-         |  FROM read_parquet('${stageDir("q156_ids", "sf0.01")}/*.parquet')
+         |  FROM read_parquet('${stageDir("q156_ids", StageScale)}/*.parquet')
          |  GROUP BY source)
          |SELECT source, n_ids, n_unk, n_unk * 1000000 // n_ids AS unk_ppm
          |FROM g ORDER BY source""".stripMargin)),
@@ -4362,7 +4371,7 @@ object SparkEntry {
          |  FROM (SELECT unnest(regexp_extract_all(lower(text),
          |    '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS w FROM documents)),
          |tok AS (SELECT tokenizer, count(*) AS n_tokens
-         |  FROM read_parquet('${q126StageDir("sf0.01")}/*.parquet') GROUP BY 1)
+         |  FROM read_parquet('${q126StageDir(StageScale)}/*.parquet') GROUP BY 1)
          |SELECT tokenizer, n_words, n_chars, n_tokens,
          |  n_tokens * 1000000 // n_words AS tokens_per_word_ppm,
          |  n_chars * 1000000 // n_tokens AS chars_per_token_ppm
@@ -4774,7 +4783,7 @@ object SparkEntry {
         .orderBy(col("cnt").desc, col("piece")).limit(30)
     }, Some(
       s"""SELECT piece, count(*) AS cnt
-         |FROM read_parquet('${stageDir("q113_pieces", "sf0.01")}/*.parquet')
+         |FROM read_parquet('${stageDir("q113_pieces", StageScale)}/*.parquet')
          |GROUP BY piece ORDER BY cnt DESC, piece LIMIT 30""".stripMargin)),
     // contrastive pair mining: pos (near-dup) + hard-neg (same cell,
     // mid-similarity) pairs for embedding-model training data
@@ -5945,9 +5954,12 @@ object SparkEntry {
    *
    * Given up with the pid: two JVMs of one user that run the same
    * staged query at the same scale at the same time share a path and
-   * can clobber each other's stage. No procedure here does that —
-   * Verify runs at sf0.01, Bench at sf0.1, and sbt runs are never
-   * concurrent. */
+   * can clobber each other's stage. q83's index dir is shared the same
+   * way, and there a collision fails the query outright: the loser of
+   * the version-pointer race throws, or one run's prune deletes the
+   * version the other run's lazy search still reads. No procedure here
+   * does that — Verify runs at sf0.01, Bench at sf0.1, and sbt runs are
+   * never concurrent. */
   private[graft] val stageRoot: String = {
     val tmp = sys.props.getOrElse("java.io.tmpdir", "/tmp").stripSuffix("/")
     val user = sys.props.getOrElse("user.name", "nouser")
@@ -5956,6 +5968,11 @@ object SparkEntry {
 
   private[graft] def stageDir(name: String, dir: String): String =
     s"$stageRoot/${name}_${new java.io.File(dir).getName}"
+
+  /** Stands for the sf basename in a staged-encode oracle's stage path
+   * (`stageDir(name, StageScale)`). A query writes its stage at the scale
+   * it runs on, which only the caller knows: [[oracleSql]] fills it in. */
+  private[graft] final val StageScale = "{sf}"
 
   /** Read a staged table back, refusing an absent or half-written
    * stage: the parquet job committer writes `_SUCCESS` last, so its

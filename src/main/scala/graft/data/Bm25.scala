@@ -25,9 +25,7 @@ import org.apache.spark.sql.functions._
  * plan, no driver action, and `PlanSpec` pins that the corpus explodes
  * exactly once. Like the ANN entry points, a `broadcastQueries =
  * false` spelling swaps the query side to a shuffle-hash join for
- * corpus-sized query batches. For train-once/score-many, [[fit]] +
- * [[saveModel]] materialize postings/df/constants instead and
- * [[loadModel]] scoring joins the precomputed df table.
+ * corpus-sized query batches.
  *
  * Oracle parity: per-(query, doc, term) score components are rounded to
  * integer MICRO-UNITS and summed as longs, so the final score is exact
@@ -72,63 +70,6 @@ object Bm25 {
       .select(size(TextFunctions.tokens(lower(col(textCol)))).as("__dl"))
       .agg(count(lit(1)).cast("double").as("__n"), avg(col("__dl")).as("__avgdl")))
 
-  /** A fitted BM25 "model": the corpus statistics scoring needs —
-   * postings `terms(doc_id, dl, term, tf)`, document frequencies
-   * `stats(term, df)`, and the 1-row `consts(__n, __avgdl)`. Loaded
-   * from [[loadModel]] they are three parquet scans of precomputed
-   * tables — no corpus re-tokenization at all, which is the point of
-   * train-once/score-many. (The one-shot [[bm25TopK]] never builds
-   * `stats` at all — it counts df post-join; the model carries the
-   * full table so scoring jobs pay |postings of matched terms|, not a
-   * fit.) */
-  final case class Bm25Model(terms: DataFrame, stats: DataFrame,
-      consts: DataFrame)
-
-  /** Build the scoring statistics from the corpus — one tokenize +
-   * term-keyed aggregation for the postings, one term rollup over them
-   * for df, one map-only pass for the constants. Meant to be
-   * [[saveModel]]ed: each table materializes once at save and scoring
-   * never touches the corpus again. */
-  def fit(corpus: DataFrame, idCol: String, textCol: String): Bm25Model = {
-    val terms = docTerms(corpus, idCol, textCol)
-    val stats = terms.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    Bm25Model(terms, stats, docLenConsts(corpus, textCol))
-  }
-
-  /** Persist the fitted statistics: postings, df table, and the
-   * materialized 1-row constants as plain parquet. tf/df/dl are
-   * integer-exact and (N, avgdl) round-trip as the same doubles, so a
-   * [[loadModel]]ed model scores BIT-IDENTICALLY to the fresh fit. At
-   * web scale the postings table is corpus-sized — it lives in the
-   * warehouse like any table (bucket it by `term` to make the score
-   * join shuffle-free); the model dir is just its address. */
-  def saveModel(model: Bm25Model, dir: String): Unit = {
-    model.terms.write.mode("overwrite").parquet(s"$dir/terms")
-    model.stats.write.mode("overwrite").parquet(s"$dir/stats")
-    model.consts.coalesce(1).write.mode("overwrite").parquet(s"$dir/consts")
-  }
-
-  def loadModel(spark: org.apache.spark.sql.SparkSession, dir: String): Bm25Model =
-    Bm25Model(
-      spark.read.parquet(s"$dir/terms"),
-      spark.read.parquet(s"$dir/stats"),
-      broadcast(spark.read.parquet(s"$dir/consts")))
-
-  /** Publish as an immutable `dir/v<N>` + pointer flip
-   * ([[Versioned.publish]]) — rebuild the postings on a schedule while
-   * serving queries from the published snapshot. */
-  def saveModelVersioned(model: Bm25Model, dir: String): Long =
-    Versioned.publish(model.terms.sparkSession, dir)(saveModel(model, _))
-
-  /** Load the currently-published version: `(version, model)`. */
-  def loadModelVersioned(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Long, Bm25Model) = {
-    val v = Versioned.latestVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"no model published under $dir (write one with Bm25.saveModelVersioned)"))
-    (v, loadModel(spark, s"$dir/v$v"))
-  }
-
   /**
    * BM25 top-k: for each query row (`idCol`, `textCol`), the `k`
    * highest-scoring corpus documents. Query term frequency is ignored
@@ -159,9 +100,8 @@ object Bm25 {
     // ~ln(2) of idf signal but O(corpus) postings, and its (query, term)
     // window partition — like the equivalent join fan-out — is one
     // task; dropping ultra-high-df terms caps that skew. Default 1.0
-    // keeps textbook BM25 (what the oracles pin). Here the drop runs
-    // after the window (fan-out already paid); score-many jobs should
-    // prefer the model path, which prunes BEFORE the join.
+    // keeps textbook BM25 (what the oracles pin). The drop runs after
+    // the window (fan-out already paid): df is only known post-join.
     val joined = joinTerms(docTerms(corpus, idCol, textCol), queries, idCol,
         textCol, broadcastQueries)
       .crossJoin(docLenConsts(corpus, textCol))
@@ -169,31 +109,6 @@ object Bm25 {
         count(lit(1)).over(Window.partitionBy(col("query_id"), col("term"))))
     scoreJoined(dropStopTerms(joined, maxDfFrac), k, k1, b)
   }
-
-  /** [[bm25TopK]] against a pre-fitted (possibly [[loadModel]]ed)
-   * [[Bm25Model]] — the score-many half of train-once/score-many.
-   * Here df comes from the model's precomputed `stats` table (joined
-   * on the term key), bit-identical to the one-shot window spelling —
-   * `Bm25Spec` pins the two paths against each other. `maxDfFrac` < 1
-   * prunes stopword terms from the postings BEFORE the query join (df
-   * is already known here), so the skewed fan-out never materializes
-   * at all. */
-  def bm25TopK(
-      model: Bm25Model,
-      queries: DataFrame,
-      idCol: String,
-      textCol: String,
-      k: Int,
-      k1: Double,
-      b: Double,
-      broadcastQueries: Boolean,
-      maxDfFrac: Double): DataFrame =
-    scoreJoined(
-      joinTerms(
-        dropStopTerms(model.terms.join(model.stats, "term")
-          .crossJoin(model.consts), maxDfFrac),
-        queries, idCol, textCol, broadcastQueries),
-      k, k1, b)
 
   /** Keep rows whose term df is within `maxDfFrac` of the corpus size
    * (`df` and `__n` must be in scope); 1.0 = identity. */
@@ -205,15 +120,14 @@ object Bm25 {
   }
 
   /** Explode the queries to distinct terms and meet the postings at the
-   * term key — shared by the window and stats-table spellings. */
+   * term key. */
   private def joinTerms(postings: DataFrame, queries: DataFrame,
       idCol: String, textCol: String, broadcastQueries: Boolean): DataFrame = {
     // distinct across ROWS as well as within one (array_distinct): a
     // resubmitted duplicate query row must not double the joined
-    // postings — the one-shot path derives df from a count over them,
-    // so duplicates would inflate df and corrupt the ranking (the
-    // model path would merely duplicate output rows). The distinct is
-    // on the small query side, before any broadcast.
+    // postings — df is a count over them, so duplicates would inflate
+    // df and corrupt the ranking. The distinct is on the small query
+    // side, before any broadcast.
     val qterms = queries.select(col(idCol).as("query_id"),
       explode(array_distinct(
         TextFunctions.tokens(lower(col(textCol))))).as("term"))

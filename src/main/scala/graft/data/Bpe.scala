@@ -33,8 +33,7 @@ import org.apache.spark.sql.functions._
  * Encoding ([[encode]]) is map-only: the ranked merge list rides the UDF
  * closure (KBs — vocab-sized, like broadcast codebooks), each word is
  * segmented by applying merges in rank order, and no shuffle touches the
- * corpus. Train-once/encode-many persistence mirrors the other models:
- * [[saveMerges]]/[[loadMerges]] round-trip the ranked list as parquet.
+ * corpus.
  */
 object Bpe {
 
@@ -129,7 +128,7 @@ object Bpe {
 
   /** [[trainMerges]] from a PRECOMPUTED `(word, n)` type table — lets a
    * pipeline that also needs the types for other steps (e.g.
-   * [[vocabulary]]'s alphabet) pay the corpus aggregation ONCE and
+   * [[vocabularyFromTypes]]'s alphabet) pay the corpus aggregation ONCE and
    * share it (checkpoint the table at the call site); semantics are
    * exactly [[trainMerges]]'. Callers should pass a MATERIALIZED table
    * (checkpointed or cached) — the guard count and the collect below
@@ -342,9 +341,10 @@ object Bpe {
   }
 
   /**
-   * The tokenizer VOCABULARY induced by a corpus + merge ladder — the
-   * id space a training pipeline feeds the model: base alphabet first
-   * (every distinct code-point symbol of the corpus word types, UTF-8
+   * The tokenizer VOCABULARY induced by a `(word, n)` type table
+   * ([[wordTypes]]) + merge ladder — the id space a training pipeline
+   * feeds the model: base alphabet first
+   * (every distinct code-point symbol of the word types, UTF-8
    * binary order, ids `0..A-1`), then one entry per merge in rank order
    * — the GPT-2 layout, which DEDUPES: two merges whose concatenations
    * spell the same token (impossible for trained ladders' first
@@ -352,20 +352,14 @@ object Bpe {
    * which hand-built ladders [[encode]] accepts can contain) collapse
    * to the FIRST rank's id, keeping ids dense — no dead rows in an
    * embedding matrix sized by vocab length, and `encodeIds`' token→id
-   * map has exactly one id per token. One corpus aggregation (the
-   * [[wordTypes]] pass + a distinct over its exploded symbols,
-   * alphabet-sized collect); deterministic, so the id assignment is
-   * stable across partitionings. Returns `(id, token)` pairs.
+   * map has exactly one id per token. Takes the type table rather than
+   * the corpus so that a tokenize-to-ids pipeline, which needs BOTH the
+   * merges ([[trainMergesFromTypes]]) and the alphabet, runs the
+   * corpus-wide [[wordTypes]] aggregation once. A distinct over the
+   * exploded symbols, alphabet-sized collect; deterministic, so the id
+   * assignment is stable across partitionings. Returns `(id, token)`
+   * pairs.
    */
-  def vocabulary(
-      docs: DataFrame, textCol: String,
-      merges: Seq[(String, String)]): Seq[(Int, String)] =
-    vocabularyFromTypes(wordTypes(docs, textCol), merges)
-
-  /** [[vocabulary]] from a precomputed `(word, n)` type table — the
-   * shared-pass twin of [[trainMergesFromTypes]]: a tokenize-to-ids
-   * pipeline needs BOTH the merges and the alphabet, and each used to
-   * re-run the corpus-wide [[wordTypes]] aggregation. */
   def vocabularyFromTypes(
       types: DataFrame,
       merges: Seq[(String, String)]): Seq[(Int, String)] = {
@@ -389,7 +383,7 @@ object Bpe {
 
   /**
    * Map-only encode to VOCABULARY IDS: [[encode]]'s subword stream
-   * mapped through the `(token → id)` table ([[vocabulary]] — rides the
+   * mapped through the `(token → id)` table ([[vocabularyFromTypes]] — rides the
    * closure, vocab-sized); symbols outside the vocabulary (characters
    * never seen in the training corpus) become `unkId`, the standard
    * UNK policy. Adds `outCol` (array<int>).
@@ -405,34 +399,4 @@ object Bpe {
         .map(t => byToken.getOrElse(t, unkId)))
     docs.withColumn(outCol, segAll(TextFunctions.bpeTokens(col(textCol))))
   }
-
-  /** Inverse of [[encodeIds]] under the same vocabulary: ids map back to
-   * their spellings (`unkId` and unknown ids become `unkToken`) and
-   * concatenate. Because merges never cross pre-token boundaries,
-   * `decodeIds(encodeIds(text))` reproduces the concatenated pre-token
-   * stream exactly whenever every piece is in-vocabulary (spec-pinned)
-   * — the round-trip a tokenizer release is validated with. Map-only;
-   * the id→token table rides the closure (vocab-scale). */
-  def decodeIds(
-      docs: DataFrame, idsCol: String, vocab: Seq[(Int, String)],
-      unkToken: String = "<unk>", outCol: String = "decoded"): DataFrame = {
-    val byId: Map[Int, String] = vocab.toMap
-    val dec = udf((ids: Seq[Int]) =>
-      ids.map(i => byId.getOrElse(i, unkToken)).mkString)
-    docs.withColumn(outCol, dec(col(idsCol)))
-  }
-
-  /** Persist the ranked merge list (train-once/encode-many, like
-   * [[NgramLm.saveModel]] / [[Bm25.saveModel]]). */
-  def saveMerges(
-      spark: SparkSession, merges: Seq[(String, String)],
-      path: String): Unit =
-    mergesDf(spark, merges).repartition(1).write.mode("overwrite").parquet(path)
-
-  /** Load a persisted merge list; ranked order restored by the explicit
-   * rank column (never by file order). Bounded collect: nMerges rows. */
-  def loadMerges(spark: SparkSession, path: String): Seq[(String, String)] =
-    spark.read.parquet(path).orderBy(col("rank"))
-      .select(col("l"), col("r")).collect()
-      .map(row => (row.getString(0), row.getString(1))).toSeq
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
  *   1. C4 line/document quality filtering ([[TextFunctions.c4CleanText]] /
  *      [[TextFunctions.c4Keep]]) — drop boilerplate lines, then junk docs;
  *   2. PII redaction on the surviving text ([[TextFunctions.redactPii]]);
- *   3. language ID + quality score tagging ([[TextFunctions.langId]] /
+ *   3. language ID + quality score tagging ([[TextFunctions.langIdFromTokens]] /
  *      [[TextFunctions.qualityScore]]);
  *   4. exact deduplication on the normalized fingerprint of the REDACTED
  *      text (smallest id survives — dedup after redaction so docs equal
@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
  * Every stage is a narrow codegen'd projection or one keyed shuffle
  * (the fingerprint-keyed window exchange, the only one at scale) — the
  * whole prepare is TWO stages at any scale. Near-duplicate clustering is deliberately not
- * inlined here: run [[Dedup.dedupCorpus]] on the output when shingle-level
- * near-dup is wanted (it is its own multi-stage pipeline).
+ * inlined here: run [[Dedup.minhashNearDups]] + [[Dedup.deduplicate]] on
+ * the output when shingle-level near-dup is wanted (it is its own
+ * multi-stage pipeline).
  *
  * Output: id, text (cleaned+redacted), lang, quality, n_words, split.
  */
@@ -142,7 +143,8 @@ object Corpus {
    * same strings the model will see. Pure string concat: map-only at
    * any scale, and mirrorable in ANSI SQL. The prompt part ends in a
    * newline, so whitespace tokenization of prompt ⊕ response equals
-   * tokenization of [[renderChat]] — counts add up exactly.
+   * tokenization of the rendered example (their concatenation) — counts
+   * add up exactly.
    */
   def chatPromptText(system: org.apache.spark.sql.Column,
       user: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -153,12 +155,6 @@ object Corpus {
   def chatResponseText(
       assistant: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     concat(assistant, lit("\n<|end|>"))
-
-  /** Full rendered chat example = prompt region ⊕ response region. */
-  def renderChat(system: org.apache.spark.sql.Column,
-      user: org.apache.spark.sql.Column,
-      assistant: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    concat(chatPromptText(system, user), chatResponseText(assistant))
 
   /** Whitespace token count for chat regions, EMPTY-TOKEN-DROPPING:
    * `trim` (here and in every ANSI mirror) strips only spaces, so a
@@ -232,32 +228,6 @@ object Corpus {
         least(col("col") + chunkTokens, size(col("__t"))).as("tok_end"),
         concat_ws(" ", slice(col("__t"), col("col") + 1, lit(chunkTokens)))
           .as("chunk_text"))
-  }
-
-  /**
-   * Drop every document the shingle-overlap check
-   * ([[Dedup.contamination]]) flags against `benchmark` at ≥
-   * `minContainment` — run on a prepared corpus before shipping the
-   * train split (GPT-3 appendix C decontamination). Anti-join on id, so
-   * clean documents pass through untouched; one hash-keyed join + one
-   * rollup + one anti-join, nothing broadcast.
-   */
-  def decontaminate(
-      prepared: DataFrame,
-      benchmark: DataFrame,
-      idCol: String = "id",
-      textCol: String = "text",
-      benchTextCol: String = "text",
-      shingleN: Int = 3,
-      minContainment: Double = 0.2): DataFrame = {
-    val flagged = Dedup.contamination(
-        prepared.select(col(idCol), col(textCol)),
-        // benchmark ids are never read — only its shingle-hash set
-        benchmark.select(lit(0L).as(idCol), col(benchTextCol).as(textCol)),
-        idCol, textCol, shingleN)
-      .filter(col("containment") >= minContainment)
-      .select(col("doc_id").as(idCol))
-    prepared.join(flagged, Seq(idCol), "left_anti")
   }
 
   /**

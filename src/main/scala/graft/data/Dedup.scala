@@ -352,8 +352,8 @@ object Dedup {
 
   /**
    * SimHash near-dup pairs within a HAMMING BALL — the "small Hamming
-   * distance" tier [[simhashClusters]]' exact-equality grouping cannot
-   * see. Pigeonhole chunking (Manku, Jain & Das Sarma, WWW 2007): the
+   * distance" tier that an exact-equality grouping on the simhash
+   * cannot see. Pigeonhole chunking (Manku, Jain & Das Sarma, WWW 2007): the
    * `bits`-bit simhash splits into `maxHamming + 1` chunks, and any two
    * hashes within Hamming distance `maxHamming` must agree EXACTLY on at
    * least one chunk — so candidates are the pairs sharing a
@@ -379,7 +379,7 @@ object Dedup {
    * bit a real majority vote — see [[simhashFor]]). Pairs of
    * IDENTICAL simhashes are included (hamming 0) — callers wanting only
    * the near-miss tier can filter `hamming > 0` or dedup exact matches
-   * first ([[simhashClusters]]).
+   * first.
    */
   /** Validate a (bits, maxHamming) pigeonhole configuration and return
    * (nChunks, chunk width). Shared by [[simhashNearDups]] and
@@ -506,14 +506,6 @@ object Dedup {
         firstAgreeingChunk(col("sh_a"), col("sh_b"), nChunks, w, bits))
       .select(col("id_a"), col("id_b"), col("sh_a"), col("sh_b"), col("hamming"))
   }
-
-  /** SimHash duplicate clusters: docs sharing an identical simhash. */
-  def simhashClusters(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    docs
-      .select(col(idCol).as("id"), simhash(col(textCol)).as("simhash"))
-      .groupBy(col("simhash"))
-      .agg(count(lit(1)).as("n_docs"), min(col("id")).as("min_id"))
-      .filter(col("n_docs") > 1)
 
   /**
    * Exact n-gram-Jaccard near-dup pairs within a blocking key (quadratic
@@ -803,65 +795,6 @@ object Dedup {
     docs.join(drop, Seq(idCol), "left_anti")
   }
 
-  /**
-   * One-call corpus shrink: exact-duplicate removal (normalized
-   * fingerprint, keeps min id per fingerprint) followed by MinHash-LSH
-   * near-dup clustering and survivor selection. With `maxHamming ≥ 0`
-   * the SimHash Hamming-ball pairs ([[simhashNearDups]], `simhashBits`
-   * wide — 64 recommended at corpus scale) union into the clustering,
-   * catching token-order rewrites whose shingle Jaccard is near zero —
-   * the same two-tier contract as [[incrementalDedup]].
-   *
-   * `preferOrder` switches BOTH survivor selections from min-id to
-   * best-by-preference ([[deduplicateBest]] — e.g. longest text, top
-   * quality): one consistent policy across the exact and near-dup
-   * stages. Empty (default) keeps the historical min-id contract.
-   *
-   * The exact stage FIRST is load-bearing at scale: identical documents
-   * all land in the same LSH bands, so ten thousand copies of one page
-   * would meet quadratically in the band join. Collapsing them to one
-   * representative beforehand (a narrow hash groupBy) caps that blow-up;
-   * the near-dup stage then works on distinct content only.
-   */
-  def dedupCorpus(
-      docs: DataFrame,
-      idCol: String,
-      textCol: String,
-      shingleN: Int = 3,
-      k: Int = 16,
-      bands: Int = 4,
-      threshold: Double = 0.5,
-      maxHamming: Int = -1,
-      simhashBits: Int = 28,
-      preferOrder: Seq[Column] = Nil): DataFrame = {
-    val fp = TextFunctions.fingerprint(col(textCol))
-    // exact stage: min id per fingerprint by default; with a preference,
-    // the best member of each fingerprint class (same policy as the
-    // near-dup stage below — one consistent survivor rule end to end)
-    val exact =
-      if (preferOrder.isEmpty) {
-        val keepExact = docs
-          .withColumn("__fp", fp)
-          .groupBy(col("__fp"))
-          .agg(min(col(idCol)).as(idCol))
-          .drop("__fp")
-        docs.join(keepExact, Seq(idCol), "left_semi")
-      } else
-        deduplicateBest(docs, idCol,
-          docs.select(col(idCol).as("id"), fp.as("cluster")), preferOrder)
-    val jaccardPairs = minhashNearDups(exact, idCol, textCol, shingleN, k,
-        bands, threshold)
-      .select(col("id_a"), col("id_b"))
-    val pairs =
-      if (maxHamming >= 0)
-        jaccardPairs.union(
-          simhashNearDups(exact, idCol, textCol, simhashBits, maxHamming)
-            .select(col("id_a"), col("id_b")))
-      else jaccardPairs
-    if (preferOrder.isEmpty) deduplicate(exact, idCol, pairs)
-    else deduplicateBest(exact, idCol, connectedComponents(pairs), preferOrder)
-  }
-
   // --------------------------------------------- continuous-ingest dedup
 
   /**
@@ -916,63 +849,6 @@ object Dedup {
       .withColumn("sig",
         when(size(col("sh")) > 0, sigOf(col("sh"))))
       .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-  }
-
-  /** Persist a signature table as parquet; `append = true` adds a batch's
-   * survivors after [[incrementalDedup]] admits them (the ingest cycle:
-   * admit, then append `signatures(survivors)`). Appends must use the
-   * SAME [[signatures]] configuration (`shingleN`, `k`, `simhashBits`)
-   * as the store — mixed widths in one store are undetectable (the
-   * `simh_bits` check samples one row). */
-  def saveSignatureStore(sigs: DataFrame, path: String,
-      append: Boolean = false): Unit =
-    sigs.write.mode(if (append) "append" else "overwrite").parquet(path)
-
-  /** Load a persisted signature store written by [[saveSignatureStore]]. */
-  def loadSignatureStore(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /**
-   * Compact an append-mode signature store: `saveSignatureStore(append =
-   * true)` accretes one parquet file-set per admitted batch FOREVER — at
-   * crawl-ingest cadence (a batch an hour) the store becomes thousands
-   * of small files and every probe pays the listing + open cost. This
-   * rewrites the store into `numFiles` files (default: the session's
-   * parallelism) without changing a row, and returns the row count.
-   *
-   * The swap is staged (write `<path>.compacting`, rename the live store
-   * aside, rename the compacted set in, drop the old) because parquet
-   * cannot self-overwrite a path it is reading. NOT atomic — run it from
-   * the single ingest writer between admits (the same single-publisher
-   * contract as [[Versioned.publish]]); a crash mid-swap leaves either
-   * the untouched store plus a stale `.compacting` (harmless — retried
-   * compactions delete it) or the store under `<path>.precompact`
-   * (recover by renaming it back). Pipelines wanting crash-safe
-   * compaction should publish each store as an immutable version through
-   * [[Versioned.publish]] + [[Versioned.pruneVersions]] instead — the
-   * pointer flip is then the only mutation.
-   */
-  def compactSignatureStore(spark: org.apache.spark.sql.SparkSession,
-      path: String, numFiles: Int = 0): Long = {
-    import org.apache.hadoop.fs.Path
-    require(numFiles >= 0, s"numFiles must be >= 0, got $numFiles")
-    val n = if (numFiles > 0) numFiles else spark.sparkContext.defaultParallelism
-    val hfs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = new Path(path)
-    val staged = new Path(path + ".compacting")
-    val old = new Path(path + ".precompact")
-    if (hfs.exists(staged)) hfs.delete(staged, true) // a crashed prior attempt
-    val df = spark.read.parquet(path).repartition(n)
-    df.write.mode("overwrite").parquet(staged.toString)
-    val rows = spark.read.parquet(staged.toString).count()
-    if (hfs.exists(old)) hfs.delete(old, true)
-    if (!hfs.rename(live, old) || !hfs.rename(staged, live))
-      throw new IllegalStateException(
-        s"compaction swap failed under $path — concurrent writer? " +
-          "compactSignatureStore requires the single ingest writer")
-    hfs.delete(old, true)
-    rows
   }
 
   /**
@@ -1178,13 +1054,14 @@ object Dedup {
    *  3. near-dup within batch: remaining docs cluster via the band join
    *     (plus the Hamming pairs when enabled) + connected components;
    *     each cluster keeps its min id — the same survivor rule as
-   *     [[dedupCorpus]].
+   *     [[deduplicate]].
    *
    * Returns the surviving rows of `newDocs` (original columns); append
    * `signatures(survivors)` to the store to complete the cycle. Accepted
    * docs are immutable — an admit never revokes one (the contract that
-   * distinguishes incremental ingest from re-running [[dedupCorpus]] on
-   * the union, which could instead keep a new doc and drop an old one).
+   * distinguishes incremental ingest from re-running batch dedup
+   * ([[minhashNearDups]] + [[deduplicate]]) on the union, which could
+   * instead keep a new doc and drop an old one).
    *
    * The call EAGERLY materializes the batch's signature table (cached,
    * lineage kept); the returned plan references that cache, so

@@ -35,14 +35,14 @@ import org.apache.spark.sql.functions._
  * on identical doubles — the same cross-engine contract as
  * [[NgramLm]]'s q78 oracle), after which every per-doc number is
  * integer arithmetic, bit-identical across engines and partitionings.
- * [[importanceResample]] is the deterministic top-k spelling (highest
- * mean ratio first, doc id tie-break); the paper's Gumbel-noise
+ * Selection is left to the caller: a top-k on `mean_micro` (doc id
+ * tie-break) is the deterministic spelling; the paper's Gumbel-noise
  * sampling adds RNG that cannot be pinned cross-engine — compose
  * [[Sampling.weightedSample]] on `exp(score)` where sampled selection
  * is wanted.
  *
  * Scale shape: two corpus-scan aggs (fit) + one corpus-scan agg with a
- * broadcast join (score), one TakeOrdered top-k. Nothing corpus-sized
+ * broadcast join (score). Nothing corpus-sized
  * is ever broadcast, collected, or windowed globally.
  */
 object Dsir {
@@ -99,14 +99,4 @@ object Dsir {
         sum(col("cnt") * col("lam_micro")).as("score_micro"))
       .select(col("id").as(idCol), col("n_tokens"), col("score_micro"),
         expr("score_micro div n_tokens").as("mean_micro"))
-
-  /** Deterministic DSIR selection: the `k` raw docs with the highest
-   * per-token mean log-ratio (doc id tie-break) — one TakeOrdered. */
-  def importanceResample(docs: DataFrame, idCol: String, textCol: String,
-      target: DataFrame, buckets: Int, k: Int): DataFrame = {
-    val ratios = fitLogRatios(docs, target, textCol, buckets)
-    scoreDocs(docs, idCol, textCol, ratios, buckets)
-      .orderBy(col("mean_micro").desc, col(idCol))
-      .limit(k)
-  }
 }

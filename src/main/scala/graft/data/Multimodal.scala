@@ -8,15 +8,12 @@ import org.apache.spark.sql.functions._
  * columns with typed metadata, plus decode / feature-extract / frame-sample
  * stages.
  *
- * Decode tiers: REAL image decode for the formats the JDK itself ships
- * readers for — PNG/JPEG/GIF/BMP via `javax.imageio` ([[ImageIoCodec]],
- * no external codec library needed) — and a clearly-marked deterministic
- * stub ([[StubCodec]], the default) for synthetic/opaque payloads and as
- * the stand-in for codecs the container genuinely lacks (audio/video).
- * Everything Spark-side — schema, binary expressions, batch-shaped
- * `mapPartitions` pipeline, partitioning — is identical for both; in
- * production, swap in a JNI/javacv codec the same way and the plan shape
- * does not change.
+ * Decode is REAL for the image formats the JDK itself ships readers for
+ * — PNG/JPEG/GIF/BMP via `javax.imageio`, no external codec library
+ * ([[dHashes]], [[videoSignatures]]) — and for 16-bit PCM WAV
+ * ([[audioFeatures]]). Every decode is a batch-shaped `mapPartitions`
+ * over typed rows; in production, swap in a JNI/javacv codec the same
+ * way and the plan shape does not change.
  *
  * Column-level ops stay native (codegen'd binary/hex expressions); the
  * per-row decode runs as a typed `mapPartitions` so the (expensive) codec
@@ -35,93 +32,6 @@ object Multimodal {
 
   /** Typed row for the media pipeline. */
   case class MediaRow(media_id: Long, format: String, content: Array[Byte])
-
-  /** Extracted features (fixed-dim, like an image-encoder output). */
-  case class MediaFeatures(media_id: Long, format: String, byte_len: Int,
-      features: Array[Double])
-
-  /** A per-row media decoder pluggable into [[decodeFeatures]]. Must be
-   * serializable: instances ship to executors inside the mapPartitions
-   * closure. */
-  trait ImageCodec extends Serializable {
-    def featureDim: Int
-    def decodeImage(bytes: Array[Byte]): Array[Double]
-  }
-
-  /**
-   * REAL image decode via the JDK's built-in `javax.imageio` readers
-   * (PNG, JPEG, GIF, BMP — no external dependency). Features (dim 8):
-   * `[width, height, aspect, meanR, meanG, meanB, meanLuma, stdLuma]`
-   * with channel means normalized to [0, 1] (luma = Rec.601). An
-   * UNDECODABLE payload (not an image, truncated, unsupported format)
-   * maps to the all-zero vector — `width == 0` is the deterministic
-   * "no decode" marker (every real decode has width ≥ 1), so corrupt
-   * rows filter instead of failing a 100 TB job.
-   */
-  object ImageIoCodec extends ImageCodec {
-    val FeatureDim = 8
-    override def featureDim: Int = FeatureDim
-
-    override def decodeImage(bytes: Array[Byte]): Array[Double] = {
-      // MemoryCacheImageInputStream: the bytes are already in memory —
-      // the ImageIO.read(InputStream) overload would spool every payload
-      // through a temp FILE (FileCacheImageInputStream), per-row disk
-      // I/O on the hot decode path. NonFatal, not just IOException:
-      // malformed-but-recognized images make the JDK readers throw
-      // unchecked exceptions too, and one corrupt row must not fail a
-      // 100 TB job.
-      val img =
-        try javax.imageio.ImageIO.read(
-          new javax.imageio.stream.MemoryCacheImageInputStream(
-            new java.io.ByteArrayInputStream(bytes)))
-        catch { case scala.util.control.NonFatal(_) => null }
-      if (img == null || img.getWidth <= 0 || img.getHeight <= 0)
-        return new Array[Double](FeatureDim)
-      val w = img.getWidth
-      val h = img.getHeight
-      var sr = 0.0; var sg = 0.0; var sb = 0.0; var sl = 0.0; var sl2 = 0.0
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val rgb = img.getRGB(x, y)
-          val r = (rgb >> 16) & 0xff
-          val g = (rgb >> 8) & 0xff
-          val b = rgb & 0xff
-          val l = 0.299 * r + 0.587 * g + 0.114 * b
-          sr += r; sg += g; sb += b; sl += l; sl2 += l * l
-          x += 1
-        }
-        y += 1
-      }
-      val n = (w.toLong * h).toDouble
-      val meanL = sl / n
-      Array(w.toDouble, h.toDouble, w.toDouble / h,
-        sr / n / 255.0, sg / n / 255.0, sb / n / 255.0, meanL / 255.0,
-        math.sqrt(math.max(0.0, sl2 / n - meanL * meanL)) / 255.0)
-    }
-  }
-
-  /** Deterministic stand-in for codecs the container lacks (audio/video;
-   * also the default for synthetic byte payloads): derives a fixed-dim
-   * feature vector from byte statistics so tests are reproducible. */
-  object StubCodec extends ImageCodec {
-    val FeatureDim = 8
-    override def featureDim: Int = FeatureDim
-
-    /** STUB — replace with real decode + model encode (see
-     * [[ImageIoCodec]] for the real-image tier). */
-    override def decodeImage(bytes: Array[Byte]): Array[Double] = {
-      val f = new Array[Double](FeatureDim)
-      var i = 0
-      while (i < bytes.length) {
-        f(i % FeatureDim) += (bytes(i) & 0xff) / 255.0
-        i += 1
-      }
-      if (bytes.length > 0) { var j = 0; while (j < FeatureDim) { f(j) /= math.max(1, (bytes.length + FeatureDim - 1 - j) / FeatureDim); j += 1 } }
-      f
-    }
-  }
 
   /** Opaque binary from a UTF-8 string (test-data synthesizer: stands in
    * for reading real media bytes). */
@@ -145,22 +55,6 @@ object Multimodal {
       transform(sequence(lit(0), nFrames - 1), f =>
         conv(hexStr.substr(f * (2 * stride) + 1, lit(2)), 16, 10).cast("int")))
       .otherwise(array().cast("array<int>"))
-  }
-
-  /** Batch decode via typed mapPartitions — the JVM mirror of a
-   * `mapInPandas` decode stage. One codec "session" per partition.
-   * Defaults to [[StubCodec]] (synthetic payloads, q28's value pin);
-   * pass [[ImageIoCodec]] for real PNG/JPEG/GIF/BMP bytes. */
-  def decodeFeatures(media: Dataset[MediaRow], codec: ImageCodec = StubCodec)(
-      implicit spark: SparkSession): Dataset[MediaFeatures] = {
-    import spark.implicits._
-    media.mapPartitions { rows =>
-      // per-partition codec init would go here (expensive in real life)
-      rows.map { r =>
-        MediaFeatures(r.media_id, r.format, r.content.length,
-          codec.decodeImage(r.content))
-      }
-    }
   }
 
   /** End-to-end demo source: documents table → media rows (binary payload
@@ -262,7 +156,8 @@ object Multimodal {
   /**
    * Batch perceptual hashing — the image analogue of
    * [[graft.data.Dedup.simhashNearDups]]'s text tier: decode each
-   * payload (JDK ImageIO, same NonFatal guard as [[ImageIoCodec]]),
+   * payload (JDK ImageIO; a NonFatal guard turns a corrupt payload into
+   * a flagged row),
    * dHash it, and feed the hashes to [[graft.data.Dedup.hammingPairs]]
    * for the near-dup join. Map-only `mapPartitions` (one codec session
    * per partition); corrupt rows come back `decoded = false` instead of
@@ -386,7 +281,7 @@ object Multimodal {
   }
 
   /** Parse a 16-bit PCM mono WAV payload and return exact-integer audio
-   * features — the audio face of [[decodeFeatures]]: `mapPartitions`
+   * features — the audio face of [[dHashes]]' image decode: `mapPartitions`
    * over the typed rows (one parser per partition, map-only at any
    * scale), returning `(sample_rate, n_samples, duration_ms, peak_abs,
    * zero_crossings)` as EXACT integers and `rms_milli` =

@@ -42,51 +42,9 @@ object NgramLm {
 
   /** A fitted model: `uni(w, c1)`, `bi(key, c2)`, `tri(key, c3)` with
    * space-joined string keys, plus the total token count. The tables
-   * are plain DataFrames; [[saveModel]]/[[loadModel]] give the
-   * train-once/score-many flow ([[saveModelVersioned]] for
-   * publish-while-serving). */
+   * are plain DataFrames. */
   final case class NgramModel(uni: DataFrame, bi: DataFrame, tri: DataFrame,
       nTokens: Long)
-
-  /** Persist a fitted model: the three count tables as parquet plus a
-   * 1-row meta table for the token total — no bespoke serialization,
-   * any engine can read the layout back. Counts are integer-exact, so
-   * a [[loadModel]]ed model scores bit-identically to the fresh fit.
-   * NOTE: `mode("overwrite")` rewrites IN PLACE; to republish over a
-   * model some live reader (e.g. a long-running scorer) already loaded,
-   * use [[saveModelVersioned]]. */
-  def saveModel(model: NgramModel, dir: String): Unit = {
-    val spark = model.uni.sparkSession
-    import spark.implicits._
-    model.uni.write.mode("overwrite").parquet(s"$dir/uni")
-    model.bi.write.mode("overwrite").parquet(s"$dir/bi")
-    model.tri.write.mode("overwrite").parquet(s"$dir/tri")
-    Seq(Tuple1(model.nTokens)).toDF("n_tokens").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  def loadModel(spark: org.apache.spark.sql.SparkSession, dir: String): NgramModel =
-    NgramModel(
-      spark.read.parquet(s"$dir/uni"),
-      spark.read.parquet(s"$dir/bi"),
-      spark.read.parquet(s"$dir/tri"),
-      spark.read.parquet(s"$dir/meta").head().getLong(0))
-
-  /** Publish the model as a new immutable `dir/v<N>` and flip the
-   * `dir/latest` pointer last ([[Versioned.publish]]) — the refit
-   * cadence of a CCNet-style filter without yanking count tables out
-   * from under in-flight scorers. Returns the version number. */
-  def saveModelVersioned(model: NgramModel, dir: String): Long =
-    Versioned.publish(model.uni.sparkSession, dir)(saveModel(model, _))
-
-  /** Load the currently-published version: `(version, model)`. */
-  def loadModelVersioned(spark: org.apache.spark.sql.SparkSession,
-      dir: String): (Long, NgramModel) = {
-    val v = Versioned.latestVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"no model published under $dir (write one with NgramLm.saveModelVersioned)"))
-    (v, loadModel(spark, s"$dir/v$v"))
-  }
 
   /** One row per token position: `(doc id, n, i, w1, w2, w3)` with
    * 0-based `i`, `w2`/`w1` null when the context does not exist, plus
@@ -188,21 +146,6 @@ object NgramLm {
         .as("logscore"))
       .withColumnRenamed("n", "n_tokens")
 
-  /** The one-call CCNet-style filter: fit on a `fraction` hash-sample,
-   * score everything, keep documents with mean log-score ≥
-   * `minLogScore` (drop the gibberish tail). */
-  def perplexityFilter(docs: DataFrame, idCol: String, textCol: String,
-      minLogScore: Double, fraction: Double = 1.0): DataFrame = {
-    val model =
-      if (fraction >= 1.0) fit(docs, idCol, textCol)
-      else fitSampled(docs, idCol, textCol, fraction = fraction)
-    docs.join(
-      scoreDocs(model, docs, idCol, textCol)
-        .filter(col("logscore") >= minLogScore)
-        .select(col(idCol)),
-      Seq(idCol), "left_semi")
-  }
-
   /**
    * CCNet perplexity BUCKETS (Wenzek et al. 2020): rank every document
    * by LM mean log-score and split into `nBuckets` equal-count tiles —
@@ -210,7 +153,7 @@ object NgramLm {
    * keeps head+middle and drops (or down-weights) the tail. Returns one
    * row per bucket: `(bucket, n_docs, sum_tokens, min_logscore,
    * max_logscore)` — the table a pipeline inspects to choose the
-   * cut before applying [[perplexityFilter]] at the tail boundary.
+   * cut at the tail boundary (a `logscore` filter on [[scoreDocs]]).
    *
    * Determinism: scores are micro-unit exact ([[scoreDocs]]); the tile
    * assignment orders by `(logscore DESC, id)` — a total order, so the

@@ -255,34 +255,6 @@ object Pq {
       coarse, cb, residual)
   }
 
-  /** Append a DELTA to an existing index without touching its rows:
-   * encode only `newCorpus` with the index's FROZEN coarse centroids
-   * and codebook and union the code rows. With [[saveIndexVersioned]]
-   * this makes an hourly publish cost O(|new documents|), not
-   * O(|corpus|): load the published version, append the delta, publish
-   * v+1. Because the quantizers are frozen by construction, searching
-   * the appended index is EXACTLY a full rebuild under the same
-   * codebook (spec-pinned) — refresh the codebook on a slower cadence
-   * with a real rebuild when the data distribution drifts. Caller owns
-   * id uniqueness across the union (duplicate ids would both answer). */
-  def appendToIndex(index: Index, newCorpus: DataFrame, idCol: String,
-      vecCol: String): Index =
-    index.copy(rows = index.rows.unionByName(
-      buildIndex(newCorpus, idCol, vecCol, index.coarse, index.cb,
-        index.residual).rows))
-
-  /** Remove documents from an index by id — the GDPR-delete /
-   * recrawl-retire half of index maintenance, [[appendToIndex]]'s
-   * mirror: ONE anti join on the id key (sized by the delete list —
-   * AQE broadcasts it when small), no re-encode, frozen quantizers
-   * untouched. Searching the shrunk index is EXACTLY a rebuild without
-   * those documents (spec-pinned); publish through
-   * [[saveIndexVersioned]] so in-flight readers keep their snapshot. */
-  def removeFromIndex(index: Index, deleteIds: DataFrame,
-      idCol: String): Index =
-    index.copy(rows = index.rows.join(
-      deleteIds.select(col(idCol).as("c_id")), Seq("c_id"), "left_anti"))
-
   /** Persist an index: encoded rows as (cell-partitioned) parquet, the
    * coarse centroids and codebook as plain parquet tables — no bespoke
    * serialization, any engine can read the layout back.
@@ -341,8 +313,8 @@ object Pq {
    * reader that loaded version N keeps a consistent snapshot while
    * N+1 lands (an in-place [[saveIndex]] overwrite would delete row
    * files under it mid-query). Old versions stay on disk for in-flight
-   * readers; garbage-collect them with [[pruneVersions]] once no
-   * reader can hold them. Single publisher at a time (rename-committed
+   * readers; garbage-collect them with [[Versioned.pruneVersions]] once
+   * no reader can hold them. Single publisher at a time (rename-committed
    * — see [[Versioned.publish]]). Returns the new version number. */
   def saveIndexVersioned(index: Index, dir: String): Long =
     Versioned.publish(index.rows.sparkSession, dir)(saveIndex(index, _))
@@ -352,14 +324,6 @@ object Pq {
    * while a publisher rewrites it; callers keep their current index). */
   def latestVersion(spark: org.apache.spark.sql.SparkSession, dir: String): Option[Long] =
     Versioned.latestVersion(spark, dir)
-
-  /** Drop versions older than the published pointer minus `keep` —
-   * bounded storage for a rebuild-hourly publish cadence. See
-   * [[Versioned.pruneVersions]] for the in-flight-reader contract.
-   * Returns the versions deleted. */
-  def pruneVersions(spark: org.apache.spark.sql.SparkSession, dir: String,
-      keep: Int = 1): Seq[Long] =
-    Versioned.pruneVersions(spark, dir, keep)
 
   /** Load the currently-published version of a [[saveIndexVersioned]]
    * index: `(version, index)`. */
@@ -607,20 +571,6 @@ object Pq {
         Similarity.cosine(col("q_v"), col("c_v")).as("sim"))
       .withColumn("rank", rankCol(col("sim")))
       .filter(col("rank") <= k)
-  }
-
-  /** Residual view of a vector table: `vecCol` ↦ v − centroid(best
-   * coarse cell) — the training input for an IVFADC codebook
-   * ([[trainCodebook]] on this frame, then `ivfPqTopK(residual = true)`
-   * with the same `coarse`). */
-  def residualFrame(vectors: DataFrame, vecCol: String,
-      coarse: Array[Array[Double]]): DataFrame = {
-    val centsLit = typedLit(coarse.map(_.toSeq).toSeq)
-    vectors.withColumn(vecCol,
-      zip_with(col(vecCol),
-        element_at(centsLit,
-          sort_array(cellSims(col(vecCol), coarse), asc = false)(0)("cell") + 1),
-        (a, b) => a - b))
   }
 
   /**

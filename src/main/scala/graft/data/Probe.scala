@@ -247,7 +247,7 @@ object Probe {
 
   /**
    * Held-out CALIBRATION of the d = 2 probe — the reliability-diagram
-   * data a pipeline inspects before picking [[qualityFilter]]'s
+   * data a pipeline inspects before picking a quality filter's score
    * threshold: fit on `train` ([[fitRidge2]]), score `test`, bucket
    * predictions into `nBins` fixed-width bins over `[lo, hi)` (clamped
    * at both ends), and report per bin the count and the mean predicted
@@ -362,19 +362,4 @@ object Probe {
         .as("ece_ppm"),
       max(expr("abs(sum_pred_micro - sum_label_micro) div n"))
         .as("max_bin_gap_ppm"))
-
-  /** Map-only probe score `w₀ + ⟨w, v⟩` from broadcast literal weights
-   * (native `vec_dot` — stays inside whole-stage codegen). */
-  def score(vec: Column, weights: Array[Double]): Column =
-    lit(weights(0)) + Similarity.dotNative(vec.cast("array<double>"),
-      typedLit(weights.drop(1).toSeq))
-
-  /** The one-call filter: fit on the labeled sample, keep corpus rows
-   * scoring ≥ `minScore` (FineWeb-Edu keeps educational-score ≥ 3 of
-   * 5 — same shape). */
-  def qualityFilter(corpus: DataFrame, labeled: DataFrame, vecCol: String,
-      labelCol: String, minScore: Double, lambda: Double = 0.0): DataFrame = {
-    val w = fitRidge(labeled, vecCol, labelCol, lambda)
-    corpus.filter(score(col(vecCol), w) >= minScore)
-  }
 }

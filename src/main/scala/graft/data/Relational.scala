@@ -179,42 +179,6 @@ object Relational {
   }
 
   /**
-   * Measured salt factor for [[saltedJoin]] — [[skewReport]] composed
-   * into the sizing decision instead of a caller-guessed constant: one
-   * bounded counting pass finds the hottest key's exact ppm share, and
-   * the factor is how many reducers that share must spread over to sit
-   * at `targetSharePpm` per reducer (default: one partition's fair
-   * share, 10⁶/defaultParallelism). A table whose hottest key is
-   * already below target returns 1 — no salting, no replication.
-   * Clamped to `maxSalt` (right-side replication is `maxSalt`×).
-   */
-  def autoSaltFactor(left: DataFrame, keys: Seq[String],
-      targetSharePpm: Long = 0L, maxSalt: Int = 64): Int = {
-    val target =
-      if (targetSharePpm > 0) targetSharePpm
-      else math.max(1L,
-        1000000L / left.sparkSession.sparkContext.defaultParallelism)
-    // bounded collect: the single hottest key's share (skewReport's
-    // aggregation map-combines, so it does not suffer the skew it measures)
-    val top = skewReport(left, struct(keys.map(col): _*), topK = 1)
-      .select(col("share_ppm")).collect()
-    val share = if (top.isEmpty) 0L else top(0).getLong(0)
-    math.min(maxSalt.toLong,
-      math.max(1L, (share + target - 1) / target)).toInt
-  }
-
-  /** [[saltedJoin]] with the salt factor DERIVED from the measured key
-   * skew ([[autoSaltFactor]]); factor 1 (no hot key) degenerates to the
-   * plain equi join — no salt column, no right-side replication. */
-  def saltedJoinAuto(left: DataFrame, right: DataFrame, keys: Seq[String],
-      joinType: String = "inner", targetSharePpm: Long = 0L,
-      maxSalt: Int = 64): DataFrame = {
-    val factor = autoSaltFactor(left, keys, targetSharePpm, maxSalt)
-    if (factor <= 1) left.join(right, keys, joinType)
-    else saltedJoin(left, right, keys, factor, joinType)
-  }
-
-  /**
    * Top `k` rows per group, ranked by `order` (pass explicit tie-breakers
    * for deterministic output). One shuffle on the group key; each group
    * sorts (and spills) locally — the idiomatic scalable spelling. The
@@ -447,7 +411,7 @@ object Relational {
    * (already tiny) count tables, one 1-row total, a TakeOrdered top-K.
    * The ops gate before a 100 TB join: |A ⋈ B| = Σ_k cl(k)·cr(k), so a
    * key whose count product dominates `share_ppm` is the skew/blow-up
-   * culprit to salt ([[saltedJoinAuto]]), filter, or pre-aggregate —
+   * culprit to salt ([[saltedJoin]]), filter, or pre-aggregate —
    * found at per-key-count cost instead of by OOMing the real join.
    *
    * NULL keys are excluded (SQL equi-joins never match them). Exact in

@@ -28,11 +28,6 @@ import org.apache.spark.sql.functions._
  */
 object Similarity {
 
-  /** Composable dot product (no extension required; interpreted
-   * higher-order functions — use [[dotNative]] in hot paths). */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
   /** Codegen'd dot product; requires `graft.plans.GraftExtensions` on the
    * session (all graft entry points register it). */
   def dotNative(a: Column, b: Column): Column = call_function("vec_dot", a, b)
@@ -527,7 +522,7 @@ object Similarity {
 
   /**
    * SEMANTIC decontamination report — the embedding-space complement of
-   * the n-gram [[Corpus.decontaminate]]: flag corpus documents whose
+   * the n-gram [[Dedup.contamination]]: flag corpus documents whose
    * embedding is within cosine `threshold` of ANY benchmark/eval-set
    * vector (paraphrased or translated test questions that share no
    * 8-gram with the original slip the lexical net; they do not slip

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
  * reproduce them exactly (`CAST('0x' || substr(md5(s),1,15) AS BIGINT)`).
  * Spark's builtin `hash`/`xxhash64` would be faster but are
  * implementation-defined — fine for production, useless for cross-engine
- * verification; both spellings are kept (`fastHash64`).
+ * verification.
  */
 object TextFunctions {
 
@@ -64,13 +64,10 @@ object TextFunctions {
   /**
    * Heuristic language ID: score = function-word hits per language,
    * argmax with deterministic preference order en > es > de > fr, `und`
-   * (undetermined) when no list scores > 0. A real pipeline would swap in
-   * character-n-gram profiles; the operator shape (score columns + argmax)
-   * is the same.
+   * (undetermined) when no list scores > 0, over a pre-computed lowercase
+   * token array. A real pipeline would swap in character-n-gram profiles;
+   * the operator shape (score columns + argmax) is the same.
    */
-  def langId(text: Column): Column = langIdFromTokens(tokens(lower(text)))
-
-  /** [[langId]] over a pre-computed lowercase token array. */
   def langIdFromTokens(lowerToks: Column): Column = {
     val en = stopwordHits(lowerToks, StopEn)
     val es = stopwordHits(lowerToks, StopEs)
@@ -119,9 +116,6 @@ object TextFunctions {
    * portability reference the SQL oracles mirror). */
   def hashPrefixComposable(s: Column, nibbles: Int): Column =
     conv(substring(md5(s), 1, nibbles), 16, 10).cast("long")
-
-  /** Production-speed 64-bit hash (not cross-engine portable). */
-  def fastHash64(s: Column): Column = xxhash64(s)
 
   /** Canonical text form for fingerprinting: lowercase, collapsed
    * whitespace. */

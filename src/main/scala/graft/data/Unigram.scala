@@ -1,6 +1,6 @@
 package graft.data
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /**
@@ -400,13 +400,6 @@ object Unigram {
     buf.toList
   }
 
-  private[data] def sampleSegmentation(
-      word: String, model: Model, alpha: Double, maxPieceLen: Int,
-      u: Int => Double): Seq[String] =
-    if (word.isEmpty) Nil
-    else backwardSample(word, forwardAlphas(word, model, alpha, maxPieceLen),
-      model, alpha, maxPieceLen, u)
-
   /** Map-only SAMPLED corpus encode — one segmentation drawn per word at
    * temperature `alpha`, deterministic per (salt, doc id, word index):
    * re-running with a new salt is a fresh regularization epoch, same
@@ -432,16 +425,4 @@ object Unigram {
       enc(col(idCol).cast("string"),
         TextFunctions.bpeTokens(col(textCol))).as("pieces"))
   }
-
-  /** Train-once/encode-many persistence (parquet `(piece, score_micro)`),
-   * bit-exact round-trip like the LM/BM25/merge models. */
-  def saveModel(spark: SparkSession, model: Model, path: String): Unit = {
-    import spark.implicits._
-    model.toSeq.toDF("piece", "score_micro")
-      .coalesce(1).write.mode("overwrite").parquet(path)
-  }
-
-  def loadModel(spark: SparkSession, path: String): Model =
-    spark.read.parquet(path).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
 }

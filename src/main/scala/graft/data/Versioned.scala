@@ -5,13 +5,12 @@ import org.apache.spark.sql.SparkSession
 
 /**
  * Versioned publish-while-serving for any directory-shaped artifact
- * (ANN indexes, n-gram LM count tables, BM25 postings stats): each
- * publish writes a NEW immutable `dir/v<N>/` and flips the tiny
- * `dir/latest` pointer LAST, so a reader that loaded version N keeps a
- * consistent snapshot while N+1 lands. This is the one shared spelling
- * behind [[Pq.saveIndexVersioned]], [[NgramLm.saveModelVersioned]] and
- * [[Bm25.saveModelVersioned]]; a long-running reader polls
- * [[latestVersion]] to pick up a new version.
+ * (today the ANN index of q83): each publish writes a NEW immutable
+ * `dir/v<N>/` and flips the tiny `dir/latest` pointer LAST, so a reader
+ * that loaded version N keeps a consistent snapshot while N+1 lands.
+ * [[Pq.saveIndexVersioned]] publishes through it; a long-running reader
+ * polls [[latestVersion]] to pick up a new version, and prunes what it
+ * no longer holds with [[pruneVersions]].
  *
  * Concurrency contract: ONE publisher at a time. The version body is
  * written under a hidden staging name and committed by an atomic

@@ -261,20 +261,4 @@ object Wordpiece {
       .select(col("piece"), col("n"),
         expr("n * 1000000 div __t").as("share_ppm"))
   }
-
-  /** Save a trained vocabulary as parquet (piece, rank). */
-  def saveVocab(spark: org.apache.spark.sql.SparkSession,
-      vocab: Seq[String], path: String): Unit = {
-    import spark.implicits._
-    vocab.zipWithIndex.map { case (p, r) => (p, r.toLong) }
-      .toDF("piece", "rank").repartition(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a vocabulary written by [[saveVocab]], in rank order. */
-  def loadVocab(spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[String] = {
-    // bounded collect: the vocabulary (vocab-scale by construction)
-    spark.read.parquet(path).orderBy(col("rank"))
-      .select(col("piece")).collect().map(_.getString(0)).toSeq
-  }
 }

@@ -1423,7 +1423,7 @@ object LogBucketExpr {
 /**
  * TRUE Hilbert-curve index of a d-dimensional point (Skilling 2004,
  * "Programming the Hilbert curve", AIP Conf. Proc. 707) — the layout
- * key behind `Sinks.writeHilbertOrdered`. Unlike the Morton/z-order
+ * key behind `Sinks.hilbertKey`. Unlike the Morton/z-order
  * interleave ([[graft.risk.Sinks.zorderKey]]), CONSECUTIVE Hilbert
  * indices are always grid-neighbors (no diagonal jumps across half the
  * space), so range-partitioned files cut the curve into d-dimensional

@@ -26,47 +26,39 @@ object Compliance {
 
   /** Daily weighted portfolio return: W1 log returns per ticker, weighted
    * by portfolio weight, summed per date (`05_var_compliance.py:23-53`). */
-  def portfolioReturns(
-      stocks: DataFrame,
-      portfolio: DataFrame,
-      tickerCol: String = "ticker",
-      dateCol: String = "date",
-      closeCol: String = "close"): DataFrame = {
-    val rets = Returns.dailyLogReturns(stocks, tickerCol, dateCol, closeCol)
-    rets
-      .join(broadcast(portfolio), Seq(tickerCol))
+  def portfolioReturns(stocks: DataFrame, portfolio: DataFrame): DataFrame =
+    Returns.dailyLogReturns(stocks)
+      .join(broadcast(portfolio), Seq("ticker"))
       .withColumn("weighted_return",
         functions.weightedReturn(col("return"), col("weight")))
-      .groupBy(col(dateCol))
+      .groupBy(col("date"))
       .agg(sum(col("weighted_return")).as("return"))
-  }
 
   /**
    * Breach counting + zones (`05_var_compliance.py:84-125`): attach to each
-   * daily `return` the latest `var_99` at or before its `dateCol`, keep the
+   * daily `return` the latest `var_99` at or before its `date`, keep the
    * rows with a non-null match, and count the returns at or below that
    * VaR over the trailing `windowDays` calendar days; zone per
    * [[VarMath.baselZone]]. Semantics in [[VarMath.baselBacktest]]. VaR rows
    * sharing a timestamp count as the greatest of them, compared as
-   * `(dateCol, each other column in input order)`.
+   * `(date, each other column in input order)`.
    *
-   * Output: every column of `dailyReturns`, then `right_` + `dateCol` and
+   * Output: every column of `dailyReturns`, then `right_date` and
    * `right_` + each other column of `varSeries`, then `breaches` and
    * `basel`.
    */
   def baselBacktest(
       dailyReturns: DataFrame,
       varSeries: DataFrame,
-      dateCol: String = "date",
       windowDays: Int = 250): DataFrame = {
     val kernel = udf((r: Seq[Row], v: Seq[Row]) => backtest(r, v, windowDays).toSeq)
     def field(series: String, at: String, c: String) =
       col(series).getItem(col(at)).getField("row").getField(c)
-    gathered(dailyReturns, varSeries, dateCol)
+    gathered(dailyReturns, varSeries)
       .select(col("r"), col("v"), inline(kernel(col("r"), col("v"))))
       .select(
         dailyReturns.columns.map(c => field("r", "ret", c).as(c)).toSeq ++
-          rowColumns(varSeries, dateCol).map(c => field("v", "varAt", c).as("right_" + c)) ++
+          rowColumns(varSeries).map(c => field("v", "varAt", c).as("right_" + c)) ++
           Seq(col("breaches"), col("zone").as("basel")): _*)
   }
 
@@ -96,30 +88,29 @@ object Compliance {
       ret.indices.map(d =>
         (first + d, ret(d), var99(d), breaches(d).intValue, zone(d).intValue))
     }
-    gathered(dailyReturns, varSeries, "date")
+    gathered(dailyReturns, varSeries)
       .select(inline(kernel(col("r"), col("v"))))
       .select(date_from_unix_date(col("_1")).as("date"), col("_2").as("return"),
         col("_3").as("var_99"), col("_4").as("breaches"), col("_5").as("basel"))
   }
 
-  /** `dateCol`, then every other column of `df` in input order. */
-  private def rowColumns(df: DataFrame, dateCol: String): Seq[String] =
-    dateCol +: df.columns.filterNot(_ == dateCol).toSeq
+  /** `date`, then every other column of `df` in input order. */
+  private def rowColumns(df: DataFrame): Seq[String] =
+    "date" +: df.columns.filterNot(_ == "date").toSeq
 
   /** One row `(r, v)` holding the returns and the VaR series, each as an
    * array of `struct<t, row, x, day>` over its rows with a timestamp: `t`
    * epoch micros, `row` the input row as [[rowColumns]], `x` the value
-   * (`return` or `var_99`) and `day` the epoch day of `dateCol` in the
+   * (`return` or `var_99`) and `day` the epoch day of `date` in the
    * session time zone. The VaR array is sorted by `(t, row)`, so the last
    * row at a timestamp is the greatest. */
-  private def gathered(dailyReturns: DataFrame, varSeries: DataFrame,
-      dateCol: String): DataFrame = {
-    val t = unix_micros(col(dateCol).cast("timestamp"))
+  private def gathered(dailyReturns: DataFrame, varSeries: DataFrame): DataFrame = {
+    val t = unix_micros(col("date").cast("timestamp"))
     def series(df: DataFrame, valueCol: String) =
       df.filter(t.isNotNull).agg(collect_list(struct(t.as("t"),
-        struct(rowColumns(df, dateCol).map(col): _*).as("row"),
+        struct(rowColumns(df).map(col): _*).as("row"),
         col(valueCol).cast("double").as("x"),
-        unix_date(to_date(col(dateCol))).as("day"))).as("s"))
+        unix_date(to_date(col("date"))).as("day"))).as("s"))
     series(dailyReturns, "return").toDF("r")
       .crossJoin(series(varSeries, "var_99").select(sort_array(col("s")).as("v")))
   }

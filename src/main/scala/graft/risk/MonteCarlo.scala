@@ -97,23 +97,22 @@ object MonteCarlo {
 
   /**
    * Simulate `runs` market states per volatility row.
-   * Input: (dateCol, vol_avg, vol_cov); output: (dateCol, features, trial_id)
+   * Input: (date, vol_avg, vol_cov); output: (date, features, trial_id)
    * — the `monte_carlo_market` table shape (`03_var_monte_carlo.py:80-87`),
-   * hash-partitioned on `dateCol` into `numPartitions`, each vol row's
+   * hash-partitioned on `date` into `numPartitions`, each vol row's
    * trials in id order. Fails on `runs < 1` here, and at run time on a null
    * or mis-shaped `vol_avg` / `vol_cov` (naming the date).
    */
   def simulateMarket(
       volatility: DataFrame,
       runs: Int,
-      dateCol: String = "date",
       numPartitions: Int = 20): DataFrame = {
     require(runs >= 1, s"simulateMarket: runs must be at least 1, got $runs")
     volatility
-      .select(col(dateCol), col("vol_avg"), col("vol_cov"))
-      .repartition(numPartitions, col(dateCol))
-      .select(col(dateCol), SampleTrials.column(col(dateCol), col("vol_avg"), col("vol_cov"), runs))
-      .select(col(dateCol), col("features"), col("trial_id"))
+      .select(col("date"), col("vol_avg"), col("vol_cov"))
+      .repartition(numPartitions, col("date"))
+      .select(col("date"), SampleTrials.column(col("date"), col("vol_avg"), col("vol_cov"), runs))
+      .select(col("date"), col("features"), col("trial_id"))
   }
 
   /**
@@ -146,35 +145,23 @@ object MonteCarlo {
    * length is the group's largest id + 1; [[trialVectors]], which knows
    * `runs`, also checks that no trailing id is missing.
    */
-  def collectTrialVectors(
-      simulated: DataFrame,
-      dateCol: String = "date",
-      tickerCol: String = "ticker",
-      trialCol: String = "trial_id",
-      returnCol: String = "return"): DataFrame = {
+  def collectTrialVectors(simulated: DataFrame): DataFrame =
     simulated
-      .groupBy(col(dateCol), col(tickerCol))
-      .agg(TrialVectorAggregator.asColumn(col(trialCol), col(returnCol)).as("returns"))
-  }
+      .groupBy(col("date"), col("ticker"))
+      .agg(TrialVectorAggregator.asColumn(col("trial_id"), col("return")).as("returns"))
 
   /** Reference-shaped composable twin of [[collectTrialVectors]]:
    * `sort_array(collect_list(struct))` + dense-vector UDF. Semantically
    * identical, but at 32k trials × 27 tickers the interpreted struct sort
    * and the boxed Seq UDF dominate the whole pipeline (measured: the
    * aggregator path collapses a >15-minute stage to seconds). */
-  def collectTrialVectorsComposable(
-      simulated: DataFrame,
-      dateCol: String = "date",
-      tickerCol: String = "ticker",
-      trialCol: String = "trial_id",
-      returnCol: String = "return"): DataFrame = {
+  def collectTrialVectorsComposable(simulated: DataFrame): DataFrame =
     simulated
-      .groupBy(col(dateCol), col(tickerCol))
-      .agg(sort_array(collect_list(struct(col(trialCol), col(returnCol)))).as("__pairs"))
+      .groupBy(col("date"), col("ticker"))
+      .agg(sort_array(collect_list(struct(col("trial_id"), col("return")))).as("__pairs"))
       .withColumn("returns", functions.toDenseVector(
-        col("__pairs").getField(trialCol), col("__pairs").getField(returnCol)))
+        col("__pairs").getField("trial_id"), col("__pairs").getField("return")))
       .drop("__pairs")
-  }
 }
 
 /**

@@ -4,24 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
- * Batch sinks. The reference's only physical-layout op beyond
- * `repartition` is Delta `OPTIMIZE ZORDER BY (date, ticker)`
- * (`03_var_monte_carlo.py:162`) — pure data clustering for scan locality,
- * no semantics. The parquet equivalent: range-partition on the cluster
- * keys, sort within partitions, write — readers filtering on those keys
- * then prune files via parquet min/max row-group stats.
+ * Clustering keys and compaction plans. The reference's only
+ * physical-layout op beyond `repartition` is Delta `OPTIMIZE ZORDER BY
+ * (date, ticker)` (`03_var_monte_carlo.py:162`) — pure data clustering
+ * for scan locality, no semantics. The stored VaR tables get theirs from
+ * `Warehouse.saveTable` (bucketed on the leading key, sorted by the
+ * rest); the keys here are the multi-dimensional orders a writer can
+ * range-partition and sort on, so that a filter on any one dimension
+ * prunes files by parquet min/max stats.
  */
 object Sinks {
-
-  /** ZORDER-approximating clustered parquet write. Lexicographic: prunes
-   * hard on the FIRST cluster key, progressively less on later ones. For
-   * balanced multi-dimensional pruning use [[writeZOrdered]]. */
-  def writeClustered(df: DataFrame, path: String, clusterCols: Seq[String],
-      numFiles: Int = 20): Unit = {
-    df.repartitionByRange(numFiles, clusterCols.map(col): _*)
-      .sortWithinPartitions(clusterCols.map(col): _*)
-      .write.mode("overwrite").parquet(path)
-  }
 
   /**
    * True z-order (Morton) key: interleave the low `bits` bits of each
@@ -47,17 +39,6 @@ object Sinks {
     }.reduce(_ + _)
   }
 
-  /** Clustered parquet write ordered by the z-order key of `dims`. */
-  def writeZOrdered(df: DataFrame, path: String, dims: Seq[String],
-      numFiles: Int = 20, bits: Int = 16): Unit = {
-    val zc = "__zorder"
-    df.withColumn(zc, zorderKey(dims.map(col), bits))
-      .repartitionByRange(numFiles, col(zc))
-      .sortWithinPartitions(col(zc))
-      .drop(zc)
-      .write.mode("overwrite").parquet(path)
-  }
-
   /**
    * TRUE Hilbert-curve key (Skilling's transform — see
    * `plans.HilbertIndexExpr`): consecutive key values are always grid
@@ -76,22 +57,11 @@ object Sinks {
       lit(bits))
   }
 
-  /** Clustered parquet write ordered by the Hilbert key of `dims`. */
-  def writeHilbertOrdered(df: DataFrame, path: String, dims: Seq[String],
-      numFiles: Int = 20, bits: Int = 8): Unit = {
-    val hc = "__hilbert"
-    df.withColumn(hc, hilbertKey(dims.map(col), bits))
-      .repartitionByRange(numFiles, col(hc))
-      .sortWithinPartitions(col(hc))
-      .drop(hc)
-      .write.mode("overwrite").parquet(path)
-  }
-
   // ------------------------------------------- small-file compaction
 
   /**
    * Deterministic small-file COMPACTION PLAN — the OPTIMIZE/bin-packing
-   * half of Delta's `OPTIMIZE` next to [[writeZOrdered]]'s ZORDER half.
+   * half of Delta's `OPTIMIZE` next to [[zorderKey]]'s ZORDER half.
    * Streaming ingest and per-partition writes leave thousands of
    * kilobyte parquet files whose per-file open/footer cost dominates
    * scans at scale; the fix is periodic rewrite into ~`targetBytes`
@@ -120,39 +90,5 @@ object Sinks {
       .withColumn("__pre", coalesce(sum(col(sizeCol).cast("long")).over(w), lit(0L)))
       .withColumn("bucket", expr(s"__pre div ${targetBytes}L"))
       .drop("__pre")
-  }
-
-  /**
-   * Execute a [[compactionPlan]] over a parquet directory: list files
-   * (driver-side metadata listing, same scale bound as the plan), tag
-   * every row with its source file, and rewrite with one partition per
-   * plan bucket. Rows are joined to the broadcast plan on the unique
-   * file NAME (part-UUID), so no path-encoding mismatch between the
-   * filesystem listing and `input_file_name()` can mis-bucket a row.
-   * Output file count ≤ number of plan buckets (hash partitioning may
-   * merge two buckets into one file — content is unaffected). Returns
-   * the plan for inspection/audit.
-   */
-  def compactSmallFiles(spark: org.apache.spark.sql.SparkSession,
-      inDir: String, outDir: String, targetBytes: Long): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(inDir), spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(inDir))
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(s => (s.getPath.getName, s.getLen))
-    require(files.nonEmpty, s"no parquet files to compact under $inDir")
-    import spark.implicits._
-    val plan = compactionPlan(files.toSeq.toDF("path", "size"),
-      "path", "size", targetBytes)
-    val nBuckets = (plan.agg(max(col("bucket"))).collect().head.getLong(0) + 1).toInt
-    val fileName = regexp_extract(input_file_name(), "([^/]+)$", 1)
-    spark.read.parquet(inDir)
-      .withColumn("__file", fileName)
-      .join(broadcast(plan.select(col("path").as("__file"), col("bucket"))),
-        Seq("__file"))
-      .repartition(nBuckets, col("bucket"))
-      .drop("__file", "bucket")
-      .write.mode("overwrite").parquet(outDir)
-    plan
   }
 }

@@ -26,11 +26,8 @@ object VarAggregation {
 
   /** trials ⋈ portfolio (broadcast; 27 rows in the reference) —
    * `04_var_aggregation.py:13-18`. [[varByGroup]] applies the weights. */
-  def weightedTrials(
-      trials: DataFrame,
-      portfolio: DataFrame,
-      tickerCol: String = "ticker"): DataFrame =
-    trials.join(broadcast(portfolio), Seq(tickerCol))
+  def weightedTrials(trials: DataFrame, portfolio: DataFrame): DataFrame =
+    trials.join(broadcast(portfolio), Seq("ticker"))
 
   /**
    * VaR (and ES) by group: element-wise sum of `weight · returns` per

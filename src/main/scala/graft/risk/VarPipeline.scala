@@ -70,9 +70,6 @@ object VarPipeline {
   }
 
   /** Weekly run dates (Mondays in the back half of the history). */
-  def runDates(spark: SparkSession, cfg: Config): DataFrame =
-    runDatesFrom(marketVolatility(spark, cfg), cfg)
-
   private def runDatesFrom(vol: DataFrame, cfg: Config): DataFrame = {
     val cutoff = cfg.start.plusDays(cfg.days * 7 / 5 / 2)
     vol.select(col("date"))

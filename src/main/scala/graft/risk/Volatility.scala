@@ -20,16 +20,14 @@ object Volatility {
 
   def rollingStats(
       returns: DataFrame,
-      dateCol: String = "date",
-      featuresCol: String = "features",
       windowDays: Int = 90,
       partitionCols: Seq[String] = Nil): DataFrame = {
     val w = Window
       .partitionBy(partitionCols.map(col): _*)
-      .orderBy(col(dateCol).cast("long"))
+      .orderBy(col("date").cast("long"))
       .rangeBetween(-windowDays.toLong * 86400L, 0L)
     returns
-      .withColumn("__window", collect_list(col(featuresCol)).over(w))
+      .withColumn("__window", collect_list(col("features")).over(w))
       // reference drops the first row of each window series (size > 1,
       // `01_var_market_etl.py:177`) — a 1-element window has no covariance
       .filter(size(col("__window")) > 1)
@@ -53,24 +51,22 @@ object Volatility {
    */
   def rollingStatsChunked(
       returns: DataFrame,
-      dateCol: String = "date",
-      featuresCol: String = "features",
       windowDays: Int = 90,
       chunkDays: Int = 365): DataFrame = {
     require(chunkDays >= windowDays,
       s"chunkDays ($chunkDays) must cover the lookback ($windowDays)")
     val chunkLen = chunkDays.toLong * 86400L
-    val epoch = col(dateCol).cast("long")
+    val epoch = col("date").cast("long")
     val home = floor(epoch / chunkLen)
     val w = Window
       .partitionBy(col("__chunk"))
-      .orderBy(col(dateCol).cast("long"))
+      .orderBy(col("date").cast("long"))
       .rangeBetween(-windowDays.toLong * 86400L, 0L)
     returns
       .withColumn("__home", home)
       // replicate into home and next chunk (as look-back context)
       .withColumn("__chunk", explode(array(col("__home"), col("__home") + 1)))
-      .withColumn("__window", collect_list(col(featuresCol)).over(w))
+      .withColumn("__window", collect_list(col("features")).over(w))
       .filter(col("__chunk") === col("__home"))
       .filter(size(col("__window")) > 1)
       .withColumn("vol_avg", functions.meanVectorUdf(col("__window")))

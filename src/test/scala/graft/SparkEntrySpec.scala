@@ -11,9 +11,10 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(names.size === 228)
     assert(names.distinct.size === 228)
     assert(SparkEntry.queries.keySet === names.toSet)
-    assert(SparkEntry.oracleSql.size === 203)
-    assert(SparkEntry.oracleSql.keySet.subsetOf(names.toSet))
-    SparkEntry.oracleSql.foreach { case (name, sql) =>
+    val oracles = SparkEntry.oracleSql("/data/sf0.01")
+    assert(oracles.size === 203)
+    assert(oracles.keySet.subsetOf(names.toSet))
+    oracles.foreach { case (name, sql) =>
       assert(sql.trim.nonEmpty, name)
     }
   }

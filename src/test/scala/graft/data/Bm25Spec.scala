@@ -67,7 +67,7 @@ class Bm25Spec extends SparkSpec {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 
-  test("maxDfFrac stopword guard: ultra-high-df terms stop contributing, both paths agree") {
+  test("maxDfFrac stopword guard: ultra-high-df terms stop contributing") {
     // corpus of 5 docs: "spark" is in 4/5 (df frac 0.8), "optimizer" in 2/5
     val q = Seq((100L, "spark optimizer")).toDF("doc_id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -81,55 +81,18 @@ class Bm25Spec extends SparkSpec {
     assert(guarded.nonEmpty)
     // and docs matched ONLY via the stopword drop out entirely
     assert(!guarded.map(_._1).contains(2L)) // doc 2 is all "spark"
-    // model path prunes before the join, same answers
-    val viaModel = rows(Bm25.bm25TopK(Bm25.fit(corpus, "doc_id", "text"), q,
-      "doc_id", "text", k = 5, k1 = 1.2, b = 0.75, broadcastQueries = true,
-      maxDfFrac = 0.5))
-    assert(viaModel === guarded)
   }
 
-  test("a duplicated query row scores identically to the single row, both paths") {
+  test("a duplicated query row scores identically to the single row") {
     val once = Seq((100L, "spark optimizer")).toDF("doc_id", "text")
     val twice = once.union(once)
     def canon(df: DataFrame) = df
       .select($"query_id", $"rank", $"neighbor_id", round($"score", 9))
       .collect().map(_.toString).sorted.toSeq
-    // one-shot path: df comes from a window over joined rows — a
-    // duplicate row must not inflate it
+    // df comes from a window over joined rows — a duplicate row must
+    // not inflate it
     assert(canon(Bm25.bm25TopK(corpus, twice, "doc_id", "text", 5)) ===
       canon(Bm25.bm25TopK(corpus, once, "doc_id", "text", 5)))
-    // model path agrees
-    val m = Bm25.fit(corpus, "doc_id", "text")
-    assert(canon(Bm25.bm25TopK(m, twice, "doc_id", "text", 5,
-        k1 = 1.2, b = 0.75, broadcastQueries = true, maxDfFrac = 1.0)) ===
-      canon(Bm25.bm25TopK(corpus, once, "doc_id", "text", 5)))
-  }
-
-  test("saveModel/loadModel round-trip: loaded stats score bit-equal the fresh fit") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25_model").toString
-    Bm25.saveModel(Bm25.fit(corpus, "doc_id", "text"), dir)
-    val loaded = Bm25.loadModel(spark, dir)
-    val queries = Seq((100L, "spark optimizer join")).toDF("doc_id", "text")
-    val fresh = Bm25.bm25TopK(corpus, queries, "doc_id", "text", k = 5)
-      .select($"neighbor_id", $"score", $"rank").as[(Long, Double, Int)]
-      .collect().toSet
-    val again = Bm25.bm25TopK(loaded, queries, "doc_id", "text", k = 5,
-        k1 = 1.2, b = 0.75, broadcastQueries = true, maxDfFrac = 1.0)
-      .select($"neighbor_id", $"score", $"rank").as[(Long, Double, Int)]
-      .collect().toSet
-    assert(again === fresh) // bit-equal: tf/df/dl integer, (N, avgdl) doubles round-trip
-  }
-
-  test("saveModelVersioned: pointer flips, old version stays loadable") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25_versions").toString
-    assert(Bm25.saveModelVersioned(Bm25.fit(corpus, "doc_id", "text"), dir) === 1L)
-    val bigger = corpus.union(Seq((6L, "new document text")).toDF("doc_id", "text"))
-    assert(Bm25.saveModelVersioned(Bm25.fit(bigger, "doc_id", "text"), dir) === 2L)
-    val (v, latest) = Bm25.loadModelVersioned(spark, dir)
-    assert(v === 2L)
-    assert(latest.consts.select($"__n").as[Double].head() === 6.0)
-    assert(Bm25.loadModel(spark, s"$dir/v1")
-      .consts.select($"__n").as[Double].head() === 5.0)
   }
 
   private def ranking(rows: (Long, Long, Int)*): DataFrame =

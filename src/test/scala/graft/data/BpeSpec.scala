@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
  * BPE vocabulary induction: the hand-computed Sennrich et al. 2016
  * corpus pins the merge ladder, encode pins greedy rank-order
  * application, segmentation is a partition of every word, and the
- * persisted merge list round-trips bit-equal.
+ * incremental trainer reproduces the distributed one's ladder.
  */
 class BpeSpec extends SparkSpec {
   import spark.implicits._
@@ -66,20 +66,6 @@ class BpeSpec extends SparkSpec {
     assert(one === Seq(("a", "b")))
   }
 
-  test("merge list persists and loads bit-equal; encode agrees") {
-    val merges = Bpe.trainMerges(sennrich, "text", nMerges = 6)
-    val dir = java.nio.file.Files.createTempDirectory("bpe").toString + "/m"
-    Bpe.saveMerges(spark, merges, dir)
-    val loaded = Bpe.loadMerges(spark, dir)
-    assert(loaded === merges)
-    val docs = Seq("the newest low estates").toDF("text")
-    val a = Bpe.encode(docs, "text", merges)
-      .select(col("bpe_tokens")).as[Seq[String]].head()
-    val b = Bpe.encode(docs, "text", loaded)
-      .select(col("bpe_tokens")).as[Seq[String]].head()
-    assert(a === b)
-  }
-
   test("incremental trainer == distributed trainer, bit-identical ladder") {
     // messier corpus than the Sennrich fixture: punctuation pre-tokens,
     // digits, repeated bigram structure, count ties — 20 merges deep the
@@ -123,7 +109,7 @@ class BpeSpec extends SparkSpec {
 
   test("vocabulary: alphabet-first ids, merges appended in rank order") {
     val merges = Bpe.trainMerges(sennrich, "text", nMerges = 4)
-    val vocab = Bpe.vocabulary(sennrich, "text", merges)
+    val vocab = Bpe.vocabularyFromTypes(Bpe.wordTypes(sennrich, "text"), merges)
     val byToken = vocab.map { case (i, t) => (t, i) }.toMap
     // ids are contiguous from 0
     assert(vocab.map(_._1) === vocab.indices.toSeq)
@@ -141,7 +127,7 @@ class BpeSpec extends SparkSpec {
     // GPT-2 layout dedupes — one id per token, first rank wins, ids
     // stay dense (no dead embedding rows)
     val ladder = Seq(("l", "o"), ("o", "w"), ("lo", "w"), ("l", "ow"))
-    val vocab = Bpe.vocabulary(sennrich, "text", ladder)
+    val vocab = Bpe.vocabularyFromTypes(Bpe.wordTypes(sennrich, "text"), ladder)
     assert(vocab.map(_._1) === vocab.indices.toSeq, "ids must stay dense")
     assert(vocab.count(_._2 == "low") === 1)
     // first spelling's position: alphabet (10 symbols) + ranks lo, ow, low
@@ -155,7 +141,7 @@ class BpeSpec extends SparkSpec {
 
   test("encodeIds: ids decode to encode()'s tokens; unseen chars -> unkId") {
     val merges = Bpe.trainMerges(sennrich, "text", nMerges = 4)
-    val vocab = Bpe.vocabulary(sennrich, "text", merges)
+    val vocab = Bpe.vocabularyFromTypes(Bpe.wordTypes(sennrich, "text"), merges)
     val byId = vocab.toMap
     val docs = Seq("lowest newest low").toDF("text")
     val ids = Bpe.encodeIds(docs, "text", merges, vocab)
@@ -201,23 +187,5 @@ class BpeSpec extends SparkSpec {
         segFull(TextFunctions.bpeTokens(col("text"))))
       .select(col("bpe_tokens")).as[Seq[String]].collect().toSeq
     assert(viaRank === viaFull)
-  }
-
-  test("decodeIds inverts encodeIds: the concatenated pre-token stream round-trips") {
-    import org.apache.spark.sql.functions._
-    val docs = Seq((1L, "spark spark row table 42!")).toDF("doc_id", "text")
-    val merges = Bpe.trainMerges(docs, "text", nMerges = 8)
-    val vocab = Bpe.vocabulary(docs, "text", merges)
-    val enc = Bpe.encodeIds(docs, "text", merges, vocab)
-    val dec = Bpe.decodeIds(enc, "token_ids", vocab)
-      .select(col("decoded")).as[String].head()
-    val stream = docs.select(
-        concat_ws("", TextFunctions.bpeTokens(col("text"))))
-      .as[String].head()
-    assert(dec === stream)
-    // an unknown id decodes to the unk token, loudly visible
-    val weird = Seq((1L, Seq(999999))).toDF("doc_id", "token_ids")
-    assert(Bpe.decodeIds(weird, "token_ids", vocab)
-      .select(col("decoded")).as[String].head() === "<unk>")
   }
 }

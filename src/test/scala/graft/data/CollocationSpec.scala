@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
  * Collocation mining ([[Corpus.collocations]]) and quality-preferring
  * survivor selection ([[Dedup.deduplicateBest]]): hand-computed scores,
  * overflow-safe spelling semantics, and best-not-first survivor policy
- * (both cluster sources: fingerprint groupBy and connected components).
+ * (over hand-built clusters and over connected components).
  */
 class CollocationSpec extends SparkSpec {
   import spark.implicits._
@@ -80,24 +80,5 @@ class CollocationSpec extends SparkSpec {
         Seq(col("quality").desc, col("doc_id").asc))
       .select(col("doc_id")).as[Long].collect().toSet
     assert(got === Set(2L, 9L)) // max quality per component
-  }
-
-  test("dedupCorpus preferOrder: one policy across exact and near stages") {
-    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val docs = Seq(
-      (1L, base),                                   // exact-dup class A
-      (2L, base),                                   //   (2 wins max-id)
-      (3L, base.replace("iota", "iotb") + " tail"), // near-dup of A, longer
-      (4L, "a wholly different document about engines and plans"))
-      .toDF("doc_id", "text")
-    val got = Dedup.dedupCorpus(docs, "doc_id", "text", threshold = 0.3,
-        preferOrder = Seq(length(col("text")).desc, col("doc_id").desc))
-      .select(col("doc_id")).as[Long].collect().toSet
-    // exact stage: {1,2} -> 2; near stage: {2,3} cluster -> 3 (longer)
-    assert(got === Set(3L, 4L))
-    // default min-id policy unchanged
-    val dflt = Dedup.dedupCorpus(docs, "doc_id", "text", threshold = 0.3)
-      .select(col("doc_id")).as[Long].collect().toSet
-    assert(dflt === Set(1L, 4L))
   }
 }

@@ -48,21 +48,6 @@ class CorpusSpec extends SparkSpec {
     assert(gated == Set(0L))
   }
 
-  test("decontaminate drops benchmark-overlapping docs, keeps clean ones") {
-    val docs = Seq(
-      (0L, s"$longBody and then it finishes cleanly right here today."),
-      (1L, ("separate wording with zero benchmark overlap present here honestly indeed " * 8).trim
-        + " and it ends nicely today.")
-    ).toDF("doc_id", "text")
-    val prepared = Corpus.prepare(docs, minWords = 3)
-    val bench = Seq("the quick brown fox jumps over the lazy dog").toDF("text")
-    val clean = Corpus.decontaminate(prepared, bench, minContainment = 0.1)
-      .select($"id").as[Long].collect().toSet
-    val kept = prepared.select($"id").as[Long].collect().toSet
-    assert(kept == Set(0L, 1L))
-    assert(clean == Set(1L)) // doc 0 repeats the benchmark sentence verbatim
-  }
-
   test("chunkDocuments: overlapping windows tile each doc; short docs get one chunk") {
     val docs = Seq(
         (1L, (0 until 10).map(i => s"t$i").mkString(" ")),

@@ -74,14 +74,6 @@ class DataSpec extends SparkSpec {
     assert(fps.values.forall(v => v > 0 && v < (1L << 60)))
   }
 
-  test("langId picks dominant stopword language, und when none") {
-    val r = Seq("the cat is on the mat", "el gato es de la casa",
-        "der hund ist von berlin und zu haus", "le chat est du jardin les fleurs",
-        "zzz qqq xxx")
-      .toDF("text").select(TextFunctions.langId($"text")).as[String].collect()
-    assert(r.toSeq == Seq("en", "es", "de", "fr", "und"))
-  }
-
   test("minhash signature estimates jaccard, LSH finds the near-dup pair") {
     val pairs = Dedup.minhashNearDups(docs, "doc_id", "text",
       shingleN = 3, k = 16, bands = 4, threshold = 0.3).collect()
@@ -260,7 +252,7 @@ class DataSpec extends SparkSpec {
     assert(b(0) == b(1) && b(0) >= 0 && b(0) < 256)
   }
 
-  test("multimodal: metadata, frame sampling, typed decode stub") {
+  test("multimodal: metadata and frame sampling") {
     val media = Multimodal.mediaFromDocuments(
       docs.withColumn("source", lit("s0")).withColumnRenamed("text", "text"))
     val meta = media.select($"media_id", col("content"),
@@ -274,16 +266,6 @@ class DataSpec extends SparkSpec {
       assert(frames.nonEmpty && frames.forall(v => v >= 0 && v <= 255))
       assert(frames.head == 't'.toInt || frames.head == 'T'.toInt || frames.head == 'c'.toInt)
     }
-    import Multimodal._
-    implicit val s = spark
-    val feats = decodeFeatures(media.as[MediaRow]).collect()
-    assert(feats.length == 4)
-    assert(feats.forall(_.features.length == StubCodec.FeatureDim))
-    assert(feats.forall(_.features.forall(v => v >= 0.0 && v <= 1.0)))
-    // deterministic: same bytes → same features
-    val again = decodeFeatures(media.as[MediaRow]).collect()
-    assert(feats.sortBy(_.media_id).zip(again.sortBy(_.media_id))
-      .forall { case (a, b) => a.features.sameElements(b.features) })
   }
 
   test("semDedup drops within-cell near-identical embeddings, keeps min id") {
@@ -309,40 +291,6 @@ class DataSpec extends SparkSpec {
     val keptSplit = Similarity.semDedup(split, "vec_id", "v", threshold = 0.9, cents)
       .select($"vec_id").as[Long].collect().toSet
     assert(keptSplit === Set(1L, 2L))
-  }
-
-  test("ImageIoCodec decodes a real generated PNG through the same pipeline") {
-    import Multimodal._
-    implicit val s = spark
-    // 4x2 PNG: top row red, bottom row blue — written by the JDK's own
-    // encoder so the bytes are a genuine PNG stream, not synthetic
-    val img = new java.awt.image.BufferedImage(4, 2,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (x <- 0 until 4) {
-      img.setRGB(x, 0, 0xff0000)
-      img.setRGB(x, 1, 0x0000ff)
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, "png", bos))
-    val pngBytes = bos.toByteArray
-    val media = Seq(
-        MediaRow(1L, "img/png", pngBytes),
-        MediaRow(2L, "img/none", "not an image at all".getBytes("UTF-8")))
-      .toDS()
-    val feats = decodeFeatures(media, ImageIoCodec).collect()
-      .sortBy(_.media_id)
-    // real decode: exact dimensions + channel means (half red, half blue)
-    val f = feats(0).features
-    assert(f(0) === 4.0 && f(1) === 2.0 && f(2) === 2.0)
-    assert(math.abs(f(3) - 0.5) < 1e-12) // mean R
-    assert(f(4) === 0.0)                 // mean G
-    assert(math.abs(f(5) - 0.5) < 1e-12) // mean B
-    // luma: (0.299*255 + 0.114*255) / 2 / 255
-    assert(math.abs(f(6) - (0.299 + 0.114) / 2) < 1e-12)
-    assert(f(7) > 0.0) // two distinct rows -> nonzero luma spread
-    // undecodable payload -> zero vector, width 0 marks "no decode"
-    assert(feats(1).features.forall(_ === 0.0))
-    assert(feats(1).byte_len > 0)
   }
 
   test("connectedComponents: chains collapse to min id; components stay separate") {
@@ -389,41 +337,6 @@ class DataSpec extends SparkSpec {
     val brute = Similarity.bruteForceTopK(q, vecs, "vec_id", "v", k = 2)
       .select("query_id", "rank", "neighbor_id").collect().map(_.toString).sorted
     assert(ivf.sameElements(brute))
-  }
-
-  test("dedupCorpus: exact dups collapse first, then near-dups cluster") {
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog sits calmly today"),
-      (2L, "THE  quick brown fox jumps over the lazy dog sits calmly today"), // exact dup of 1 (normalized)
-      (3L, "the quick brown fox jumps over the lazy dog sits calmly tonight"), // near-dup of 1
-      (4L, "completely different text about spark engines and columnar data processing")
-    ).toDF("doc_id", "text")
-    val kept = Dedup.dedupCorpus(corpus, "doc_id", "text", threshold = 0.5)
-      .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-    // 2 collapses into 1 exactly; 3 clusters with 1 via minhash; 4 unique
-    assert(kept == Seq(1L, 4L))
-    // all original columns survive
-    assert(Dedup.dedupCorpus(corpus, "doc_id", "text").columns.toSeq ==
-      Seq("doc_id", "text"))
-  }
-
-  test("dedupCorpus Hamming tier drops a token-order rewrite (64-bit width)") {
-    val original = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
-    val shuffled = "mu kappa iota eta zeta beta delta alpha theta gamma lambda epsilon"
-    val corpus = Seq(
-      (1L, original),
-      (2L, shuffled), // token set identical, shingles ~disjoint
-      (3L, "a completely unrelated sentence about columnar query engines")
-    ).toDF("doc_id", "text")
-    // Jaccard-only: the reshuffle survives (shingle similarity ~0)
-    val without = Dedup.dedupCorpus(corpus, "doc_id", "text")
-      .select($"doc_id").as[Long].collect().sorted.toSeq
-    assert(without === Seq(1L, 2L, 3L))
-    // two-tier at the production 64-bit width: clustered, min id kept
-    val withTier = Dedup.dedupCorpus(corpus, "doc_id", "text",
-        maxHamming = 3, simhashBits = 64)
-      .select($"doc_id").as[Long].collect().sorted.toSeq
-    assert(withTier === Seq(1L, 3L))
   }
 
   test("native winnow_fingerprint is bit-identical to the composable spelling") {

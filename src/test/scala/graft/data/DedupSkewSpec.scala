@@ -40,7 +40,7 @@ class DedupSkewSpec extends SparkSpec {
   }
 
   test("exact-first stage collapses 10k identical docs before the band join") {
-    // dedupCorpus's stage 1, measured: 10_000 copies -> 1 representative,
+    // the exact-first stage, measured: 10_000 copies -> 1 representative,
     // so the LSH stage sees 101 docs and its candidate count is bounded by
     // C(101,2) = 5050 instead of the ~5e7 the previous test extrapolates to
     val keep = corpus.withColumn("__fp", TextFunctions.fingerprint($"text"))
@@ -50,14 +50,6 @@ class DedupSkewSpec extends SparkSpec {
     val candidates = Dedup.minhashNearDups(collapsed, "doc_id", "text",
       threshold = 0.0).count()
     assert(candidates <= 101L * 100 / 2, s"candidate blow-up: $candidates")
-  }
-
-  test("dedupCorpus keeps one survivor of the hot family and every distinct doc") {
-    val survivors = Dedup.dedupCorpus(corpus, "doc_id", "text")
-      .select($"doc_id").as[Long].collect().toSet
-    assert(survivors.contains(0L)) // min-id survivor of the dup family
-    assert(survivors.count(_ < hotCopies) == 1)
-    assert(survivors.count(_ >= hotCopies) == 100) // disjoint docs all live
   }
 
   test("blocked jaccard salts a hot block; every pair meets exactly once") {

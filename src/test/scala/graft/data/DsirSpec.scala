@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /**
- * DSIR importance resampling: planted target/raw vocabularies must
+ * DSIR importance scoring: planted target/raw vocabularies must
  * rank target-like docs first, the smoothing mass must behave, and
  * the integer bookkeeping must be exact.
  */
@@ -28,14 +28,14 @@ class DsirSpec extends SparkSpec {
     (101L, "article science citation wiki reference history")
   ).toDF("doc_id", "text")
 
-  test("importanceResample ranks target-vocabulary docs first") {
-    val top2 = Dsir.importanceResample(raw, "doc_id", "text", target, B, k = 2)
-      .select($"doc_id").as[Long].collect().toSet
-    assert(top2 === Set(1L, 4L))
-    // and the spam docs carry strictly lower mean scores
+  test("scoreDocs ranks target-vocabulary docs first") {
     val scores = Dsir.scoreDocs(raw, "doc_id", "text",
         Dsir.fitLogRatios(raw, target, "text", B), B)
       .select($"doc_id", $"mean_micro").as[(Long, Long)].collect().toMap
+    // the top 2 by mean ratio (doc id tie-break) are the two wiki docs
+    val top2 = scores.toSeq.sortBy { case (id, m) => (-m, id) }.take(2)
+    assert(top2.map(_._1).toSet === Set(1L, 4L))
+    // and the spam docs carry strictly lower mean scores
     assert(scores(1L) > scores(2L))
     assert(scores(4L) === scores(1L)) // identical text, identical score
   }

@@ -84,17 +84,17 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("signature store round-trips through parquet; append admits cycle") {
     val dir = java.nio.file.Files.createTempDirectory("sigstore").toString + "/s"
-    Dedup.saveSignatureStore(store, dir)
-    val loaded = Dedup.loadSignatureStore(spark, dir)
+    store.write.parquet(dir)
+    val loaded = spark.read.parquet(dir)
     val kept = Dedup.incrementalDedup(batch, "doc_id", "text", loaded)
       .select(col("doc_id")).as[Long].collect().toSet
     assert(kept === Set(13L, 16L, 17L))
     // complete the cycle: append survivors' signatures, admit a second
     // batch that duplicates a FIRST-batch survivor -> dropped
     val survivors = batch.filter(col("doc_id").isin(13L, 16L, 17L))
-    Dedup.saveSignatureStore(
-      Dedup.signatures(survivors, "doc_id", "text"), dir, append = true)
-    val store2 = Dedup.loadSignatureStore(spark, dir)
+    Dedup.signatures(survivors, "doc_id", "text")
+      .write.mode("append").parquet(dir)
+    val store2 = spark.read.parquet(dir)
     val batch2 = Seq((21L, tD), (22L, "genuinely new content appears in the second crawl wave"))
       .toDF("doc_id", "text")
     val kept2 = Dedup.incrementalDedup(batch2, "doc_id", "text", store2)
@@ -109,10 +109,9 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(s0.filter(col("simh").isNotNull).count() === 0L)
     // a simh-bearing batch appends cleanly onto a simh-free store
     val dir = java.nio.file.Files.createTempDirectory("sigmixed").toString + "/s"
-    Dedup.saveSignatureStore(s0, dir)
-    Dedup.saveSignatureStore(
-      Dedup.signatures(batch, "doc_id", "text"), dir, append = true)
-    val loaded = Dedup.loadSignatureStore(spark, dir)
+    s0.write.parquet(dir)
+    Dedup.signatures(batch, "doc_id", "text").write.mode("append").parquet(dir)
+    val loaded = spark.read.parquet(dir)
     assert(loaded.count() === oldDocs.count() + batch.count())
     // the Hamming probe sees only simh-bearing store rows — no error,
     // and the simh-free half yields no hits by contract
@@ -170,37 +169,6 @@ class IncrementalDedupSpec extends SparkSpec {
     val viaS = Dedup.crossHammingPairs(bs, st, maxHamming = 3)
       .select(col("id_new"), col("id_old")).as[(Long, Long)].collect().toSet
     assert(viaB === viaS && viaB.nonEmpty)
-  }
-
-  test("compactSignatureStore: 10 appends collapse to few files, rows intact") {
-    val dir = java.nio.file.Files.createTempDirectory("sigcompact").toString + "/s"
-    Dedup.saveSignatureStore(store, dir)
-    (0 until 10).foreach { i =>
-      val b = Seq((100L + i, s"unique crawl batch number $i with some fresh words " +
-        s"about topic $i and nothing else shared")).toDF("doc_id", "text")
-      Dedup.saveSignatureStore(
-        Dedup.signatures(b, "doc_id", "text"), dir, append = true)
-    }
-    def parquetFiles() = new java.io.File(dir).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    val before = Dedup.loadSignatureStore(spark, dir)
-      .select(col("id"), col("fp")).as[(Long, Long)].collect().sorted.toSeq
-    assert(parquetFiles() > 10, "append mode should accrete file-sets")
-    val n = Dedup.compactSignatureStore(spark, dir)
-    assert(n === before.size)
-    assert(parquetFiles() <= spark.sparkContext.defaultParallelism)
-    val after = Dedup.loadSignatureStore(spark, dir)
-      .select(col("id"), col("fp")).as[(Long, Long)].collect().sorted.toSeq
-    assert(after === before)
-    // no staging debris
-    val parent = new java.io.File(dir).getParentFile.listFiles().map(_.getName)
-    assert(!parent.exists(_.contains("compact")), parent.mkString(","))
-    // the compacted store still admits correctly
-    val kept = Dedup.incrementalDedup(
-        Seq((200L, tA), (201L, "something of genuine novelty arrives")).toDF("doc_id", "text"),
-        "doc_id", "text", Dedup.loadSignatureStore(spark, dir))
-      .select(col("doc_id")).as[Long].collect().toSet
-    assert(kept === Set(201L))
   }
 
   test("Hamming probe fails loudly on a store/probe width mismatch") {

@@ -44,49 +44,6 @@ class NgramLmSpec extends SparkSpec {
     assert(got(10L) > got(11L))
   }
 
-  test("perplexityFilter keeps exactly the docs scoring >= threshold") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val all = NgramLm.scoreDocs(NgramLm.fit(docs, "doc_id", "text"),
-        docs, "doc_id", "text")
-      .select($"doc_id", $"logscore").as[(Long, Double)].collect()
-    // median threshold guarantees a real split on this corpus
-    val thr = all.map(_._2).sorted.apply(all.length / 2)
-    val want = all.filter(_._2 >= thr).map(_._1).toSet
-    val kept = NgramLm.perplexityFilter(docs, "doc_id", "text", minLogScore = thr)
-      .select($"doc_id").as[Long].collect().toSet
-    assert(kept === want)
-    assert(kept.nonEmpty && kept.size < all.length)
-  }
-
-  test("saveModel/loadModel round-trip: loaded model scores bit-equal the fresh fit") {
-    val dir = java.nio.file.Files.createTempDirectory("ngramlm_model").toString
-    NgramLm.saveModel(model, dir)
-    val loaded = NgramLm.loadModel(spark, dir)
-    assert(loaded.nTokens === model.nTokens)
-    assert(loaded.uni.as[(String, Long)].collect().toMap ===
-      model.uni.as[(String, Long)].collect().toMap)
-    val docs = Seq((10L, "a b c"), (11L, "c a d"), (12L, "z")).toDF("doc_id", "text")
-    val fresh = NgramLm.scoreDocs(model, docs, "doc_id", "text")
-      .select($"doc_id", $"logscore").as[(Long, Double)].collect().toMap
-    val again = NgramLm.scoreDocs(loaded, docs, "doc_id", "text")
-      .select($"doc_id", $"logscore").as[(Long, Double)].collect().toMap
-    assert(again === fresh) // bit-equal: counts are integer-exact
-  }
-
-  test("saveModelVersioned publishes immutable versions behind a pointer") {
-    val dir = java.nio.file.Files.createTempDirectory("ngramlm_versions").toString
-    assert(NgramLm.saveModelVersioned(model, dir) === 1L)
-    val refit = NgramLm.fit(
-      Seq((1L, "a b c"), (2L, "a b d"), (3L, "e f")).toDF("doc_id", "text"),
-      "doc_id", "text")
-    assert(NgramLm.saveModelVersioned(refit, dir) === 2L)
-    val (v, latest) = NgramLm.loadModelVersioned(spark, dir)
-    assert(v === 2L)
-    assert(latest.nTokens === 8L)
-    // the old version is still a loadable consistent snapshot
-    assert(NgramLm.loadModel(spark, s"$dir/v1").nTokens === 6L)
-  }
-
   test("fitSampled is deterministic and a strict subset fit") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val a = NgramLm.fitSampled(docs, "doc_id", "text", fraction = 0.5)

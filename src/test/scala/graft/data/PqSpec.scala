@@ -33,6 +33,16 @@ class PqSpec extends SparkSpec {
   private def recall(approx: Set[(Long, Long)]): Double =
     (approx & exactTop3).size.toDouble / exactTop3.size
 
+  /** `v` minus the centroid of the cell `buildIndex` assigns it: the
+   * vectors that `residual = true` encodes. */
+  private def residuals(coarse: Array[Array[Double]]): DataFrame = {
+    val cells = Pq.buildIndex(emb, "vec_id", "v", coarse, seed).rows
+      .select(col("c_id").as("vec_id"), col("cell"))
+    emb.join(cells, "vec_id").select(col("vec_id"), zip_with(col("v"),
+      element_at(typedLit(coarse.map(_.toSeq).toSeq), col("cell") + 1),
+      (a, b) => a - b).as("v"))
+  }
+
   /** Mean |ADC score − true inner product| over queries × corpus. */
   private def quantErr(cb: Pq.Codebook): Double = {
     val q = queries.select(col("v").as("q_v"), Pq.lutFor(col("v"), cb).as("lut"))
@@ -98,11 +108,11 @@ class PqSpec extends SparkSpec {
   }
 
   test("residual-path encode: native equals composable on residual vectors too") {
-    // residualFrame output is the exact input ivfPqTopK(residual = true)
+    // the residuals are the exact input ivfPqTopK(residual = true)
     // encodes — pin the native/composable twins on THAT distribution so
     // the two spellings can't drift on the path q62e exercises
     val coarse = Similarity.planes(8, 64)
-    val resid = Pq.residualFrame(emb, "v", coarse)
+    val resid = residuals(coarse)
     for (cb <- Seq(seed, tiny)) {
       val diff = resid.select(
           Pq.encode(col("v"), cb).as("native"),
@@ -147,8 +157,7 @@ class PqSpec extends SparkSpec {
     // fit on the residual distribution. q62e's seed-plane configuration
     // is a value pin, not a recall configuration.
     val coarse = Similarity.trainIvfCentroids(emb, "v", nCells = 8, dim = 64, iters = 3)
-    val cbResid = Pq.trainCodebook(
-      Pq.residualFrame(emb, "v", coarse), "v", 8, 16, 64, iters = 5)
+    val cbResid = Pq.trainCodebook(residuals(coarse), "v", 8, 16, 64, iters = 5)
     def rec(cb: Pq.Codebook, residual: Boolean) = recall(pairs(
       Pq.ivfPqTopK(queries, emb, "vec_id", "v", k = 3, nProbe = 4,
         coarse = coarse, cb = cb, residual = residual)))
@@ -194,7 +203,7 @@ class PqSpec extends SparkSpec {
     assert(publish(emb) === 3L)
     // keep=1 retains the pointer (v3) plus one older version (v2): only
     // v1 is dropped
-    assert(Pq.pruneVersions(spark, dir, keep = 1) === Seq(1L))
+    assert(Versioned.pruneVersions(spark, dir, keep = 1) === Seq(1L))
     assert(!new java.io.File(s"$dir/v1").exists())
     // the in-flight reader on the retained old version still answers
     assert(Pq.searchIndex(oldReader, queries, "vec_id", "v", k = 3, nProbe = 2)
@@ -204,50 +213,9 @@ class PqSpec extends SparkSpec {
     assert(v === 3L)
     assert(idx.rows.count() === 500L)
     // pruning again is a no-op; keep=0 drops v2 as well
-    assert(Pq.pruneVersions(spark, dir, keep = 1) === Seq.empty)
-    assert(Pq.pruneVersions(spark, dir, keep = 0) === Seq(2L))
+    assert(Versioned.pruneVersions(spark, dir, keep = 1) === Seq.empty)
+    assert(Versioned.pruneVersions(spark, dir, keep = 0) === Seq(2L))
     assert(Pq.loadIndexVersioned(spark, dir)._1 === 3L)
-  }
-
-  test("appendToIndex: delta publish == full rebuild under the frozen codebook") {
-    val coarse = Similarity.planes(8, 64)
-    val old = emb.filter($"vec_id" < 300)
-    val delta = emb.filter($"vec_id" >= 300)
-    val appended = Pq.appendToIndex(
-      Pq.buildIndex(old, "vec_id", "v", coarse, seed), delta, "vec_id", "v")
-    val rebuilt = Pq.buildIndex(emb, "vec_id", "v", coarse, seed)
-    def canon(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("score"), 9))
-      .collect().map(_.toString).sorted.toSeq
-    def search(i: Pq.Index) =
-      canon(Pq.searchIndex(i, queries, "vec_id", "v", k = 3, nProbe = 3))
-    assert(search(appended) === search(rebuilt))
-    // and the appended rows are the union, codes frozen
-    assert(appended.rows.count() === 500L)
-    // versioned delta publish round-trips
-    val dir = java.nio.file.Files.createTempDirectory("pq_append").toString
-    assert(Pq.saveIndexVersioned(appended, dir) === 1L)
-    assert(search(Pq.loadIndexVersioned(spark, dir)._2) === search(rebuilt))
-  }
-
-  test("removeFromIndex: tombstone delete == rebuild without the docs") {
-    val coarse = Similarity.planes(8, 64)
-    val full = Pq.buildIndex(emb, "vec_id", "v", coarse, seed)
-    val deletes = emb.filter($"vec_id" % 7 === 0).select($"vec_id")
-    val shrunk = Pq.removeFromIndex(full, deletes, "vec_id")
-    val rebuilt = Pq.buildIndex(emb.filter($"vec_id" % 7 =!= 0),
-      "vec_id", "v", coarse, seed)
-    def canon(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        round(col("score"), 9))
-      .collect().map(_.toString).sorted.toSeq
-    def search(i: Pq.Index) =
-      canon(Pq.searchIndex(i, queries, "vec_id", "v", k = 3, nProbe = 3))
-    assert(search(shrunk) === search(rebuilt))
-    assert(shrunk.rows.count() === rebuilt.rows.count())
-    // deleted ids can never answer
-    assert(shrunk.rows.filter($"c_id" % 7 === 0).count() === 0L)
   }
 
   test("Versioned.publish never clobbers an existing version (orphan skipped)") {

@@ -47,7 +47,8 @@ class ProbeSpec extends SparkSpec {
     val noise = (3 until 64).map(i => math.abs(w(i))).max
     assert(noise < 1e-3, s"inactive weight leaked: $noise")
     // scoring with the fitted weights reproduces the planted label
-    val err = planted.select(abs(Probe.score(col("v"), w) - col("y")).as("e"))
+    val score = lit(w(0)) + Similarity.dotNative(col("v"), typedLit(w.drop(1).toSeq))
+    val err = planted.select(abs(score - col("y")).as("e"))
       .agg(max("e")).as[Double].head()
     assert(err < 1e-2, s"max |score - label| = $err")
   }
@@ -209,21 +210,6 @@ class ProbeSpec extends SparkSpec {
     assert(scored.groupBy(_._1).exists(_._2.map(_._2).distinct.size == 2))
     // doubled midranks are integers; their sum is pinned in the output
     assert(row.getLong(2) > 0)
-  }
-
-  test("qualityFilter keeps exactly the rows scoring >= the threshold") {
-    val planted = emb.select(col("vec_id"), col("v"),
-      element_at(col("v"), 1).as("y"))
-    val w = Probe.fitRidge(planted, "v", "y")
-    val scores = planted.select(col("vec_id"),
-        Probe.score(col("v"), w).as("s"))
-      .as[(Long, Double)].collect()
-    val thr = scores.map(_._2).sorted.apply(scores.length / 2)
-    val want = scores.filter(_._2 >= thr).map(_._1).toSet
-    val kept = Probe.qualityFilter(planted, planted, "v", "y", minScore = thr)
-      .select(col("vec_id")).as[Long].collect().toSet
-    assert(kept === want)
-    assert(kept.nonEmpty && kept.size < scores.length)
   }
 
   private def isoOf(rows: Seq[(Long, Long, Long)]) =

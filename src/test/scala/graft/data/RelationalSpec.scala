@@ -92,36 +92,6 @@ class RelationalSpec extends SparkSpec {
     }
   }
 
-  test("autoSaltFactor: measured hot-key share sizes the salt; uniform keys skip it") {
-    // planted hot key: 300 of 400 rows share k=1 -> share 750000 ppm; at
-    // a 100000-ppm-per-reducer target the measured factor must be 8
-    val hot = ((1 to 300).map(_ => (1L, "h")) ++
-      (1 to 100).map(i => (100L + i, "u"))).toDF("k", "lv")
-    val right = (1L to 200L).map(i => (i, i * 2.0)).toDF("k", "rv")
-    assert(Relational.autoSaltFactor(hot, Seq("k"),
-      targetSharePpm = 100000L) === 8)
-    // the auto join spreads the hot key AND stays row-identical
-    val auto = Relational.saltedJoinAuto(hot, right, Seq("k"),
-      targetSharePpm = 100000L)
-    assert(auto.queryExecution.optimizedPlan.toString.contains("__join_salt"))
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select($"k", $"lv", $"rv").as[(Long, String, Double)]
-        .collect().sorted.toSeq
-    assert(canon(auto) === canon(hot.join(right, Seq("k"))))
-    // uniform keys: hottest share ~2500 ppm < target -> factor 1, and the
-    // degenerate join carries no salt column and no replication
-    val uniform = (1L to 400L).map(i => (i, "u")).toDF("k", "lv")
-    assert(Relational.autoSaltFactor(uniform, Seq("k"),
-      targetSharePpm = 100000L) === 1)
-    val plainAuto = Relational.saltedJoinAuto(uniform, right, Seq("k"),
-      targetSharePpm = 100000L)
-    assert(!plainAuto.queryExecution.optimizedPlan.toString.contains("__join_salt"))
-    assert(canon(plainAuto) === canon(uniform.join(right, Seq("k"))))
-    // maxSalt clamps a pathological share
-    assert(Relational.autoSaltFactor(hot, Seq("k"),
-      targetSharePpm = 1L, maxSalt = 16) === 16)
-  }
-
   test("topKPerGroup keeps exactly k best rows per group with rank") {
     val df = Seq(
       ("g1", 1L, 5.0), ("g1", 2L, 9.0), ("g1", 3L, 9.0), ("g1", 4L, 1.0),

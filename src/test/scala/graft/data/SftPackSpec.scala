@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /**
- * Chat templating + loss-masked packing ([[Corpus.renderChat]] /
+ * Chat templating + loss-masked packing ([[Corpus.chatPromptText]] /
  * [[Corpus.packWithLossMask]]): prompt ⊕ response token counts add up to
  * the rendered example's count, the loss interval covers exactly the
  * response region, and the pack layout agrees with [[Corpus.packSequences]]
@@ -27,9 +27,10 @@ class SftPackSpec extends SparkSpec {
     .withColumn("rt", Corpus.chatTokenCount(col("r")))
 
   test("prompt + response token counts equal the rendered example's") {
-    val whole = docs.select(col("doc_id"), Corpus.chatTokenCount(
-        Corpus.renderChat(lit("sys"), concat(lit("q: "), col("text")),
-          col("text"))).as("wt"))
+    // the rendered example is the prompt region ⊕ the response region
+    val whole = docs.select(col("doc_id"), Corpus.chatTokenCount(concat(
+        Corpus.chatPromptText(lit("sys"), concat(lit("q: "), col("text"))),
+        Corpus.chatResponseText(col("text")))).as("wt"))
     val parts = sft.select(col("doc_id"), (col("pt") + col("rt")).as("st"))
     val joined = whole.join(parts, "doc_id")
       .select(col("wt").cast("long"), col("st").cast("long"))

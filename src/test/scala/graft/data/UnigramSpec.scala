@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
  * Unigram-LM tokenizer ([[Unigram]]): hand-computed forward-backward
  * expectations, EM partition invariance, Viterbi vs brute-force
  * segmentation, prune/coverage contracts, planted-vocabulary recovery,
- * and model persistence.
+ * and sampled segmentation.
  */
 class UnigramSpec extends SparkSpec {
   import spark.implicits._
@@ -93,27 +93,18 @@ class UnigramSpec extends SparkSpec {
     assert(got === Map("a" -> 7L, "b" -> 5L, "ab" -> 2L, "ba" -> 5L))
   }
 
-  test("model round-trips bit-exactly through parquet") {
-    val docs = Seq((1L, "spark spark table")).toDF("doc_id", "text")
-    val model = Unigram.train(docs, "text", vocabSize = 12, maxPieceLen = 3)
-    val dir = java.nio.file.Files.createTempDirectory("unigram").toString
-    Unigram.saveModel(spark, model, s"$dir/m")
-    assert(Unigram.loadModel(spark, s"$dir/m") === model)
-  }
-
   test("sampled segmentation frequencies match lattice probabilities at alpha=1") {
     // "ab" with p(a)=p(b)=.25, p(ab)=.5: P([ab]) = 8/9 (hand case above)
     val model: Unigram.Model = Map(
       "a" -> math.floor(math.log(0.25) * 1e6).toLong,
       "b" -> math.floor(math.log(0.25) * 1e6).toLong,
       "ab" -> math.floor(math.log(0.5) * 1e6).toLong)
-    val rng = new scala.util.Random(17)
+    // one draw per document: the uniforms hash (salt, doc id, word, step)
     val n = 4000
-    val whole = (1 to n).count { _ =>
-      val u = rng.nextDouble()
-      Unigram.sampleSegmentation("ab", model, alpha = 1.0, 2, _ => u) ===
-        Seq("ab")
-    }
+    val docs = (1 to n).map(i => (i.toLong, "ab")).toDF("doc_id", "text")
+    val whole = Unigram.sampleEncode(docs, "doc_id", "text", model,
+        alpha = 1.0, salt = "17", maxPieceLen = 2)
+      .filter(col("pieces") === array(lit("ab"))).count()
     assert(math.abs(whole.toDouble / n - 8.0 / 9) < 0.02, s"got $whole/$n")
   }
 

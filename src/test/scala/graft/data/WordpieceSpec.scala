@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
  * WordPiece trainer + encoder ([[Wordpiece]]): likelihood-ratio argmax
  * (hand case where it diverges from BPE's count argmax), incremental
  * trainer pinned against a from-scratch recount reference, position-aware
- * symbols, greedy longest-match encode, vocab persistence.
+ * symbols, greedy longest-match encode.
  */
 class WordpieceSpec extends SparkSpec {
   import spark.implicits._
@@ -162,13 +162,6 @@ class WordpieceSpec extends SparkSpec {
       .filter(col("w") =!= col("word")).count() === 0)
     val stats = Wordpiece.pieceStats(enc)
     assert(stats.agg(sum(col("n"))).head().getLong(0) === enc.count())
-  }
-
-  test("vocab persistence round-trips in rank order") {
-    val dir = java.nio.file.Files.createTempDirectory("wp").toString + "/v"
-    val vocab = Seq("a", "##b", "ab", "[UNK]")
-    Wordpiece.saveVocab(spark, vocab, dir)
-    assert(Wordpiece.loadVocab(spark, dir) === vocab)
   }
 
   test("vocabSize below the initial alphabet fails loudly, never truncates") {

@@ -6,24 +6,6 @@ import graft.SparkSpec
 class SinksSpec extends SparkSpec {
   import spark.implicits._
 
-  test("writeClustered round-trips with files range-clustered on the key") {
-    val dir = java.nio.file.Files.createTempDirectory("sinks").toString + "/t"
-    val df = (1 to 10000).map(i => (i % 97, s"T${i % 13}", i.toDouble))
-      .toDF("key", "ticker", "v")
-    Sinks.writeClustered(df, dir, Seq("key", "ticker"), numFiles = 8)
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 10000)
-    assert(back.agg(sum($"v")).as[Double].head() == (1 to 10000).map(_.toDouble).sum)
-    // range clustering: per-file key ranges must not overlap (file pruning works)
-    val ranges = back.groupBy(input_file_name().as("f"))
-      .agg(min($"key").as("lo"), max($"key").as("hi"))
-      .collect().map(r => (r.getInt(1), r.getInt(2))).sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Array((_, hi1), (lo2, _)) => assert(hi1 <= lo2)
-      case _ =>
-    }
-  }
-
   test("zorderKey interleaves bits; locality beats lexicographic on dim 2") {
     import graft.risk.{Sinks => S}
     // hand-checked interleave: x=0b11 (bits->positions 0,2), y=0b10 (->3)
@@ -34,7 +16,9 @@ class SinksSpec extends SparkSpec {
     val n = 4096
     val grid = (0 until n).map(i => (i % 64, i / 64, i)).toDF("a", "b", "v")
     val dir = java.nio.file.Files.createTempDirectory("sinks_z").toString + "/t"
-    S.writeZOrdered(grid, dir, Seq("a", "b"), numFiles = 16, bits = 6)
+    grid.withColumn("z", S.zorderKey(Seq($"a", $"b"), bits = 6))
+      .repartitionByRange(16, $"z").sortWithinPartitions($"z").drop("z")
+      .write.parquet(dir)
     val back = spark.read.parquet(dir)
     assert(back.count() == n)
     def filesTouched(c: String) = back.filter(col(c) === 7)
@@ -152,11 +136,13 @@ class SinksSpec extends SparkSpec {
     }
   }
 
-  test("writeHilbertOrdered: locality on BOTH dims, per-file ranges disjoint") {
+  test("hilbertKey: a Hilbert-sorted layout has locality on BOTH dims") {
     val n = 4096
     val grid = (0 until n).map(i => (i % 64, i / 64, i)).toDF("a", "b", "v")
     val dir = java.nio.file.Files.createTempDirectory("sinks_h").toString + "/t"
-    Sinks.writeHilbertOrdered(grid, dir, Seq("a", "b"), numFiles = 16, bits = 6)
+    grid.withColumn("h", Sinks.hilbertKey(Seq($"a", $"b"), bits = 6))
+      .repartitionByRange(16, $"h").sortWithinPartitions($"h").drop("h")
+      .write.parquet(dir)
     val back = spark.read.parquet(dir)
     assert(back.count() == n)
     def filesTouched(c: String) = back.filter(col(c) === 7)
@@ -196,25 +182,5 @@ class SinksSpec extends SparkSpec {
     val bigPlan = Sinks.compactionPlan(big, "path", "size", target)
       .collect().map(r => r.getString(0) -> r.getLong(2)).toMap
     assert(bigPlan("a") == 0L && bigPlan("b") == 0L && bigPlan("c") == 5L)
-  }
-
-  test("compactSmallFiles: content-identical rewrite with ~target-sized files") {
-    val base = java.nio.file.Files.createTempDirectory("compact").toString
-    val in = s"$base/in"; val out = s"$base/out"
-    // 64 tiny files
-    (1 to 10000).map(i => (i.toLong, s"row_$i", i * 1.5)).toDF("id", "s", "v")
-      .repartition(64).write.parquet(in)
-    val nIn = new java.io.File(in).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(nIn == 64)
-    val totalBytes = new java.io.File(in).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
-    val plan = Sinks.compactSmallFiles(spark, in, out, targetBytes = totalBytes / 4)
-    assert(plan.count() == 64)
-    val nOut = new java.io.File(out).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(nOut <= 5, s"expected <=5 compacted files, got $nOut")
-    // bit-for-bit content equality (as multisets of rows)
-    val a = spark.read.parquet(in).collect().map(_.toString).sorted
-    val b = spark.read.parquet(out).collect().map(_.toString).sorted
-    assert(a.sameElements(b))
   }
 }
