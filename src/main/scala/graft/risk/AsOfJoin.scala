@@ -1,18 +1,19 @@
 package graft.risk
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 /**
  * AS-OF join: for each left row at time t, attach the latest right row with
- * right.ts <= t (right columns prefixed, tempo-style).
+ * right.ts <= t (right columns prefixed `right_`, tempo-style).
  *
  * Replaces the reference's `tempo.TSDF.asofJoin` usage
  * (`/root/reference/02_var_model.py:97-112`, `03_var_monte_carlo.py:30-42`,
  * `05_var_compliance.py:84-99`).
  *
- * Two physical strategies behind one semantic:
+ * Three physical strategies behind one semantic:
  *
  *  1. [[asofJoin]] — union + last-over-window (tempo's own published
  *     algorithm). One shuffle on (partitionCols). Correct at any size but
@@ -30,11 +31,16 @@ import org.apache.spark.sql.functions._
  *     low-cardinality) series keys, where 1 collapses to one task and 2
  *     can't broadcast: time-chunk both sides, fill within each chunk in
  *     parallel, and carry the per-chunk boundary payload over a
- *     chunk-count-sized summary (the [[Windows.chunkedFfill]]
- *     construction applied to the as-of payload) — exact for ANY gap
- *     size, parallel in #chunks.
+ *     chunk-count-sized summary (a computed carry, not a replay of raw
+ *     rows) — exact for ANY gap size, parallel in #chunks.
+ *
+ * 1 and 3 share one core: the left/right union, the two fill windows,
+ * the direction pick and the payload expansion below.
  */
 object AsOfJoin {
+
+  private val Side = "__asof_side"
+  private val Payload = "__asof_payload"
 
   /** Union + last/first-over-window as-of join.
    *
@@ -58,69 +64,12 @@ object AsOfJoin {
       right: DataFrame,
       tsCol: String,
       partitionCols: Seq[String] = Nil,
-      rightPrefix: String = "right_",
       direction: String = "backward"): DataFrame = {
-    require(Set("backward", "forward", "nearest").contains(direction),
-      s"direction must be backward|forward|nearest, got $direction")
-    val side = "__asof_side"
-    val payload = "__asof_payload"
-    val rightValueCols = right.columns.filterNot(c => c == tsCol || partitionCols.contains(c))
-    val leftValueCols = left.columns.filterNot(c => c == tsCol || partitionCols.contains(c))
-
-    val rightStruct = struct((tsCol +: rightValueCols.toSeq).map(col): _*)
-    val l = left
-      .withColumn(side, lit(1))
-      .withColumn(payload, lit(null).cast(right.select(rightStruct).schema.head.dataType))
-    val r = right
-      .select(
-        partitionCols.map(col) ++ Seq(col(tsCol)) ++
-          leftValueCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
-          Seq(lit(0).as(side), rightStruct.as(payload)): _*)
-
-    val unioned = l.select(l.columns.map(col).toSeq: _*).unionByName(r)
-    // backward: right rows (side 0) sort BEFORE left at equal ts, so the
-    // preceding frame sees the exact-ts match; forward mirrors — right
-    // rows sort AFTER left, so the following frame sees it
-    val wB = Window
-      .partitionBy(partitionCols.map(col): _*)
-      .orderBy(col(tsCol), col(side))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wF = Window
-      .partitionBy(partitionCols.map(col): _*)
-      .orderBy(col(tsCol), lit(1) - col(side))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    def micros(c: org.apache.spark.sql.Column) =
-      left.schema(tsCol).dataType match {
-        case LongType | IntegerType | ShortType | ByteType => c.cast("long")
-        case _ => unix_micros(c.cast("timestamp"))
-      }
-
-    val filled = (direction match {
-      case "backward" =>
-        unioned.withColumn(payload, last(col(payload), ignoreNulls = true).over(wB))
-      case "forward" =>
-        unioned.withColumn(payload, first(col(payload), ignoreNulls = true).over(wF))
-      case "nearest" =>
-        val withBoth = unioned
-          .withColumn("__b", last(col(payload), ignoreNulls = true).over(wB))
-          .withColumn("__f", first(col(payload), ignoreNulls = true).over(wF))
-        withBoth
-          .withColumn(payload,
-            when(col("__b").isNull, col("__f"))
-              .when(col("__f").isNull, col("__b"))
-              .when(micros(col(tsCol)) - micros(col("__b").getField(tsCol)) <=
-                micros(col("__f").getField(tsCol)) - micros(col(tsCol)),
-                col("__b"))
-              .otherwise(col("__f")))
-          .drop("__b", "__f")
-    }).filter(col(side) === 1)
-
-    val expanded = (tsCol +: rightValueCols.toSeq).foldLeft(filled) { (df, c) =>
-      df.withColumn(rightPrefix + c, col(payload).getField(c))
-    }
-    expanded.drop(side, payload)
+    checkDirection(direction)
+    val keys = partitionCols.map(col)
+    matched(unioned(left, right, tsCol, partitionCols), right, tsCol, partitionCols,
+      direction, micros(left.schema(tsCol).dataType),
+      backwardFill(keys, tsCol), forwardFill(keys, tsCol))
   }
 
   /**
@@ -129,8 +78,7 @@ object AsOfJoin {
    * unpartitioned window is one task and [[asofJoinBroadcast]]'s right
    * side no longer fits the driver.
    *
-   * Construction ([[Windows.chunkedFfill]]'s computed-carry trick applied
-   * to the as-of payload — exact for any gap size, no look-back
+   * Construction (a computed carry — exact for any gap size, no look-back
    * replication):
    *
    *  1. union left/right exactly as [[asofJoin]], add `__chunk =
@@ -160,41 +108,19 @@ object AsOfJoin {
       right: DataFrame,
       tsCol: String,
       partitionCols: Seq[String] = Nil,
-      rightPrefix: String = "right_",
       direction: String = "backward",
       nChunks: Int = 64): DataFrame = {
-    require(Set("backward", "forward", "nearest").contains(direction),
-      s"direction must be backward|forward|nearest, got $direction")
+    checkDirection(direction)
     require(nChunks > 0, s"nChunks must be positive, got $nChunks")
-    val side = "__asof_side"
-    val payload = "__asof_payload"
-    val rightValueCols = right.columns.filterNot(c => c == tsCol || partitionCols.contains(c))
-    val leftValueCols = left.columns.filterNot(c => c == tsCol || partitionCols.contains(c))
-
-    val rightStruct = struct((tsCol +: rightValueCols.toSeq).map(col): _*)
-    val l = left
-      .withColumn(side, lit(1))
-      .withColumn(payload, lit(null).cast(right.select(rightStruct).schema.head.dataType))
-    val r = right
-      .select(
-        partitionCols.map(col) ++ Seq(col(tsCol)) ++
-          leftValueCols.map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
-          Seq(lit(0).as(side), rightStruct.as(payload)): _*)
-
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    def micros(c: org.apache.spark.sql.Column) =
-      left.schema(tsCol).dataType match {
-        case LongType | IntegerType | ShortType | ByteType => c.cast("long")
-        case _ => unix_micros(c.cast("timestamp"))
-      }
+    val us = micros(left.schema(tsCol).dataType)
 
     // chunk width from the MEASURED ts range (two narrow min/max scans
     // on the raw inputs — parquet-stat-prunable — never the union):
     // unit-free, so any ts scale spreads across ~nChunks chunks
-    val b1 = left.agg(min(micros(col(tsCol))).as("lo"),
-      max(micros(col(tsCol))).as("hi")).collect().head
-    val b2 = right.agg(min(micros(col(tsCol))).as("lo"),
-      max(micros(col(tsCol))).as("hi")).collect().head
+    val b1 = left.agg(min(us(col(tsCol))).as("lo"),
+      max(us(col(tsCol))).as("hi")).collect().head
+    val b2 = right.agg(min(us(col(tsCol))).as("lo"),
+      max(us(col(tsCol))).as("hi")).collect().head
     val los = Seq(b1, b2).filterNot(_.isNullAt(0)).map(_.getLong(0))
     val his = Seq(b1, b2).filterNot(_.isNullAt(1)).map(_.getLong(1))
     val lo = if (los.isEmpty) 0L else los.min
@@ -202,18 +128,9 @@ object AsOfJoin {
       if (his.isEmpty) 1L
       else math.max(1L, (his.max - lo) / nChunks + 1L)
     val keyCs = partitionCols.map(col)
-    val base = l.select(l.columns.map(col).toSeq: _*).unionByName(r)
+    val base = unioned(left, right, tsCol, partitionCols)
       .withColumn("__chunk",
-        floor((micros(col(tsCol)) - lit(lo)) / lit(width)))
-
-    // in-chunk fills: same (ts, side) ordering contract as asofJoin, the
-    // chunk id added to the partition keys — parallel in #chunks
-    val wB = Window.partitionBy(keyCs :+ col("__chunk"): _*)
-      .orderBy(col(tsCol), col(side))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wF = Window.partitionBy(keyCs :+ col("__chunk"): _*)
-      .orderBy(col(tsCol), lit(1) - col(side))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+        floor((us(col(tsCol)) - lit(lo)) / lit(width)))
 
     // per-chunk boundary summary over ALL chunks seen (left-only chunks
     // get a null right payload and inherit via the carry window): one row
@@ -222,11 +139,11 @@ object AsOfJoin {
     val summary = base
       .groupBy(keyCs :+ col("__chunk"): _*)
       .agg(
-        max(when(col(side) === 0,
-          struct(micros(col(tsCol)).as("__t"), col(payload).as("__p"))))
+        max(when(col(Side) === 0,
+          struct(us(col(tsCol)).as("__t"), col(Payload).as("__p"))))
           .as("__last_r"),
-        min(when(col(side) === 0,
-          struct(micros(col(tsCol)).as("__t"), col(payload).as("__p"))))
+        min(when(col(Side) === 0,
+          struct(us(col(tsCol)).as("__t"), col(Payload).as("__p"))))
           .as("__first_r"))
     // with no keys, partition the (chunk-count-sized) carry window on a
     // computed constant so the single-partition step is explicit
@@ -245,32 +162,13 @@ object AsOfJoin {
     val joined = base.join(broadcast(carried),
       partitionCols :+ "__chunk", "left")
 
-    def bFill = coalesce(
-      last(col(payload), ignoreNulls = true).over(wB), col("__carry_b"))
-    def fFill = coalesce(
-      first(col(payload), ignoreNulls = true).over(wF), col("__carry_f"))
-
-    val filled = (direction match {
-      case "backward" => joined.withColumn(payload, bFill)
-      case "forward" => joined.withColumn(payload, fFill)
-      case "nearest" =>
-        joined
-          .withColumn("__b", bFill)
-          .withColumn("__f", fFill)
-          .withColumn(payload,
-            when(col("__b").isNull, col("__f"))
-              .when(col("__f").isNull, col("__b"))
-              .when(micros(col(tsCol)) - micros(col("__b").getField(tsCol)) <=
-                micros(col("__f").getField(tsCol)) - micros(col(tsCol)),
-                col("__b"))
-              .otherwise(col("__f")))
-          .drop("__b", "__f")
-    }).filter(col(side) === 1)
-
-    val expanded = (tsCol +: rightValueCols.toSeq).foldLeft(filled) { (df, c) =>
-      df.withColumn(rightPrefix + c, col(payload).getField(c))
-    }
-    expanded.drop(side, payload, "__chunk", "__carry_b", "__carry_f")
+    // in-chunk fills: the chunk id added to the partition keys — parallel
+    // in #chunks; a row unfilled in its chunk takes the carry
+    val inChunk = keyCs :+ col("__chunk")
+    matched(joined, right, tsCol, partitionCols, direction, us,
+      coalesce(backwardFill(inChunk, tsCol), col("__carry_b")),
+      coalesce(forwardFill(inChunk, tsCol), col("__carry_f")))
+      .drop("__chunk", "__carry_b", "__carry_f")
   }
 
   /**
@@ -291,8 +189,7 @@ object AsOfJoin {
       partitionCols: Seq[String] = Nil,
       rightPrefix: String = "right_",
       direction: String = "backward"): DataFrame = {
-    require(Set("backward", "forward", "nearest").contains(direction),
-      s"direction must be backward|forward|nearest, got $direction")
+    checkDirection(direction)
     val spark = left.sparkSession
     val sep = "\u001f" // unit separator: collision-safe key join, text-safe file
     val matchTs = "__asof_match_ts"
@@ -301,17 +198,7 @@ object AsOfJoin {
     def keyExpr(df: DataFrame) =
       if (partitionCols.isEmpty) lit("")
       else concat_ws(sep, partitionCols.map(c => col(c).cast("string")): _*)
-
-    // micros precision: timestamp->long cast truncates to seconds, so go
-    // through unix_micros — but an already-numeric ts column (epoch micros
-    // from a range-join caller) must pass through untouched: casting a
-    // 1.7e15-micros long to timestamp reads it as SECONDS and the ×1e6
-    // round-trip overflows Long, scrambling the binary-search order.
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-    def tsMicrosOf(df: DataFrame, c: String) = df.schema(c).dataType match {
-      case LongType | IntegerType | ShortType | ByteType => col(c).cast("long")
-      case _ => unix_micros(col(c).cast("timestamp"))
-    }
+    def tsMicros(df: DataFrame) = micros(df.schema(tsCol).dataType)(col(tsCol))
 
     // The right side is small by contract, but its PLAN may be expensive
     // (e.g. the full MC chain producing a daily VaR series) and it is
@@ -321,7 +208,7 @@ object AsOfJoin {
     val rightM = right.localCheckpoint()
 
     val rightTs: Map[String, Array[Long]] = rightM
-      .select(keyExpr(right).as(keyCol), tsMicrosOf(rightM, tsCol).as("ts"))
+      .select(keyExpr(right).as(keyCol), tsMicros(rightM).as("ts"))
       .groupBy(keyCol)
       .agg(sort_array(collect_list("ts")).as("ts"))
       .collect()
@@ -364,10 +251,10 @@ object AsOfJoin {
       }
     }
 
-    val rightValueCols = right.columns.filterNot(c => c == tsCol || partitionCols.contains(c))
+    val rightValueCols = valueCols(right, tsCol, partitionCols)
     val rightRenamed = rightM.select(
       partitionCols.map(col) ++
-        Seq(tsMicrosOf(rightM, tsCol).as(matchTs), col(tsCol).as(rightPrefix + tsCol)) ++
+        Seq(tsMicros(rightM).as(matchTs), col(tsCol).as(rightPrefix + tsCol)) ++
         rightValueCols.map(c => col(c).as(rightPrefix + c)): _*)
 
     // Duplicate (key, ts) right rows would fan the equi-join out — every
@@ -383,8 +270,88 @@ object AsOfJoin {
         payloadCols.map(c => col("__p").getField(c).as(c)): _*)
 
     left
-      .withColumn(matchTs, lookup(keyExpr(left), tsMicrosOf(left, tsCol)))
+      .withColumn(matchTs, lookup(keyExpr(left), tsMicros(left)))
       .join(broadcast(rightUnique), partitionCols :+ matchTs, "left")
       .drop(matchTs)
+  }
+
+  private def checkDirection(direction: String): Unit =
+    require(Set("backward", "forward", "nearest").contains(direction),
+      s"direction must be backward|forward|nearest, got $direction")
+
+  /** Epoch micros of a ts column of type `tsType`. A timestamp->long cast
+   * truncates to seconds, so go through unix_micros — but an
+   * already-numeric ts (epoch micros from a range-join caller, or epoch
+   * seconds) passes through untouched: casting a
+   * 1.7e15-micros long to timestamp reads it as SECONDS and the ×1e6
+   * round-trip overflows Long, scrambling the order. */
+  private def micros(tsType: DataType): Column => Column = tsType match {
+    case LongType | IntegerType | ShortType | ByteType => _.cast("long")
+    case _ => c => unix_micros(c.cast("timestamp"))
+  }
+
+  private def valueCols(df: DataFrame, tsCol: String, partitionCols: Seq[String]): Seq[String] =
+    df.columns.toSeq.filterNot(c => c == tsCol || partitionCols.contains(c))
+
+  /** Left and right rows in one frame: the keys, `tsCol` and the left
+   * value columns (null on right rows), plus `Side` (1 left, 0 right) and
+   * `Payload`, the right row's ts and value columns as a struct (null on
+   * left rows). */
+  private def unioned(left: DataFrame, right: DataFrame, tsCol: String,
+      partitionCols: Seq[String]): DataFrame = {
+    val rightStruct = struct((tsCol +: valueCols(right, tsCol, partitionCols)).map(col): _*)
+    val l = left
+      .withColumn(Side, lit(1))
+      .withColumn(Payload, lit(null).cast(right.select(rightStruct).schema.head.dataType))
+    val r = right
+      .select(
+        partitionCols.map(col) ++ Seq(col(tsCol)) ++
+          valueCols(left, tsCol, partitionCols)
+            .map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
+          Seq(lit(0).as(Side), rightStruct.as(Payload)): _*)
+    l.unionByName(r)
+  }
+
+  // backward: right rows (side 0) sort BEFORE left at equal ts, so the
+  // preceding frame sees the exact-ts match; forward mirrors — right
+  // rows sort AFTER left, so the following frame sees it
+  private def backwardFill(part: Seq[Column], tsCol: String): Column =
+    last(col(Payload), ignoreNulls = true).over(Window
+      .partitionBy(part: _*)
+      .orderBy(col(tsCol), col(Side))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+
+  private def forwardFill(part: Seq[Column], tsCol: String): Column =
+    first(col(Payload), ignoreNulls = true).over(Window
+      .partitionBy(part: _*)
+      .orderBy(col(tsCol), lit(1) - col(Side))
+      .rowsBetween(Window.currentRow, Window.unboundedFollowing))
+
+  /** Each left row of `unioned` with the payload its `direction` picks from
+   * the two fills, expanded into `right_` columns. `nearest` takes the
+   * fill closer in time (`us` gives epoch micros), a tie going backward. */
+  private def matched(unioned: DataFrame, right: DataFrame, tsCol: String,
+      partitionCols: Seq[String], direction: String, us: Column => Column,
+      bFill: Column, fFill: Column): DataFrame = {
+    val filled = (direction match {
+      case "backward" => unioned.withColumn(Payload, bFill)
+      case "forward" => unioned.withColumn(Payload, fFill)
+      case "nearest" =>
+        unioned
+          .withColumn("__b", bFill)
+          .withColumn("__f", fFill)
+          .withColumn(Payload,
+            when(col("__b").isNull, col("__f"))
+              .when(col("__f").isNull, col("__b"))
+              .when(us(col(tsCol)) - us(col("__b").getField(tsCol)) <=
+                us(col("__f").getField(tsCol)) - us(col(tsCol)),
+                col("__b"))
+              .otherwise(col("__f")))
+          .drop("__b", "__f")
+    }).filter(col(Side) === 1)
+
+    (tsCol +: valueCols(right, tsCol, partitionCols)).foldLeft(filled) { (df, c) =>
+      df.withColumn("right_" + c, col(Payload).getField(c))
+    }.drop(Side, Payload)
   }
 }

@@ -16,15 +16,14 @@ import org.apache.spark.sql.functions._
  */
 object Calendar {
 
-  /** One row per day between min and max of `dateCol` in `df` (inclusive),
-   * optionally business days (Mon-Fri) only. Output column: `date`. */
-  def calendarFor(df: DataFrame, dateCol: String, businessDaysOnly: Boolean = false): DataFrame = {
+  /** One row per day between min and max of `dateCol` in `df` (inclusive).
+   * Output column: `date`. */
+  def calendarFor(df: DataFrame, dateCol: String): DataFrame = {
     val bounds = df.agg(
       to_date(min(col(dateCol))).as("__lo"),
       to_date(max(col(dateCol))).as("__hi"))
-    val days = bounds
+    bounds
       .select(explode(sequence(col("__lo"), col("__hi"), expr("interval 1 day"))).as("date"))
-    if (businessDaysOnly) days.filter(!dayofweek(col("date")).isin(1, 7)) else days
   }
 
   /**
@@ -32,17 +31,14 @@ object Calendar {
    * Duplicate rows per (keys, day) are first reduced with `max` so the
    * result is deterministic. `dateCol` in the output is a `date`.
    *
-   * With `keyCols` empty (one global series) the fill runs through
-   * [[Windows.chunkedFfill]] so the plan parallelizes instead of
-   * collapsing to a single-task global window; with real keys the keyed
-   * window is already parallel and cheaper (one pass, no carry join).
+   * With `keyCols` empty (one global series) the fill window is one task:
+   * a daily calendar is a few thousand rows per decade.
    */
   def reindexFfill(
       df: DataFrame,
       keyCols: Seq[String],
       dateCol: String,
-      valueCols: Seq[String],
-      businessDaysOnly: Boolean = false): DataFrame = {
+      valueCols: Seq[String]): DataFrame = {
     val reduced = df
       .groupBy((keyCols.map(col) :+ to_date(col(dateCol)).as(dateCol)): _*)
       .agg(max(col(valueCols.head)).as(valueCols.head),
@@ -52,23 +48,20 @@ object Calendar {
     // consumers then share one identical aggregation subplan, whose
     // shuffle Exchange Spark reuses (ReuseExchange), so an expensive input
     // plan is computed once instead of once per consumer
-    val calendar = calendarFor(reduced, dateCol, businessDaysOnly)
+    val calendar = calendarFor(reduced, dateCol)
       .withColumnRenamed("date", dateCol)
     val grid =
       if (keyCols.isEmpty) calendar
       else calendar.crossJoin(broadcast(reduced.select(keyCols.map(col): _*).distinct()))
 
     val joined = grid.join(reduced, keyCols :+ dateCol, "left")
-    if (keyCols.isEmpty)
-      Windows.chunkedFfill(joined, dateCol, Nil, valueCols)
-    else {
-      val w = Window
-        .partitionBy(keyCols.map(col): _*)
-        .orderBy(col(dateCol))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      valueCols.foldLeft(joined) { (d, c) =>
-        d.withColumn(c, last(col(c), ignoreNulls = true).over(w))
-      }
+    // dates are unique per key after the reduce, so the order is total
+    val w = Window
+      .partitionBy(keyCols.map(col): _*)
+      .orderBy(col(dateCol))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    valueCols.foldLeft(joined) { (d, c) =>
+      d.withColumn(c, last(col(c), ignoreNulls = true).over(w))
     }
   }
 }

@@ -11,15 +11,13 @@ import org.apache.spark.sql.functions._
  * .rangeBetween(-N·day, 0)`) is the idiomatic Spark spelling for "trailing
  * N days over one global series" — and it collapses the whole series into
  * ONE task (SURVEY §4 pitfall 1). Fine at thousands of rows; fatal at
- * billions.
+ * billions. Both shapes here run over time chunks instead ([[overChunks]]).
  */
 object Windows {
 
   /**
    * Trailing range-window aggregates over a single global time series,
-   * parallelized by time-chunking: every row is replicated into its home
-   * chunk and the next one (as look-back context), the window runs inside
-   * each chunk partition, and only home-chunk rows are kept. Because
+   * parallelized by time-chunking ([[overChunks]]). Because
    * `chunkDays ≥ windowDays`, each row still sees its complete trailing
    * window; the plan becomes shuffle-on-chunk + parallel windows instead
    * of a global single-task sort. Results are identical to the
@@ -36,103 +34,47 @@ object Windows {
       aggs: (String, Column)*): DataFrame = {
     require(chunkDays >= windowDays,
       s"chunkDays ($chunkDays) must cover the lookback ($windowDays)")
-    val chunkLen = chunkDays.toLong * 86400L
-    val w = Window
-      .partitionBy(col("__chunk"))
+    val w = byChunk
       .orderBy(col(dateCol).cast("timestamp").cast("long"))
       .rangeBetween(-windowDays.toLong * 86400L, 0L)
-    val base = df
-      .withColumn("__home", floor(col(dateCol).cast("timestamp").cast("long") / chunkLen))
-      .withColumn("__chunk", explode(array(col("__home"), col("__home") + 1)))
-    aggs.foldLeft(base) { case (d, (name, a)) => d.withColumn(name, a.over(w)) }
-      .filter(col("__chunk") === col("__home"))
-      .drop("__home", "__chunk")
-  }
-
-  /**
-   * Forward-fill (`last(_, ignoreNulls=true)` over unbounded-preceding)
-   * parallelized by time-chunking — exact for ANY gap size, unlike the
-   * look-back-replication tricks, because the carry is computed, not
-   * windowed over raw rows:
-   *
-   *  1. fill within each (keys, chunk) partition — parallel;
-   *  2. reduce each chunk to its last filled value per column (one row per
-   *     (keys, chunk) — thousands of rows for decades of data);
-   *  3. forward-carry over that tiny summary (the only sequential step,
-   *     sized in chunks, not rows), shifted one chunk forward;
-   *  4. broadcast-join the carry back and `coalesce` it under the in-chunk
-   *     fill.
-   *
-   * A row that is null after step 1 has no earlier value in its own chunk,
-   * so its fill is exactly the last value of the nearest earlier non-empty
-   * chunk — which is what the carry holds. With `keyCols` empty the
-   * summary window keys on `__chunk % 1` (a computed constant) so the
-   * bounded single-partition step is explicit rather than an accidental
-   * global window over raw rows.
-   */
-  def chunkedFfill(
-      df: DataFrame,
-      dateCol: String,
-      keyCols: Seq[String],
-      valueCols: Seq[String],
-      chunkDays: Int = 365): DataFrame = {
-    val chunkLen = chunkDays.toLong * 86400L
-    val keyCs = keyCols.map(col)
-    val base = df.withColumn("__chunk",
-      floor(col(dateCol).cast("timestamp").cast("long") / chunkLen))
-    val wIn = Window
-      .partitionBy(keyCs :+ col("__chunk"): _*)
-      .orderBy(col(dateCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val filled = valueCols.foldLeft(base) { (d, c) =>
-      d.withColumn(c, last(col(c), ignoreNulls = true).over(wIn))
-    }
-    val summary = filled
-      .groupBy(keyCs :+ col("__chunk"): _*)
-      .agg(max_by(col(valueCols.head), col(dateCol)).as(valueCols.head),
-        valueCols.tail.map(c => max_by(col(c), col(dateCol)).as(c)): _*)
-    val carryKeys = if (keyCs.isEmpty) Seq(pmod(col("__chunk"), lit(1))) else keyCs
-    val wCarry = Window
-      .partitionBy(carryKeys: _*)
-      .orderBy(col("__chunk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carried = valueCols.foldLeft(summary) { (d, c) =>
-      d.withColumn("__carry_" + c, last(col(c), ignoreNulls = true).over(wCarry))
-    }.select(keyCs ++ Seq(col("__chunk")) ++
-      valueCols.map(c => col("__carry_" + c)): _*)
-    val joined = filled.join(broadcast(carried), keyCols :+ "__chunk", "left")
-    valueCols.foldLeft(joined) { (d, c) =>
-      d.withColumn(c, coalesce(col(c), col("__carry_" + c)))
-        .drop("__carry_" + c)
-    }.drop("__chunk")
+    overChunks(df, dateCol, chunkDays, aggs.map { case (name, a) => name -> a.over(w) })
   }
 
   /**
    * Global lag-1 over a single time series, parallelized the same way:
-   * rows are replicated into their home chunk and the next one, `lag(1)`
-   * runs per chunk partition, and only home-chunk rows are kept — so each
-   * row's predecessor is found as long as it lies within the previous
-   * chunk. Exact for any series whose gaps between consecutive rows are
-   * ≤ `chunkDays` (a daily/weekly series with the default 1024-day chunks
-   * would need a 3-year hole to differ); a row whose predecessor is
-   * farther back lags to null, like a series restart.
+   * `lag(1)` runs per chunk partition, so each row's predecessor is found
+   * as long as it lies within the previous chunk. Exact for any series
+   * whose gaps between consecutive rows are ≤ 1,024 days (a daily/weekly
+   * series would need a 3-year hole to differ); a row whose predecessor
+   * is farther back lags to null, like a series restart, once the
+   * predecessor lies before the previous chunk (always beyond 2,048 days).
    *
-   * Adds `outPrefix + c` for each of `lagCols`.
+   * Adds `__lag_` + c for each of `lagCols`.
    */
-  def chunkedLag(
+  def chunkedLag(df: DataFrame, dateCol: String, lagCols: Seq[String]): DataFrame = {
+    val w = byChunk.orderBy(col(dateCol))
+    overChunks(df, dateCol, 1024, lagCols.map(c => ("__lag_" + c) -> lag(col(c), 1).over(w)))
+  }
+
+  private val byChunk = Window.partitionBy(col("__chunk"))
+
+  /**
+   * The chunk construction under both shapes: every row is replicated
+   * into its home chunk (`chunkDays` wide on `dateCol`) and the next one,
+   * as look-back context; `cols`, windows over [[byChunk]], are evaluated
+   * inside each chunk partition; only home-chunk rows are kept. A row thus
+   * sees every predecessor up to one chunk back.
+   */
+  private def overChunks(
       df: DataFrame,
       dateCol: String,
-      lagCols: Seq[String],
-      chunkDays: Int = 1024,
-      outPrefix: String = "__lag_"): DataFrame = {
+      chunkDays: Int,
+      cols: Seq[(String, Column)]): DataFrame = {
     val chunkLen = chunkDays.toLong * 86400L
-    val w = Window.partitionBy(col("__chunk")).orderBy(col(dateCol))
     val base = df
       .withColumn("__home", floor(col(dateCol).cast("timestamp").cast("long") / chunkLen))
       .withColumn("__chunk", explode(array(col("__home"), col("__home") + 1)))
-    lagCols.foldLeft(base) { (d, c) =>
-      d.withColumn(outPrefix + c, lag(col(c), 1).over(w))
-    }
+    cols.foldLeft(base) { case (d, (name, c)) => d.withColumn(name, c) }
       .filter(col("__chunk") === col("__home"))
       .drop("__home", "__chunk")
   }

@@ -31,8 +31,7 @@ class StageSpec extends SparkSpec {
   }
 
   test("readStage refuses a missing stage and a stage without _SUCCESS") {
-    val dir = java.nio.file.Files.createTempDirectory("stage_refusal")
-      .toString
+    val dir = tempDir("stage_refusal")
     // absent entirely
     val eAbsent = intercept[IllegalStateException] {
       SparkEntry.readStage(spark, s"$dir/never_written")
@@ -76,7 +75,7 @@ class StageSpec extends SparkSpec {
     import java.nio.file.{Files, Paths}
     // q83 reads only `documents`: link the sf0.001 table into a scale
     // dir of the test's own, whose basename keys a stage no Verify uses
-    val dir = Files.createTempDirectory("q83_scale").toString
+    val dir = tempDir("q83_scale")
     val link = Files.createSymbolicLink(Paths.get(dir, "documents.parquet"),
       Paths.get("/root/testdata/sf0.001/documents.parquet"))
     val stage = new java.io.File(SparkEntry.stageDir("q83_rag_idx", dir))

@@ -83,7 +83,7 @@ class IncrementalDedupSpec extends SparkSpec {
   }
 
   test("signature store round-trips through parquet; append admits cycle") {
-    val dir = java.nio.file.Files.createTempDirectory("sigstore").toString + "/s"
+    val dir = tempDir("sigstore") + "/s"
     store.write.parquet(dir)
     val loaded = spark.read.parquet(dir)
     val kept = Dedup.incrementalDedup(batch, "doc_id", "text", loaded)
@@ -108,7 +108,7 @@ class IncrementalDedupSpec extends SparkSpec {
       org.apache.spark.sql.types.LongType)
     assert(s0.filter(col("simh").isNotNull).count() === 0L)
     // a simh-bearing batch appends cleanly onto a simh-free store
-    val dir = java.nio.file.Files.createTempDirectory("sigmixed").toString + "/s"
+    val dir = tempDir("sigmixed") + "/s"
     s0.write.parquet(dir)
     Dedup.signatures(batch, "doc_id", "text").write.mode("append").parquet(dir)
     val loaded = spark.read.parquet(dir)
@@ -245,7 +245,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // a MIXED-schema store (old files gained the column on read, value
     // NULL) also passes unverified — the null-sampled-row case must not
     // NPE the guard whose doc promises back-compat
-    val dir = java.nio.file.Files.createTempDirectory("sig_store").toString + "/st"
+    val dir = tempDir("sig_store") + "/st"
     legacy.withColumn("hash_bits",
         org.apache.spark.sql.functions.lit(null).cast("long"))
       .write.parquet(dir)

@@ -50,7 +50,7 @@ class PlanSpec extends SparkSpec {
     // parquet-backed left side: a LocalRelation would let the optimizer
     // evaluate the (deterministic) UDF filter eagerly and erase it from
     // the plan; a file scan keeps it as a real Filter node
-    val dir = java.nio.file.Files.createTempDirectory("planspec_b").toString + "/l"
+    val dir = tempDir("planspec_b") + "/l"
     (1L to 500L).map(i => (i, s"v$i")).toDF("k", "lv").write.parquet(dir)
     val left = spark.read.parquet(dir)
     val right = (1L to 500L by 7).map(i => (i, i * 2.0)).toDF("k", "rv")
@@ -154,7 +154,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("loaded index: probed cells prune at the parquet scan") {
-    val base = java.nio.file.Files.createTempDirectory("planspec_idx").toString
+    val base = tempDir("planspec_idx")
     val cb = Pq.seedCodebook(2, 4, 4)
     Pq.saveIndex(
       Pq.buildIndex(pqVecs, "vec_id", "v", Similarity.planes(4, 8), cb),
@@ -228,7 +228,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("scan pruning: a two-column projection reads two columns") {
-    val dir = java.nio.file.Files.createTempDirectory("planspec").toString + "/t"
+    val dir = tempDir("planspec") + "/t"
     (1 to 100).map(i => (i.toLong, s"s$i", i * 1.0, i * 2.0))
       .toDF("a", "b", "c", "d").write.parquet(dir)
     val p = plan(spark.read.parquet(dir).filter($"a" > 10).select($"a", $"c"))

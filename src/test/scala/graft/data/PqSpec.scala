@@ -171,7 +171,7 @@ class PqSpec extends SparkSpec {
   test("index round-trip: build -> save -> load -> search == direct ivfPqTopK") {
     val coarse = Similarity.planes(8, 64)
     for (residual <- Seq(false, true)) {
-      val dir = java.nio.file.Files.createTempDirectory("pq_index").toString
+      val dir = tempDir("pq_index")
       val idx = Pq.buildIndex(emb, "vec_id", "v", coarse, seed, residual)
       Pq.saveIndex(idx, dir)
       val loaded = Pq.loadIndex(spark, dir)
@@ -192,7 +192,7 @@ class PqSpec extends SparkSpec {
 
   test("pruneVersions: GC old versions, retained snapshot keeps answering") {
     val coarse = Similarity.planes(8, 64)
-    val dir = java.nio.file.Files.createTempDirectory("pq_prune").toString
+    val dir = tempDir("pq_prune")
     def publish(corpus: org.apache.spark.sql.DataFrame): Long =
       Pq.saveIndexVersioned(
         Pq.buildIndex(corpus, "vec_id", "v", coarse, seed), dir)
@@ -219,7 +219,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("Versioned.publish never clobbers an existing version (orphan skipped)") {
-    val dir = java.nio.file.Files.createTempDirectory("pq_race").toString
+    val dir = tempDir("pq_race")
     val idx = Pq.buildIndex(emb.filter($"vec_id" < 50), "vec_id", "v",
       Similarity.planes(8, 64), seed)
     assert(Pq.saveIndexVersioned(idx, dir) === 1L)

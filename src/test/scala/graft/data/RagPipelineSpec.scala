@@ -78,7 +78,7 @@ class RagPipelineSpec extends SparkSpec {
       .select((-(col("doc_id") + 1)).as("id"), col("chunk_text").as("text"))
     val qEmb = embed(qChunks)
 
-    val idxDir = java.nio.file.Files.createTempDirectory("rag_e2e").toString
+    val idxDir = tempDir("rag_e2e")
     // v1: an index over only the odd chunk keys (a half-built corpus)
     assert(Pq.saveIndexVersioned(
       Pq.buildIndex(emb.filter(col("id") % 2 === 1), "id", "v", coarse, cb),

@@ -14,7 +14,7 @@ class VersionedSpec extends SparkSpec {
     Seq(Tuple1(n)).toDF("x").write.parquet(path)
 
   test("publish recovers from a crash between rename-commit and pointer flip") {
-    val dir = java.nio.file.Files.createTempDirectory("versioned").toString
+    val dir = tempDir("versioned")
     assert(Versioned.publish(spark, dir)(write(1)) === 1L)
     // simulate the crash: v2 fully committed on disk, pointer still at 1
     Seq(Tuple1(2L)).toDF("x").write.parquet(s"$dir/v2")
@@ -29,7 +29,7 @@ class VersionedSpec extends SparkSpec {
   }
 
   test("pruneVersions anchored asOf never deletes the version a reader holds") {
-    val dir = java.nio.file.Files.createTempDirectory("versioned_asof").toString
+    val dir = tempDir("versioned_asof")
     assert(Versioned.publish(spark, dir)(write(1)) === 1L)
     assert(Versioned.publish(spark, dir)(write(2)) === 2L)
     // a reader loaded v2, then a publisher landed v3 BEFORE the reader's
@@ -45,7 +45,7 @@ class VersionedSpec extends SparkSpec {
   }
 
   test("publish refuses to clobber a version that lands mid-staging") {
-    val dir = java.nio.file.Files.createTempDirectory("versioned_race").toString
+    val dir = tempDir("versioned_race")
     // the write callback runs between the version scan and the
     // rename-commit — the only window where a racing publisher's v<N>
     // can appear; landing one there must trigger the loud refusal

@@ -306,6 +306,9 @@ class AsOfJoinSpec extends SparkSpec {
       val chunked = canon(AsOfJoin.asofJoinChunked(l, r, "ts",
         direction = dir, nChunks = 16))
       assert(chunked === plain, s"dir=$dir")
+      // the broadcast variant passes the same long ts through untouched
+      val broadcast = canon(AsOfJoin.asofJoinBroadcast(l, r, "ts", direction = dir))
+      assert(broadcast === plain, s"broadcast dir=$dir")
     }
   }
 }

@@ -129,4 +129,37 @@ class PropertySpec extends SparkSpec {
     assert(a.length == b.length && a.length > 40)
     assert(a.sameElements(b))
   }
+
+  private def epochDay(d: Int) =
+    java.sql.Timestamp.from(java.time.Instant.EPOCH.plus(d.toLong, java.time.temporal.ChronoUnit.DAYS))
+
+  test("chunked lag: indicator log returns == a plain global lag across chunk boundaries") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    // 3,000 daily rows from epoch day 17,000 cross the 1,024-day chunk
+    // boundaries at days 17,408, 18,432 and 19,456
+    val df = (17000 until 20000).map(d => (epochDay(d), 100.0 + d % 37, 50.0 + d * 7 % 11))
+      .toDF("date", "a", "b")
+    val cols = Seq("a", "b")
+    val w = Window.orderBy(col("date"))
+    val plain = cols.foldLeft(df) { (d, c) =>
+      d.withColumn(c, functions.indicatorLogReturn(lag(col(c), 1).over(w), col(c)))
+    }.na.drop(cols).select(col("date") +: cols.map(col) :+ array(cols.map(col): _*).as("features"): _*)
+    val got = Returns.indicatorLogReturns(df, "date", cols).orderBy("date").collect().map(_.toString)
+    val want = plain.orderBy("date").collect().map(_.toString)
+    assert(got.length == 2999)
+    assert(got.sameElements(want))
+  }
+
+  test("chunked lag: a predecessor more than 1,024 days back lags to null") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // chunks start at epoch days 0, 1,024, 2,048, 3,072: 1,023 -> 2,048 is
+    // 1,025 days, beyond the previous chunk; 2,048 -> 3,072 is 1,024 days
+    val df = Seq(0, 1023, 2048, 3072).map(d => (epochDay(d), d.toLong)).toDF("date", "v")
+    val got = Windows.chunkedLag(df, "date", Seq("v")).orderBy("date")
+      .select(col("v"), col("__lag_v")).as[(Long, Option[Long])].collect().toSeq
+    assert(got === Seq(0L -> None, 1023L -> Some(0L), 2048L -> None, 3072L -> Some(2048L)))
+  }
 }

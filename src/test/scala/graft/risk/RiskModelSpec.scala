@@ -17,7 +17,7 @@ class RiskModelSpec extends SparkSpec {
   }
 
   test("save assigns increasing versions; load resolves latest or explicit") {
-    val root = java.nio.file.Files.createTempDirectory("riskmodel").toString
+    val root = tempDir("riskmodel")
     val w = trainedWeights()
     val v1 = RiskModel.save(w, root, "var_model", Map("train_date" -> "2020-03-01"))
     val v2 = RiskModel.save(w, root, "var_model", Map("train_date" -> "2020-04-01"))
@@ -35,7 +35,7 @@ class RiskModelSpec extends SparkSpec {
   }
 
   test("weights round-trip exactly and a loaded model scores like a fresh one") {
-    val root = java.nio.file.Files.createTempDirectory("riskmodel2").toString
+    val root = tempDir("riskmodel2")
     val w = trainedWeights()
     RiskModel.save(w, root, "m")
     val loaded = RiskModel.load(spark, root, "m")
@@ -56,7 +56,7 @@ class RiskModelSpec extends SparkSpec {
   }
 
   test("load of a missing model fails clearly; metadata escaping survives") {
-    val root = java.nio.file.Files.createTempDirectory("riskmodel3").toString
+    val root = tempDir("riskmodel3")
     intercept[IllegalArgumentException] {
       RiskModel.load(spark, root, "nope")
     }

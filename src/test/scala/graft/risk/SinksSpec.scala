@@ -15,7 +15,7 @@ class SinksSpec extends SparkSpec {
     // z-sorted layout: a filter on EITHER dimension touches few files
     val n = 4096
     val grid = (0 until n).map(i => (i % 64, i / 64, i)).toDF("a", "b", "v")
-    val dir = java.nio.file.Files.createTempDirectory("sinks_z").toString + "/t"
+    val dir = tempDir("sinks_z") + "/t"
     grid.withColumn("z", S.zorderKey(Seq($"a", $"b"), bits = 6))
       .repartitionByRange(16, $"z").sortWithinPartitions($"z").drop("z")
       .write.parquet(dir)
@@ -139,7 +139,7 @@ class SinksSpec extends SparkSpec {
   test("hilbertKey: a Hilbert-sorted layout has locality on BOTH dims") {
     val n = 4096
     val grid = (0 until n).map(i => (i % 64, i / 64, i)).toDF("a", "b", "v")
-    val dir = java.nio.file.Files.createTempDirectory("sinks_h").toString + "/t"
+    val dir = tempDir("sinks_h") + "/t"
     grid.withColumn("h", Sinks.hilbertKey(Seq($"a", $"b"), bits = 6))
       .repartitionByRange(16, $"h").sortWithinPartitions($"h").drop("h")
       .write.parquet(dir)

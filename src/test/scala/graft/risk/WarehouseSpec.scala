@@ -20,7 +20,7 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     indicators = Seq("IX1", "IX2"))
 
   test("database lifecycle: create at location, use, teardown cascade") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val loc = tempDir("graft_wh")
     Warehouse.createAndUse(spark, "graft_ddl_spec", loc)
     assert(spark.catalog.currentDatabase == "graft_ddl_spec")
     assert(spark.catalog.databaseExists("graft_ddl_spec"))
@@ -30,7 +30,7 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("trials hand-off: stored table round-trips and VaR matches the fresh plan") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_wh2").toString
+    val loc = tempDir("graft_wh2")
     Warehouse.createAndUse(spark, "graft_handoff_spec", loc)
     try {
       val tables = Map("volatility" -> "market_volatility",
@@ -57,7 +57,7 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("bucketed tables join and aggregate exchange-free on the bucket key") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_wh4").toString
+    val loc = tempDir("graft_wh4")
     Warehouse.createAndUse(spark, "graft_bucket_spec", loc)
     try {
       import spark.implicits._
@@ -89,7 +89,7 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("clustered table write prunes files on the cluster key") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_wh3").toString
+    val loc = tempDir("graft_wh3")
     Warehouse.createAndUse(spark, "graft_prune_spec", loc)
     try {
       import spark.implicits._
@@ -142,7 +142,7 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("saveTable: timestamp keys keep statistics, so a point read skips the other files") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_wh7").toString
+    val loc = tempDir("graft_wh7")
     Warehouse.createAndUse(spark, "graft_ts_spec", loc)
     try {
       import spark.implicits._
@@ -176,7 +176,7 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("saveTable writes uncompressed pages, and values round-trip exactly") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_wh9").toString
+    val loc = tempDir("graft_wh9")
     Warehouse.createAndUse(spark, "graft_codec_spec", loc)
     try {
       import spark.implicits._
@@ -205,7 +205,7 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("saveTable leaves the session's timestamp type as it found it, also on failure") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_wh8").toString
+    val loc = tempDir("graft_wh8")
     Warehouse.createAndUse(spark, "graft_conf_spec", loc)
     val key = "spark.sql.parquet.outputTimestampType"
     def setting = spark.conf.getAll.get(key)
@@ -231,7 +231,7 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the reference's hinted incremental mode (application.yaml) spelled
     // with upsertTable: land a correction + new days into the stored
     // market table, recompute portfolio returns from the table
-    val loc = java.nio.file.Files.createTempDirectory("graft_wh5").toString
+    val loc = tempDir("graft_wh5")
     Warehouse.createAndUse(spark, "graft_incr_spec", loc)
     try {
       import spark.implicits._
@@ -264,7 +264,7 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("upsertTable: latest version wins, updates shadow at equal version") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_wh4").toString
+    val loc = tempDir("graft_wh4")
     Warehouse.createAndUse(spark, "graft_upsert_spec", loc)
     try {
       import spark.implicits._
@@ -292,7 +292,7 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("upsertTable with a qualified db.tbl name drops its staging table") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_wh6").toString
+    val loc = tempDir("graft_wh6")
     Warehouse.createAndUse(spark, "graft_qual_spec", loc)
     try {
       import spark.implicits._
@@ -309,7 +309,7 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("upsertTable keeps the target's layout: 8 buckets in, 8 out, each date in one file") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_wh10").toString
+    val loc = tempDir("graft_wh10")
     Warehouse.createAndUse(spark, "graft_upsert_layout_spec", loc)
     try {
       import spark.implicits._
@@ -332,7 +332,7 @@ class WarehouseSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("saveTable'd trials: VarEngine plans no hash exchange, and answers bit for bit in ticker order") {
-    val loc = java.nio.file.Files.createTempDirectory("graft_wh11").toString
+    val loc = tempDir("graft_wh11")
     Warehouse.createAndUse(spark, "graft_layout_spec", loc)
     try {
       import spark.implicits._

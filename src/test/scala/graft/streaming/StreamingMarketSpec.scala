@@ -109,7 +109,7 @@ class StreamingMarketSpec extends SparkSpec {
 
   test("readPriceStream: parquet file source feeds runningLogReturns, batch parity") {
     implicit val s = spark
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_src").toString
+    val dir = tempDir("graft_stream_src")
     val batch1 = Seq(PriceTick("A", ts(1), 100.0), PriceTick("A", ts(2), 110.0),
       PriceTick("B", ts(1), 50.0))
     val batch2 = Seq(PriceTick("A", ts(3), 121.0), PriceTick("B", ts(2), 55.0))
