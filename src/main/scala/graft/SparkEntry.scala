@@ -30,6 +30,15 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
+  private val deletedAtExit = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** `dir`, which is deleted with everything in it when the JVM exits. */
+  private def deleteAtExit(dir: String): String = {
+    if (deletedAtExit.add(dir))
+      sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir)))
+    dir
+  }
+
   /** events.ts is parquet TIMESTAMP(NANOS); with
    * `spark.sql.legacy.parquet.nanosAsLong=true` it loads as long nanos —
    * normalize to a micros TIMESTAMP (UTC session). */
@@ -5897,9 +5906,10 @@ object SparkEntry {
       import graft.risk.Warehouse
       val prev = s.catalog.currentDatabase
       // per-JVM warehouse dir (overridable): two concurrent bench/verify
-      // runs on one host must not clobber each other's table files
-      val whDir = sys.env.getOrElse("GRAFT_WH_DIR",
-        s"${System.getProperty("java.io.tmpdir")}/graft_wh_${s.sparkContext.applicationId}")
+      // runs on one host must not clobber each other's table files. The
+      // result reads the table lazily, so the default dir goes at JVM exit
+      val whDir = sys.env.getOrElse("GRAFT_WH_DIR", deleteAtExit(
+        s"${System.getProperty("java.io.tmpdir")}/graft_wh_${s.sparkContext.applicationId}"))
       Warehouse.reset(s, "graft_bench_wh", whDir)
       Warehouse.createAndUse(s, "graft_bench_wh", whDir)
       VarPipeline.materializeHandoff(s, miniCfg,

@@ -10,6 +10,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.data.Dedup
+import graft.risk.{FuseMonteCarlo, PlanFusedTrialVectors}
 
 /**
  * Native Catalyst expression for the hot loop of similarity search: the
@@ -931,6 +932,7 @@ object PredictNonLinear {
   /** weights = [w0, 4 per raw factor…]; features = raw factors. */
   def score(w: ArrayData, f: ArrayData): Double = {
     val k = f.numElements()
+    checkWeights(w.numElements(), k)
     var s = 0.0
     var j = 0
     while (j < k) {
@@ -945,6 +947,37 @@ object PredictNonLinear {
       j += 1
     }
     w.getDouble(0) + s
+  }
+
+  /** Fails unless there are the `1 + 4k` weights of `k` raw factors: a
+   * shorter array would be read past its end. */
+  def checkWeights(n: Int, k: Int): Unit =
+    if (n < 1 + 4 * k) throw new IllegalArgumentException(
+      s"predict_nonlinear: $n weights, fewer than the ${1 + 4 * k} of $k factors")
+
+  /** The four terms of each raw factor of `f` into `out`, in [[score]]'s
+   * order: `out(4j until 4j + 4)` = x, sg·x·x, x·x·x, sg·√|x| of `f(j)`. */
+  def terms(f: Array[Double], out: Array[Double]): Unit = {
+    var j = 0
+    while (j < f.length) {
+      val x = f(j)
+      val sg = math.signum(x)
+      val b = 4 * j
+      out(b) = x
+      out(b + 1) = sg * x * x
+      out(b + 2) = x * x * x
+      out(b + 3) = sg * math.sqrt(math.abs(x))
+      j += 1
+    }
+  }
+
+  /** [[score]] over precomputed [[terms]]: each term and the order of the
+   * sums are [[score]]'s, so the result is bit-identical. */
+  def scoreTerms(w: Array[Double], t: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < t.length) { s += w(i + 1) * t(i); i += 1 }
+    w(0) + s
   }
 
   val descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
@@ -1514,12 +1547,17 @@ object HilbertIndexExpr {
 }
 
 /**
- * Session extension registering graft's native expressions; enable with
+ * Session extension registering graft's native expressions and the fused
+ * Monte-Carlo chain (the [[graft.risk.FuseMonteCarlo]] rule and its
+ * planner strategy); enable with
  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
  */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftExtensions.descriptors.foreach(ext.injectFunction)
+    ext.injectOptimizerRule(_ => new FuseMonteCarlo)
+    ext.injectPlannerStrategy(_ => new PlanFusedTrialVectors)
+  }
 }
 
 object GraftExtensions {

@@ -16,6 +16,8 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
 
+import graft.plans.PredictNonLinear
+
 /**
  * Seeded Monte-Carlo market simulation — reference `03_var_monte_carlo.py`
  * + `simulate_market` (`/root/reference/utils/var_udf.py:57-67`).
@@ -42,6 +44,17 @@ import org.apache.spark.unsafe.Platform
  *    deterministic UDF in a projection would instead be re-evaluated by
  *    every consumer fused into its codegen stage (the portfolio cross
  *    join reads each trial once per ticker).
+ *  - With `graft.plans.GraftExtensions` on the session, the whole chain
+ *    simulate → cross join the tickers → [[Training.score]] → trial
+ *    vectors is one node: the [[FuseMonteCarlo]] rule matches the tree
+ *    that [[trialVectors]] and a caller composing the same steps both
+ *    optimize to, and [[FusedTrialVectorsExec]] draws each date's states
+ *    and scores them on primitive arrays ([[trialReturns]]), with no
+ *    864k-row intermediate, cross join or aggregate. The vectors and their
+ *    order are bit-identical to the unfused plan's, which still runs for
+ *    any other tree (a filter on the scored rows, a persisted layer,
+ *    [[collectTrialVectorsComposable]]) and on sessions without the
+ *    extension; [[SampleTrials]] and [[TrialVectorAggregator]] serve it.
  */
 object MonteCarlo {
 
@@ -91,6 +104,34 @@ object MonteCarlo {
       while (k <= i) { s += chol(i)(k) * z(k); k += 1 }
       out(i) = s
       i += 1
+    }
+    out
+  }
+
+  /**
+   * The trial vectors of one vol row, scored on primitive arrays:
+   * `out(p)(t)` = `predict_nonlinear(weights(p), sample(mean, chol, t))` for
+   * `t` in `0 until runs`. Each state's non-linear terms are computed once
+   * and shared by every `weights(p)`; the terms and the order of the sums
+   * are [[graft.plans.PredictNonLinear.score]]'s, so each return is
+   * bit-identical to the scored row's.
+   */
+  def trialReturns(
+      mean: Array[Double],
+      chol: Array[Array[Double]],
+      weights: Array[Array[Double]],
+      runs: Int): Array[Array[Double]] = {
+    val out = Array.ofDim[Double](weights.length, runs)
+    val terms = new Array[Double](4 * mean.length)
+    var t = 0
+    while (t < runs) {
+      PredictNonLinear.terms(sample(mean, chol, t.toLong), terms)
+      var p = 0
+      while (p < weights.length) {
+        out(p)(t) = PredictNonLinear.scoreTerms(weights(p), terms)
+        p += 1
+      }
+      t += 1
     }
     out
   }
@@ -190,7 +231,10 @@ case class SampleTrials(date: Expression, volAvg: Expression, volCov: Expression
         s"(${a.simpleString}, ${c.simpleString})")
   }
 
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+  /** The mean and Cholesky factor of the vol row `input`, after every
+   * check above; the fused Monte-Carlo exec calls it too, so both plans
+   * fail on a bad vol row with the same message. */
+  def prepare(input: InternalRow): (Array[Double], Array[Array[Double]]) = {
     def bad(what: String): Nothing = throw new IllegalArgumentException(
       s"$prettyName: $what for date ${date.eval(input)}")
     def doubles(a: ArrayData, what: String): Array[Double] = {
@@ -216,6 +260,11 @@ case class SampleTrials(date: Expression, volAvg: Expression, volCov: Expression
     }
     val chol =
       try MonteCarlo.cholesky(c) catch { case e: IllegalArgumentException => bad(e.getMessage) }
+    (mean, chol)
+  }
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val (mean, chol) = prepare(input)
     Iterator.range(0, runs).map { t =>
       new GenericInternalRow(Array[Any](t.toLong,
         UnsafeArrayData.fromPrimitiveArray(MonteCarlo.sample(mean, chol, t.toLong))))
@@ -269,7 +318,7 @@ case class TrialVectorAggregator(
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[TrialVectorAggregator.Buf] {
-  import TrialVectorAggregator.Buf
+  import TrialVectorAggregator.{Buf, duplicate, nullInput}
 
   override def children: Seq[Expression] = Seq(trialId, ret)
   override def nullable: Boolean = false
@@ -344,13 +393,7 @@ case class TrialVectorAggregator(
           (if (runs >= 0) s"a group of $runs trials" else s"a group with ids up to ${n - 1}"))
       w += 1
     }
-    // VectorUDT's sql form: struct<type: 1 dense, size, indices, values>
-    val v = new GenericInternalRow(4)
-    v.setByte(0, 1)
-    v.setNullAt(1)
-    v.setNullAt(2)
-    v.update(3, UnsafeArrayData.fromPrimitiveArray(buf.arr, Platform.DOUBLE_ARRAY_OFFSET, n, 8))
-    v
+    TrialVectorAggregator.dense(buf.arr, n)
   }
 
   /** `len`, then the returns `0 until len`, then the bitset's words. */
@@ -374,12 +417,6 @@ case class TrialVectorAggregator(
     buf
   }
 
-  private def nullInput(what: String): Nothing =
-    throw new IllegalArgumentException(s"$prettyName: null $what")
-
-  private def duplicate(i: Int): Nothing =
-    throw new IllegalArgumentException(s"trial id $i appears twice in one group")
-
   override def withNewMutableAggBufferOffset(offset: Int): TrialVectorAggregator =
     copy(mutableAggBufferOffset = offset)
 
@@ -394,6 +431,25 @@ case class TrialVectorAggregator(
 object TrialVectorAggregator {
   /** `arr(0 until len)` holds the returns; bit `i` of `seen` marks id `i`. */
   final class Buf(var len: Int, var arr: Array[Double], var seen: Array[Long])
+
+  /** `arr(0 until n)` as a dense vector, in VectorUDT's sql form:
+   * struct<type: 1 dense, size, indices, values>. */
+  def dense(arr: Array[Double], n: Int): InternalRow = {
+    val v = new GenericInternalRow(4)
+    v.setByte(0, 1)
+    v.setNullAt(1)
+    v.setNullAt(2)
+    v.update(3, UnsafeArrayData.fromPrimitiveArray(arr, Platform.DOUBLE_ARRAY_OFFSET, n, 8))
+    v
+  }
+
+  /** Fails the query: trial id `i` reached one group twice. */
+  def duplicate(i: Int): Nothing =
+    throw new IllegalArgumentException(s"trial id $i appears twice in one group")
+
+  /** Fails the query: a null trial id or return (`what`). */
+  def nullInput(what: String): Nothing =
+    throw new IllegalArgumentException(s"trial_vector: null $what")
 
   /** Untyped-agg column: `asColumn(trialCol, returnCol)`, the id cast to
    * bigint and the return to double; `runs` ≥ 1 fixes the vector length. */

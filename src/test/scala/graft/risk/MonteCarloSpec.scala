@@ -97,12 +97,10 @@ class MonteCarloSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(shuffles.size === 1, s"\n$plan")
     assert(shuffles.head.output.map(_.name).sorted === Seq("date", "vol_avg", "vol_cov"),
       s"the exchange carries the trials, not the vol rows:\n$plan")
-    val generators = collect(plan) {
-      case g: GenerateExec if g.generator.isInstanceOf[SampleTrials] => g
-    }
-    assert(generators.size === 1, s"\n$plan")
-    assert(collect(generators.head) { case e: ShuffleExchangeExec => e }.size === 1,
-      s"the exchange is not under the generator:\n$plan")
+    val fused = collect(plan) { case f: FusedTrialVectorsExec => f }
+    assert(fused.size === 1, s"\n$plan")
+    assert(collect(fused.head) { case e: ShuffleExchangeExec => e }.size === 1,
+      s"the exchange is not under the fused chain:\n$plan")
   }
 
   test("trialVectors == the composed chain, and every vector holds runs trials") {
