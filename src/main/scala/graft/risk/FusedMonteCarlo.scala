@@ -136,8 +136,9 @@ class PlanFusedTrialVectors extends SparkStrategy {
  * One task per vol-row partition does the whole chain: for each vol row it
  * factors the covariance once ([[SampleTrials.prepare]], with its checks),
  * draws the `runs` states with [[MonteCarlo.sample]] and scores every pair
- * on primitive arrays ([[MonteCarlo.trialReturns]]). The tickers and the
- * weights arrive as broadcasts, and the output keeps the vol rows'
+ * on primitive arrays ([[MonteCarlo.trialReturns]], which spreads a date's
+ * blocks of trials over the cores the other tasks leave idle). The tickers
+ * and the weights arrive as broadcasts, and the output keeps the vol rows'
  * partitioning, so the vol-row exchange stays the only shuffle.
  *
  * Rows come out in the order the replaced two-phase `ObjectHashAggregate`

@@ -1,6 +1,7 @@
 package graft.risk
 
 import java.nio.{ByteBuffer, ByteOrder}
+import java.util.stream.IntStream
 
 import org.apache.spark.ml.linalg.SQLDataTypes
 import org.apache.spark.sql.{Column, DataFrame}
@@ -108,6 +109,9 @@ object MonteCarlo {
     out
   }
 
+  /** Trials per block of [[trialReturns]]. */
+  private[risk] val TrialBlock = 4096
+
   /**
    * The trial vectors of one vol row, scored on primitive arrays:
    * `out(p)(t)` = `predict_nonlinear(weights(p), sample(mean, chol, t))` for
@@ -115,6 +119,14 @@ object MonteCarlo {
    * and shared by every `weights(p)`; the terms and the order of the sums
    * are [[graft.plans.PredictNonLinear.score]]'s, so each return is
    * bit-identical to the scored row's.
+   *
+   * `0 until runs` is split into contiguous blocks of [[TrialBlock]] trials,
+   * run as a parallel stream on the common fork-join pool: a date is one
+   * Spark task, and this spreads its trials over the cores the other tasks
+   * leave idle. The bits do not depend on the split: trial `t` is drawn
+   * from its own seed `t` and scored into `out(p)(t)` by one thread, with a
+   * scratch array of its block's own, and no sum crosses trials. At
+   * `runs` ≤ [[TrialBlock]] there is one block, run on the calling thread.
    */
   def trialReturns(
       mean: Array[Double],
@@ -122,16 +134,20 @@ object MonteCarlo {
       weights: Array[Array[Double]],
       runs: Int): Array[Array[Double]] = {
     val out = Array.ofDim[Double](weights.length, runs)
-    val terms = new Array[Double](4 * mean.length)
-    var t = 0
-    while (t < runs) {
-      PredictNonLinear.terms(sample(mean, chol, t.toLong), terms)
-      var p = 0
-      while (p < weights.length) {
-        out(p)(t) = PredictNonLinear.scoreTerms(weights(p), terms)
-        p += 1
+    val blocks = (runs + TrialBlock - 1) / TrialBlock
+    IntStream.range(0, blocks).parallel().forEach { b =>
+      val terms = new Array[Double](4 * mean.length)
+      val end = math.min(runs, (b + 1) * TrialBlock)
+      var t = b * TrialBlock
+      while (t < end) {
+        PredictNonLinear.terms(sample(mean, chol, t.toLong), terms)
+        var p = 0
+        while (p < weights.length) {
+          out(p)(t) = PredictNonLinear.scoreTerms(weights(p), terms)
+          p += 1
+        }
+        t += 1
       }
-      t += 1
     }
     out
   }

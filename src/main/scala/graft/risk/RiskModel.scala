@@ -12,7 +12,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * `mlflow.pyfunc.load_model`).
  *
  * A model is the per-ticker OLS weights table ([[Training.trainModels]])
- * plus string metadata. Layout (any Hadoop filesystem — local, HDFS, S3):
+ * plus string metadata. The fit is eager and returns the weights as a
+ * local relation, so a freshly trained model and one loaded here are
+ * equally small plans: neither carries the training lineage into the
+ * plans that score against it. Layout (any Hadoop filesystem — local,
+ * HDFS, S3):
  *
  *   {root}/{name}/v{N}/weights.parquet   — (ticker, weights[1+4k])
  *   {root}/{name}/v{N}/metadata.json     — name/version/user metadata

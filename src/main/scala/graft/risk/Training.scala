@@ -1,7 +1,10 @@
 package graft.risk
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.commons.math3.linear.SingularMatrixException
 import org.apache.commons.math3.stat.regression.OLSMultipleLinearRegression
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 /**
@@ -10,7 +13,7 @@ import org.apache.spark.sql.functions._
  * MLflow-pyfunc scoring (`02_var_model.py:167-183,219-221`).
  *
  * Here: `groupByKey.mapGroups` + commons-math3 OLS (in-JVM, no Arrow hop),
- * weights persisted as a plain DataFrame `(ticker, weights[1+4k])` —
+ * fitted eagerly into a local relation `(ticker, weights[1+4k])` —
  * intercept first, matching `predict_non_linears`
  * (`/root/reference/utils/var_utils.py:58-62`). Scoring is 100% native
  * expressions (broadcast-joined weights + codegen'd dot product): at 100TB
@@ -20,11 +23,21 @@ object Training {
 
   case class TrainRow(ticker: String, features: Array[Double], label: Double)
   case class ModelWeights(ticker: String, weights: Array[Double])
+  /** One ticker's fit: its weights, or why it has none. */
+  case class TickerFit(ticker: String, weights: Array[Double], error: String)
 
   /**
    * Fit one OLS per ticker on the NON-LINEAR expansion of `featuresCol`
    * (reference trains on `non_linear_features`, `02_var_model.py:141-143`).
-   * Emits (ticker, weights) with weights(0) = intercept.
+   *
+   * The fit is eager, as `Estimator.fit` is: this runs the per-ticker OLS
+   * now and returns its (ticker, weights) rows, weights(0) = intercept, as
+   * one local relation in the fit's row order. A plan that scores against
+   * the model then holds a few hundred doubles, not the lineage that
+   * trained them, exactly like a model that [[RiskModel.load]] returns.
+   * A ticker with fewer rows than its `1 + 4k` coefficients, or with a
+   * singular design, fails the fit with an `IllegalArgumentException`
+   * naming the ticker and its row count.
    */
   def trainModels(
       df: DataFrame,
@@ -41,15 +54,24 @@ object Training {
       .na.drop()
       .as[TrainRow]
 
-    rows
+    val fits = rows
       .groupByKey(_.ticker)
       .mapGroups { (ticker, it) =>
         val data = it.toArray
         val x = data.map(r => VarMath.nonLinearFeatures(r.features))
-        val y = data.map(_.label)
-        ModelWeights(ticker, fitOls(x, y))
+        val coefficients = 1 + x.head.length
+        def failed(why: String) =
+          TickerFit(ticker, null, s"ticker $ticker, ${data.length} rows: $why")
+        if (data.length < coefficients) failed(s"fewer rows than its $coefficients coefficients")
+        else try TickerFit(ticker, fitOls(x, data.map(_.label)), null) catch {
+          case _: SingularMatrixException => failed("singular design")
+        }
       }
-      .toDF("ticker", "weights")
+      .collect()
+    fits.find(_.error != null).foreach(f =>
+      throw new IllegalArgumentException(s"trainModels: ${f.error}"))
+    spark.createDataFrame(fits.toSeq.map(f => Row(f.ticker, f.weights)).asJava,
+      Encoders.product[ModelWeights].schema)
   }
 
   /** OLS with intercept; returns Array(intercept, beta_1..beta_k). */

@@ -3,7 +3,8 @@ package graft.risk
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.{AppendColumnsExec, AppendColumnsWithObjectExec,
+  GenerateExec, MapGroupsExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -123,6 +124,37 @@ class MonteCarloFusionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val plan = VarPipeline.monteCarloTrials(spark, graft.SparkEntry.miniCfg)
       .queryExecution.executedPlan
     assert(isFused(plan), s"\n$plan")
+  }
+
+  test("the pipeline's trials carry no training lineage: the weights are a local relation") {
+    val plan = VarPipeline.monteCarloTrials(spark, graft.SparkEntry.miniCfg)
+      .queryExecution.executedPlan
+    assert(collect(plan) {
+      case m: MapGroupsExec => m
+      case a: AppendColumnsExec => a
+      case a: AppendColumnsWithObjectExec => a
+    }.isEmpty, s"\n$plan")
+  }
+
+  test("trialReturns over blocks == a sequential loop, bit for bit, at the block edges") {
+    val rnd = new scala.util.Random(59)
+    val mean = Array.fill(5)(rnd.nextGaussian() * 0.01)
+    val a = Array.fill(5, 5)(rnd.nextGaussian() * 0.1)
+    val chol = MonteCarlo.cholesky(
+      Array.tabulate(5, 5)((i, j) => (0 until 5).map(k => a(i)(k) * a(j)(k)).sum))
+    val ws = Array.fill(3, 21)(rnd.nextGaussian())
+    def bits(v: Array[Double]) = v.toSeq.map(java.lang.Double.doubleToRawLongBits)
+    val block = MonteCarlo.TrialBlock
+    for (runs <- Seq(1, block - 1, block, block + 1, 32000)) {
+      val want = Array.ofDim[Double](ws.length, runs)
+      val terms = new Array[Double](4 * mean.length)
+      for (t <- 0 until runs) {
+        graft.plans.PredictNonLinear.terms(MonteCarlo.sample(mean, chol, t.toLong), terms)
+        for (p <- ws.indices) want(p)(t) = graft.plans.PredictNonLinear.scoreTerms(ws(p), terms)
+      }
+      val got = MonteCarlo.trialReturns(mean, chol, ws, runs)
+      assert(got.map(bits).toSeq === want.map(bits).toSeq, s"runs=$runs")
+    }
   }
 
   test("the portfolio VaR over the fused vectors plans no second exchange") {
